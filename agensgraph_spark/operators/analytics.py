@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from agensgraph_spark.pipeline.dedup import _driver_label_frame
+
 
 def degree_stats(
     edges: DataFrame,
@@ -957,22 +959,10 @@ def strongly_connected_components(
     local = raw.limit(driver_max_edges + 1).collect()
     if len(local) <= driver_max_edges:
         comp = _tarjan_scc((r["src"], r["dst"]) for r in local)
-        import pyspark.sql.types as T
-        id_dt = raw.schema["src"].dataType
-        comp_schema = T.StructType([T.StructField("id", id_dt),
-                                    T.StructField("component", id_dt)])
-        comp_df = edges.sparkSession.createDataFrame(
-            sorted(comp.items()), comp_schema)
-        # the endpoint universe is already on the driver — base builds
-        # from the label map, so the output plan never references the
-        # edge frame and needs no checkpoint to outlive the pin
-        base = comp_df.select("id")
-        if vertices is not None:
-            base = base.unionByName(vertices.select("id")).distinct()
-        out = (base.join(F.broadcast(comp_df), "id", "left")
-               .select("id",
-                       F.coalesce("component", "id").alias("component")))
-        return out
+        return _driver_label_frame(
+            edges.sparkSession, sorted(comp.items()),
+            raw.schema["src"].dataType,
+            None if vertices is None else vertices.select("id"))
     e = raw.distinct()
     verts = (e.select(F.col("src").alias("id"))
              .unionByName(e.select(F.col("dst").alias("id"))))

@@ -834,6 +834,25 @@ def canonical_by_score(
                     "best_id"))
 
 
+def _driver_label_frame(spark, labels, id_dt,
+                        universe: DataFrame | None) -> DataFrame:
+    """(id, component) frame from a driver-computed ``labels`` list —
+    the shared tail of the driver regimes of `connected_components`
+    and `strongly_connected_components`. The label map inherits the
+    edge id type ``id_dt``. ``universe`` (one ``id`` column) widens
+    the output; its unlabeled ids label themselves. The endpoint
+    universe is already on the driver, so the plan never references
+    the edge frame and needs no checkpoint to outlive its pin."""
+    import pyspark.sql.types as T
+    comp = spark.createDataFrame(labels, T.StructType([
+        T.StructField("id", id_dt), T.StructField("component", id_dt)]))
+    base = comp.select("id")
+    if universe is not None:
+        base = base.unionByName(universe).distinct()
+    return (base.join(F.broadcast(comp), "id", "left")
+            .select("id", F.coalesce("component", "id").alias("component")))
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -927,25 +946,12 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         endpoints = {v for row in local for v in (row["src"], row["dst"])}
-        labels = [(x, find(x)) for x in endpoints]
-        spark = pairs.sparkSession
-        # label map inherits the id type (graph ids are longs, doc keys
-        # may be strings — Python min and F.least order both the same
-        # way, so the min-label contract holds for either)
-        import pyspark.sql.types as T
-        id_dt = raw.schema["src"].dataType
-        comp_schema = T.StructType([T.StructField("id", id_dt),
-                                    T.StructField("component", id_dt)])
-        comp = spark.createDataFrame(labels, comp_schema)
-        # the endpoint universe is already on the driver — base builds
-        # from the collected set, so the output plan never references
-        # the pair frame and needs no checkpoint to outlive the pin
-        base = comp.select("id")
-        if nodes is not None:
-            base = base.unionByName(nodes.toDF("id")).distinct()
-        out = (base.join(F.broadcast(comp), "id", "left")
-               .select("id", F.coalesce("component", "id").alias("component")))
-        return out
+        # ids may be longs or strings — Python min and F.least order
+        # both the same way, so the min-label contract holds for either
+        return _driver_label_frame(
+            pairs.sparkSession, [(x, find(x)) for x in endpoints],
+            raw.schema["src"].dataType,
+            None if nodes is None else nodes.toDF("id"))
     sym = raw.select("src", "dst")
     edges = (sym.unionByName(
                 sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

@@ -1,10 +1,12 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: the exact baseline — one (broadcast) join
-  of the query set against the corpus, dot products via zip_with/
-  aggregate (JVM-side), window top-k;
-- LSH-bucketed ANN: random-hyperplane signatures shrink the candidate
-  set; buckets join instead of cross product — the 100 TB path.
+- brute-force cosine top-k: the exact baseline. The query set is
+  collected once; each Arrow batch of the corpus is scored by BLAS
+  matmuls against fixed-size query blocks and keeps an exact partial
+  top-k, and one window merges the batches;
+- IVF and LSH ANN: centroid lists or random-hyperplane buckets shrink
+  the candidate set, and a bucket join replaces the cross product
+  before the exact cosine re-rank — the 100 TB path.
 
 Hyperplanes are generated from a fixed seed so results are
 deterministic run-to-run and cluster-layout-independent.
@@ -49,8 +51,10 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+# Query columns per BLAS matmul in `brute_cosine_topk`: bounds each
+# Arrow batch's score matrix at batch_rows x _QUERY_BLOCK doubles
+# whatever the query count.
+_QUERY_BLOCK = 256
 
 
 def brute_cosine_topk(
@@ -59,72 +63,38 @@ def brute_cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow_max_queries: int = 10_000,
 ) -> DataFrame:
-    """Exact top-k neighbors per query vector (query set is broadcast —
-    the corpus is never shuffled). Excludes self-pairs. Ties broken by
-    neighbor id for determinism.
+    """Exact top-k neighbors per query vector. Excludes self-pairs; ties
+    break by neighbor id for determinism.
 
-    Fast path (r15, guide §4.2): the query set is a bounded serving
-    batch by contract, so it is collected once and the |C| x |Q| score
-    matrix runs as ONE BLAS matmul per Arrow batch with an in-batch
-    partial top-k (exact (cos DESC, id ASC) tie rule — a per-batch
-    top-k merged by the global window is exactly the global top-k).
-    The JVM broadcast-join path (interpreted per-pair zip_with dots —
-    measured ~0.7 s for 2000x20 pairs at sf0.1) remains for oversized
-    query sets (``arrow_max_queries``, probed with a bounded limit,
-    never a full count) and for non-numeric corpora it would not help.
-    Degenerate inputs refuse loudly like every Arrow vector path here:
-    NULL/ragged embeddings (`_list_mat`) and zero-norm vectors (0/0
-    cosine) raise instead of silently producing NaN ranks."""
-    n_q = len(queries.limit(arrow_max_queries + 1).select(id_col).collect())
-    if 0 < n_q <= arrow_max_queries:
-        return _brute_topk_arrow(corpus, queries, k, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).select("query_id", "qv", norm(F.col("qv")).alias("qn"))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).select("neighbor_id", "cv", norm(F.col("cv")).alias("cn"))
-    joined = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.select(
-        "query_id", "neighbor_id",
-        (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
-    )
-    return _rank_topk(scored, k)
-
-
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Global (cos DESC, neighbor ASC) top-k + display rounding — the
-    shared tail of both brute paths."""
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round(F.col("cos_sim"), 6).alias("cos_sim"),
-                    F.col("rank").cast("long").alias("rank")))
-
-
-def _brute_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """BLAS scorer for `brute_cosine_topk`: per Arrow batch, one
-    matmul against the collected query matrix and an exact in-batch
-    partial top-k (at most |Q| x k rows leave each batch), then the
-    same global window as the JVM path. Values are the same cosine
-    doubles; per-batch selection cannot change the global top-k
-    because selection and merge use the identical total order."""
+    The query set is a bounded serving batch by contract: its (id,
+    vector) rows are collected once, the only Spark job this call
+    launches. Each Arrow batch of the corpus is then scored with one
+    BLAS matmul per block of ``_QUERY_BLOCK`` queries and keeps an
+    exact in-batch partial top-k under the (cos DESC, id ASC) order;
+    the global window merges the batches with that same order, so the
+    result is exactly the global top-k whatever the batch or block
+    boundaries. An empty query set returns an empty frame with the
+    usual schema. Degenerate inputs refuse loudly like every Arrow
+    vector path here: NULL ids, NULL/ragged embeddings (`_list_mat`)
+    and zero-norm vectors (0/0 cosine) raise instead of silently
+    producing NULL neighbours or NaN ranks."""
     import pyarrow as pa
+    import pyspark.sql.types as T
 
-    qrows = queries.select(F.col(id_col), F.col(vec_col)
-                           .cast("array<double>")).collect()
+    qsel = queries.select(F.col(id_col).alias("query_id"),
+                          F.col(vec_col).cast("array<double>"))
+    base = corpus.select(F.col(id_col).alias("neighbor_id"),
+                         F.col(vec_col).cast("array<double>").alias("_v"))
+    out_schema = T.StructType([
+        T.StructField("query_id", qsel.schema["query_id"].dataType),
+        T.StructField("neighbor_id", base.schema["neighbor_id"].dataType),
+        T.StructField("cos_sim", T.DoubleType()),
+    ])
+    qrows = qsel.collect()
+    if not qrows:
+        return _rank_topk(
+            corpus.sparkSession.createDataFrame([], out_schema), k)
     q_ids = [r[0] for r in qrows]
     if any(i is None for i in q_ids):
         raise ValueError("brute_cosine_topk: NULL query id")
@@ -135,14 +105,10 @@ def _brute_topk_arrow(
     if (qn == 0).any():
         raise ValueError("brute_cosine_topk: zero-norm query vector")
     dim = Q.shape[1]
-    QT = Q.T.copy()
-    n_q = len(q_ids)
-
-    base = corpus.select(F.col(id_col).alias("neighbor_id"),
-                         F.col(vec_col).cast("array<double>").alias("_v"))
-    id_field = base.schema["neighbor_id"]
-    q_field = queries.select(F.col(id_col).alias("query_id")) \
-        .schema["query_id"]
+    # (first query index, dim x block transposed queries, block norms)
+    blocks = [(j0, Q[j0:j0 + _QUERY_BLOCK].T.copy(),
+               qn[j0:j0 + _QUERY_BLOCK])
+              for j0 in range(0, len(q_ids), _QUERY_BLOCK)]
 
     def score(batches):
         qi = np.asarray(q_ids)
@@ -150,25 +116,28 @@ def _brute_topk_arrow(
             if b.num_rows == 0:
                 continue
             ids = b.column(0)
+            if ids.null_count:
+                raise ValueError("brute_cosine_topk: NULL corpus id")
             V = _list_mat(b.column(1), dim)
             cn = np.sqrt(np.einsum("ij,ij->i", V, V))
             if (cn == 0).any():
                 raise ValueError(
                     "brute_cosine_topk: zero-norm corpus vector")
-            S = (V @ QT) / np.outer(cn, qn)  # (rows, n_q)
             nid = ids.to_numpy(zero_copy_only=False)
             out_q, out_n, out_s = [], [], []
-            for j in range(n_q):
-                col = S[:, j]
-                sel = np.flatnonzero(nid != qi[j])  # no self-pairs
-                if sel.size == 0:
-                    continue
-                # exact (cos DESC, id ASC): stable lexsort, primary
-                # key last
-                order = sel[np.lexsort((nid[sel], -col[sel]))][:k]
-                out_q.extend([q_ids[j]] * len(order))
-                out_n.append(order)
-                out_s.append(col[order])
+            for j0, QT, bn in blocks:
+                S = (V @ QT) / np.outer(cn, bn)  # (rows, block)
+                for j in range(S.shape[1]):
+                    col = S[:, j]
+                    sel = np.flatnonzero(nid != qi[j0 + j])  # no self-pairs
+                    if sel.size == 0:
+                        continue
+                    # exact (cos DESC, id ASC): stable lexsort, primary
+                    # key last
+                    order = sel[np.lexsort((nid[sel], -col[sel]))][:k]
+                    out_q.extend([q_ids[j0 + j]] * len(order))
+                    out_n.append(order)
+                    out_s.append(col[order])
             if not out_q:
                 continue
             take = np.concatenate(out_n)
@@ -178,14 +147,19 @@ def _brute_topk_arrow(
                 pa.array(np.concatenate(out_s), type=pa.float64()),
             ], names=["query_id", "neighbor_id", "cos_sim"])
 
-    import pyspark.sql.types as T
-    out_schema = T.StructType([
-        T.StructField("query_id", q_field.dataType),
-        T.StructField("neighbor_id", id_field.dataType),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    scored = base.mapInArrow(score, out_schema)
-    return _rank_topk(scored, k)
+    return _rank_topk(base.mapInArrow(score, out_schema), k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global (cos DESC, neighbor ASC) top-k + display rounding — the
+    shared tail of the brute, IVF and LSH top-k searches."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
+                                               F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id",
+                    F.round(F.col("cos_sim"), 6).alias("cos_sim"),
+                    F.col("rank").cast("long").alias("rank")))
 
 
 def cosine_neardup_pairs(
@@ -373,11 +347,7 @@ def ivf_cosine_topk(
     scored = cand.select(
         "query_id", "neighbor_id",
         (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", F.round(F.col("cos_sim"), 6).alias("cos_sim"),
-                    F.col("rank").cast("long").alias("rank")))
+    return _rank_topk(scored, k)
 
 
 def _list_mat(col, dim: int) -> np.ndarray:
@@ -766,11 +736,7 @@ def lsh_cosine_topk(
     scored = (cand.join(q, "query_id").join(c, "neighbor_id")
               .select("query_id", "neighbor_id",
                       (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", F.round(F.col("cos_sim"), 6).alias("cos_sim"),
-                    F.col("rank").cast("long").alias("rank")))
+    return _rank_topk(scored, k)
 
 
 def quantize_embeddings(

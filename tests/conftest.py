@@ -69,7 +69,6 @@ SLOW_TESTS = frozenset([
     'test_pipeline_scale.py::test_assign_sessions_bucketed_mode_identical',
     'test_pipeline_scale.py::test_assign_sessions_bucketed_multi_null_ts',
     'test_pipeline_scale.py::test_betweenness_sampled_path_graph',
-    'test_pipeline_scale.py::test_brute_topk_arrow_matches_jvm',
     'test_pipeline_scale.py::test_bm25_query_term_multiplicity_ignored',
     'test_pipeline_scale.py::test_cap_per_group_deterministic_and_bounded',
     'test_pipeline_scale.py::test_fuzzy_decontaminate_hand_computed',
@@ -147,17 +146,48 @@ SMOKE_TAIL = frozenset([
 _TAIL_RE = "test_oracle_parity_tail.py::test_tail_query_matches_oracle"
 
 
+def _lane_id(item) -> str:
+    # only the leading directory goes: parametrize ids may contain "/"
+    return item.nodeid.removeprefix("tests/")
+
+
+def _tail_row(nodeid: str) -> str | None:
+    if nodeid.startswith(_TAIL_RE + "["):
+        return nodeid[len(_TAIL_RE) + 1:-1]
+    return None
+
+
 def _is_slow(item) -> bool:
-    nodeid = item.nodeid.split("/")[-1]  # strip tests/ prefix
+    nodeid = _lane_id(item)
     if nodeid in SLOW_TESTS or "slow" in item.keywords:
         return True
-    if nodeid.startswith(_TAIL_RE + "["):
-        row = nodeid[len(_TAIL_RE) + 1:-1]
-        return row not in SMOKE_TAIL
-    return False
+    row = _tail_row(nodeid)
+    return row is not None and row not in SMOKE_TAIL
+
+
+def _check_lane_lists(config, items):
+    """A SLOW_TESTS or SMOKE_TAIL entry that names no collected test is
+    a lane list rotting silently: fail the collection. Entries are
+    checked only against files that collected, and not at all when the
+    command line selects single tests."""
+    if any("::" in str(a) for a in config.args):
+        return
+    ids = {_lane_id(it) for it in items}
+    files = {nid.split("::")[0] for nid in ids}
+    stale = sorted(e for e in SLOW_TESTS
+                   if e.split("::")[0] in files and e not in ids)
+    if _TAIL_RE.split("::")[0] in files:
+        rows = {_tail_row(nid) for nid in ids}
+        stale += sorted(f"SMOKE_TAIL {r!r}" for r in SMOKE_TAIL
+                        if r not in rows)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py lane lists name no collected test: "
+            + ", ".join(stale))
 
 
 def pytest_collection_modifyitems(config, items):
+    _check_lane_lists(config, items)
     if config.getoption("--slow") or os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return
     skip = pytest.mark.skip(

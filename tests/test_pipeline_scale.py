@@ -1253,30 +1253,83 @@ def test_ivf_with_trained_centroids(spark):
     assert got == exp  # full probing == exact, regardless of centroids
 
 
-def test_brute_topk_arrow_matches_jvm(spark):
-    """The BLAS fast path of brute_cosine_topk must return the exact
-    rows (ids, ranks, AND round-6 scores) of the JVM broadcast-join
-    path — per-batch partial top-k with the (cos DESC, id ASC) rule is
-    provably the global top-k, and the differential pins it. Forced
-    both ways via arrow_max_queries (0 = always JVM)."""
+def _numpy_brute_topk(ids, V, q_idx, k):
+    """float64 reference: (query, neighbor, cos, rank) by (cos DESC,
+    id ASC), self-pairs excluded."""
+    import numpy as np
+    n = np.linalg.norm(V, axis=1)
+    out = []
+    for i in q_idx:
+        s = (V @ V[i]) / (n * n[i])
+        cand = [j for j in range(len(ids)) if ids[j] != ids[i]]
+        cand.sort(key=lambda j: (-s[j], ids[j]))
+        out += [(ids[i], ids[j], s[j], r + 1)
+                for r, j in enumerate(cand[:k])]
+    return sorted(out)
+
+
+def test_brute_topk_matches_numpy_reference(spark, monkeypatch):
+    """brute_cosine_topk against a float64 numpy brute force: ids and
+    ranks exact, cos_sim within 1e-6 (the output is rounded to 6
+    places). A 7-query block over 25 queries must select exactly what
+    one block does, building the frame must launch exactly one Spark
+    job (the query fetch), and a zero-norm query refuses at build
+    time."""
+    import numpy as np
+    import pytest as _pytest
     from pyspark.sql import functions as F
-    from agensgraph_spark.pipeline.similarity import brute_cosine_topk
+    from agensgraph_spark.pipeline import similarity as S
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 25)
-    for k in (1, 5):
-        jvm = sorted(map(tuple, brute_cosine_topk(
-            emb, q, k=k, arrow_max_queries=0).collect()))
-        arrow = sorted(map(tuple, brute_cosine_topk(
-            emb, q, k=k).collect()))
-        assert arrow == jvm, k
-    # degenerate inputs refuse loudly on the arrow path
-    import pytest as _pytest
+    rows = sorted(emb.select("vec_id", "embedding").collect())
+    ids = [r[0] for r in rows]
+    V = np.asarray([r[1] for r in rows], dtype=np.float64)
+    q_idx = [i for i, v in enumerate(ids) if v < 25]
+
+    def check(got, want):
+        assert [g[:2] + g[3:] for g in got] == [w[:2] + w[3:] for w in want]
+        assert all(abs(g[2] - w[2]) <= 1e-6 for g, w in zip(got, want))
+
+    one_block = sorted(map(tuple, S.brute_cosine_topk(emb, q).collect()))
+    check(one_block, _numpy_brute_topk(ids, V, q_idx, 5))
+    with monkeypatch.context() as m:
+        m.setattr(S, "_QUERY_BLOCK", 7)
+        blocked = sorted(map(tuple, S.brute_cosine_topk(emb, q).collect()))
+    check(blocked, one_block)
+    # job-group count (the tests/test_ddl.py probe pattern)
+    sc = spark.sparkContext
+    sc.setJobGroup("brute-topk-build", "job probe")
+    try:
+        S.brute_cosine_topk(emb, q, k=5)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("brute-topk-build")) == 1
     zq = spark.createDataFrame(
         [(9999, [0.0] * 64)], "vec_id long, embedding array<double>")
-    with _pytest.raises(Exception, match="zero-norm"):
-        brute_cosine_topk(emb, zq, k=1).collect()
-    with _pytest.raises(Exception, match="zero-norm"):
-        brute_cosine_topk(zq, q, k=1).collect()
+    with _pytest.raises(ValueError, match="zero-norm query"):
+        S.brute_cosine_topk(emb, zq, k=1)
+
+
+def test_brute_topk_null_corpus_id_and_empty_queries(spark):
+    """A NULL corpus id or a zero-norm corpus vector refuses loudly
+    instead of surfacing as a NULL neighbour or a NaN rank; an empty
+    query set returns an empty frame with the schema of a non-empty
+    call."""
+    import pytest as _pytest
+    from agensgraph_spark.pipeline.similarity import brute_cosine_topk
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (None, [0.0, 1.0])], schema)
+    q = spark.createDataFrame([(7, [1.0, 1.0])], schema)
+    with _pytest.raises(Exception, match="NULL corpus id"):
+        brute_cosine_topk(corpus, q, k=1).collect()
+    zero = spark.createDataFrame([(2, [0.0, 0.0])], schema)
+    with _pytest.raises(Exception, match="zero-norm corpus"):
+        brute_cosine_topk(zero, q, k=1).collect()
+    good = corpus.filter("vec_id IS NOT NULL")
+    empty = brute_cosine_topk(good, q.limit(0), k=1)
+    assert empty.collect() == []
+    assert empty.schema == brute_cosine_topk(good, q, k=1).schema
 
 
 def test_train_ivf_reduces_quantization_error(spark):
@@ -1413,7 +1466,7 @@ def test_semantic_dedup_cap_bounds_hot_cluster(spark):
     rows get max cosine over the head (a lower bound), and the join is
     size x cap, not size². audit_cap=True must run the same values
     through the Observation branch."""
-    from agensgraph_spark.pipeline.similarity import cosine, semantic_dedup
+    from agensgraph_spark.pipeline.similarity import semantic_dedup
     rows = [(i, [1.0, float(i)]) for i in range(8)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     cents = [[1.0, 0.0], [-1.0, 0.0]]
