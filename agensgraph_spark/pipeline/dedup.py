@@ -2,22 +2,30 @@
 
 Design for 100 TB:
 - exact dedup is one hash-aggregate (map-side partial combine);
-- MinHash signatures are per-row column expressions (no shuffle), the
-  LSH banding join is the only shuffle — grouped by (band, band-hash),
-  so candidate generation never goes quadratic;
+- MinHash shingle hashes and signatures come from one map-only Arrow
+  kernel per document batch (`_minhash_frame`: each distinct shingle
+  of a batch is hashed once, the signature is built one slot at a time
+  in numpy) after one narrow spread; the LSH banding aggregate is the
+  only shuffle — grouped by (band, band-hash), so candidate generation
+  never goes quadratic;
 - SimHash reduces to one explode + one aggregation;
 - pairwise Jaccard verification runs only on LSH candidates (or an
   explicitly bounded id range), never on the full cross product.
 
-Everything is built from `pyspark.sql.functions` (xxhash64, transform,
-array ops) — deterministic, JVM-side, no Python UDFs.
+Everything is deterministic. The MinHash kernel reproduces Spark's
+xxhash64 and the portable md5-prefix hash bit for bit, so both hash
+modes give the same longs a JVM-side expression would; every other
+operator here is built from `pyspark.sql.functions`.
 """
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import threading
+from typing import Iterator
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -69,90 +77,63 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> D
     )
 
 
-def shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the lowercased text."""
-    t = F.lower(text)
-    n = F.length(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(k))))
-
-
 # Two interchangeable 64-bit-ish string hashes power every fuzzy-dedup
 # operator below:
-# - 'xxh64' (default): Spark's JVM-side xxhash64 — fastest, but no
-#   other SQL engine can replay it;
+# - 'xxh64' (default): Spark's xxhash64 (XXH64 with seed 42 over the
+#   UTF-8 bytes) — no other SQL engine can replay it;
 # - 'md5': the first 15 hex chars of md5 as a 60-bit non-negative
-#   long — a few times more expensive per shingle, but bit-exactly
-#   reproducible in ANY SQL engine (DuckDB: CAST('0x'||substring(
+#   long — bit-exactly reproducible in ANY SQL engine (DuckDB: CAST('0x'||substring(
 #   md5(s),1,15) AS BIGINT)), so external oracles can replay the
 #   whole MinHash/SimHash pipeline. Same pattern as text.fingerprint's
 #   md5 fingerprints (README.md).
 # Collision behavior is equivalent (60 vs 64 bits is immaterial at
 # n²/2⁶⁰ rates); min-hash/banding statistics are unchanged.
-def _str_hash(col: Column, hash_fn: str) -> Column:
-    if hash_fn == "xxh64":
-        return F.xxhash64(col)
-    if hash_fn == "md5":
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    raise ValueError(f"unknown hash_fn {hash_fn!r} (expected 'xxh64' or 'md5')")
+# SimHash hashes its tokens JVM-side with the SQL form below; MinHash
+# hashes its shingles in `_minhash_frame`'s Arrow kernel, which
+# reproduces both modes bit for bit.
+_HASH_FNS = ("xxh64", "md5")
 
 
-# SQL-string twins of the Column builders above. Constructing the
-# signature projection through the Column API costs one py4j round trip
-# per lambda/function node — ~0.5s of DRIVER time per invocation for
-# the 32-slot projection (measured: 32 x array_min(transform(...)) =
-# ~550ms plan construction, independent of data size). A single
-# selectExpr ships the whole projection as text and parses it JVM-side
-# in one call. Semantics are identical (same functions, same literal
-# types — `L` suffixes pin longs).
+def _check_hash_fn(hash_fn: str) -> None:
+    if hash_fn not in _HASH_FNS:
+        raise ValueError(
+            f"unknown hash_fn {hash_fn!r} (expected 'xxh64' or 'md5')")
+
+
+# Rendered as SQL text, not Column objects: a wide projection built
+# through the Column API costs one py4j round trip per function node,
+# while one selectExpr ships the whole projection to the JVM parser in
+# one call.
 def _str_hash_sql(s: str, hash_fn: str) -> str:
+    _check_hash_fn(hash_fn)
     if hash_fn == "xxh64":
         return f"xxhash64({s})"
-    if hash_fn == "md5":
-        return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
-    raise ValueError(f"unknown hash_fn {hash_fn!r} (expected 'xxh64' or 'md5')")
+    return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def _shingles_sql(col: str, k: int) -> str:
-    return (
-        f"array_distinct(transform("
-        f"sequence(1, greatest(length(lower({col})) - {k - 1}, 1)), "
-        f"_i -> substring(lower({col}), _i, {k})))"
-    )
-
-
-def _shingle_hash_sql(col: str, k: int, hash_fn: str,
-                      mod_prime: bool) -> str:
-    """`transform(shingles, s -> hash(s))`, optionally reduced into the
-    MinHash prime field, as one SQL expression string."""
-    h = _str_hash_sql("_s", hash_fn)
-    if mod_prime:
-        h = f"pmod({h}, {_MH_PRIME}L)"
-    return f"transform({_shingles_sql(col, k)}, _s -> {h})"
-
-
-# MinHash slot derivation — one O(len) string hash per shingle, then a
-# cheap per-slot derive on the resulting long (string hashing dominates
-# signature cost, so this is a several-fold cut over num_hashes string
-# hashes with the same collision guarantees). The derive differs by
-# mode:
+# MinHash slot derivation — one O(len) string hash per distinct
+# shingle, then a cheap per-slot derive on the resulting long (string
+# hashing dominates signature cost, so this is a several-fold cut over
+# num_hashes string hashes with the same collision guarantees). The
+# derive differs by mode:
 #
 # - 'xxh64' (default): slot_i = min over shingles of
-#   xxhash64(base_hash, i) — a fresh full-strength 8-byte hash per
-#   slot. Effectively an independent random permutation per slot, so
-#   the estimator stays unbiased even on tiny shingle universes.
+#   xxhash64(base_hash, i) — Spark's two-column hash, a fresh
+#   full-strength 8-byte hash per slot. Effectively an independent
+#   random permutation per slot, so the estimator stays unbiased even
+#   on tiny shingle universes.
 # - 'md5' (portable): the affine 2-wise family
 #   (a_i * (h mod p) + b_i) mod p over the Mersenne prime 2^31-1 (the
 #   construction Spark ML's MinHashLSH uses; 31-bit coefficients so
-#   every product fits a long under ANSI arithmetic), because external
-#   SQL engines (the DuckDB oracle) can replay modular arithmetic but
-#   not xxhash64. CAVEAT: 2-wise independence is NOT min-wise
-#   independence — on corpora whose distinct-shingle universe is tiny
-#   (templated synthetic text: ~2k shingles), the affine family's
-#   est_jaccard can drift by a few points either way (measured here:
-#   md5 -0.006, while the previous affine-over-xxh64 default drifted
-#   +0.06 and inflated est>=0.3 candidates ~9x — the reason the
-#   default path now uses the per-slot strong hash).
+#   every product fits a long), because external SQL engines (the
+#   DuckDB oracle) can replay modular arithmetic but not xxhash64.
+#   CAVEAT: 2-wise independence is NOT min-wise independence — on
+#   corpora whose distinct-shingle universe is tiny (templated
+#   synthetic text: ~2k shingles), the affine family's est_jaccard can
+#   drift by a few points either way (measured here: md5 -0.006, while
+#   an affine-over-xxh64 family drifted +0.06 and inflated est>=0.3
+#   candidates ~9x — the reason the default uses the per-slot strong
+#   hash).
 _MH_PRIME = (1 << 31) - 1
 
 
@@ -168,44 +149,212 @@ def _mh_params(num_hashes: int) -> "list[tuple[int, int]]":
     return params
 
 
-def _mh_derive(h: Column, a: int, b: int) -> Column:
-    return F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MH_PRIME))
+# Spark's XXH64 (Catalyst `XXH64`: seed 42, little-endian words),
+# vectorized over numpy uint64 arrays, which wrap mod 2^64 exactly like
+# the JVM's longs. Constants are folded in Python ints so no numpy
+# scalar arithmetic can overflow.
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+_U = np.uint64
+_X1, _X2, _X3, _X4, _X5 = map(_U, (_P1, _P2, _P3, _P4, _P5))
+_XSEED = 42
+_ZERO = _U(0)
 
 
-def _sig_slots_sql(src: str, num_hashes: int, hash_fn: str,
-                   pre_reduced: bool) -> "list[str]":
-    """Per-slot minhash SQL expressions over a hashed-shingle array
-    column ``src``. xxh64 mode: a fresh strong hash per (value, slot)
-    — min-wise independent in practice (see the family note above).
-    md5 mode: the portable affine family; ``pre_reduced`` says whether
-    ``src`` values are already in the prime field."""
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << _U(r)) | (x >> _U(64 - r))
+
+
+def _xround(acc, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _X2, 31) * _X1
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> _U(33))) * _X2
+    h = (h ^ (h >> _U(29))) * _X3
+    return h ^ (h >> _U(32))
+
+
+def _xxh64_rows(buf: np.ndarray) -> np.ndarray:
+    """XXH64 (seed 42) of every row of an (n, L) uint8 matrix: n
+    strings of one UTF-8 byte length L, including the 32-byte stripe
+    loop for L >= 32. Returns uint64."""
+    n, length = buf.shape
+
+    def lane(i: int, w: int) -> np.ndarray:  # little-endian w-byte words
+        return (np.ascontiguousarray(buf[:, i:i + w]).view(f"<u{w}")[:, 0]
+                .astype(np.uint64))
+
+    i = 0
+    if length >= 32:
+        v = [np.full(n, (_XSEED + s) & _M64, dtype=np.uint64)
+             for s in (_P1 + _P2, _P2, 0, -_P1)]
+        while i + 32 <= length:
+            v = [_xround(v[j], lane(i + 8 * j, 8)) for j in range(4)]
+            i += 32
+        h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        for vj in v:
+            h = (h ^ _xround(_ZERO, vj)) * _X1 + _X4
+    else:
+        h = np.full(n, _XSEED + _P5, dtype=np.uint64)
+    h = h + _U(length)
+    while i + 8 <= length:
+        h = _rotl(h ^ _xround(_ZERO, lane(i, 8)), 27) * _X1 + _X4
+        i += 8
+    if i + 4 <= length:
+        h = _rotl(h ^ (lane(i, 4) * _X1), 23) * _X2 + _X3
+        i += 4
+    for j in range(i, length):
+        h = _rotl(h ^ (buf[:, j].astype(np.uint64) * _X5), 11) * _X1
+    return _fmix(h)
+
+
+def _hash_long(v: np.ndarray, seed) -> np.ndarray:
+    """Catalyst ``XXH64.hashLong``: the hash of one 8-byte long."""
+    h = seed + _U(_P5 + 8)
+    return _fmix(_rotl(h ^ _xround(_ZERO, v), 27) * _X1 + _X4)
+
+
+def _xxh64_strings(strs: list[str]) -> np.ndarray:
+    """Spark ``xxhash64`` of each string as int64, one vectorized pass
+    per distinct UTF-8 byte length."""
+    enc = [s.encode() for s in strs]
+    lens = np.fromiter(map(len, enc), dtype=np.int64, count=len(enc))
+    out = np.empty(len(enc), dtype=np.uint64)
+    for length in np.unique(lens).tolist():
+        idx = np.flatnonzero(lens == length)
+        buf = np.frombuffer(b"".join([enc[j] for j in idx]),
+                            dtype=np.uint8).reshape(len(idx), length)
+        out[idx] = _xxh64_rows(buf)
+    return out.view(np.int64)
+
+
+def _md5_strings(strs: list[str]) -> np.ndarray:
+    """The 60-bit md5-prefix hash of each string as int64."""
+    return np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in strs),
+        dtype=np.int64, count=len(strs))
+
+
+def _minhash_slots(h: np.ndarray, hash_fn: str,
+                   num_hashes: int) -> Iterator[np.ndarray]:
+    """The per-slot values (int64) of each shingle hash ``h``, one slot
+    at a time, per the family note above."""
     if hash_fn == "xxh64":
-        return [f"array_min(transform({src}, _h -> xxhash64(_h, {i}L)))"
-                for i in range(num_hashes)]
-    inner = "_h" if pre_reduced else f"pmod(_h, {_MH_PRIME}L)"
-    return [f"array_min(transform({src}, _h -> "
-            f"pmod({inner} * {a}L + {b}L, {_MH_PRIME}L)))"
-            for a, b in _mh_params(num_hashes)]
+        base = _hash_long(h.view(np.uint64), _U(_XSEED))
+        for i in range(num_hashes):
+            yield _hash_long(np.full(1, i, dtype=np.uint64), base).view(np.int64)
+    else:
+        hm = h % _MH_PRIME
+        for a, b in _mh_params(num_hashes):
+            yield (hm * a + b) % _MH_PRIME
 
 
-def minhash_signature(text: Column, num_hashes: int = 32, k: int = 5,
-                      hash_fn: str = "xxh64") -> Column:
-    """MinHash signature as a pure column expression — no shuffle.
-    Slot derivation per the family note above (strong per-slot hash
-    for xxh64, prime-field affine for portable md5)."""
-    if hash_fn == "xxh64":
-        sh = F.transform(shingles(text, k), lambda s: F.xxhash64(s))
-        return F.array(*[
-            F.array_min(F.transform(
-                sh, lambda h: F.xxhash64(h, F.lit(i).cast("long"))))
-            for i in range(num_hashes)
-        ])
-    sh = F.transform(shingles(text, k),
-                     lambda s: F.pmod(_str_hash(s, hash_fn), F.lit(_MH_PRIME)))
-    return F.array(*[
-        F.array_min(F.transform(sh, lambda h: _mh_derive(h, a, b)))
-        for a, b in _mh_params(num_hashes)
-    ])
+# Shingle occurrences per kernel chunk: bounds a Python worker's memo,
+# code list and per-slot gathers at a few hundred MB however long or
+# unrepetitive the documents of one Arrow batch are.
+_CHUNK_SHINGLES = 1 << 21
+
+
+def _shingle_codes(
+    texts: list[str], k: int, cap: int,
+) -> Iterator[tuple[list[str], np.ndarray, np.ndarray]]:
+    """Split ``texts`` into chunks of whole documents holding about
+    ``cap`` shingles each, and yield per chunk: its distinct shingle
+    strings (the memo, in code order), every document's distinct
+    shingles as codes into them, concatenated, and the per-document
+    offsets into those codes."""
+    i, n = 0, len(texts)
+    while i < n:
+        memo: dict[str, int] = {}
+        codes: list[int] = []
+        offs = [0]
+        while i < n and len(codes) < cap:
+            t = texts[i]
+            shingles = dict.fromkeys(
+                [t[j:j + k] for j in range(max(len(t) - k + 1, 1))])
+            codes.extend([memo.setdefault(s, len(memo)) for s in shingles])
+            offs.append(len(codes))
+            i += 1
+        yield (list(memo), np.asarray(codes, dtype=np.int64),
+               np.asarray(offs, dtype=np.int64))
+
+
+def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
+                   hash_fn: str, num_hashes: int = 0,
+                   keep_sh: bool = True) -> DataFrame:
+    """The one MinHash kernel: (_id, _sh, _sig) per document from a
+    single Arrow pass — ``_sh`` the distinct k-shingle hashes (array of
+    longs, first-occurrence order; kept when ``keep_sh``), ``_sig`` the
+    ``num_hashes``-slot signature (kept when ``num_hashes`` > 0).
+
+    Shape: one spread repartition on the id (document corpora often
+    arrive as few Parquet files; without it a handful of tasks would do
+    all the shingling), Spark's ``lower`` in the JVM, then one
+    ``mapInArrow`` — map-only, no Python UDF. Per Arrow batch, each
+    document's distinct k-shingles are the code-point slices at
+    ``max(len - k + 1, 1)`` start positions (empty or short text is
+    one shingle), each DISTINCT shingle string of the batch is hashed
+    once through a batch-local memo (a batch of long documents is cut
+    into chunks of ``_CHUNK_SHINGLES`` shingles, each with its own
+    memo), and the signature is built one slot at a time with
+    ``np.minimum.reduceat`` over the per-document runs, so no
+    shingles x num_hashes matrix is ever formed.
+
+    Degenerate input refuses loudly: a NULL id or NULL text raises
+    ``ValueError`` (it would otherwise pair NULL-text documents as exact
+    duplicates, or drop a NULL-id document from every pair)."""
+    import pyarrow as pa
+    import pyspark.sql.types as T
+
+    _check_hash_fn(hash_fn)
+    str_hash = _xxh64_strings if hash_fn == "xxh64" else _md5_strings
+    spread = df.sparkSession.sparkContext.defaultParallelism
+    base = (df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+              .repartition(spread, "_id")
+              .select("_id", F.lower("_t").alias("_t")))
+    longs = T.ArrayType(T.LongType(), containsNull=False)
+    fields = [T.StructField("_id", base.schema["_id"].dataType)]
+    if keep_sh:
+        fields.append(T.StructField("_sh", longs))
+    if num_hashes:
+        fields.append(T.StructField("_sig", longs))
+    names = [f.name for f in fields]
+    cap = _CHUNK_SHINGLES
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            ids, texts = b.column(0), b.column(1)
+            if ids.null_count:
+                raise ValueError("minhash: NULL doc id")
+            if texts.null_count:
+                raise ValueError("minhash: NULL text")
+            lo = 0
+            for distinct, code, offs in _shingle_codes(
+                    texts.to_pylist(), k, cap):
+                h = str_hash(distinct)
+                n = len(offs) - 1
+                cols = [ids.slice(lo, n)]
+                lo += n
+                if keep_sh:
+                    cols.append(pa.ListArray.from_arrays(
+                        pa.array(offs.astype(np.int32)), pa.array(h[code])))
+                if num_hashes:
+                    sig = np.empty((n, num_hashes), dtype=np.int64)
+                    for i, v in enumerate(
+                            _minhash_slots(h, hash_fn, num_hashes)):
+                        sig[:, i] = np.minimum.reduceat(v[code], offs[:-1])
+                    cols.append(pa.ListArray.from_arrays(
+                        pa.array(np.arange(0, sig.size + 1, num_hashes,
+                                           dtype=np.int32)),
+                        pa.array(sig.ravel())))
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return base.mapInArrow(kernel, T.StructType(fields))
 
 
 def minhash_signatures(
@@ -216,33 +365,13 @@ def minhash_signatures(
     k: int = 5,
     hash_fn: str = "xxh64",
 ) -> DataFrame:
-    """MinHash signatures as pure per-row column expressions: the
-    shingle array is string-hashed ONCE into an intermediate `_hs`
-    projection, then every signature slot is an `array_min` over a
-    cheap affine transform of `_hs`. Two stacked projections matter:
-    CollapseProject declines to inline a non-cheap expression referenced
-    ``num_hashes`` times, so `_hs` is evaluated once per row in codegen.
-
-    No explode, no aggregation — the signature stage is map-only after
-    one narrow (id, text) spread: document corpora often arrive as few
-    Parquet files, and without the repartition the whole per-row hash
-    work (and everything downstream) lands on a handful of tasks.
-    Returns (_id, h0..h{n-1}).
-
-    Built via selectExpr strings, not Column objects: the 32-slot
-    projection costs ~0.5s of py4j chatter per invocation through the
-    Column API and one JVM parse call as text (see _str_hash_sql)."""
-    spread = df.sparkSession.sparkContext.defaultParallelism
-    mod_prime = hash_fn == "md5"
-    hs = (df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-            .repartition(spread, "_id")
-            .selectExpr(
-                "_id",
-                f"{_shingle_hash_sql('_t', k, hash_fn, mod_prime=mod_prime)}"
-                " AS _hs"))
-    slots = _sig_slots_sql("_hs", num_hashes, hash_fn, pre_reduced=mod_prime)
-    return hs.selectExpr(
-        "_id", *[f"{s} AS h{i}" for i, s in enumerate(slots)])
+    """MinHash signatures, one row per document: (_id, h0..h{n-1}).
+    Built by the shared Arrow kernel (`_minhash_frame`): the stage is
+    map-only after one narrow (id, text) spread — no explode, no
+    aggregation, no Python UDF — and a NULL id or text raises."""
+    return _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
+                          keep_sh=False).selectExpr(
+        "_id", *[f"_sig[{i}] AS h{i}" for i in range(num_hashes)])
 
 
 def minhash_lsh_candidates(
@@ -282,11 +411,11 @@ def minhash_lsh_candidates(
     rather than composing a post-hoc filter, and note localCheckpoint
     storage does not survive executor loss (see README's fault-model
     note)."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k, hash_fn) \
-        .select("_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("_sig"))
+    sig = _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
+                         keep_sh=False)
     pins: list[DataFrame] = []
     out = _candidates_from_sigs(sig, num_hashes, bands, min_est,
-                                max_bucket, audit_cap, hash_fn, pins)
+                                max_bucket, audit_cap, pins)
     # the candidate set is bounded (near-dups are rare at corpus
     # scale): materialize it eagerly so the intermediate signature pin
     # can be released instead of leaking for the session (paths.py's
@@ -297,6 +426,31 @@ def minhash_lsh_candidates(
     return out
 
 
+def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(_id, _band, _bhash) rows of a (_id, _sig) frame: one bucket key
+    per band — the shared banding of ``_candidates_from_sigs`` and
+    ``lsh_skew_stats``.
+
+    Bucket key per band: the concatenated band slice xxhash64-folded
+    to a long — narrow shuffle rows in EVERY mode. Bucket keys never
+    reach the output; only the grouping they induce matters, and the
+    fold is injective modulo negligible collisions, so an external
+    oracle grouping by the RAW slice produces identical buckets →
+    identical member sets → identical pairs (md5-portable parity is
+    unaffected; asserted by the gate oracle and the md5 differential)."""
+    rows_per_band = num_hashes // bands
+
+    def key(b: int) -> str:
+        cat = ", ".join(
+            f"CAST(element_at(_sig, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band))
+        return f"xxhash64(concat_ws(',', {cat}))"
+
+    keys = ", ".join(key(b) for b in range(bands))
+    return sig.selectExpr(
+        "_id", f"posexplode(array({keys})) AS (_band, _bhash)")
+
+
 def _candidates_from_sigs(
     sig: DataFrame,
     num_hashes: int,
@@ -304,7 +458,6 @@ def _candidates_from_sigs(
     min_est: float,
     max_bucket: int,
     audit_cap: bool,
-    hash_fn: str = "xxh64",
     pins: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Banding + in-bucket pair emission over a (_id, _sig) frame —
@@ -320,30 +473,12 @@ def _candidates_from_sigs(
     the (tiny, persisted) signature frame back on both ids — est is a
     pair property, independent of which bucket surfaced the pair, so
     distinct-then-join equals the inline max(est) dedup exactly."""
-    rows_per_band = num_hashes // bands
     # (id, num_hashes longs) — bounded at any corpus scale; serves the
     # banding branch and both est-join probes
     sig = sig.persist()
     if pins is not None:
         pins.append(sig)
-
-    # Bucket key per band: the concatenated band slice xxhash64-folded
-    # to a long — narrow shuffle rows in EVERY mode. Bucket keys never
-    # reach the output; only the grouping they induce matters, and the
-    # fold is injective modulo negligible collisions, so an external
-    # oracle grouping by the RAW slice produces identical buckets →
-    # identical member sets → identical pairs (md5-portable parity is
-    # unaffected; asserted by the gate oracle and the md5 differential).
-    def _band_key_sql(b: int) -> str:
-        cat = ", ".join(
-            f"CAST(element_at(_sig, {b * rows_per_band + r + 1}) AS STRING)"
-            for r in range(rows_per_band))
-        return f"xxhash64(concat_ws(',', {cat}))"
-
-    keys = ", ".join(_band_key_sql(b) for b in range(bands))
-    banded = sig.selectExpr(
-        "_id", f"posexplode(array({keys})) AS (_band, _bhash)")
-    grouped = (banded.groupBy("_band", "_bhash")
+    grouped = (_banded(sig, num_hashes, bands).groupBy("_band", "_bhash")
                .agg(F.array_sort(F.collect_list("_id")).alias("_ms"))
                .filter(F.size("_ms") >= 2))
     # The skew cap must never be SILENT. Two tiers:
@@ -424,11 +559,12 @@ def minhash_neardup_pairs(
       shingle-hash arrays — ``array_union`` materializes a
       corpus-width array per pair just to take its size, roughly
       doubling verify cost.
-    - Signatures derive from the same hash family: pmod into the prime
-      field is applied on top of the raw xxhash64 shingle hash, so the
-      candidate set is bit-identical to ``minhash_lsh_candidates``.
+    - Signatures and shingle hashes come from the same Arrow kernel
+      (`_minhash_frame`) the two-stage composition uses, so the
+      candidate set and the verified shingle sets are bit-identical
+      to it.
 
-    Scale shape: exactly two shingle-hash passes over the corpus — one
+    Scale shape: exactly two kernel passes over the corpus — one
     map-only pass feeding the signature frame (persisted inside
     ``_candidates_from_sigs``: num_hashes longs per doc, bounded at any
     scale), and one CANDIDATE-BOUNDED pass feeding the verify join
@@ -438,41 +574,33 @@ def minhash_neardup_pairs(
     shuffles (long, long) rows, and nothing is unconditionally
     broadcast — AQE picks broadcast sides from runtime sizes.
 
-    ``reuse_hashes=True`` flips that trade: the hashed-shingle frame is
-    persisted (MEMORY_AND_DISK, released at return) during the
-    signature pass and the verify join reads it back, eliminating the
-    second hash pass at the cost of pinning O(total distinct shingles)
-    longs. Right for template-heavy corpora where candidates cover
-    most documents (re-hashing would be a full pass anyway); wrong at
-    sparse-candidate corpus scale, so the default stays False.
+    ``reuse_hashes=True`` flips that trade: one kernel pass emits both
+    the signatures and the shingle hashes, that frame is persisted
+    (MEMORY_AND_DISK, released at return) and the verify join reads it
+    back, eliminating the second pass at the cost of pinning O(total
+    distinct shingles) longs. Right for template-heavy corpora where
+    candidates cover most documents (re-hashing would be a full pass
+    anyway); wrong at sparse-candidate corpus scale, so the default
+    stays False. A NULL id or text raises ``ValueError`` in either
+    mode.
 
     Executes EAGERLY (localCheckpoint at return) so every pinned
     intermediate is released at call time — narrow the output with
     ``min_est``/``threshold``, not post-hoc filters."""
-    spread = docs.sparkSession.sparkContext.defaultParallelism
     base = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-
-    def hashed(frame: DataFrame) -> DataFrame:
-        # repartition BEFORE hashing: document corpora often arrive as
-        # a handful of parquet files, and hashed at scan width a few
-        # tasks would do all the shingling work
-        return (frame.repartition(spread, "_id")
-                .selectExpr("_id",
-                            f"{_shingle_hash_sql('_t', k, hash_fn, mod_prime=False)}"
-                            " AS _sh"))
-
     pins: list[DataFrame] = []
     hs_full: DataFrame | None = None
     if reuse_hashes:
         from pyspark.storagelevel import StorageLevel
-        hs_full = hashed(base).persist(StorageLevel.MEMORY_AND_DISK)
+        hs_full = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes) \
+            .persist(StorageLevel.MEMORY_AND_DISK)
         pins.append(hs_full)
-    slots = ", ".join(
-        _sig_slots_sql("_sh", num_hashes, hash_fn, pre_reduced=False))
-    sig = (hs_full if hs_full is not None else hashed(base)).selectExpr(
-        "_id", f"array({slots}) AS _sig")
+        sig = hs_full.select("_id", "_sig")
+    else:
+        sig = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes,
+                             keep_sh=False)
     cands = (_candidates_from_sigs(sig, num_hashes, bands, min_est,
-                                   max_bucket, audit_cap, hash_fn, pins)
+                                   max_bucket, audit_cap, pins)
              .select("id_a", "id_b").persist())
     pins.append(cands)
     if hs_full is not None:
@@ -483,12 +611,13 @@ def minhash_neardup_pairs(
         # don't already do)
         sh = hs_full
     else:
-        # candidate-bounded second hash pass, persisted: one
+        # candidate-bounded second kernel pass, persisted: one
         # computation serves both sides of the pair join
         ids = (cands.select(F.col("id_a").alias("_id"))
                .unionByName(cands.select(F.col("id_b").alias("_id")))
                .distinct())
-        sh = hashed(base.join(ids, "_id", "left_semi")).persist()
+        sh = _minhash_frame(base.join(ids, "_id", "left_semi"), "_t", "_id",
+                            k, hash_fn).persist()
         pins.append(sh)
     j = (cands
          .join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sa")), "id_a")
@@ -592,20 +721,10 @@ def lsh_skew_stats(
     parameters) would drop. One aggregate job over the banding stream —
     run it when the in-band Observation warning was unavailable (AQE)
     or before committing to a parameter choice on a new corpus."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k, hash_fn) \
-        .select("_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("_sig"))
-
-    def _band_key_sql(b: int) -> str:
-        cat = ", ".join(
-            f"CAST(element_at(_sig, {b * rows_per_band + r + 1}) AS STRING)"
-            for r in range(rows_per_band))
-        return f"xxhash64(concat_ws(',', {cat}))"
-
-    keys = ", ".join(_band_key_sql(b) for b in range(bands))
-    banded = sig.selectExpr(
-        "_id", f"posexplode(array({keys})) AS (_band, _bhash)")
-    sizes = banded.groupBy("_band", "_bhash").agg(F.count(F.lit(1)).alias("_n"))
+    sig = _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
+                         keep_sh=False)
+    sizes = (_banded(sig, num_hashes, bands).groupBy("_band", "_bhash")
+             .agg(F.count(F.lit(1)).alias("_n")))
     return sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum((F.col("_n") >= 2).cast("long")).alias("n_pairable"),
@@ -678,7 +797,6 @@ def ngram_jaccard_pairs(
     corpus scale; a full-table shuffle to serve a few thousand pairs is
     the opposite failure). ``broadcast_docs=True`` forces the hint on
     the (already reduced) shingle table for plan comparisons."""
-    spread = docs.sparkSession.sparkContext.defaultParallelism
     ids = (candidates.select(F.col("id_a").alias("_id"))
            .unionByName(candidates.select(F.col("id_b").alias("_id")))
            .distinct())
@@ -687,12 +805,9 @@ def ngram_jaccard_pairs(
     # strings: set sizes are preserved (collisions are ~n²/2⁶⁰+,
     # negligible) and long-array intersection is several times cheaper
     # than string-array
-    sh = (docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-              .join(ids, "_id", "left_semi")
-              .repartition(spread, "_id")
-              .selectExpr("_id",
-                          f"{_shingle_hash_sql('_t', k, hash_fn, mod_prime=False)}"
-                          " AS _sh"))
+    sh = _minhash_frame(
+        docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+            .join(ids, "_id", "left_semi"), "_t", "_id", k, hash_fn)
     if broadcast_docs:
         sh = F.broadcast(sh)
     j = (candidates

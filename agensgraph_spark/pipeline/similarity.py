@@ -31,7 +31,7 @@ def matrix_lit(rows: "list[list[float]]") -> Column:
     on a nested Python list crosses py4j once PER ELEMENT (a 16x64
     centroid matrix = ~2,100 round trips = ~2s of pure DRIVER time per
     query construction, measured via cProfile — the same disease
-    `_sig_slots_sql` documents for the minhash projection). Rendering
+    `dedup._str_hash_sql` documents for wide projections). Rendering
     the matrix as SQL text and parsing it JVM-side makes it a single
     call. Exactness: Python's repr of a float is the shortest string
     that round-trips to the same double, and Spark's literal parser

@@ -1094,19 +1094,20 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min_est one sigma under the exact threshold (σ≈sqrt(.4*.6/32)≈.087):
     # templated corpora produce enormous est>=0.2 candidate sets, and the
     # exact-shingle verify is the expensive stage — prefilter tightly.
-    # The fused pipeline shares one shingle-hash scan between the
-    # signature and verify stages (output identical to the two-stage
-    # minhash_lsh_candidates + ngram_jaccard_pairs composition,
-    # asserted in tests/test_differential_dedup.py).
+    # The fused pipeline's shingle hashes and signatures come from one
+    # Arrow kernel pass (dedup._minhash_frame; output identical to the
+    # two-stage minhash_lsh_candidates + ngram_jaccard_pairs
+    # composition, asserted in tests/test_differential_dedup.py).
     # hash_fn='md5' (the portable 60-bit md5-prefix hash) so the WHOLE
     # pipeline — shingle hash, affine min-hash, banding, est filter,
     # exact verify — is replayed by the DuckDB oracle below; the xxh64
     # fast path keeps its exact pure-Python differential in
     # tests/test_differential_dedup.py.
     # reuse_hashes: the synthetic documents table is template-heavy —
-    # LSH candidates cover most docs, so pinning the hashed-shingle
-    # frame beats a second near-full md5 pass (see the operator's
-    # docstring for when the default False is right instead)
+    # LSH candidates cover most docs, so pinning the kernel's
+    # (_id, _sh, _sig) frame beats a second near-full kernel pass (see
+    # the operator's docstring for when the default False is right
+    # instead)
     return D.minhash_neardup_pairs(docs, min_est=0.3, threshold=0.4,
                                    hash_fn="md5", reuse_hashes=True).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))

@@ -55,8 +55,6 @@ SLOW_TESTS = frozenset([
     'test_differential_dedup.py::test_connected_components_random_vs_duckdb',
     'test_differential_dedup.py::test_connected_components_string_ids',
     'test_differential_dedup.py::test_jaccard_char_pairs_requires_bound',
-    'test_differential_dedup.py::test_minhash_lsh_pipeline_matches_python[xxh64]',
-    'test_differential_dedup.py::test_minhash_md5_and_xxh64_verified_pairs_agree',
     'test_expr_fuzz.py::test_expr_fuzz_differential',
     'test_iteration_state.py::test_bfs_bounded_cached_frames',
     'test_iteration_state.py::test_dijkstra_bounded_cached_frames',

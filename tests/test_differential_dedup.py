@@ -14,7 +14,6 @@ import re
 from collections import defaultdict
 
 import pytest
-from pyspark.sql import functions as F
 
 from _xxh64 import xxh64_signed, xxh64_slot_signed
 from agensgraph_spark.pipeline import dedup as D
@@ -24,7 +23,7 @@ _U64 = (1 << 64) - 1
 
 
 def md5_signed(s: str) -> int:
-    """Pure-Python replay of dedup._str_hash's 'md5' mode: first 15
+    """Pure-Python replay of the dedup 'md5' hash mode: first 15
     hex chars of md5 parsed base-16 — a 60-bit non-negative long."""
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
@@ -64,7 +63,7 @@ def py_signature(text: str, params, k: int = 5, hash_fn: str = "xxh64"):
     h0 = PY_HASH[hash_fn]
     if hash_fn == "xxh64":
         # strong per-slot hash: slot_i = min over shingles of
-        # xxhash64(base_hash, i) — mirrors dedup._sig_slots_sql
+        # xxhash64(base_hash, i) — mirrors dedup._minhash_slots
         hs = [h0(s) for s in py_shingles(text, k)]
         return [min(xxh64_slot_signed(h, i) for h in hs)
                 for i in range(len(params))]
@@ -185,20 +184,84 @@ def test_minhash_signatures_match_python(spark, hash_fn):
     assert got == exp
 
 
+# Edge cases of the shingle/signature kernel: empty text, text shorter
+# than k, σ/ς and İ (lowercasing grows the text by a code point), and
+# mixed 1-4 byte UTF-8 characters; the 4-byte emoji at k=10 give
+# 40-byte shingles, which exercise XXH64's 32-byte stripe loop.
+_EDGE_TEXTS = [
+    "",
+    "abc",
+    "ΟΔΟΣ σς ΣΟΦΟΣ",
+    "İSTANBUL İzmir",
+    "😀🎉🥳😀🎉🥳😀🎉🥳😀🎉 party",
+    "é中😀a" * 4,
+    "mixed ascii text that is comfortably longer than any shingle",
+]
+
+
 @pytest.mark.parametrize("hash_fn", HASH_FNS)
-def test_minhash_signature_column_variant_agrees(spark, hash_fn):
-    """The single-column minhash_signature (pure Column expression)
-    must produce the same slots as the frame-level minhash_signatures
-    (selectExpr path) — both derive from the same slot construction."""
-    docs = make_corpus(n_base=4, variants=1)
-    df = _docs_df(spark, docs)
-    col_sigs = {r["doc_id"]: list(r["sig"]) for r in df.select(
-        "doc_id",
-        D.minhash_signature(F.col("text"), hash_fn=hash_fn).alias("sig"),
-    ).collect()}
-    frame_sigs = {r["_id"]: [r[f"h{i}"] for i in range(32)]
-                  for r in D.minhash_signatures(df, hash_fn=hash_fn).collect()}
-    assert col_sigs == frame_sigs
+def test_minhash_kernel_edge_cases_match_python(spark, hash_fn,
+                                                monkeypatch):
+    """The Arrow kernel's shingle-hash sets (``_sh``) and signatures
+    (``_sig``) equal the independent Python mirror (py_shingles,
+    py_signature, tests/_xxh64.py) on the edge texts at k=5 and k=10.
+    The templated corpus runs again with Arrow batches of 3 rows, so
+    documents sharing shingles land in different batches — the
+    per-batch shingle memo must not leak codes across batches — and
+    with 300-shingle chunks, which cut every batch into several
+    memos."""
+    edge = list(enumerate(_EDGE_TEXTS))
+    corpus = [(100 + i, t) for i, t in make_corpus(n_base=4, variants=2)]
+    h0 = PY_HASH[hash_fn]
+    params = mh_params(32)
+
+    def check(docs, k):
+        rows = D._minhash_frame(_docs_df(spark, docs), "text", "doc_id", k,
+                                hash_fn, num_hashes=32).collect()
+        got = {r["_id"]: (sorted(r["_sh"]), list(r["_sig"])) for r in rows}
+        exp = {did: (sorted(h0(s) for s in py_shingles(t, k)),
+                     py_signature(t, params, k, hash_fn))
+               for did, t in docs}
+        assert got == exp
+
+    check(edge, 5)
+    check(edge, 10)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        check(corpus, 5)
+    finally:
+        spark.conf.set(conf, old)
+    monkeypatch.setattr(D, "_CHUNK_SHINGLES", 300)
+    check(corpus, 5)
+
+
+def test_minhash_refuses_null_text_and_id(spark):
+    """A NULL text or doc id fails loudly instead of pairing two
+    NULL-text documents as exact duplicates or silently dropping a
+    NULL-id document from every pair — in the signature builder, the
+    fused near-dup pipeline (both hash modes) and the exact verify. An
+    unknown hash_fn still raises on the driver at call time."""
+    schema = "doc_id long, text string"
+    null_text = spark.createDataFrame(
+        [(1, None), (2, None), (3, "some ordinary text")], schema)
+    null_id = spark.createDataFrame(
+        [(1, "some ordinary text"), (None, "some ordinary text")], schema)
+    with pytest.raises(Exception, match="minhash: NULL text"):
+        D.minhash_signatures(null_text).collect()
+    with pytest.raises(Exception, match="minhash: NULL doc id"):
+        D.minhash_signatures(null_id).collect()
+    for hf in HASH_FNS:
+        with pytest.raises(Exception, match="minhash: NULL text"):
+            D.minhash_neardup_pairs(null_text, hash_fn=hf)
+    with pytest.raises(Exception, match="minhash: NULL doc id"):
+        D.minhash_neardup_pairs(null_id)
+    cands = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
+    with pytest.raises(Exception, match="minhash: NULL text"):
+        D.ngram_jaccard_pairs(cands, null_text).collect()
+    with pytest.raises(ValueError, match="unknown hash_fn"):
+        D.ngram_jaccard_pairs(cands, null_text, hash_fn="sha1")
 
 
 @pytest.mark.parametrize("hash_fn", HASH_FNS)

@@ -317,14 +317,16 @@ def test_quantize_embeddings_map_only(spark):
 
 def test_minhash_signatures_single_exchange_no_python(spark):
     """The signature stage is map-only after ONE spread repartition:
-    exactly one Exchange (the explicit spread), zero Python eval nodes
-    — the shape that keeps a 100-TB signature pass embarrassingly
-    parallel."""
+    exactly one Exchange (the explicit spread) and exactly one
+    MapInArrow (the shared shingle-hash/signature kernel), in both hash
+    modes — no per-row Python eval node, the shape that keeps a 100-TB
+    signature pass embarrassingly parallel."""
     from agensgraph_spark.pipeline import dedup as D
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for hash_fn in ("xxh64", "md5"):
         plan = physical(D.minhash_signatures(docs, hash_fn=hash_fn))
         assert plan.count("Exchange") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
