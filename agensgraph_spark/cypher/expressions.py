@@ -1244,7 +1244,3 @@ class ExprCompiler:
         if fn is None:
             raise NotImplementedError(f"function {e.name!r} not supported")
         return TC(fn(*[self.tc(a).col for a in e.args]), None)
-
-
-def _sql(col: Column) -> str:  # pragma: no cover - debug helper
-    return str(col)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from agensgraph_spark.pipeline.dedup import _driver_label_frame
+from agensgraph_spark.pipeline.dedup import _driver_edges, _driver_label_frame
 
 
 def degree_stats(
@@ -178,11 +178,17 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_triangles"))
 
 
+# Largest peel, as a share of the surviving edges, for which k_truss
+# recomputes support incrementally instead of re-enumerating every
+# triangle (0 forces the full enumeration on every peel). Read at call
+# time so tests can flip it.
+_INCREMENTAL_PEEL = 0.005
+
+
 def k_truss(
     edges: DataFrame,
     k: int = 4,
     max_iters: int = 50,
-    incremental_threshold: float = 0.005,
 ) -> DataFrame:
     """Edges of the k-truss: the maximal subgraph in which every edge
     sits in at least ``k - 2`` triangles OF THE SUBGRAPH — the
@@ -206,17 +212,16 @@ def k_truss(
     yet re-paid the FULL degree-oriented wedge enumeration, ~5.5 s of
     the 49 s total per round; at a 2% peel the affected set is already
     large enough that the full enumeration wins, hence the 0.5%
-    default): when a peel removes at most
-    ``incremental_threshold`` of the surviving edges, only AFFECTED
-    edges — those sharing a triangle of the pre-peel graph with a
-    removed edge — can change support (a triangle of an unaffected
-    edge contains no removed edge, so it survives verbatim), and their
+    ``_INCREMENTAL_PEEL``): when a peel removes at most that share of
+    the surviving edges, only AFFECTED edges — those sharing a
+    triangle of the pre-peel graph with a removed edge — can change
+    support (a triangle of an unaffected edge contains no removed
+    edge, so it survives verbatim), and their
     new support is recomputed EXACTLY by a bounded common-neighbor
     join seeded from the removed set. Larger peels (and round 1) run
     the full enumeration. Same values either way — the fixpoint and
     the final supports are properties of the graph, pinned by the
-    incremental-vs-full differential test; ``incremental_threshold=0``
-    forces the full re-enumeration every round."""
+    incremental-vs-full differential test."""
     import logging
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
@@ -302,7 +307,7 @@ def k_truss(
             supp.filter(F.col("support") < k - 2).select("a", "b"),
             n_removed)
         cur = keep.select("a", "b")
-        if n_removed > incremental_threshold * n_before:
+        if n_removed > _INCREMENTAL_PEEL * n_before:
             supp = full_support(cur).localCheckpoint(eager=False)
         else:
             # triangles of the PRE-peel graph that contain a removed
@@ -474,6 +479,31 @@ def hits(
             .join(hub, "id"))
 
 
+def _seed_set(sources: DataFrame, verts: DataFrame,
+              op: str) -> tuple[DataFrame, DataFrame]:
+    """(srcs, ns) for a seeded operator: ``srcs`` is the distinct
+    ``sources`` ids present in ``verts`` (an out-of-graph seed can
+    never be reached, so counting it would skew |S|), lazily
+    localCheckpointed — every caller reads it twice (its seed rows
+    and |S|); ``ns`` is a one-row ``_ns`` frame holding |S| as a
+    double. An empty seed set refuses IN the plan (raise_error on the
+    |S| aggregate, naming ``op``) rather than through a plan-time count
+    job, which re-ran the distinct+semi-join subplan on every call —
+    ~0.4 s of pure overhead — while the in-plan raise still fails the
+    run loudly at first action."""
+    srcs = (sources.select("id").distinct()
+            .join(verts, "id", "left_semi")
+            .localCheckpoint(eager=False))
+    ns = srcs.agg(F.count(F.lit(1)).cast("double").alias("_ns0")) \
+        .select(F.when(
+            F.col("_ns0") == 0,
+            F.raise_error(F.lit(
+                f"{op}: no source id is present in vertices (the seed "
+                "set is empty)")).cast("double"))
+            .otherwise(F.col("_ns0")).alias("_ns"))
+    return srcs, ns
+
+
 def personalized_pagerank(
     edges: DataFrame,
     vertices: DataFrame,
@@ -500,19 +530,7 @@ def personalized_pagerank(
     |S∩V|/|S| and diverge from any oracle that derives seeds from the
     vertex set. All-out-of-graph (or empty) sources refuse loudly."""
     verts = vertices.select("id").distinct()
-    src_set = sources.select("id").distinct().join(verts, "id", "left_semi")
-    # the emptiness refusal rides IN the plan (raise_error on the |S|
-    # aggregate) rather than as a plan-time count job: the guard job
-    # re-ran the whole distinct+semi-join subplan on EVERY invocation
-    # — ~0.4s of pure overhead per call — while the in-plan raise
-    # costs nothing and still fails the run loudly at first action
-    n_src = src_set.agg(F.count(F.lit(1)).cast("double").alias("_ns0")) \
-        .select(F.when(
-            F.col("_ns0") == 0,
-            F.raise_error(F.lit(
-                "personalized_pagerank: no source id is present in "
-                "vertices (restart mass would be undefined)"))
-            .cast("double")).otherwise(F.col("_ns0")).alias("_ns"))
+    srcs, ns = _seed_set(sources, verts, "personalized_pagerank")
     # restart (with its |S| raise-guard subplan) and the
     # degree-annotated edge relation are referenced every iteration:
     # lazy localCheckpoint truncates each to ONE LogicalRDD computed
@@ -520,8 +538,8 @@ def personalized_pagerank(
     # guard and scan+degree-join subtrees per round (the r14
     # shared-subtree discipline pagerank already applies)
     restart = (verts
-               .join(src_set.withColumn("_is_src", F.lit(1)), "id", "left")
-               .crossJoin(F.broadcast(n_src))
+               .join(srcs.withColumn("_is_src", F.lit(1)), "id", "left")
+               .crossJoin(F.broadcast(ns))
                .select("id", F.when(F.col("_is_src").isNotNull(),
                                     F.lit(1.0) / F.col("_ns"))
                        .otherwise(F.lit(0.0)).alias("restart"))
@@ -707,9 +725,7 @@ def harmonic_centrality_sampled(
            .distinct()
            .localCheckpoint(eager=False))
     verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    srcs = (sources.select("id").distinct()
-            .join(verts, "id", "left_semi")
-            .localCheckpoint(eager=False))
+    srcs, ns = _seed_set(sources, verts, "harmonic_centrality_sampled")
     dist = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
                        F.lit(0).alias("d"))
     frontier = dist
@@ -726,19 +742,7 @@ def harmonic_centrality_sampled(
         dist = dist.unionByName(nxt)
         frontier = nxt
     # |V| and |S| folded declaratively (two single-row aggregates,
-    # broadcast back) so the whole run replays as chained SQL CTEs.
-    # The empty-seed refusal rides IN the |S| aggregate (raise_error):
-    # a plan-time count guard re-ran the distinct+semi-join subplan on
-    # every invocation — pure per-call overhead — while the in-plan
-    # raise still fails the run loudly at first action.
-    ns = srcs.agg(F.count(F.lit(1)).cast("double").alias("_ns0")) \
-        .select(F.when(
-            F.col("_ns0") == 0,
-            F.raise_error(F.lit(
-                "harmonic_centrality_sampled: no source id is present "
-                "in vertices (the |V|/|S| scale factor would be "
-                "undefined)")).cast("double"))
-            .otherwise(F.col("_ns0")).alias("_ns"))
+    # broadcast back) so the whole run replays as chained SQL CTEs
     stats = (verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
              .crossJoin(ns))
     reached = (dist.filter(F.col("d") > 0)
@@ -894,7 +898,6 @@ def strongly_connected_components(
     vertices: DataFrame | None = None,
     max_rounds: int = 30,
     max_iters: int = 300,
-    driver_max_edges: int = 100_000,
 ) -> DataFrame:
     """Strongly connected components of a directed edge frame:
     (id, component) with component = the minimum member id of the SCC
@@ -938,26 +941,20 @@ def strongly_connected_components(
     split `connected_components` uses): cyclic cores are SPARSE at
     corpus scale, and the trim+settle loop's cost on a small graph is
     pure round-count x scheduler overhead. When the raw edge list fits
-    the driver (``driver_max_edges``, ~1.5 MB of longs at the
-    default), one iterative Tarjan pass over the collected edges
+    the driver (``dedup._DRIVER_MAX_EDGES``, ~1.5 MB of longs), one
+    iterative Tarjan pass over the collected edges
     labels every endpoint (duplicates/self-loops are harmless, and
     the min-member label is a property of the component, so the
     labeling is traversal-order-independent and exactly matches the
     distributed path) and broadcast-joins back onto the (arbitrarily
     large, distributed) vertex universe — two jobs total instead of
     O(rounds) count jobs. Above the threshold the FW-BW-Trim loop
-    below takes over; ``driver_max_edges=0`` forces it (the
-    differential test pins both regimes against each other)."""
-    # r15 (guide §5, r14 verdict item 6): the regime gate is a bounded
-    # fused probe+fetch — limit(k+1).collect() ships at most k+1 narrow
-    # rows and short-circuits once k+1 exist, so the decision is
-    # unchanged while a 100 TB edge frame is never persisted or counted
-    # in full, AND the edge-producing plan runs once, not twice (len <=
-    # k means the bounded fetch exhausted the frame — the rows in hand
-    # are the complete edge list; same fusion as connected_components).
+    below takes over (the differential test pins both regimes against
+    each other). The gate is `dedup._driver_edges`, the bounded
+    probe+fetch `connected_components` uses too."""
     raw = edges.select("src", "dst")
-    local = raw.limit(driver_max_edges + 1).collect()
-    if len(local) <= driver_max_edges:
+    local = _driver_edges(raw)
+    if local is not None:
         comp = _tarjan_scc((r["src"], r["dst"]) for r in local)
         return _driver_label_frame(
             edges.sparkSession, sorted(comp.items()),
@@ -1078,8 +1075,7 @@ def betweenness_centrality_sampled(
            .filter(F.col("src") != F.col("dst"))
            .distinct().localCheckpoint(eager=False))
     verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    srcs = (sources.select("id").distinct().join(verts, "id", "left_semi")
-            .localCheckpoint(eager=False))
+    srcs, ns = _seed_set(sources, verts, "betweenness_centrality_sampled")
     levels = [srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
                           F.lit(1.0).alias("sigma"))]
     seen = levels[0].select("s", "v")
@@ -1118,14 +1114,6 @@ def betweenness_centrality_sampled(
     acc = deltas[1]
     for h in range(2, max_hops + 1):
         acc = acc.unionByName(deltas[h])
-    ns = srcs.agg(F.count(F.lit(1)).cast("double").alias("_ns0")) \
-        .select(F.when(
-            F.col("_ns0") == 0,
-            F.raise_error(F.lit(
-                "betweenness_centrality_sampled: no source id is present "
-                "in vertices (the |V|/|S| scale factor would be "
-                "undefined)")).cast("double"))
-            .otherwise(F.col("_ns0")).alias("_ns"))
     stats = (verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
              .crossJoin(ns))
     summed = (acc.filter(F.col("s") != F.col("v"))

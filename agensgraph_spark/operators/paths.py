@@ -15,7 +15,7 @@ Scale notes:
 - the edge relation is pinned for the duration of the loop and
   released on exit;
 - path-array columns grow O(depth); lineage is cut with
-  ``localCheckpoint`` every ``checkpoint_every`` hops;
+  ``localCheckpoint`` every ``_CHECKPOINT_EVERY`` hops;
 - frontiers are pruned per hop (shortest-path keeps only the cheapest
   row per (seed, vertex)), so frontier size is bounded by reachable
   vertices, not path count;
@@ -73,10 +73,9 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _maybe_checkpoint(df: DataFrame, k: int, every: int | None) -> DataFrame:
-    if every and k % every == 0:
-        return _ckpt(df)
-    return df
+# vle_expand truncates the frontier's lineage (and learns its size)
+# every this many hops; read at call time so tests can flip it.
+_CHECKPOINT_EVERY = 6
 
 
 BROADCAST_EDGE_LIMIT = 200_000
@@ -122,7 +121,6 @@ def vle_expand(
     min_hops: int,
     max_hops: int | None,
     unique_edges: bool = True,
-    checkpoint_every: int | None = 6,
 ) -> DataFrame:
     """Variable-length edge expansion ``[:T*min..max]``.
 
@@ -174,7 +172,7 @@ def vle_expand(
     # materializes the edge shuffle's map side before flipping to
     # broadcast (the dijkstra r12 finding; at cluster scale that is a
     # full shuffle write of the edge relation). Later rounds' frontiers
-    # are lazy (checkpointed only every `checkpoint_every`), so their
+    # are lazy (checkpointed only every `_CHECKPOINT_EVERY`), so their
     # sizes are unknown between checkpoints and AQE keeps the decision.
     fcount: int | None = None
     if pinned and not small:
@@ -196,8 +194,8 @@ def vle_expand(
             F.lit(k).cast("long").alias("len"),
         )
         fcount = None
-        frontier = _maybe_checkpoint(frontier, k, checkpoint_every)
-        if checkpoint_every and k % checkpoint_every == 0:
+        if k % _CHECKPOINT_EVERY == 0:
+            frontier = _ckpt(frontier)
             # the frame is materialized — the count reads stored blocks
             fcount = frontier.count()
         if k >= min_hops:

@@ -22,49 +22,13 @@ from __future__ import annotations
 
 import hashlib
 import logging
-import threading
 from typing import Iterator
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
-
-
-def _warn_async(obs: Observation, metric: str, message: str) -> None:
-    """Surface an observed metric as a warning once the query runs.
-    The JVM-side ``Observation.getAsJava`` blocks until the first
-    action touches the observed node — a daemon thread waits on it so
-    the warning costs no extra Spark job and fires even though the
-    operator is lazy. If the query never executes the thread parks
-    harmlessly. The metric is read through the JVM ``getAsJava`` map:
-    for some query shapes the Python-side ``Observation.get`` fails in
-    row conversion (toPyRow asserts a schema the metrics row lacks).
-
-    Known limitation (Spark 4.1, verified empirically): when AQE plans
-    two or more shuffle stages ABOVE the CollectMetrics node, the
-    completed query reports an EMPTY metrics map — the observation
-    fires but the value is lost. The watcher then logs that the audit
-    was unavailable instead of staying silent; ``lsh_skew_stats``
-    is the deterministic audit path.
-    """
-    def _watch() -> None:
-        try:
-            jmap = obs._jo.getAsJava()
-            if metric not in jmap:
-                log.info(
-                    "observed metric %s unavailable (AQE dropped "
-                    "CollectMetrics above 2+ shuffle stages) — run "
-                    "lsh_skew_stats() to audit the skew cap", metric)
-                return
-            v = jmap.get(metric)
-            if v:
-                log.warning(message, v)
-        except Exception:  # pragma: no cover - session teardown races
-            pass
-    threading.Thread(target=_watch, daemon=True, name=f"obs-{metric}").start()
-
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> DataFrame:
@@ -383,7 +347,6 @@ def minhash_lsh_candidates(
     k: int = 5,
     min_est: float = 0.0,
     max_bucket: int = 10_000,
-    audit_cap: bool = False,
     hash_fn: str = "xxh64",
 ) -> DataFrame:
     """LSH banding: docs sharing any band of the signature become a
@@ -400,6 +363,8 @@ def minhash_lsh_candidates(
     pair-dedup aggregate (narrow (long, long, double) rows).
     ``max_bucket`` caps degenerate buckets (e.g. an empty-string band)
     so one hot key cannot go quadratic — the standard LSH skew guard.
+    The cap is announced in the log at build time; ``lsh_skew_stats``
+    (same parameters) counts the buckets it drops.
 
     Corpora with large near-duplicate clusters produce O(cluster²)
     candidates; pass ``min_est`` a notch under the final exact
@@ -415,7 +380,7 @@ def minhash_lsh_candidates(
                          keep_sh=False)
     pins: list[DataFrame] = []
     out = _candidates_from_sigs(sig, num_hashes, bands, min_est,
-                                max_bucket, audit_cap, pins)
+                                max_bucket, pins)
     # the candidate set is bounded (near-dups are rare at corpus
     # scale): materialize it eagerly so the intermediate signature pin
     # can be released instead of leaking for the session (paths.py's
@@ -457,7 +422,6 @@ def _candidates_from_sigs(
     bands: int,
     min_est: float,
     max_bucket: int,
-    audit_cap: bool,
     pins: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Banding + in-bucket pair emission over a (_id, _sig) frame —
@@ -481,27 +445,15 @@ def _candidates_from_sigs(
     grouped = (_banded(sig, num_hashes, bands).groupBy("_band", "_bhash")
                .agg(F.array_sort(F.collect_list("_id")).alias("_ms"))
                .filter(F.size("_ms") >= 2))
-    # The skew cap must never be SILENT. Two tiers:
-    # - always: announce the active cap + the audit path (free,
-    #   driver-side);
-    # - audit_cap=True: count dropped buckets inside the normal job
-    #   (CollectMetrics, no extra Spark job) and WARN with the number.
-    #   Opt-in because CollectMetrics is a whole-stage-codegen barrier
-    #   right where the wide signature rows feed the pair-explosion
-    #   expression — measured ~2x on the banding stage at sf0.1.
-    if audit_cap:
-        obs = Observation()
-        grouped = grouped.observe(
-            obs, F.sum((F.size("_ms") > max_bucket).cast("long")).alias("dropped_buckets"))
-        _warn_async(obs, "dropped_buckets",
-                    "minhash_lsh_candidates: dropped %s bucket(s) larger than "
-                    f"max_bucket={max_bucket} — a near-duplicate mega-cluster "
-                    "may produce no candidate pairs")
-    else:
-        log.info(
-            "minhash_lsh_candidates: skew cap max_bucket=%d active — "
-            "oversized buckets are dropped; pass audit_cap=True or run "
-            "lsh_skew_stats() to count them", max_bucket)
+    # the skew cap is never silent: announce it with its audit path
+    # (free, driver-side) — counting the dropped buckets inside this
+    # job would need a CollectMetrics node, a whole-stage-codegen
+    # barrier on the pair-explosion path, and Spark 4.1 loses its
+    # value when AQE plans 2+ shuffle stages above it
+    log.info(
+        "minhash_lsh_candidates: skew cap max_bucket=%d active — "
+        "oversized buckets are dropped; run lsh_skew_stats() to count "
+        "them", max_bucket)
     buckets = grouped.filter(F.size("_ms") <= max_bucket)
     pair = F.explode(F.flatten(F.transform(
         F.col("_ms"),
@@ -544,9 +496,7 @@ def minhash_neardup_pairs(
     min_est: float = 0.0,
     threshold: float = 0.5,
     max_bucket: int = 10_000,
-    audit_cap: bool = False,
     hash_fn: str = "xxh64",
-    reuse_hashes: bool = False,
 ) -> DataFrame:
     """Fused MinHash-LSH near-dup pipeline: candidate generation plus
     exact k-shingle verification. Returns (id_a, id_b, jaccard) with
@@ -564,61 +514,34 @@ def minhash_neardup_pairs(
       candidate set and the verified shingle sets are bit-identical
       to it.
 
-    Scale shape: exactly two kernel passes over the corpus — one
-    map-only pass feeding the signature frame (persisted inside
-    ``_candidates_from_sigs``: num_hashes longs per doc, bounded at any
-    scale), and one CANDIDATE-BOUNDED pass feeding the verify join
-    (persisted; at corpus scale candidates are rare, so re-hashing the
-    few candidate docs beats pinning corpus-wide shingle sets).
-    Banding shuffles narrow (band, bhash, id) rows, pair dedup
-    shuffles (long, long) rows, and nothing is unconditionally
-    broadcast — AQE picks broadcast sides from runtime sizes.
-
-    ``reuse_hashes=True`` flips that trade: one kernel pass emits both
-    the signatures and the shingle hashes, that frame is persisted
-    (MEMORY_AND_DISK, released at return) and the verify join reads it
-    back, eliminating the second pass at the cost of pinning O(total
-    distinct shingles) longs. Right for template-heavy corpora where
-    candidates cover most documents (re-hashing would be a full pass
-    anyway); wrong at sparse-candidate corpus scale, so the default
-    stays False. A NULL id or text raises ``ValueError`` in either
-    mode.
+    Scale shape: ONE kernel pass over the corpus emits both the
+    signatures and the shingle hashes; that frame is persisted
+    (MEMORY_AND_DISK, released at return), the banding reads its
+    signatures and the verify join reads its shingle hashes back — the
+    cost is pinning O(total distinct shingles) longs instead of
+    re-hashing the candidate documents in a second pass. Banding
+    shuffles narrow (band, bhash, id) rows, pair dedup shuffles
+    (long, long) rows, and nothing is unconditionally broadcast — AQE
+    picks broadcast sides from runtime sizes. The ``max_bucket`` cap
+    is announced as in ``minhash_lsh_candidates`` and audited by
+    ``lsh_skew_stats``. A NULL id or text raises ``ValueError``.
 
     Executes EAGERLY (localCheckpoint at return) so every pinned
     intermediate is released at call time — narrow the output with
     ``min_est``/``threshold``, not post-hoc filters."""
+    from pyspark.storagelevel import StorageLevel
     base = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    pins: list[DataFrame] = []
-    hs_full: DataFrame | None = None
-    if reuse_hashes:
-        from pyspark.storagelevel import StorageLevel
-        hs_full = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        pins.append(hs_full)
-        sig = hs_full.select("_id", "_sig")
-    else:
-        sig = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes,
-                             keep_sh=False)
-    cands = (_candidates_from_sigs(sig, num_hashes, bands, min_est,
-                                   max_bucket, audit_cap, pins)
+    sh = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes) \
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    pins: list[DataFrame] = [sh]
+    cands = (_candidates_from_sigs(sh.select("_id", "_sig"), num_hashes,
+                                   bands, min_est, max_bucket, pins)
              .select("id_a", "id_b").persist())
     pins.append(cands)
-    if hs_full is not None:
-        # the signature pass already hashed (and pinned) every doc —
-        # the verify joins below filter it to candidate ids on their
-        # own (a separate semi-join prefilter pass measured ~0.9s of
-        # pure overhead at sf0.1: it rewrites nothing the pair joins
-        # don't already do)
-        sh = hs_full
-    else:
-        # candidate-bounded second kernel pass, persisted: one
-        # computation serves both sides of the pair join
-        ids = (cands.select(F.col("id_a").alias("_id"))
-               .unionByName(cands.select(F.col("id_b").alias("_id")))
-               .distinct())
-        sh = _minhash_frame(base.join(ids, "_id", "left_semi"), "_t", "_id",
-                            k, hash_fn).persist()
-        pins.append(sh)
+    # the verify joins filter the pinned corpus-wide frame to candidate
+    # ids on their own (a separate semi-join prefilter pass measured
+    # ~0.9s of pure overhead at sf0.1: it rewrites nothing the pair
+    # joins don't already do)
     j = (cands
          .join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sa")), "id_a")
          .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sb")), "id_b"))
@@ -650,8 +573,8 @@ def fuzzy_decontaminate(
     Pure composition over the verified machinery: both corpora union
     into one frame with parity-encoded ids (train 2*id, eval 2*id+1 —
     requires numeric ids), ``minhash_neardup_pairs`` runs ONCE over
-    the union with exactly its scale shape (banding, bucket caps,
-    candidate-bounded verify), and only cross-parity pairs survive.
+    the union with exactly its scale shape (one kernel pass, banding,
+    bucket caps, verify), and only cross-parity pairs survive.
     Extra keyword args flow through to ``minhash_neardup_pairs``
     (threshold, bands, hash_fn, ...).
 
@@ -719,8 +642,9 @@ def lsh_skew_stats(
     """Deterministic audit for the LSH skew cap: per-band bucket-size
     distribution and how many buckets ``minhash_lsh_candidates`` (same
     parameters) would drop. One aggregate job over the banding stream —
-    run it when the in-band Observation warning was unavailable (AQE)
-    or before committing to a parameter choice on a new corpus."""
+    the count behind the cap that ``minhash_lsh_candidates`` and
+    ``minhash_neardup_pairs`` announce in the log; run it before
+    committing to a parameter choice on a new corpus."""
     sig = _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
                          keep_sh=False)
     sizes = (_banded(sig, num_hashes, bands).groupBy("_band", "_bhash")
@@ -783,7 +707,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     k: int = 5,
     threshold: float = 0.5,
-    broadcast_docs: bool | None = None,
     hash_fn: str = "xxh64",
 ) -> DataFrame:
     """Verify LSH candidate pairs with exact k-shingle Jaccard.
@@ -795,8 +718,7 @@ def ngram_jaccard_pairs(
     sees their runtime sizes and broadcasts them on its own, which is
     exactly the scale-safe plan (a forced full-table broadcast OOMs at
     corpus scale; a full-table shuffle to serve a few thousand pairs is
-    the opposite failure). ``broadcast_docs=True`` forces the hint on
-    the (already reduced) shingle table for plan comparisons."""
+    the opposite failure)."""
     ids = (candidates.select(F.col("id_a").alias("_id"))
            .unionByName(candidates.select(F.col("id_b").alias("_id")))
            .distinct())
@@ -808,8 +730,6 @@ def ngram_jaccard_pairs(
     sh = _minhash_frame(
         docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
             .join(ids, "_id", "left_semi"), "_t", "_id", k, hash_fn)
-    if broadcast_docs:
-        sh = F.broadcast(sh)
     j = (candidates
          .join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sa")), "id_a")
          .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sb")), "id_b"))
@@ -949,6 +869,29 @@ def canonical_by_score(
                     "best_id"))
 
 
+# Edge count up to which connected_components and
+# strongly_connected_components solve on the driver (~1.5 MB of longs)
+# instead of running their distributed loops. Read at call time through
+# this module, so tests flip both operators with one monkeypatch.
+_DRIVER_MAX_EDGES = 100_000
+
+
+def _driver_edges(raw: DataFrame) -> "list | None":
+    """The rows of ``raw`` when it holds at most ``_DRIVER_MAX_EDGES``
+    of them, else None — the regime gate of both driver fast paths.
+
+    A bounded fused probe+fetch: ``limit(k+1).collect()`` ships at most
+    k+1 narrow rows and short-circuits once k+1 exist, so a 100 TB edge
+    frame is never persisted or counted in full, and len <= k means the
+    fetch exhausted the frame — the rows in hand are the complete edge
+    list. The edge-producing plan runs once, not twice (a probe-then-
+    collect pair re-ran a full interpreted-cosine pair join in
+    dedup_cluster / dedup_keep_best)."""
+    cap = _DRIVER_MAX_EDGES
+    local = raw.limit(cap + 1).collect()
+    return local if len(local) <= cap else None
+
+
 def _driver_label_frame(spark, labels, id_dt,
                         universe: DataFrame | None) -> DataFrame:
     """(id, component) frame from a driver-computed ``labels`` list —
@@ -974,7 +917,6 @@ def connected_components(
     id_b: str = "id_b",
     nodes: DataFrame | None = None,
     max_iters: int = 50,
-    driver_max_edges: int = 100_000,
 ) -> DataFrame:
     """Connected components of the undirected near-duplicate pair
     graph — the canonicalization step of fuzzy dedup: every doc in a
@@ -1005,8 +947,8 @@ def connected_components(
     Scale shape (two regimes, picked by the edge count the loop needs
     anyway): near-dup pair graphs are SPARSE at corpus scale — most
     docs are singletons and only paired docs need label propagation.
-    When the raw pair list fits the driver (``driver_max_edges``,
-    ~1.5 MB of longs at the default), the component labels are solved
+    When the raw pair list fits the driver (``_DRIVER_MAX_EDGES``,
+    ~1.5 MB of longs), the component labels are solved
     in one union-find pass over the collected pairs (duplicates and
     orientation are irrelevant to union-find, so the r14 fast path
     skips the symmetrize+distinct exchange AND the output checkpoint —
@@ -1016,34 +958,21 @@ def connected_components(
     distributed) node universe — zero iterative rounds instead of
     O(log diameter) rounds of ~0.5 s scheduler overhead each. Above
     the threshold the distributed min-label + pointer-jumping loop
-    below takes over; ``driver_max_edges=0`` forces it (the
-    differential tests pin both paths against each other).
+    below takes over (the differential tests pin both paths against
+    each other).
     """
     from pyspark.storagelevel import StorageLevel
 
-    # r14: the RAW pair list gates the regime — not the symmetrized-
+    # the RAW pair list gates the regime — not the symmetrized-
     # distinct edge set. The driver fast path needs neither symmetry
     # nor dedup (union-find is idempotent over duplicate and reversed
     # edges), so the distinct+symmetrize exchange happens only on the
-    # distributed path. r15 (guide §5, r14 verdict item 6): the gate is
-    # a bounded LIMIT probe, not a persist+count of the full frame —
-    # at corpus scale persisting a huge pair frame (MEMORY_AND_DISK)
-    # just to count it is material write amplification, while
-    # limit(k+1).count() short-circuits as soon as k+1 rows exist and
-    # returns exactly min(|pairs|, k+1), so the regime decision is
-    # unchanged. Callers hand in already-materialized pair frames
-    # (minhash/exact dedup outputs localCheckpoint eagerly), so the
-    # probe and the fast path's collect never recompute a heavy plan.
+    # distributed path. Callers hand in already-materialized pair
+    # frames (minhash/exact dedup outputs localCheckpoint eagerly), so
+    # the bounded fetch never recomputes a heavy plan.
     raw = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    # fused probe+fetch (r15): limit(k+1).collect() ships at most k+1
-    # narrow rows AND answers the regime question — len <= k means the
-    # bounded fetch exhausted the frame, so the collected rows ARE the
-    # complete pair set. The previous probe-then-collect pair ran the
-    # (lazy, possibly expensive) pair-producing plan twice per call —
-    # measured as a second full interpreted-cosine pair join in
-    # dedup_cluster / dedup_keep_best.
-    local = raw.limit(driver_max_edges + 1).collect()
-    if len(local) <= driver_max_edges:
+    local = _driver_edges(raw)
+    if local is not None:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:

@@ -96,12 +96,17 @@ def epoch_shuffle(
             .withColumn("pos", F.row_number().over(w).cast("long")))
 
 
+# cap_per_group's phase-1 salt: a hot group's sort splits across this
+# many tasks. Read at call time so tests can flip it (any positive
+# value picks the same rows).
+_SKEW_BUCKETS = 32
+
+
 def cap_per_group(
     df: DataFrame,
     group_col: str,
     k: int,
     id_col: str = "doc_id",
-    skew_buckets: int = 32,
 ) -> DataFrame:
     """Deterministic per-group cap — the C4/RefinedWeb-style "at most
     k documents per source/domain" pass that keeps one hot domain from
@@ -115,13 +120,12 @@ def cap_per_group(
     two-digit percentage of the corpus, and a single
     ``Window.partitionBy(group)`` would sort terabytes in one task):
 
-    1. Salt every row into one of ``skew_buckets`` sub-buckets on
-       xxhash64(id) and keep the top-k of each (group, salt) sub-bucket
-       — the hot group's sort splits across ``skew_buckets`` tasks,
-       each bounded, over-keeping at most ``skew_buckets * k`` rows
-       per group.
+    1. Salt every row into one of ``_SKEW_BUCKETS`` (32) sub-buckets
+       on xxhash64(id) and keep the top-k of each (group, salt)
+       sub-bucket — the hot group's sort splits across 32 tasks, each
+       bounded, over-keeping at most 32 * k rows per group.
     2. Exact-rank the survivors per group with the SAME order and keep
-       k. Phase 2's per-group input is ≤ ``skew_buckets * k`` rows
+       k. Phase 2's per-group input is ≤ 32 * k rows
        regardless of corpus size, so its single-task window is bounded
        by configuration, not data.
 
@@ -137,8 +141,6 @@ def cap_per_group(
     from pyspark.sql import Window
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    if skew_buckets <= 0:
-        raise ValueError(f"skew_buckets must be positive, got {skew_buckets}")
     h = F.md5(F.concat_ws(":", F.col(group_col).cast("string"),
                           F.col(id_col).cast("string")))
     order = [h.asc(), F.col(id_col).asc()]
@@ -146,7 +148,7 @@ def cap_per_group(
     # which task ranks them — so it may use the engine-native xxhash64
     # (no cross-engine md5 contract needed, unlike the order hash)
     salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                  F.lit(skew_buckets))
+                  F.lit(_SKEW_BUCKETS))
     pre = Window.partitionBy(F.col(group_col), salt).orderBy(*order)
     survivors = (df.withColumn("_cap_pre_rank", F.row_number().over(pre))
                  .filter(F.col("_cap_pre_rank") <= k)

@@ -17,10 +17,9 @@ from __future__ import annotations
 import logging
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from agensgraph_spark.pipeline.dedup import _warn_async
 from agensgraph_spark.pipeline.util import maybe_broadcast
 
 log = logging.getLogger(__name__)
@@ -562,7 +561,6 @@ def semantic_dedup(
     dim: int | None = None,
     cents: "list[list[float]] | None" = None,
     max_cluster: "int | None" = None,
-    audit_cap: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column:
     coarse-cluster every vector to its nearest centroid (the same
@@ -602,10 +600,9 @@ def semantic_dedup(
     their lower-id mates are in the head); overflow rows get a lower
     bound of max_lower_cos — near-dup mass concentrates on the
     canonical low-id survivors, so the keep rule degrades gracefully.
-    The cap is never silent: always announced via log; pass
-    ``audit_cap=True`` to count capped rows inside the normal job
-    (Observation — no extra Spark job) and WARN with the number, or
-    run ``semdedup_skew_stats()`` for the deterministic audit."""
+    The cap is never silent: it is announced in the log at build
+    time, the per-row ``capped`` flag marks its lower-bound rows, and
+    ``semdedup_skew_stats()`` is the deterministic audit."""
     cm = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
     if max_cluster is not None:
         # r14: the capped path runs on the Arrow engine — ONE cluster
@@ -621,23 +618,11 @@ def semantic_dedup(
         base = corpus.select(F.col(id_col).alias("_id"),
                              F.col(vec_col).cast("array<double>").alias("_v"))
         scored = _semantic_dedup_arrow(base, cm, max_cluster)
-        if audit_cap:
-            obs = Observation()
-            scored = scored.observe(
-                obs, F.sum((F.col("_rnb") > max_cluster).cast("long"))
-                .alias("capped_members"))
-            _warn_async(obs, "capped_members",
-                        "semantic_dedup: %s cluster member(s) beyond "
-                        f"max_cluster={max_cluster} excluded from the "
-                        "comparison head — a hot cluster (untrained "
-                        "centroids?) only lower-bounds max_lower_cos "
-                        "for its overflow rows")
-        else:
-            log.info(
-                "semantic_dedup: skew cap max_cluster=%d active — "
-                "overflow rows of a hot cluster compare only against "
-                "the cluster head; pass audit_cap=True or run "
-                "semdedup_skew_stats() to count them", max_cluster)
+        log.info(
+            "semantic_dedup: skew cap max_cluster=%d active — "
+            "overflow rows of a hot cluster compare only against "
+            "the cluster head; run semdedup_skew_stats() to count "
+            "them", max_cluster)
         # keep compares the UNROUNDED max (same as the JVM path, whose
         # filter also ran on the raw aggregate before rounding)
         return scored.select(

@@ -265,10 +265,6 @@ def _scan_quoted(pattern: str, i: int, fn: str) -> "tuple[str, int]":
     raise ValueError(f"{fn}: unterminated quoted literal in {pattern!r}")
 
 
-def _fmt(pat: str):
-    return lambda ts, fm: F.date_format(ts, pat)
-
-
 def _num(pat: str, fn):
     """Zero-padded via date_format normally; FM (fill mode) drops the
     leading zeros — the calendar-field integer rendered bare."""

@@ -1103,13 +1103,8 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact verify — is replayed by the DuckDB oracle below; the xxh64
     # fast path keeps its exact pure-Python differential in
     # tests/test_differential_dedup.py.
-    # reuse_hashes: the synthetic documents table is template-heavy —
-    # LSH candidates cover most docs, so pinning the kernel's
-    # (_id, _sh, _sig) frame beats a second near-full kernel pass (see
-    # the operator's docstring for when the default False is right
-    # instead)
     return D.minhash_neardup_pairs(docs, min_est=0.3, threshold=0.4,
-                                   hash_fn="md5", reuse_hashes=True).select(
+                                   hash_fn="md5").select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -1196,7 +1191,7 @@ def _q_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 17 == 0)
     out = D.fuzzy_decontaminate(docs, eval_df, min_est=0.3, threshold=0.4,
-                                hash_fn="md5", reuse_hashes=True)
+                                hash_fn="md5")
     return out.select("doc_id",
                       F.round("max_eval_jaccard", 6).alias("max_eval_jaccard"),
                       "n_eval_matches", "contaminated")

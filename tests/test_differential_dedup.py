@@ -391,13 +391,15 @@ def py_components(pairs, nodes):
     return {n: find(n) for n in nodes}
 
 
-@pytest.mark.parametrize("driver_max_edges", [100_000, 0],
+@pytest.mark.parametrize("edge_cap", [D._DRIVER_MAX_EDGES, 0],
                          ids=["driver-unionfind", "distributed-loop"])
-def test_connected_components_match_union_find(spark, driver_max_edges):
+def test_connected_components_match_union_find(spark, monkeypatch, edge_cap):
     """Random graph with chains, triangles, and singletons — chains
     exercise multi-round label propagation. Both regimes (the
     small-edge-set driver union-find and the distributed pointer-
-    jumping loop) must agree with the independent Python union-find."""
+    jumping loop, forced by a zero ``_DRIVER_MAX_EDGES``) must agree
+    with the independent Python union-find."""
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", edge_cap)
     import random
     rng = random.Random(7)
     nodes = list(range(120))
@@ -417,32 +419,35 @@ def test_connected_components_match_union_find(spark, driver_max_edges):
     ndf = spark.createDataFrame([(n,) for n in nodes], ["id"])
     got = {r["id"]: r["component"]
            for r in D.connected_components(
-               pdf, nodes=ndf, driver_max_edges=driver_max_edges).collect()}
+               pdf, nodes=ndf).collect()}
     assert got == py_components(sorted(pairs), nodes)
 
 
-def test_connected_components_string_ids(spark):
+def test_connected_components_string_ids(spark, monkeypatch):
     """Non-long id types ride both paths: the driver label map must
     inherit the edge column type (regression: the fast path hardcoded
     longs and graph_wcc's string vertex keys blew up)."""
     pairs = [("s1", "s2"), ("s2", "s3"), ("x9", "x8")]
     pdf = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    for dme in (100_000, 0):
+    for cap in (D._DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", cap)
         got = {r["id"]: r["component"] for r in D.connected_components(
-            pdf, driver_max_edges=dme).collect()}
+            pdf).collect()}
         assert got == {"s1": "s1", "s2": "s1", "s3": "s1",
                        "x8": "x8", "x9": "x8"}
 
 
-def test_connected_components_warns_on_max_iters(spark, caplog):
+def test_connected_components_warns_on_max_iters(spark, caplog,
+                                                 monkeypatch):
     """A 10-chain cannot converge in 2 rounds — the truncation must be
-    loud (no silent caps). driver_max_edges=0 forces the iterative
-    path (the driver union-find has no rounds to cap)."""
+    loud (no silent caps). A zero _DRIVER_MAX_EDGES forces the
+    iterative path (the driver union-find has no rounds to cap)."""
     import logging
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     pairs = [(i, i + 1) for i in range(10)]
     pdf = spark.createDataFrame(pairs, ["id_a", "id_b"])
     with caplog.at_level(logging.WARNING, logger="agensgraph_spark.pipeline.dedup"):
-        D.connected_components(pdf, max_iters=2, driver_max_edges=0).collect()
+        D.connected_components(pdf, max_iters=2).collect()
     assert any("max_iters" in r.message for r in caplog.records)
 
 
@@ -536,16 +541,17 @@ def test_range_join_random_differential_vs_duckdb(spark):
     assert got == exp and len(got) > 100
 
 
-def test_connected_components_random_vs_duckdb(spark):
+def test_connected_components_random_vs_duckdb(spark, monkeypatch):
     """Random 300-node pair graph vs a DuckDB recursive-CTE min-reach —
     a second independent oracle beside the union-find replay.
-    driver_max_edges=0 keeps this one on the DISTRIBUTED loop (the
+    A zero _DRIVER_MAX_EDGES keeps this one on the DISTRIBUTED loop (the
     driver union-find path is covered by the parametrized union-find
     differential and the gated dedup_cluster row)."""
     import random
 
     import duckdb
 
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     rng = random.Random(31)
     pairs = sorted({(min(a, b), max(a, b))
                     for a, b in (rng.sample(range(300), 2) for _ in range(260))})
@@ -553,7 +559,7 @@ def test_connected_components_random_vs_duckdb(spark):
     nodes = spark.createDataFrame([(n,) for n in range(300)], ["id"])
     got = {r["id"]: r["component"]
            for r in D.connected_components(
-               pdf, nodes=nodes, driver_max_edges=0).collect()}
+               pdf, nodes=nodes).collect()}
 
     con = duckdb.connect()
     con.execute("CREATE TABLE p (a BIGINT, b BIGINT)")

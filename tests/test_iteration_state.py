@@ -3,11 +3,10 @@
 The loops in operators/paths.py are generational: each round retires
 the superseded cached generation (GraphX-Pregel style), so a deep
 search pins O(1) frames, not O(iterations). The caps (VLE hop clamp,
-Dijkstra max_iters, LSH bucket drop) must WARN — the workload promises
-no silent caps."""
+Dijkstra max_iters) must WARN and the LSH bucket cap is announced with
+its audit — the workload promises no silent caps."""
 
 import logging
-import time
 
 from pyspark.sql import functions as F
 
@@ -67,6 +66,32 @@ def test_vle_result_survives_edge_unpersist(spark):
     assert out.count() == 6  # consumed after the edge pin was released
 
 
+def test_vle_checkpoint_cadence_matches_python(spark, monkeypatch):
+    """The frontier checkpoint cadence only truncates lineage: the
+    default cadence and a checkpoint every second hop return the same
+    paths, equal to a Python enumeration of the edge-unique walks."""
+    rows = [(0, 1, 10), (1, 2, 11), (2, 0, 12), (1, 3, 13), (3, 1, 14),
+            (2, 3, 15)]
+    edges = spark.createDataFrame([(s, d, e, 1.0) for s, d, e in rows],
+                                  "src long, dst long, eid long, w double")
+    seeds = spark.createDataFrame([(0,)], "seed long")
+    want = set()
+
+    def walk(v, eids, vids):
+        if eids:
+            want.add((0, v, tuple(eids), tuple(vids), len(eids)))
+        for s, d, e in rows:
+            if s == v and e not in eids and len(eids) < 7:
+                walk(d, eids + [e], vids + [d])
+
+    walk(0, [], [])
+    for every in (P._CHECKPOINT_EVERY, 2):
+        monkeypatch.setattr(P, "_CHECKPOINT_EVERY", every)
+        got = {(r.seed, r.dst, tuple(r.eids), tuple(r.vids), r.len)
+               for r in P.vle_expand(edges, seeds, 1, 7).collect()}
+        assert got == want, every
+
+
 def test_vle_clamp_warns(spark, caplog):
     seeds = spark.createDataFrame([(0,)], "seed long")
     with caplog.at_level(logging.WARNING, logger="agensgraph_spark.operators.paths"):
@@ -90,48 +115,14 @@ def _dup_docs(spark):
         "doc_id long, text string")
 
 
-def _poll_records(caplog, needle, timeout=15.0):
-    deadline = time.time() + timeout
-    while time.time() < deadline:
-        if any(needle in r.getMessage() for r in caplog.records):
-            return True
-        time.sleep(0.2)
-    return False
-
-
-def test_lsh_dropped_bucket_warns(spark, caplog):
-    """The in-band Observation warning (zero extra jobs). AQE drops
-    observed metrics when 2+ shuffle stages sit above CollectMetrics
-    (Spark 4.1 limitation, see dedup._warn_async) — assert the warning
-    in the plan shape where Spark delivers it."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        with caplog.at_level(logging.WARNING, logger="agensgraph_spark.pipeline.dedup"):
-            out = D.minhash_lsh_candidates(_dup_docs(spark), max_bucket=2,
-                                           audit_cap=True)
-            assert out.count() == 0
-            assert _poll_records(caplog, "max_bucket")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def test_lsh_cap_audit_not_silent_under_aqe(spark, caplog):
-    """Under AQE the watcher must still say SOMETHING: an info record
-    pointing at the deterministic audit path."""
-    with caplog.at_level(logging.INFO, logger="agensgraph_spark.pipeline.dedup"):
-        out = D.minhash_lsh_candidates(_dup_docs(spark), max_bucket=2,
-                                       audit_cap=True)
-        assert out.count() == 0
-        assert _poll_records(caplog, "lsh_skew_stats")
-
-
 def test_lsh_cap_announced_by_default(spark, caplog):
-    """With the counted audit off (default, hot path) the cap is still
-    announced at build time — never silent."""
+    """The cap is announced at build time, naming its audit — never
+    silent."""
     with caplog.at_level(logging.INFO, logger="agensgraph_spark.pipeline.dedup"):
         D.minhash_lsh_candidates(_dup_docs(spark), max_bucket=2)
-    assert any("skew cap" in r.getMessage() for r in caplog.records)
+    assert any("skew cap" in r.getMessage()
+               and "lsh_skew_stats" in r.getMessage()
+               for r in caplog.records)
 
 
 def test_lsh_skew_stats_counts_dropped(spark):
@@ -149,7 +140,8 @@ def test_lsh_default_cap_keeps_buckets(spark):
     assert D.minhash_lsh_candidates(docs).count() == 6  # all 4C2 pairs
 
 
-def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
+def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
+                                                monkeypatch):
     """With spark.agensgraph.checkpointDir set, the iterative path
     operators truncate lineage via reliable DataFrame.checkpoint —
     results identical to the default localCheckpoint mode, and the
@@ -159,10 +151,12 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
     edges = chain_edges(spark, 8)
     seeds = spark.createDataFrame([(0,)], "seed long")
     pairs = spark.createDataFrame([(0, 6)], "seed long, target long")
+    # a 7-hop expansion then checkpoints three times, not once
+    monkeypatch.setattr(P, "_CHECKPOINT_EVERY", 2)
 
     def run_all():
         vle = sorted(tuple(r) for r in P.vle_expand(
-            edges, seeds, 1, 7, checkpoint_every=2).select(
+            edges, seeds, 1, 7).select(
                 "seed", "dst", "len").collect())
         bfs = sorted(tuple(r) for r in P.bfs_shortest(
             edges, pairs, 1, 7).select("seed", "target", "len").collect())

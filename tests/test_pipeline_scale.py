@@ -28,16 +28,6 @@ def test_maybe_broadcast_counts_when_unknown(spark):
     assert maybe_broadcast(df, 16) is not df
 
 
-def test_ngram_jaccard_auto_matches_forced_broadcast(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
-    cand = D.minhash_lsh_candidates(docs).select("id_a", "id_b")
-    auto = D.ngram_jaccard_pairs(cand, docs, threshold=0.3)
-    forced = D.ngram_jaccard_pairs(cand, docs, threshold=0.3, broadcast_docs=True)
-    a = sorted(tuple(r) for r in auto.collect())
-    b = sorted(tuple(r) for r in forced.collect())
-    assert a == b and len(a) > 0
-
-
 def test_salted_join_matches_unsalted(spark):
     """Skew salting must be a pure physical rewrite: same rows out."""
     from agensgraph_spark.pipeline.util import salted_join
@@ -935,16 +925,17 @@ def test_normalize_text_edge_cases(spark):
     assert got[6] == ("", False, 0)
 
 
-def test_cap_per_group_deterministic_and_bounded(spark):
+def test_cap_per_group_deterministic_and_bounded(spark, monkeypatch):
     """cap_per_group keeps exactly min(k, group size) rows per group
     with the exact full-group ranks, the SAME rows across re-runs,
-    partitionings, AND skew_buckets settings (the salt routes rows to
+    partitionings, AND salt bucket counts (the salt routes rows to
     tasks, it never enters the order), matching a pure-Python md5
-    replay; k<=0 and skew_buckets<=0 refuse."""
+    replay; k<=0 refuses."""
     import hashlib
 
     import pytest as _pt
 
+    from agensgraph_spark.pipeline import sampling
     from agensgraph_spark.pipeline.sampling import cap_per_group
 
     rows = [(i, f"g{i % 3}") for i in range(30)]
@@ -962,22 +953,20 @@ def test_cap_per_group_deterministic_and_bounded(spark):
                         for rank, i in enumerate(ranked[:k]))
         return keep
 
-    def got(frame, k, **kw):
+    def got(frame, k):
         return {(r["source"], r["doc_id"], r["group_rank"])
-                for r in cap_per_group(frame, "source", k, **kw).collect()}
+                for r in cap_per_group(frame, "source", k).collect()}
 
     for k in (1, 4, 100):
         assert got(df, k) == replay(k), k
     # neither repartitioning nor the salt bucket count may change the
     # picked set or the ranks — the two-phase form must be output-
-    # equivalent to the single-window form (skew_buckets=1)
-    for kw in ({}, {"skew_buckets": 1}, {"skew_buckets": 3},
-               {"skew_buckets": 257}):
-        assert got(df.repartition(7), 4, **kw) == replay(4), kw
+    # equivalent to the single-window form (one salt bucket)
+    for buckets in (sampling._SKEW_BUCKETS, 1, 3, 257):
+        monkeypatch.setattr(sampling, "_SKEW_BUCKETS", buckets)
+        assert got(df.repartition(7), 4) == replay(4), buckets
     with _pt.raises(ValueError):
         cap_per_group(df, "source", 0)
-    with _pt.raises(ValueError):
-        cap_per_group(df, "source", 5, skew_buckets=0)
 
 
 def test_harmonic_centrality_sampled_hand_computed(spark):
@@ -1464,8 +1453,7 @@ def test_semantic_dedup_cap_bounds_hot_cluster(spark):
     """With max_cluster=3 every row compares only against the 3
     lowest-id cluster-mates: head rows keep exact semantics, overflow
     rows get max cosine over the head (a lower bound), and the join is
-    size x cap, not size². audit_cap=True must run the same values
-    through the Observation branch."""
+    size x cap, not size²."""
     from agensgraph_spark.pipeline.similarity import semantic_dedup
     rows = [(i, [1.0, float(i)]) for i in range(8)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -1484,8 +1472,6 @@ def test_semantic_dedup_cap_bounds_hot_cluster(spark):
 
     exact = run(max_cluster=None)
     capped = run(max_cluster=3)
-    audited = run(max_cluster=3, audit_cap=True)
-    assert capped == audited
     for i in range(8):
         want_full = max((cos(i, j) for j in range(i)), default=None)
         want_head = max((cos(i, j) for j in range(min(i, 3))), default=None)
@@ -1559,7 +1545,7 @@ def test_semantic_dedup_trained_vs_seeded_quantizer(spark):
     assert bool(firsts["keep"].all())  # lowest id per cluster survives
 
 
-def test_scc_hand_graph(spark):
+def test_scc_hand_graph(spark, monkeypatch):
     """Two 3-cycles joined by a bridge, a dangling chain, a self-loop,
     and an isolated vertex (via the nodes frame): component = min
     member id of the SCC, trivial SCCs are singletons."""
@@ -1573,30 +1559,30 @@ def test_scc_hand_graph(spark):
     want = [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 4),
             (7, 7), (8, 8), (9, 9), (10, 10), (11, 11)]
     # both regimes: driver Tarjan fast path (default gate) and the
-    # forced distributed FW-BW-Trim loop (driver_max_edges=0)
-    for dme in (100_000, 0):
+    # distributed FW-BW-Trim loop, forced by a zero edge cap
+    for cap in (D._DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", cap)
         rows = sorted((r.id, r.component) for r in
-                      strongly_connected_components(
-                          edges, verts, driver_max_edges=dme).collect())
-        assert rows == want, f"driver_max_edges={dme}"
+                      strongly_connected_components(edges, verts).collect())
+        assert rows == want, f"_DRIVER_MAX_EDGES={cap}"
 
 
-def test_scc_dag_all_singletons(spark):
+def test_scc_dag_all_singletons(spark, monkeypatch):
     """A pure DAG dissolves entirely in the trim loop (every vertex is
     its own SCC) — no propagation round ever runs."""
     from agensgraph_spark.operators.analytics import (
         strongly_connected_components)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 3), (2, 4)], "src long, dst long")
-    # driver_max_edges=0 forces the distributed loop — this test is
+    # a zero edge cap forces the distributed loop — this test is
     # ABOUT the trim phase, which the driver fast path never runs
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     rows = sorted((r.id, r.component) for r in
-                  strongly_connected_components(
-                      edges, driver_max_edges=0).collect())
+                  strongly_connected_components(edges).collect())
     assert rows == [(1, 1), (2, 2), (3, 3), (4, 4)]
 
 
-def test_scc_adversarial_condensation_chain(spark):
+def test_scc_adversarial_condensation_chain(spark, monkeypatch):
     """Cycles chained so the downstream SCC holds the smaller ids —
     the min-pivot worst case: rounds must still settle every SCC and
     label each by its own minimum, not by an upstream reacher."""
@@ -1610,14 +1596,14 @@ def test_scc_adversarial_condensation_chain(spark):
     edges = spark.createDataFrame(pairs, "src long, dst long")
     # force the distributed loop — the min-pivot worst case is a
     # property of the settle rounds, not of the driver fast path
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     rows = sorted((r.id, r.component) for r in
-                  strongly_connected_components(
-                      edges, driver_max_edges=0).collect())
+                  strongly_connected_components(edges).collect())
     assert rows == [(10, 10), (11, 10), (20, 20), (21, 20),
                     (30, 30), (31, 30)]
 
 
-def test_scc_differential_vs_tarjan(spark):
+def test_scc_differential_vs_tarjan(spark, monkeypatch):
     """Deterministic pseudo-random digraph vs an in-test iterative
     Tarjan — pins the full labeling, not a summary."""
     from agensgraph_spark.operators.analytics import (
@@ -1680,11 +1666,11 @@ def test_scc_differential_vs_tarjan(spark):
     v_df = spark.createDataFrame([(i,) for i in range(n)], "id long")
     # pin BOTH regimes against the in-test Tarjan: the driver fast
     # path (default gate) and the forced distributed FW-BW-Trim loop
-    for dme in (100_000, 0):
+    for cap in (D._DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", cap)
         got = sorted((r.id, r.component) for r in
-                     strongly_connected_components(
-                         e_df, v_df, driver_max_edges=dme).collect())
-        assert got == sorted(comp.items()), f"driver_max_edges={dme}"
+                     strongly_connected_components(e_df, v_df).collect())
+        assert got == sorted(comp.items()), f"_DRIVER_MAX_EDGES={cap}"
 
 
 def test_scc_empty_graph(spark):
@@ -1898,35 +1884,55 @@ def test_k_truss_star_empties(spark):
         k_truss(edges, k=1)
 
 
-def test_k_truss_incremental_matches_full(spark):
-    """The two support-maintenance regimes (affected-edge recompute vs
-    full re-enumeration) must produce identical edge sets AND identical
-    final supports. Random sparse graphs peel a few edges per round —
-    exactly the regime where the incremental path runs — and a
-    triangle-dense clique-union exercises multi-round cascades.
-    incremental_threshold=0 forces full; =1.1 forces incremental from
-    round 2 on."""
-    import random
-    from agensgraph_spark.operators.analytics import k_truss
-    rng = random.Random(20260818)
-    cases = []
-    for n, m in [(24, 70), (30, 90), (18, 45)]:
-        cases.append([(rng.randrange(n), rng.randrange(n))
-                      for _ in range(m)])
-    # K5 sharing an edge with K4, plus a pendant triangle: peels cascade
+def _py_truss(rows, k):
+    """Python k-truss peel: (a, b, support) with a < b."""
+    cur = {(min(a, b), max(a, b)) for a, b in rows if a != b}
+    while True:
+        nbr = {}
+        for a, b in cur:
+            nbr.setdefault(a, set()).add(b)
+            nbr.setdefault(b, set()).add(a)
+        sup = {(a, b): len(nbr[a] & nbr[b]) for a, b in cur}
+        keep = {e for e in cur if sup[e] >= k - 2}
+        if keep == cur or not keep:
+            return sorted((a, b, sup[(a, b)]) for a, b in keep)
+        cur = keep
+
+
+def _k_truss_both_regimes(spark, monkeypatch, rows, k):
+    """k_truss under full re-enumeration (_INCREMENTAL_PEEL=0) and
+    under incremental recompute on every peel (=1.1) must both equal
+    the Python peel — edge set AND final supports."""
+    from agensgraph_spark.operators import analytics
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    want = _py_truss(rows, k)
+    for peel in (0.0, 1.1):
+        monkeypatch.setattr(analytics, "_INCREMENTAL_PEEL", peel)
+        got = sorted((r.src, r.dst, r.support)
+                     for r in analytics.k_truss(edges, k=k).collect())
+        assert got == want, (peel, k, rows)
+
+
+def test_k_truss_incremental_matches_full(spark, monkeypatch):
+    """K5 sharing an edge with K4, plus a pendant triangle: at k=4 the
+    peel cascades (4 edges, then 1), so the incremental regime runs
+    twice."""
     k5 = [(i, j) for i in range(5) for j in range(i + 1, 5)]
     k4 = [(a + 10, b + 10) for a, b in
           [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]]
-    cases.append(k5 + k4 + [(4, 10), (3, 11), (4, 11), (0, 20), (1, 20)])
-    for rows in cases:
-        edges = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in rows], "src long, dst long")
+    rows = k5 + k4 + [(4, 10), (3, 11), (4, 11), (0, 20), (1, 20)]
+    _k_truss_both_regimes(spark, monkeypatch, rows, 4)
+
+
+def test_k_truss_incremental_matches_full_random(spark, monkeypatch):
+    """Random sparse graphs peel a few edges per round; at k=4 the
+    first one cascades over three peels (37, 15, then 5 edges)."""
+    import random
+    rng = random.Random(20260818)
+    for n, m in [(24, 70), (30, 90), (18, 45)]:
+        rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         for k in (3, 4):
-            full = sorted((r.src, r.dst, r.support) for r in k_truss(
-                edges, k=k, incremental_threshold=0.0).collect())
-            inc = sorted((r.src, r.dst, r.support) for r in k_truss(
-                edges, k=k, incremental_threshold=1.1).collect())
-            assert inc == full, (k, rows)
+            _k_truss_both_regimes(spark, monkeypatch, rows, k)
 
 
 def test_temperature_mix_python_replay(spark):

@@ -504,8 +504,8 @@ def test_cap_per_group_two_phase_skew_shape(spark):
     """cap_per_group's production input is Zipf-skewed by construction
     (it IS the anti-domain-dominance pass), so the plan must be the
     two-phase shape: phase 1 ranks within (group, salt) — the hot
-    group's sort splits across skew_buckets tasks — and phase 2
-    exact-ranks the ≤ skew_buckets*k survivors. Both phases must keep
+    group's sort splits across sampling._SKEW_BUCKETS tasks — and
+    phase 2 exact-ranks the ≤ _SKEW_BUCKETS*k survivors. Both phases must keep
     the WindowGroupLimit Partial pushdown (map-side top-k pruning
     BEFORE each exchange), and the phase-1 exchange must key on the
     salt alongside the group."""

@@ -144,8 +144,9 @@ def _cap_hot(spark, d: str):
     """cap_per_group on a deliberately Zipf-broken corpus: one synthetic
     domain absorbs 30% of ALL documents (doc_id % 10 < 3 — determinism
     without Date/random). The two-phase salted cap must split that
-    domain's rank-sort across skew_buckets tasks; before round 13 the
-    single-window form would have put 30% of the corpus in ONE task."""
+    domain's rank-sort across `sampling._SKEW_BUCKETS` (32) tasks;
+    before round 13 the single-window form would have put 30% of the
+    corpus in ONE task."""
     from agensgraph_spark.pipeline.sampling import cap_per_group
     docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
     hot = docs.withColumn(
