@@ -237,7 +237,7 @@ def execute_ddl(store: GraphStore, text: str) -> bool:
             other = "edge" if meta.kind == "e" else "vertex"
             raise ValueError(f"{verb} cannot DROP {other} label")
         for victim in g.catalog.drop_label(name, cascade=bool(m.group(4))):
-            g.frames.pop(victim, None)
+            g.move_label(victim, None)
         return True
     m = _RE["alter_rename"].match(s)
     if m:
@@ -251,8 +251,7 @@ def execute_ddl(store: GraphStore, text: str) -> bool:
                 return True
             raise ValueError(f"{m.group(1).lower()} {old!r} does not exist")
         g.catalog.rename_label(old, new)
-        if old in g.frames:
-            g.frames[new] = g.frames.pop(old)
+        g.move_label(old, new)
         for coll in (store.indexes.get(store.graph_path, []),
                      store.constraints.get(store.graph_path, [])):
             for item in coll:

@@ -17,8 +17,21 @@ materialized (lineage cut) and become the engine's new snapshot; at
 scale the same change-sets append/overwrite Parquet label snapshots
 (`Graph.write_snapshot`) instead of memory.
 
+Statistics: the reference keeps ag_graphmeta current from write stats
+(graphmeta.c regather_graphmeta), so a write reads the catalog, never
+whole tables. Here the working copy inherits the graph's label counts
+and (edge label, start labid, end labid) triples, and each clause folds
+in counters it computes anyway: CREATE its row span (plus one aggregate
+over the checkpointed new edges for their triples), DELETE the groupBy
+that counts its victims. DETACH DELETE scans only the edge labels with a
+triple touching a victim's labid. Where a triple split is unknown the
+triples drop to None (no statistics), never to a stale value.
+
 Id allocation: the reference draws 48-bit locids from a per-graph
-sequence (src/backend/commands/graphcmds.c:79-87 ag_label_seq). Here a
+sequence (src/backend/commands/graphcmds.c:79-87 ag_label_seq). Here
+each label's next locid is a mark carried on the Graph, seeded by one
+max scan the first time the label is written and advanced by every
+commit; like the sequence, it never hands out a deleted locid again. A
 batch of created elements takes ``next_locid + dense_uid`` where the
 dense uid is derived from monotonically_increasing_id() plus one tiny
 per-partition row-count aggregate (partition-offset scheme) — still
@@ -39,7 +52,7 @@ from pyspark.sql import functions as F
 from agensgraph_spark.cypher import ast as A
 from agensgraph_spark.cypher.scope import Binding
 from agensgraph_spark.graph import Graph, prop_col_name, prop_display_name
-from agensgraph_spark.graphid import LOCID_BITS, LOCID_MASK, graphid_col
+from agensgraph_spark.graphid import LOCID_MASK, graphid_col, labid_col, locid_col
 
 DEFAULT_VLABEL = "ag_vertex"
 
@@ -61,35 +74,56 @@ class WriteStats:
 
 @dataclass
 class WriteContext:
-    """Per-statement working state: a private Graph copy whose frames
-    mutate clause-by-clause, plus stats and the set of touched labels."""
+    """Per-statement working state: a forked Graph whose frames mutate
+    clause-by-clause, plus stats and the set of touched labels. The
+    fork carries the graph's statistics and locid marks; every clause
+    folds its row deltas into them, so the commit installs them exact
+    and a rollback discards them with the fork."""
     graph: Graph
     stats: WriteStats = field(default_factory=WriteStats)
     touched: set[str] = field(default_factory=set)
-    # kinds ("v"/"e") some DELETE clause of this statement has already
-    # removed — gates the exact-vs-fast path of _victim_label_counts
-    deleted_kinds: set[str] = field(default_factory=set)
-    _next_locid: dict[str, int] = field(default_factory=dict)
+    # per kind ("v"/"e"): the ids earlier DELETE clauses of this
+    # statement removed — small checkpointed victim frames, plus lazy
+    # incident-edge ids of a DETACH; read only by a repeated delete
+    gone: dict[str, DataFrame] = field(default_factory=dict)
 
     @classmethod
     def begin(cls, graph: Graph) -> "WriteContext":
-        return cls(graph=Graph(_copy.deepcopy(graph.catalog), dict(graph.frames)))
+        return cls(graph=graph.fork())
 
-    # ---- id allocation ----
+    def ensure_label(self, label: str, kind: str) -> None:
+        """Create a label the statement writes into; it enters the
+        statistics with 0 rows."""
+        if label not in self.graph.catalog.labels:
+            self.graph.catalog.create_label(label, kind)
+            self.graph.note_rows(label, 0)
 
-    def next_locid(self, label: str) -> int:
-        nxt = self._next_locid.get(label)
-        if nxt is None:
-            df = self.graph.frames.get(label)
-            if df is None or not df.columns:
-                nxt = 1
+    def note_gone(self, kind: str, ids: DataFrame) -> None:
+        prev = self.gone.get(kind)
+        self.gone[kind] = ids if prev is None else prev.unionByName(ids)
+
+    def retire(self, groups: list[tuple], kind: str) -> dict[str, int]:
+        """Fold a DELETE's victim groups — (label, (start labid, end
+        labid) or None when unknown, rows, highest locid) — into the
+        statement's counters, the working graph's statistics and its
+        locid floors. Returns the rows deleted per label."""
+        per: dict[str, int] = {}
+        pairs: dict[str, dict | None] = {}
+        for lbl, pair, n, top in groups:
+            per[lbl] = per.get(lbl, 0) + n
+            if pair is None or pairs.get(lbl, {}) is None:
+                pairs[lbl] = None
             else:
-                row = df.agg(F.max(F.col("id").bitwiseAND(F.lit(LOCID_MASK))).alias("m")).collect()[0]
-                nxt = (row["m"] or 0) + 1
-        return nxt
-
-    def advance_locid(self, label: str, used_past_max: int) -> None:
-        self._next_locid[label] = self.next_locid(label) + used_past_max
+                acc = pairs.setdefault(lbl, {})
+                acc[pair] = acc.get(pair, 0) - n
+            self.graph.note_deleted_locid(lbl, top)
+        for lbl, n in per.items():
+            self.graph.note_rows(lbl, -n, pairs[lbl])
+        if kind == "v":
+            self.stats.deletedvertices += sum(per.values())
+        else:
+            self.stats.deletededges += sum(per.values())
+        return per
 
     # ---- frame mutation ----
 
@@ -272,12 +306,11 @@ class WriteMixin:
         if len(node.labels) > 1:
             raise ValueError("CREATE node takes at most one label")
         label = node.labels[0] if node.labels else DEFAULT_VLABEL
-        cat = self.wctx.graph.catalog
-        if label not in cat.labels:
-            cat.create_vlabel(label)
-        labid = cat.labels[label].labid
+        g = self.wctx.graph
+        self.wctx.ensure_label(label, "v")
+        labid = g.catalog.labels[label].labid
 
-        base = self.wctx.next_locid(label)
+        base = g.next_locid(label)
         if base + span - 1 > LOCID_MASK:
             raise ValueError(
                 f"locid overflow for label {label!r}: base={base} + span={span} "
@@ -298,9 +331,10 @@ class WriteMixin:
         self.wctx.ensure_props(label, {
             prop_display_name(k): types[k] for k, _ in prop_cols})
         self.wctx.append(label, new_rows)
-        self.wctx.advance_locid(label, span)
+        g.advance_locid(label, span)
         # span IS the pipeline row count (derived driver-side by the
         # id-allocation partition-count pass) — no per-element count job
+        g.note_rows(label, span)
         self.wctx.stats.insertedvertices += span
         self.scope.bind(Binding(var, "vertex", labels=[label], props=[k for k, _ in prop_cols]))
         return var
@@ -316,13 +350,12 @@ class WriteMixin:
         if self.scope.get(var) is not None:
             raise ValueError(f"edge variable {var!r} already bound")
         label = rel.types[0]
-        cat = self.wctx.graph.catalog
-        if label not in cat.labels:
-            cat.create_elabel(label)
-        labid = cat.labels[label].labid
+        g = self.wctx.graph
+        self.wctx.ensure_label(label, "e")
+        labid = g.catalog.labels[label].labid
 
         src, dst = (lvar, rvar) if rel.direction == "out" else (rvar, lvar)
-        base = self.wctx.next_locid(label)
+        base = g.next_locid(label)
         if base + span - 1 > LOCID_MASK:
             raise ValueError(
                 f"locid overflow for label {label!r}: base={base} + span={span} "
@@ -346,7 +379,17 @@ class WriteMixin:
         self.wctx.ensure_props(label, {
             prop_display_name(k): types[k] for k, _ in prop_cols})
         self.wctx.append(label, new_rows)
-        self.wctx.advance_locid(label, span)
+        g.advance_locid(label, span)
+        # the triple split of the new edges: one aggregate over the
+        # checkpointed pipeline, skipped when nothing keeps triples
+        pairs = None
+        if g.edge_triples() is not None:
+            pairs = {}
+            if span:
+                pairs = {(r["s"], r["e"]): r["count"] for r in new_rows.groupBy(
+                    labid_col(F.col("start")).alias("s"),
+                    labid_col(F.col("end")).alias("e")).count().collect()}
+        g.note_rows(label, span, pairs)
         self.wctx.stats.insertededges += span
         self.scope.bind(Binding(var, "edge", labels=[label], props=[k for k, _ in prop_cols]))
         return var
@@ -387,7 +430,13 @@ class WriteMixin:
             if b.kind == "vertex":
                 v_victims.append(self.df.select(F.col(f"{e.name}__id").alias("id")).distinct())
             elif b.kind == "edge":
-                e_victims.append(self.df.select(F.col(f"{e.name}__id").alias("id")).distinct())
+                # the endpoints ride along when the binding has them, so
+                # the victim count also splits the deletion by triple
+                ends = [F.col(f"{e.name}__{c}").alias(c) for c in ("start", "end")
+                        if f"{e.name}__{c}" in self.df.columns]
+                e_victims.append(self.df.select(
+                    F.col(f"{e.name}__id").alias("id"),
+                    *(ends if len(ends) == 2 else [])).distinct())
             elif b.kind == "path":
                 v_victims.append(self.df.select(F.explode(f"{e.name}__vids").alias("id")).distinct())
                 e_victims.append(self.df.select(F.explode(f"{e.name}__eids").alias("id")).distinct())
@@ -404,44 +453,37 @@ class WriteMixin:
         # (and removed) exactly once, and the non-detach dangling check
         # needs no manual edf exclusion. Stats come from per-label
         # victim counts (one tiny job per victim frame, not two frame
-        # counts per label).
+        # counts per label). The rewritten frames stay lazy: the commit
+        # materializes each touched label once.
         if edf is not None:
             edf = edf.localCheckpoint(eager=True)
-            for lbl, n_del in self._victim_label_counts(edf, "e").items():
+            per = self.wctx.retire(self._victim_groups(edf, "e"), "e")
+            eids = edf.select(F.col("id").alias("__eid"))
+            for lbl in per:
                 f = g.frames[lbl]
-                keep = f.join(edf.withColumnRenamed("id", "__eid"),
-                              f["id"] == F.col("__eid"), "left_anti").localCheckpoint(eager=True)
-                self.wctx.stats.deletededges += n_del
-                self.wctx.replace(lbl, keep)
-            self.wctx.deleted_kinds.add("e")
+                self.wctx.replace(lbl, f.join(eids, f["id"] == F.col("__eid"), "left_anti"))
+            self.wctx.note_gone("e", edf.select("id"))
         if vdf is not None:
             vdf = vdf.localCheckpoint(eager=True)
+            vgroups = self._victim_groups(vdf, "v")
+            labids = {g.catalog.labels[lbl].labid for lbl, *_ in vgroups}
+            vids = vdf.select(F.col("id").alias("__vid"))
+            incident, hit = self._incident_groups(vids, labids)
             if not d.detach:
-                # any surviving incident edge → error (reference parity);
-                # one job over the tagged union of edge frames
-                inc = self._incident_counts(vdf)
-                if inc:
-                    lbl = sorted(inc)[0]
+                # any surviving incident edge → error (reference parity)
+                if incident:
+                    lbl = sorted(grp[0] for grp in incident)[0]
                     raise ValueError(
                         f"vertices in {lbl!r} still have edges; use DETACH DELETE")
             else:
-                for lbl, n_del in self._incident_counts(vdf).items():
-                    ef = g.frames[lbl]
-                    keep = ef.join(
-                        vdf.withColumnRenamed("id", "__vid"),
-                        (ef["start"] == F.col("__vid")) | (ef["end"] == F.col("__vid")),
-                        "left_anti")
-                    keep = keep.localCheckpoint(eager=True)
-                    self.wctx.stats.deletededges += n_del
-                    self.wctx.replace(lbl, keep)
-                    self.wctx.deleted_kinds.add("e")
-            for lbl, n_del in self._victim_label_counts(vdf, "v").items():
+                for lbl in self.wctx.retire(incident, "e"):
+                    self.wctx.replace(lbl, self._detach_keep(g.frames[lbl], vids))
+                if incident:
+                    self.wctx.note_gone("e", hit.select("id"))
+            for lbl in self.wctx.retire(vgroups, "v"):
                 f = g.frames[lbl]
-                keep = f.join(vdf.withColumnRenamed("id", "__vid"),
-                              f["id"] == F.col("__vid"), "left_anti").localCheckpoint(eager=True)
-                self.wctx.stats.deletedvertices += n_del
-                self.wctx.replace(lbl, keep)
-            self.wctx.deleted_kinds.add("v")
+                self.wctx.replace(lbl, f.join(vids, f["id"] == F.col("__vid"), "left_anti"))
+            self.wctx.note_gone("v", vdf.select("id"))
 
     def _delete_expr_kind(self, e: A.Expr) -> str:
         """'v' or 'e' for an entity-valued DELETE expression."""
@@ -461,66 +503,93 @@ class WriteMixin:
 
     @staticmethod
     def _union_ids(dfs: list[DataFrame]) -> DataFrame | None:
+        """Distinct victims; edge endpoints are kept only when every
+        part carries them."""
         if not dfs:
             return None
-        out = dfs[0]
+        cols = ["id", "start", "end"] if all("start" in d.columns for d in dfs) else ["id"]
+        out = dfs[0].select(*cols)
         for d in dfs[1:]:
-            out = out.unionByName(d)
+            out = out.unionByName(d.select(*cols))
         return out.distinct()
 
-    def _victim_label_counts(self, victims: DataFrame, kind: str) -> dict[str, int]:
-        """Per-label count of victim ids that EXIST in their label frame
-        — serves both label pruning and the deleted-stats counters.
+    @staticmethod
+    def _groups(df: DataFrame, label: Column, ends: bool) -> DataFrame:
+        """The victim-group aggregate: rows and highest locid per label
+        and, with ``ends``, per (start labid, end labid)."""
+        keys = [label.alias("l")]
+        if ends:
+            keys += [labid_col(F.col("start")).alias("s"),
+                     labid_col(F.col("end")).alias("e")]
+        return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"),
+                                     F.max(locid_col(F.col("id"))).alias("top"))
 
-        Fast path (no earlier DELETE of this kind in the statement):
-        every victim necessarily still exists (victims come from a MATCH
-        against the working graph, and only DELETE removes entities), so
-        ONE tiny groupBy over the victims' own labid bits (the label
-        lives in the id's high bits) yields exact counts without
-        touching any frame. Repeated-delete path (DELETE a ... DELETE a,
-        cypher_dml.sql:689-784): an id may already be gone, so the
-        labid-pruned candidate frames are union-scanned ONCE with a
-        semi-join for the exact surviving counts — two jobs total
-        instead of two frame counts per label."""
+    def _victim_groups(self, victims: DataFrame, kind: str) -> list[tuple]:
+        """Victim ids that EXIST in their label frame, grouped as
+        ``WriteContext.retire`` takes them — serves label pruning, the
+        deleted-stats counters and the carried statistics.
+
+        Every victim existed when its clause matched it (victims come
+        from a MATCH against the working graph, and only DELETE removes
+        entities), so ONE tiny groupBy over the victims' own labid bits
+        (the label lives in the id's high bits) yields exact counts
+        without touching any frame; edge victims carrying their
+        endpoints are split by triple in the same groupBy. A repeated
+        delete of the same kind in one statement (DELETE a ... DELETE a,
+        cypher_dml.sql:689-784) first drops the ids earlier clauses
+        already removed (``WriteContext.gone``) — still no label scan."""
         cat = self.wctx.graph.catalog
         frames = self.wctx.graph.frames
-        by_labid = {r["l"]: r["n"] for r in victims.groupBy(
-            F.shiftrightunsigned(F.col("id"), LOCID_BITS).alias("l"))
-            .agg(F.count(F.lit(1)).alias("n")).collect()}
         names = cat.vlabels() if kind == "v" else cat.elabels()
-        cand = {n: by_labid[cat.labels[n].labid] for n in names
-                if cat.labels[n].labid in by_labid and n in frames}
-        if kind not in self.wctx.deleted_kinds:
-            return cand
-        parts = [frames[n].select("id", F.lit(n).alias("__lbl")) for n in cand]
-        if not parts:
-            return {}
-        allids = parts[0]
-        for p in parts[1:]:
-            allids = allids.unionByName(p)
-        rows = (allids.join(victims.select("id"), "id", "left_semi")
-                .groupBy("__lbl").agg(F.count(F.lit(1)).alias("n")).collect())
-        return {r["__lbl"]: r["n"] for r in rows}
+        by_labid = {cat.labels[n].labid: n for n in names if n in frames}
+        gone = self.wctx.gone.get(kind)
+        if gone is not None:
+            victims = victims.join(gone, "id", "left_anti")
+        ends = kind == "e" and "start" in victims.columns
+        rows = self._groups(victims, labid_col(F.col("id")), ends).collect()
+        return [(by_labid[r["l"]], (r["s"], r["e"]) if ends else None,
+                 r["n"], r["top"]) for r in rows if r["l"] in by_labid]
 
-    def _incident_counts(self, vdf: DataFrame) -> dict[str, int]:
-        """Edges incident to the victim vertices, counted per edge label
-        in ONE job over a tagged union of the edge frames (which already
-        reflect this clause's explicit edge deletions, so nothing is
-        double-counted). Labels with zero incident edges are absent —
-        their frames are neither counted nor rewritten."""
+    def _incident_groups(self, vids: DataFrame, labids: set[int]
+                         ) -> tuple[list[tuple], DataFrame | None]:
+        """Edges incident to the victim vertices, grouped per (edge
+        label, start labid, end labid) in ONE job over a tagged union of
+        the edge frames (which already reflect this clause's explicit
+        edge deletions, so nothing is double-counted), plus the lazy
+        incident-edge frame itself. With edge triples, only labels with
+        a triple touching a victim labid are scanned. Two semi-joins on
+        equality keys — on ``start``, then on ``end`` for edges not
+        already matched — count each edge once."""
         g = self.wctx.graph
-        parts = [g.frames[n].select("start", "end", F.lit(n).alias("__lbl"))
-                 for n in g.catalog.elabels() if n in g.frames]
-        if not parts:
-            return {}
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        vids = vdf.select(F.col("id").alias("__vid"))
-        hit = u.join(vids, (u["start"] == F.col("__vid"))
-                     | (u["end"] == F.col("__vid")), "left_semi")
-        return {r["__lbl"]: r["n"] for r in
-                hit.groupBy("__lbl").agg(F.count(F.lit(1)).alias("n")).collect()}
+        names = [n for n in g.catalog.elabels() if n in g.frames]
+        triples = g.edge_triples()
+        if triples is not None:
+            near = {e for e, s, t, _ in triples if s in labids or t in labids}
+            names = [n for n in names if n in near]
+        if not names:
+            return [], None
+        u = g.frames[names[0]].select("id", "start", "end", F.lit(names[0]).alias("__lbl"))
+        for n in names[1:]:
+            u = u.unionByName(g.frames[n].select("id", "start", "end", F.lit(n).alias("__lbl")))
+        hit = self._incident_edges(u, vids)
+        return [(r["l"], (r["s"], r["e"]), r["n"], r["top"])
+                for r in self._groups(hit, F.col("__lbl"), True).collect()], hit
+
+    @staticmethod
+    def _incident_edges(edges: DataFrame, vids: DataFrame) -> DataFrame:
+        """Rows of ``edges`` with an endpoint among the ``vids.__vid``
+        ids, each once, from equi-joins only."""
+        on_start = edges.join(vids, F.col("start") == F.col("__vid"), "left_semi")
+        on_end = (edges.join(vids, F.col("end") == F.col("__vid"), "left_semi")
+                  .join(vids, F.col("start") == F.col("__vid"), "left_anti"))
+        return on_start.unionByName(on_end)
+
+    @staticmethod
+    def _detach_keep(edges: DataFrame, vids: DataFrame) -> DataFrame:
+        """Rows of ``edges`` with neither endpoint among the
+        ``vids.__vid`` ids: two chained equi anti-joins."""
+        return (edges.join(vids, F.col("start") == F.col("__vid"), "left_anti")
+                .join(vids, F.col("end") == F.col("__vid"), "left_anti"))
 
     # ------------------------------------------------------------------
     # SET / REMOVE  (reference: execCypherSet.c:141 ExecSetGraph; `+=`
@@ -839,16 +908,13 @@ class WriteMixin:
 
         # labels mentioned by the pattern are auto-created (as in the
         # CREATE path) so the match phase scans them as empty
-        cat = self.wctx.graph.catalog
         for el in pat.elements:
             if isinstance(el, A.NodePat):
                 for lbl in el.labels:
-                    if lbl not in cat.labels:
-                        cat.create_vlabel(lbl)
+                    self.wctx.ensure_label(lbl, "v")
             elif isinstance(el, A.RelPat):
                 for t in el.types:
-                    if t not in cat.labels:
-                        cat.create_elabel(t)
+                    self.wctx.ensure_label(t, "e")
 
         # Property constraints referencing pipeline variables (e.g.
         # `UNWIND ... AS nm MERGE (n:nation {n_name: nm})`) cannot be

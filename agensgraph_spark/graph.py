@@ -54,6 +54,12 @@ class Graph:
         # (edge_label, start_labid, end_labid, count) triples —
         # populated by collect_edge_stats()
         self._edge_triples: list[tuple[str, int, int, int]] | None = None
+        # per label: the next free locid (the ag_label_seq analog,
+        # graphcmds.c:79-87). A label absent here is seeded by one max
+        # scan at its first CREATE, never below its floor: one past the
+        # highest locid a DELETE removed before the seed.
+        self._locid_next: dict[str, int] = {}
+        self._locid_floor: dict[str, int] = {}
 
     # ---- registration ----
 
@@ -61,13 +67,92 @@ class Graph:
         if label not in self.catalog.labels:
             raise ValueError(f"label {label!r} not in catalog")
         self.frames[label] = df
-        # any frame change invalidates the cached statistics: the
-        # reference maintains ag_graphmeta incrementally from write stats
-        # (regather_graphmeta, graphmeta.c); our snapshot analog is
-        # invalidate-on-write + lazy recompute at next read, so a stats
-        # read is never stale relative to the installed frames
+        # a frame swapped in from outside invalidates the statistics and
+        # the label's locid mark; they are recomputed at the next read.
+        # Cypher writes instead carry them forward (note_rows), as the
+        # reference maintains ag_graphmeta from write stats
+        # (regather_graphmeta, graphmeta.c)
         self._label_counts = None
         self._edge_triples = None
+        self._locid_next.pop(label, None)
+        self._locid_floor.pop(label, None)
+
+    def fork(self) -> "Graph":
+        """A working copy for one write statement: its own catalog,
+        frame map, statistics and locid marks, so a rolled-back
+        statement leaves this graph untouched."""
+        import copy
+        g = Graph(copy.deepcopy(self.catalog), self.frames)
+        if self._label_counts is not None:
+            g._label_counts = dict(self._label_counts)
+        if self._edge_triples is not None:
+            g._edge_triples = list(self._edge_triples)
+        g._locid_next = dict(self._locid_next)
+        g._locid_floor = dict(self._locid_floor)
+        return g
+
+    def move_label(self, old: str, new: str | None) -> None:
+        """Carry label ``old``'s frame, statistics and locid mark over
+        to ``new`` after ALTER ... RENAME, or retire them after DROP
+        (``new`` is None). The catalog change is the caller's. Labids
+        survive a rename, so the edge triples keep their endpoints; a
+        dropped vertex label's labid stays in the triples of edges that
+        still point at it, as a recompute would count them."""
+        for d in (self.frames, self._label_counts, self._locid_next, self._locid_floor):
+            if d is not None and old in d:
+                value = d.pop(old)
+                if new is not None:
+                    d[new] = value
+        if self._edge_triples is not None:
+            self._edge_triples = [(new if e == old else e, s, t, c)
+                                  for e, s, t, c in self._edge_triples
+                                  if e != old or new is not None]
+
+    # ---- write-side metadata: statistics and locid marks ----
+
+    def note_rows(self, label: str, n: int,
+                  pairs: "dict[tuple[int, int], int] | None" = None) -> None:
+        """Fold a write's row delta for ``label`` into the statistics:
+        ``n`` rows added (negative: removed); for an edge label,
+        ``pairs`` splits ``n`` by (start labid, end labid). ``pairs`` of
+        None means the split is unknown, and the edge triples are
+        dropped (the no-statistics state). Triples reaching 0 vanish."""
+        if self._label_counts is not None:
+            self._label_counts[label] = self._label_counts.get(label, 0) + n
+        if self.catalog.labels[label].kind != "e" or self._edge_triples is None:
+            return
+        if pairs is None:
+            if n:
+                self._edge_triples = None
+            return
+        acc = {(e, s, t): c for e, s, t, c in self._edge_triples}
+        for (s, t), c in pairs.items():
+            acc[(label, s, t)] = acc.get((label, s, t), 0) + c
+        self._edge_triples = [(e, s, t, c) for (e, s, t), c in acc.items() if c]
+
+    def next_locid(self, label: str) -> int:
+        """The next free locid of ``label``: the carried mark, seeded by
+        one max scan the first time the label is written."""
+        nxt = self._locid_next.get(label)
+        if nxt is None:
+            nxt = 1
+            df = self.frames.get(label)
+            if df is not None and df.columns:
+                from agensgraph_spark.graphid import locid_col
+                top = df.agg(F.max(locid_col(F.col("id"))).alias("m")).collect()[0]["m"]
+                nxt = (top or 0) + 1
+            nxt = self._locid_next[label] = max(nxt, self._locid_floor.pop(label, 1))
+        return nxt
+
+    def advance_locid(self, label: str, used: int) -> None:
+        self._locid_next[label] = self.next_locid(label) + used
+
+    def note_deleted_locid(self, label: str, top: int) -> None:
+        """A DELETE removed ``label`` rows up to locid ``top``: an
+        unseeded label's later seed starts above it, so no locid is
+        reused (a seeded mark is already above every live locid)."""
+        if label not in self._locid_next:
+            self._locid_floor[label] = max(self._locid_floor.get(label, 1), top + 1)
 
     def label_df(self, label: str) -> DataFrame:
         return self.frames[label]
@@ -199,10 +284,11 @@ class Graph:
         labid) — the ag_graphmeta analog. Reads are CATALOG lookups in
         the reference (ag_graphmeta rows maintained from write stats,
         src/backend/utils/adt/graphmeta.c), not edge rescans — so when
-        the triples have already been gathered for this exact snapshot
-        (collect_edge_stats(), invalidated by every set_label_df) this
-        serves a driver-local 6-ish-row DataFrame instead of re-scanning
-        every edge frame. Cold path computes distributed."""
+        the triples have already been gathered (collect_edge_stats(),
+        kept exact through Cypher writes and DDL, invalidated by
+        set_label_df) this serves a driver-local 6-ish-row DataFrame
+        instead of re-scanning every edge frame. Cold path computes
+        distributed."""
         if self._edge_triples:  # empty [] falls through (VALUES () is invalid)
             # getActiveSession() is thread-local and returns None off
             # the driver thread that created the session; prefer the

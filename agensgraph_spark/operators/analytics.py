@@ -253,15 +253,18 @@ def k_truss(
                 .unionByName(cur.select(F.col("b").alias("v"),
                                         F.col("a").alias("w"))))
 
-    def _common_neighbor_support(cand: DataFrame, cur: DataFrame) -> DataFrame:
+    def _common_neighbor_support(cand: DataFrame, cand_hinted: DataFrame,
+                                 cur: DataFrame) -> DataFrame:
         """Exact support of each ``cand`` edge (a, b) in the graph
         ``cur``: count of c adjacent to both endpoints. Work is
         bounded by sum of deg(a) over candidates — the candidate set
         is peel-sized, never corpus-sized (the caller broadcast-hints
         it when its exact count is driver-known small; checkpointed
         inputs otherwise carry no size estimate and the planner falls
-        back to shuffling the full edge set on every round)."""
-        fan = cand.join(_adj(cur).withColumnRenamed("v", "a"), "a") \
+        back to shuffling the full edge set on every round). The hinted
+        copy drives the fan join only: on the preserved side of the
+        final left join Spark would drop the hint with a warning."""
+        fan = cand_hinted.join(_adj(cur).withColumnRenamed("v", "a"), "a") \
                   .select("a", "b", F.col("w").alias("c")) \
                   .filter(F.col("c") != F.col("b")) \
                   .localCheckpoint(eager=False)
@@ -332,10 +335,9 @@ def k_truss(
                         # survivors only: removed edges need no support
                         .join(cur, ["a", "b"], "left_semi")
                         .localCheckpoint(eager=False))
-            n_aff = affected.count()
-            affected = _maybe_bcast(affected, n_aff)
-            supp_aff = _common_neighbor_support(affected, cur)
-            supp = (keep.join(affected, ["a", "b"], "left_anti")
+            aff_hinted = _maybe_bcast(affected, affected.count())
+            supp_aff = _common_neighbor_support(affected, aff_hinted, cur)
+            supp = (keep.join(aff_hinted, ["a", "b"], "left_anti")
                     .unionByName(supp_aff)
                     .localCheckpoint(eager=False))
         und = cur

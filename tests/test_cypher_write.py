@@ -282,7 +282,7 @@ def test_delete_stat_jobs_one_per_victim_kind(spark, monkeypatch):
     sc = spark.sparkContext
     seq = itertools.count()
     jobs_per_call: list[int] = []
-    orig = W.WriteMixin._victim_label_counts
+    orig = W.WriteMixin._victim_groups
 
     def counting(self, victims, kind):
         group = f"statprobe-{next(seq)}"
@@ -295,7 +295,7 @@ def test_delete_stat_jobs_one_per_victim_kind(spark, monkeypatch):
             len(sc.statusTracker().getJobIdsForGroup(group)))
         return out
 
-    monkeypatch.setattr(W.WriteMixin, "_victim_label_counts", counting)
+    monkeypatch.setattr(W.WriteMixin, "_victim_groups", counting)
     eng = CypherEngine(spark, Graph(GraphCatalog("jd")))
     for i in range(3):
         eng.cypher(f"UNWIND [1,2,3] AS k CREATE (:dl{i} {{k: k}})")
@@ -312,6 +312,116 @@ def test_delete_stat_jobs_one_per_victim_kind(spark, monkeypatch):
     eng.cypher("UNWIND [1,2,3] AS k CREATE (:dl0 {k: k})")
     eng.cypher("MATCH (a:dl0) DELETE a DELETE a")
     assert eng.last_write_stats["deletedvertices"] == 3
-    # exact path adds one union-scan semi-join aggregate (<= 2 more
-    # AQE jobs); still one helper call per victim frame
+    # exact path: the same groupBy after an anti-join against the ids
+    # the earlier clause deleted, no label scan; still one helper call
+    # per victim frame
     assert len(jobs_per_call) == 2 and all(j <= 4 for j in jobs_per_call), jobs_per_call
+
+
+def _group_jobs(spark, group: str) -> list[list[str]]:
+    """Stage names (call sites) of every job launched under ``group``."""
+    st = spark.sparkContext.statusTracker()
+    return [[st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds
+             if st.getStageInfo(s) is not None]
+            for j in sorted(st.getJobIdsForGroup(group))]
+
+
+def _run_in_group(spark, eng, group: str, q: str) -> list[list[str]]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        eng.cypher(q)
+    finally:
+        sc.setJobGroup(None, None)
+    return _group_jobs(spark, group)
+
+
+def test_detach_delete_one_label_materializes_once(spark):
+    """A one-label DETACH DELETE rewrites its label lazily and lets the
+    commit materialize it once; with edge triples carried, an edge-free
+    label scans no edge frame. What is left: the victim checkpoint, the
+    victim groupBy and the commit checkpoint (AQE may split each in two).
+    A second checkpoint of the label or an edge scan exceeds the bound."""
+    eng = CypherEngine(spark, Graph(GraphCatalog("dd1")))
+    eng.cypher("UNWIND range(1, 20) AS i CREATE (:a {k: i})-[:r]->(:b {k: i})")
+    eng.graph.collect_stats()
+    eng.graph.collect_edge_stats()
+    eng.cypher("UNWIND range(1, 5) AS i CREATE (:c {k: i})")
+    jobs = _run_in_group(spark, eng, "dd1-detach", "MATCH (v:c) DETACH DELETE v")
+    assert len(jobs) <= 6, jobs
+    assert eng.last_write_stats["deletedvertices"] == 5
+    assert eng.cypher("MATCH (v:c) RETURN v").count() == 0
+    assert eng.cypher("MATCH ()-[e:r]->() RETURN e").count() == 20
+
+
+def test_create_reads_carried_locid_mark(spark):
+    """CREATE into a label the engine has written takes its locid from
+    the carried mark: no max scan (the scan's call site is graph.py).
+    A CREATE after deleting the highest locid does not reuse it, and
+    neither does one whose first write to a loaded label was the
+    DELETE (the victim aggregate raises the seed's floor)."""
+    eng = CypherEngine(spark, Graph(GraphCatalog("lm")))
+    eng.cypher("UNWIND range(1, 10) AS i CREATE (:m {k: i})")
+    jobs = _run_in_group(spark, eng, "lm-create",
+                         "UNWIND range(11, 15) AS i CREATE (:m {k: i})")
+    assert not any("graph.py" in s for j in jobs for s in j), jobs
+
+    def locids():
+        return sorted(r["i"] & ((1 << 48) - 1) for r in
+                      eng.cypher("MATCH (n:m) RETURN n.id AS i").collect())
+
+    top = locids()[-1]
+    assert top == 15
+    eng.cypher("MATCH (n:m) WHERE n.k = 15 DELETE n")
+    eng.cypher("CREATE (:m {k: 16})")
+    assert locids()[-1] == top + 1
+
+    # a graph whose frames came from outside has no mark: the first
+    # CREATE scans (and the probe above sees that scan), but a DELETE
+    # of the top locid before it still keeps the locid retired
+    loaded = Graph(eng.graph.catalog, eng.graph.frames)
+    eng2 = CypherEngine(spark, loaded)
+    eng2.cypher("MATCH (n:m) WHERE n.k = 16 DELETE n")
+    jobs = _run_in_group(spark, eng2, "lm-seed", "CREATE (:m {k: 17})")
+    assert any("graph.py" in s for j in jobs for s in j), jobs
+    got = sorted(r["i"] & ((1 << 48) - 1) for r in
+                 eng2.cypher("MATCH (n:m) RETURN n.id AS i").collect())
+    assert got[-1] == top + 2
+
+
+def _assert_stats_match_recompute(g: Graph) -> None:
+    fresh = Graph(g.catalog, g.frames)
+    want_counts = fresh.collect_stats()
+    want_triples = sorted(fresh.collect_edge_stats())
+    assert g.label_counts() == want_counts
+    assert g.edge_triples() is not None
+    assert sorted(g.edge_triples()) == want_triples
+    assert sorted(tuple(r) for r in g.edge_stats().collect()) == want_triples
+
+
+def test_stats_after_writes_match_recompute(spark):
+    """Differential: the statistics a write carries equal a recompute
+    over the same frames after every statement of a scripted sequence
+    (CREATE, SET, MERGE matched + created, DELETE of an edge variable,
+    DETACH DELETE of vertices with edges, DROP and RENAME)."""
+    eng = CypherEngine(spark, Graph(GraphCatalog("sd")))
+    eng.cypher("UNWIND range(1, 4) AS i CREATE (:p {k: i})-[:r]->(:q {k: i})")
+    eng.graph.collect_stats()
+    eng.graph.collect_edge_stats()
+    script = [
+        "UNWIND range(5, 7) AS i CREATE (:p {k: i})-[:r]->(:q {k: i})",
+        "MATCH (a:p {k: 1}), (b:p {k: 2}) CREATE (a)-[:s]->(b), (b)-[:s]->(:t)",
+        "MATCH (a:p) WHERE a.k > 5 SET a.w = a.k * 2",
+        "UNWIND [3, 40, 41] AS i MERGE (v:p {k: i}) ON CREATE SET v.n = true",
+        "MATCH (a:p {k: 40}), (b:q {k: 1}) MERGE (a)-[:r]->(b)",
+        "MATCH (:p {k: 2})-[e:r]->() DELETE e",
+        "MATCH (a:p) WHERE a.k IN [1, 5, 40] DETACH DELETE a",
+        "MATCH (b:q {k: 3}) DETACH DELETE b CREATE (:q {k: 30})",
+        "DROP ELABEL s",
+        "ALTER ELABEL r RENAME TO r2",
+        "ALTER VLABEL q RENAME TO q2",
+    ]
+    for q in script:
+        eng.cypher(q)
+        _assert_stats_match_recompute(eng.graph)
+    assert {lbl for lbl, *_ in eng.graph.edge_triples()} == {"r2"}

@@ -444,3 +444,46 @@ def test_alter_label_storage_productions_refused_loudly(eng):
                  "ALTER VLABEL item DISABLE INDEX"):
         with pytest.raises(NotImplementedError, match="snapshot"):
             eng.cypher(stmt)
+
+
+def test_drop_and_rename_keep_statistics(spark):
+    """DROP ELABEL and ALTER ... RENAME carry the collected statistics
+    over: edge_stats() and label_counts() read as a fresh recompute
+    would (a stale name would read a renamed big label as 0 rows and
+    broadcast-hint it)."""
+    from agensgraph_spark.catalog import GraphCatalog
+    from agensgraph_spark.graph import Graph
+    from agensgraph_spark.graphid import make_graphid
+
+    cat = GraphCatalog("ds")
+    cat.create_vlabel("a", labid=1)
+    cat.create_vlabel("b", labid=2)
+    cat.create_elabel("r", labid=3)
+    cat.create_elabel("q", labid=4)
+    a = [make_graphid(1, i) for i in range(1, 4)]
+    b = [make_graphid(2, i) for i in range(1, 4)]
+    g = Graph(cat)
+    g.set_label_df("a", spark.createDataFrame([(i,) for i in a], "id long"))
+    g.set_label_df("b", spark.createDataFrame([(i,) for i in b], "id long"))
+    g.set_label_df("r", spark.createDataFrame(
+        [(make_graphid(3, n + 1), a[n], b[n]) for n in range(3)],
+        "id long, start long, end long"))
+    g.set_label_df("q", spark.createDataFrame(
+        [(make_graphid(4, n + 1), a[n], b[n]) for n in range(2)],
+        "id long, start long, end long"))
+    g.collect_stats()
+    g.collect_edge_stats()
+    eng = CypherEngine(spark, g)
+    eng.cypher("DROP ELABEL q")
+    eng.cypher("ALTER ELABEL r RENAME TO r2")
+    got = sorted(tuple(r) for r in eng.graph.edge_stats().collect())
+    assert got == [("r2", 1, 2, 3)]
+    assert eng.graph.label_counts() == {"a": 3, "b": 3, "r2": 3}
+    fresh = Graph(eng.graph.catalog, eng.graph.frames)
+    assert eng.graph.label_counts() == fresh.collect_stats()
+    assert sorted(eng.graph.edge_triples()) == sorted(fresh.collect_edge_stats())
+    # a CREATE into the renamed label continues its locids
+    eng.cypher("CREATE (:a {k: 1})-[:r2]->(:b {k: 1})")
+    ids = {r["i"] & ((1 << 48) - 1)
+           for r in eng.cypher("MATCH ()-[e:r2]->() RETURN e.id AS i").collect()}
+    assert ids == {1, 2, 3, 4}

@@ -375,6 +375,21 @@ def test_graphmeta_read_is_catalog_lookup(eng):
     assert {tuple(r) for r in g.edge_stats().collect()} == cached
 
 
+def test_detach_delete_plans_equi_joins_only(eng):
+    """DETACH DELETE's incident-edge count and its edge anti-join match
+    an edge on either endpoint with equi-joins only: an OR condition
+    would plan a BroadcastNestedLoopJoin over every edge row."""
+    from agensgraph_spark.cypher.writes import WriteMixin
+    g = eng.graph
+    vids = g.frames["customer"].select(F.col("id").alias("__vid")).limit(5)
+    edges = g.frames["placed"]
+    for df in (WriteMixin._incident_edges(edges, vids),
+               WriteMixin._detach_keep(edges, vids)):
+        plan = physical(df)
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+
+
 def test_lm_perplexity_plan_shape(spark):
     """Bigram-LM scoring stays JVM-side and never goes quadratic: no
     Python eval nodes, no cartesian product — the vocab scalar enters
