@@ -97,9 +97,10 @@ def brute_cosine_topk(
     q_ids = [r[0] for r in qrows]
     if any(i is None for i in q_ids):
         raise ValueError("brute_cosine_topk: NULL query id")
-    Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    if Q.ndim != 2:
+    vecs = [r[1] for r in qrows]
+    if any(v is None for v in vecs) or len({len(v) for v in vecs}) != 1:
         raise ValueError("brute_cosine_topk: ragged/NULL query vectors")
+    Q = np.asarray(vecs, dtype=np.float64)
     qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     if (qn == 0).any():
         raise ValueError("brute_cosine_topk: zero-norm query vector")
@@ -117,7 +118,7 @@ def brute_cosine_topk(
             ids = b.column(0)
             if ids.null_count:
                 raise ValueError("brute_cosine_topk: NULL corpus id")
-            V = _list_mat(b.column(1), dim)
+            V = _list_mat(b.column(1), dim, "brute_cosine_topk")
             cn = np.sqrt(np.einsum("ij,ij->i", V, V))
             if (cn == 0).any():
                 raise ValueError(
@@ -273,29 +274,6 @@ def _resolve_cents(
     return cm
 
 
-def _centroid_tagged(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cm: np.ndarray,
-) -> DataFrame:
-    """(_id, _v, _n, _list) frame: each row tagged with its nearest
-    centroid by dot-product argmax; tie -> higher index (same order as
-    ivf_cosine_topk's reverse(array_sort(struct(s, i)))). One narrow
-    map-only pass — persistable with the snapshot at scale."""
-    n_lists = len(cm)
-    cmat = matrix_lit(cm)
-    base = corpus.select(F.col(id_col).alias("_id"),
-                         F.col(vec_col).cast("array<double>").alias("_v"))
-    base = base.select("_id", "_v", norm(F.col("_v")).alias("_n"))
-    sims = F.transform(cmat, lambda c: dot(F.col("_v"), c))
-    idx = F.sequence(F.lit(0), F.lit(n_lists - 1))
-    pairs = F.zip_with(sims, idx, lambda s, i: F.struct(s.alias("s"), i.alias("i")))
-    return base.withColumn(
-        "_list", F.reverse(F.array_sort(pairs)).getItem(0).getField("i"))
-
-
-
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -321,25 +299,17 @@ def ivf_cosine_topk(
 
     ``dim`` should be passed by callers that know the embedding width
     (it is a dataset constant) — the ``first()`` fallback costs one
-    driver-side Spark job per call."""
-    cents = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
-    n_lists = len(cents)
-
-    # r14: both tag passes run on the Arrow engine (numpy matmul
-    # argmax/arg-top, guide §4.2) instead of the JVM interpreted
-    # transform over a ~n_lists*dim-literal centroid array that rode
-    # the plan once per side. Tie rule preserved exactly: score DESC,
-    # then index DESC (the reverse(array_sort(struct(s, i))) order the
-    # SQL oracle replays). Dividing by the row norm cannot change a
-    # per-row argmax, so the tag skips it like the oracle does.
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).cast("array<double>").alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    c_tag = _centroid_tag_arrow(c, np.asarray(cents, dtype=float),
-                                "neighbor_id", "cv", "cn", 1)
-    q_tag = _centroid_tag_arrow(q, np.asarray(cents, dtype=float),
-                                "query_id", "qv", "qn", n_probe)
+    driver-side Spark job per call. NULL, ragged and zero-norm
+    embeddings raise ``ValueError``."""
+    cm = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
+    c_tag = _centroid_tag_arrow(
+        corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).cast("array<double>").alias("cv")),
+        cm, "cv", "cn", 1, "ivf_cosine_topk")
+    q_tag = _centroid_tag_arrow(
+        queries.select(F.col(id_col).alias("query_id"),
+                       F.col(vec_col).cast("array<double>").alias("qv")),
+        cm, "qv", "qn", n_probe, "ivf_cosine_topk")
 
     cand = c_tag.join(F.broadcast(q_tag), "_list") \
                 .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -349,26 +319,26 @@ def ivf_cosine_topk(
     return _rank_topk(scored, k)
 
 
-def _list_mat(col, dim: int) -> np.ndarray:
+def _list_mat(col, dim: int, op: str) -> np.ndarray:
     """(n, dim) float64 matrix from an Arrow list<double> column —
     one flatten + reshape over the contiguous values buffer, no
     per-row Python. Nulls and ragged rows refuse loudly (the cosine
-    math would silently misalign every following row)."""
+    math would silently misalign every following row); ``op`` names
+    the public operator in the message."""
     arr = col.combine_chunks() if hasattr(col, "combine_chunks") else col
     if arr.null_count:
-        raise ValueError("semantic_dedup: NULL embedding in corpus")
+        raise ValueError(f"{op}: NULL embedding in corpus")
     flat_arr = arr.flatten()
     if flat_arr.null_count:
         # a null ELEMENT inside an embedding passes the top-level null
         # check and the length check, then silently becomes NaN in the
-        # matmul — refuse it as loudly as a null row (r14 ADVICE)
-        raise ValueError(
-            "semantic_dedup: NULL element inside an embedding vector")
+        # matmul — refuse it as loudly as a null row
+        raise ValueError(f"{op}: NULL element inside an embedding vector")
     flat = flat_arr.to_numpy(zero_copy_only=False)
     n = len(arr)
     if flat.shape[0] != n * dim:
         raise ValueError(
-            f"semantic_dedup: ragged embeddings (got {flat.shape[0]} "
+            f"{op}: ragged embeddings (got {flat.shape[0]} "
             f"values for {n} rows of dim {dim})")
     return flat.reshape(n, dim)
 
@@ -376,112 +346,90 @@ def _list_mat(col, dim: int) -> np.ndarray:
 def _centroid_tag_arrow(
     base: DataFrame,
     cm: np.ndarray,
-    id_name: str,
     vec_name: str,
     norm_name: str,
     topn: int,
+    op: str,
 ) -> DataFrame:
-    """(id, vec, norm, _list) via one Arrow pass: numpy matmul against
-    the centroid matrix, arg-top with the score-DESC-then-index-DESC
-    tie rule (identical to the JVM reverse(array_sort(struct(s, i)))
-    and to the SQL oracle's ROW_NUMBER ordering). ``topn`` > 1 emits
-    one row per probed list (the query-side explode). The centroid
-    matrix ships in the task closure — it never rides the plan as a
-    literal."""
+    """The nearest-centroid tagger behind every quantizer here
+    (``ivf_cosine_topk``, ``ivf_pq_topk``, ``semantic_dedup``,
+    ``semdedup_skew_stats``, ``kmeans_update``): ``base`` with every
+    column passed through, plus ``norm_name`` (the L2 norm of the
+    array<double> column ``vec_name``) and ``_list``, the centroid of
+    highest dot product — score DESC, then index DESC on ties, the
+    order the SQL oracles replay with ROW_NUMBER. ``topn`` > 1 emits
+    one row per probed list in that order (the query-side explode).
+
+    One Arrow pass: a numpy matmul against the centroid matrix, which
+    ships in the task closure and never rides the plan as a literal.
+    Dividing by the row norm cannot change a per-row arg-top, so the
+    score is the raw dot. NULL, ragged and zero-norm vectors raise
+    ``ValueError`` prefixed with ``op``: a zero vector has no cosine,
+    and every caller scores cosine downstream."""
     import pyarrow as pa
 
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   StructField, StructType)
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     dim = cm.shape[1]
     n_lists = len(cm)
+    topn = min(topn, n_lists)
     cmT = np.ascontiguousarray(cm.T)
-    id_type = base.schema[0].dataType
-    schema = StructType([
-        StructField(id_name, id_type),
-        StructField(vec_name, ArrayType(DoubleType())),
+    vi = base.columns.index(vec_name)
+    names = base.columns + [norm_name, "_list"]
+    schema = StructType(base.schema.fields + [
         StructField(norm_name, DoubleType()),
         StructField("_list", IntegerType()),
     ])
 
     def go(it):
         for b in it:
-            V = _list_mat(b.column(1), dim)
+            V = _list_mat(b.column(vi), dim, op)
             nrm = np.sqrt(np.einsum("ij,ij->i", V, V))
-            S = V @ cmT  # (rows, n_lists)
-            if topn == 1:
-                tags = (n_lists - 1
-                        - S[:, ::-1].argmax(axis=1)).astype(np.int32)
-                yield pa.record_batch(
-                    [b.column(0), b.column(1),
-                     pa.array(nrm, pa.float64()),
-                     pa.array(tags, pa.int32())],
-                    names=[id_name, vec_name, norm_name, "_list"])
-            else:
-                rows = len(nrm)
-                # stable sort over the REVERSED columns: equal scores
-                # keep the lower reversed index = higher original one
-                order = np.argsort(-S[:, ::-1], axis=1,
-                                   kind="stable")[:, :topn]
-                tags = (n_lists - 1 - order).astype(np.int32)
-                idx = pa.array(np.repeat(np.arange(rows), topn),
+            if not nrm.all():
+                raise ValueError(
+                    f"{op}: zero-norm embedding — cosine is undefined "
+                    "(0/0); drop or repair degenerate vectors upstream")
+            # stable sort over the REVERSED columns: equal scores keep
+            # the lower reversed index = the higher original one
+            order = np.argsort(-(V @ cmT)[:, ::-1], axis=1,
+                               kind="stable")[:, :topn]
+            tags = (n_lists - 1 - order).reshape(-1).astype(np.int32)
+            cols = b.columns
+            if topn > 1:
+                idx = pa.array(np.repeat(np.arange(b.num_rows), topn),
                                pa.int64())
-                yield pa.record_batch(
-                    [b.column(0).take(idx), b.column(1).take(idx),
-                     pa.array(np.repeat(nrm, topn), pa.float64()),
-                     pa.array(tags.reshape(-1), pa.int32())],
-                    names=[id_name, vec_name, norm_name, "_list"])
+                cols = [c.take(idx) for c in cols]
+                nrm = np.repeat(nrm, topn)
+            yield pa.record_batch(
+                cols + [pa.array(nrm, pa.float64()),
+                        pa.array(tags, pa.int32())], names=names)
 
     return base.mapInArrow(go, schema)
 
 
 def _semantic_dedup_arrow(
-    base: DataFrame,
-    cm: np.ndarray,
+    tagged: DataFrame,
+    dim: int,
     max_cluster: int,
 ) -> DataFrame:
-    """Capped-mode scoring engine for ``semantic_dedup`` (r14): tag +
-    within-cluster max-lower-cosine as two Arrow stages with the
-    quadratic inner product handed to numpy/BLAS per batch (guide
-    §4.2), replacing the JVM self-join + two windows. Plan shape:
-    Scan -> MapInArrow(tag) -> ONE Exchange(cluster) -> Sort(cluster,
-    id) -> MapInArrow(stream-score) — no self-join, no window, no
-    broadcast, and the per-task state is bounded at max_cluster x dim
-    doubles per active cluster (the head buffer), initialised once per
-    task and carried across batches (guide §4.5). Emits (_id, cluster
-    int, _mlc double, _rnb long) with _mlc NULL for rank-1 rows."""
+    """Capped-mode scoring engine for ``semantic_dedup``: the
+    within-cluster max-lower-cosine over the tagger's (_id, _v, _n,
+    _list) frame as one Arrow stage, with the quadratic inner product
+    handed to numpy/BLAS per batch. Plan shape: Scan ->
+    MapInArrow(tag) -> ONE Exchange(cluster) -> Sort(cluster, id) ->
+    MapInArrow(stream-score) — no self-join, no window, no broadcast,
+    and the per-task state is bounded at max_cluster x dim doubles per
+    active cluster (the head buffer), initialised once per task and
+    carried across batches. Emits (_id, cluster int, _mlc double, _rnb
+    long) with _mlc NULL for rank-1 rows."""
     import pyarrow as pa
 
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   LongType, StructField, StructType)
+    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                                   StructField, StructType)
 
-    dim = cm.shape[1]
-    n_lists = len(cm)
-    cmT = np.ascontiguousarray(cm.T)  # (dim, n_lists) float64
     cap = int(max_cluster)
-    id_type = base.schema[0].dataType
-
-    tag_schema = StructType([
-        StructField("_id", id_type),
-        StructField("_v", ArrayType(DoubleType())),
-        StructField("_list", IntegerType()),
-    ])
-
-    def tag_batches(it):
-        for b in it:
-            V = _list_mat(b.column(1), dim)
-            sims = V @ cmT  # (n, n_lists)
-            # tie -> HIGHER index (same rule as the JVM
-            # reverse(array_sort(struct(s, i))) argmax): argmax over the
-            # reversed columns picks the first max = highest original i
-            tags = (n_lists - 1
-                    - sims[:, ::-1].argmax(axis=1)).astype(np.int32)
-            yield pa.record_batch(
-                [b.column(0), b.column(1), pa.array(tags, pa.int32())],
-                names=["_id", "_v", "_list"])
-
     out_schema = StructType([
-        StructField("_id", id_type),
+        StructField("_id", tagged.schema["_id"].dataType),
         StructField("cluster", IntegerType()),
         StructField("_mlc", DoubleType()),
         StructField("_rnb", LongType()),
@@ -498,19 +446,9 @@ def _semantic_dedup_arrow(
         headN = np.empty((0,))
         cnt = 0
         for b in it:
-            lists = b.column(2).to_numpy(zero_copy_only=False)
-            V = _list_mat(b.column(1), dim)
-            rn = np.sqrt(np.einsum("ij,ij->i", V, V))
-            if not rn.all():
-                # 0/0 cosine: the JVM exact path yields NaN (keep=False
-                # since NaN < tau is false) while NaN here would become
-                # NULL through from_pandas=True (keep=True) — refuse
-                # the degenerate vector loudly instead of letting the
-                # two modes silently diverge (r14 ADVICE)
-                raise ValueError(
-                    "semantic_dedup: zero-norm embedding in corpus — "
-                    "cosine is undefined (0/0); drop or repair "
-                    "degenerate vectors upstream")
+            lists = b.column(3).to_numpy(zero_copy_only=False)
+            V = _list_mat(b.column(1), dim, "semantic_dedup")
+            rn = b.column(2).to_numpy(zero_copy_only=False)
             m = len(lists)
             mlc = np.full(m, np.nan)
             rnb = np.empty(m, dtype=np.int64)
@@ -540,12 +478,11 @@ def _semantic_dedup_arrow(
                 headM, headN, cnt = H, Hn, cnt + seg
                 idx = end
             yield pa.record_batch(
-                [b.column(0), b.column(2),
+                [b.column(0), b.column(3),
                  pa.array(mlc, pa.float64(), from_pandas=True),
                  pa.array(rnb, pa.int64())],
                 names=["_id", "cluster", "_mlc", "_rnb"])
 
-    tagged = base.mapInArrow(tag_batches, tag_schema)
     part = (tagged.repartition("_list")
             .sortWithinPartitions("_list", "_id"))
     return part.mapInArrow(score_batches, out_schema)
@@ -580,11 +517,14 @@ def semantic_dedup(
     cluster — a rank cap+1 row still sees all its lower-id mates) so
     downstream keep/drop pipelines can route them to a verify stage.
 
-    Scale shape: one narrow tag pass (persistable with the snapshot),
-    then a self-join confined within clusters — expected list size is
-    corpus/n_lists, so raise ``n_lists`` with corpus size to keep the
-    quadratic term bounded; the corpus never crosses clusters and is
-    never broadcast.
+    Scale shape: one narrow Arrow tag pass (``_centroid_tag_arrow``,
+    the tagger every quantizer here shares; persistable with the
+    snapshot), then scoring confined within clusters — exact mode is a
+    cluster-keyed JVM self-join, capped mode one cluster exchange and
+    a streaming numpy scorer. Expected list size is corpus/n_lists, so
+    raise ``n_lists`` with corpus size to keep the quadratic term
+    bounded; the corpus never crosses clusters and is never broadcast.
+    NULL, ragged and zero-norm embeddings raise ``ValueError``.
 
     ``max_cluster`` is the skew guard (mirroring minhash's
     ``max_bucket``): the within-cluster term is quadratic, so ONE hot
@@ -604,20 +544,16 @@ def semantic_dedup(
     time, the per-row ``capped`` flag marks its lower-bound rows, and
     ``semdedup_skew_stats()`` is the deterministic audit."""
     cm = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
+    tagged = _centroid_tag_arrow(
+        corpus.select(F.col(id_col).alias("_id"),
+                      F.col(vec_col).cast("array<double>").alias("_v")),
+        cm, "_v", "_n", 1, "semantic_dedup")
     if max_cluster is not None:
-        # r14: the capped path runs on the Arrow engine — ONE cluster
-        # exchange, a partition-local sort, and a streaming numpy
-        # scorer whose state is bounded at max_cluster x dim doubles
-        # (see _semantic_dedup_arrow; guide §4.2/§4.5). Output-
-        # identical to the old ranked-join formulation: head rows keep
-        # exact semantics, overflow rows lower-bound, `capped` flags
-        # rank > max_cluster + 1. The EXACT (max_cluster=None) path
-        # below stays on the distributed JVM self-join, which handles
-        # an unbounded hot cluster by spilling across tasks instead of
-        # holding it in one Python worker.
-        base = corpus.select(F.col(id_col).alias("_id"),
-                             F.col(vec_col).cast("array<double>").alias("_v"))
-        scored = _semantic_dedup_arrow(base, cm, max_cluster)
+        # the capped scorer holds at most max_cluster x dim doubles per
+        # Python worker; the EXACT (max_cluster=None) path below stays
+        # on the distributed JVM self-join, which handles an unbounded
+        # hot cluster by spilling across tasks instead
+        scored = _semantic_dedup_arrow(tagged, cm.shape[1], max_cluster)
         log.info(
             "semantic_dedup: skew cap max_cluster=%d active — "
             "overflow rows of a hot cluster compare only against "
@@ -631,7 +567,6 @@ def semantic_dedup(
             F.round("_mlc", 6).alias("max_lower_cos"),
             F.coalesce(F.col("_mlc") < tau, F.lit(True)).alias("keep"),
             (F.col("_rnb") > max_cluster + 1).alias("capped"))
-    tagged = _centroid_tagged(corpus, id_col, vec_col, cm)
 
     a = tagged.select(F.col("_id").alias("vec_id"), F.col("_v").alias("va"),
                       F.col("_n").alias("na"), F.col("_list").alias("cluster"))
@@ -667,9 +602,14 @@ def semdedup_skew_stats(
     ``max_cluster_size``/``sum_sq_sizes`` with the seeded default says
     train centroids (``train_ivf_centroids`` + ``unit_normalized``)
     or raise ``n_lists``. ``sum_sq_sizes`` is the uncapped pair-join
-    row count — the actual quadratic cost driver."""
+    row count — the actual quadratic cost driver. The tag is
+    semantic_dedup's, so NULL, ragged and zero-norm embeddings raise
+    ``ValueError`` here too; ``id_col`` is unused (rows are counted,
+    not named) and kept so the keywords match semantic_dedup."""
     cm = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
-    tagged = _centroid_tagged(corpus, id_col, vec_col, cm)
+    tagged = _centroid_tag_arrow(
+        corpus.select(F.col(vec_col).cast("array<double>").alias("_v")),
+        cm, "_v", "_n", 1, "semdedup_skew_stats")
     sizes = tagged.groupBy("_list").agg(F.count(F.lit(1)).alias("_n"))
     return sizes.agg(
         F.count(F.lit(1)).alias("n_clusters"),
@@ -805,18 +745,23 @@ def kmeans_update(
     desc), then per-cluster element-wise mean. Returns (list_id,
     n_assigned, centroid array<double>) — feed the centroids back in to
     iterate; every step is a deterministic closed form an external SQL
-    oracle can replay. Assignment is a map-only pass; the update
-    shuffles (cluster, pos, val) scalar rows — linear in corpus x dim,
-    the standard distributed k-means layout."""
-    n_lists = len(cents)
-    cm = matrix_lit(cents)
-    v = F.col(vec_col).cast("array<double>")
-    sims = F.transform(cm, lambda c: dot(v, c) / (norm(v) * norm(c)))
-    idx = F.sequence(F.lit(0), F.lit(n_lists - 1))
-    packed = F.zip_with(sims, idx, lambda s, i: F.struct(s.alias("s"), i.alias("i")))
-    assign = F.reverse(F.array_sort(packed)).getItem(0).getField("i")
-    tagged = emb.select(assign.alias("list_id"), v.alias("_v"))
-    flat = tagged.select("list_id", F.posexplode("_v").alias("pos", "val"))
+    oracle can replay. Assignment is the shared map-only Arrow tag pass
+    against the unit-normalized centroids: the dot-argmax there is the
+    cosine argmax, since ``|v|`` is a per-row constant. A zero-norm
+    centroid (no cosine) and NULL, ragged or zero-norm embeddings raise
+    ``ValueError``. The update shuffles (cluster, pos, val) scalar rows
+    — linear in corpus x dim, the standard distributed k-means
+    layout."""
+    cm = np.asarray(cents, dtype=float)
+    cn = np.linalg.norm(cm, axis=1, keepdims=True)
+    if not cn.all():
+        raise ValueError("kmeans_update: zero-norm centroid — cosine "
+                         "assignment is undefined (0/0)")
+    tagged = _centroid_tag_arrow(
+        emb.select(F.col(vec_col).cast("array<double>").alias("_v")),
+        cm / cn, "_v", "_n", 1, "kmeans_update")
+    flat = tagged.select(F.col("_list").alias("list_id"),
+                         F.posexplode("_v").alias("pos", "val"))
     agg = flat.groupBy("list_id", "pos").agg(
         F.avg("val").alias("m"), F.count(F.lit(1)).alias("n"))
     return (agg.groupBy("list_id")
@@ -977,45 +922,37 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """The composed 100-TB serving path: IVF routing x PQ codes. The
     coarse quantizer tags each corpus vector with one inverted list
-    (same seeded centroids and DESC/idx-DESC tie order as
-    ivf_cosine_topk, so the two stay oracle-interchangeable); each
-    query probes its ``n_probe`` closest lists and ADC-scores ONLY
-    those lists' PQ codes — m LUT lookups per candidate, never a d-dim
-    product, and the scan volume is n_probe/n_lists of the corpus.
-    Both the list tag and the codes are persistable with the snapshot:
-    at scale the per-query cost is independent of corpus width.
-    Returns (query_id, neighbor_id, score asc, rank)."""
-    cents = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
-    n_lists = len(cents)
-
-    def centroid_sims(vec: Column) -> Column:
-        cm = matrix_lit(cents)
-        return F.transform(cm, lambda c: dot(vec, c) / norm(vec))
-
-    def arg_top(sims: Column, n: int) -> Column:
-        idx = F.sequence(F.lit(0), F.lit(n_lists - 1))
-        pairs = F.zip_with(sims, idx, lambda s, i: F.struct(s.alias("s"), i.alias("i")))
-        return F.slice(F.reverse(F.array_sort(pairs)), 1, n).getField("i")
-
+    and each query with its ``n_probe`` closest lists — the same
+    tagger, seeded centroids and DESC/idx-DESC tie order as
+    ivf_cosine_topk, so the two stay oracle-interchangeable — and each
+    query ADC-scores ONLY its probed lists' PQ codes: m LUT lookups
+    per candidate, never a d-dim product, and the scan volume is
+    n_probe/n_lists of the corpus. Both the list tag and the codes are
+    persistable with the snapshot: at scale the per-query cost is
+    independent of corpus width. NULL, ragged and zero-norm embeddings
+    raise ``ValueError``. Returns (query_id, neighbor_id, score asc,
+    rank)."""
+    cm = _resolve_cents(corpus, vec_col, n_lists, seed, dim, cents)
     m = len(books)
     d = len(books[0][0])
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     enc = (pq_encode(corpus, books, id_col, vec_col)
            .withColumnRenamed(id_col, "neighbor_id"))
-    c_tag = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        arg_top(centroid_sims(v), 1).getItem(0).alias("_list"))
-    coded = enc.join(c_tag, "neighbor_id")
+    c_tag = _centroid_tag_arrow(
+        corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).cast("array<double>").alias("_v")),
+        cm, "_v", "_n", 1, "ivf_pq_topk")
+    coded = enc.join(c_tag.select("neighbor_id", "_list"), "neighbor_id")
 
+    q_tag = _centroid_tag_arrow(
+        queries.select(F.col(id_col).alias("query_id"),
+                       F.col(vec_col).cast("array<double>").alias("_v")),
+        cm, "_v", "_n", n_probe, "ivf_pq_topk")
     lut_cols = []
     for s in range(m):
-        sub = F.slice(v, s * d + 1, d)
+        sub = F.slice(F.col("_v"), s * d + 1, d)
         bs = matrix_lit(books[s])
         lut_cols.append(F.transform(bs, lambda c: _sq_l2(sub, c)).alias(f"lut{s}"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(arg_top(centroid_sims(v), n_probe)).alias("_list"),
-        *lut_cols)
+    q = q_tag.select("query_id", "_list", *lut_cols)
 
     score = None
     for s in range(m):

@@ -3485,8 +3485,9 @@ def _semdedup_oracle(dim: int = 64, n_lists: int = 16, tau: float = 0.2,
     """DuckDB replay of the TRAINED dedup_semantic row: the SAME
     seeded init matrix, then ONE Lloyd round exactly as
     S.train_ivf_centroids(rounds=1) computes it — cosine-argmax
-    assignment (tie -> higher index, mirroring Spark's
-    reverse(array_sort(struct(s,i)))), per-cluster element-wise mean,
+    assignment (tie -> higher index, the score-DESC/index-DESC rule of
+    the engine's one tagger, S._centroid_tag_arrow), per-cluster
+    element-wise mean,
     empty clusters keep their init centroid — then S.semantic_dedup's
     nearest-centroid tag, within-cluster max cosine to any lower id,
     and the keep-lowest-id SemDeDup rule. The engine tags by raw dot
@@ -3861,7 +3862,7 @@ def _ivf_oracle(dim: int = 64, n_lists: int = 16, n_probe: int = 4,
     VALUES literal; nearest-centroid assignment / n_probe probing via
     list_dot_product (dividing by the per-row norm cannot change a
     per-row argmax), exact cosine re-rank via list_cosine_similarity.
-    Tie order mirrors Spark's reverse(array_sort(struct(s, i))): score
+    Tie order mirrors the engine's tagger (S._centroid_tag_arrow): score
     DESC then index DESC. dim=64 is the testdata embedding width at
     every SF (TESTDATA.md); a width change would fail the gate loudly.
 

@@ -3,6 +3,8 @@ be size-conditional — an unconditional hint on a corpus-sized table
 OOMs at 100 TB, so past the estimate limit the frame passes through
 unhinted and AQE picks the strategy."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1447,6 +1449,95 @@ def test_semdedup_skew_stats_flags_hot_cluster(spark):
     assert got["n_over_cap"] == 1
     assert got["max_cluster_size"] == 40
     assert got["sum_sq_sizes"] == 1600
+
+
+def _value_error_message(exc: BaseException) -> str:
+    """The message of a ValueError raised on the driver, or in a Python
+    worker (Spark surfaces that as an exception carrying the worker's
+    traceback, whose last ``ValueError:`` line is the message)."""
+    if isinstance(exc, ValueError):
+        return str(exc)
+    found = re.findall(r"ValueError: (.*)", str(exc))
+    assert found, str(exc)
+    return found[-1]
+
+
+def test_degenerate_vectors_refuse_on_every_vector_path(spark):
+    """One NULL, ragged or zero-norm embedding among valid ones raises
+    ValueError naming the public operator called, on every path that
+    tags or scores vectors — never a silent tag, a NULL neighbour or
+    Spark's DIVIDE_BY_ZERO. kmeans_update also refuses a zero-norm
+    centroid (its cosine assignment is undefined) on the driver."""
+    from agensgraph_spark.pipeline import similarity as S
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    books = [[[1.0], [0.0]], [[0.0], [1.0]]]  # m=2 subspaces of d=1
+    cases = [
+        ("ivf_cosine_topk",
+         lambda df: S.ivf_cosine_topk(df, df, k=1, cents=cents)),
+        ("ivf_pq_topk",
+         lambda df: S.ivf_pq_topk(df, df, books, k=1, cents=cents)),
+        ("kmeans_update", lambda df: S.kmeans_update(df, cents)),
+        ("semantic_dedup", lambda df: S.semantic_dedup(df, cents=cents)),
+        ("semantic_dedup",
+         lambda df: S.semantic_dedup(df, cents=cents, max_cluster=2)),
+        ("semdedup_skew_stats",
+         lambda df: S.semdedup_skew_stats(df, cents=cents)),
+        ("brute_cosine_topk", lambda df: S.brute_cosine_topk(df, df, k=1)),
+    ]
+    bad = {"zero-norm": [0.0, 0.0], "NULL": None, "ragged": [1.0, 2.0, 3.0]}
+    for kind, vec in bad.items():
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, vec), (4, [1.0, 1.0])],
+            "vec_id long, embedding array<double>")
+        for op, run in cases:
+            with pytest.raises(Exception) as err:
+                run(df).collect()
+            msg = _value_error_message(err.value)
+            assert msg.startswith(f"{op}: ") and kind in msg, (op, kind, msg)
+    ok = spark.createDataFrame([(1, [1.0, 0.0])],
+                               "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="kmeans_update: zero-norm centroid"):
+        S.kmeans_update(ok, [[1.0, 0.0], [0.0, 0.0]])
+
+
+def test_centroid_ties_agree_across_callers(spark):
+    """Exact ties (centroids e0, e1; vectors on the diagonal) go to the
+    HIGHER list on every caller of the shared tagger: the
+    semdedup_skew_stats cluster, semantic_dedup's cluster in both
+    modes, kmeans_update's list_id and the ivf_cosine_topk /
+    ivf_pq_topk corpus list and query probe. A multi-list probe visits
+    tied lists in index-DESC order and is clamped to the list count."""
+    import numpy as np
+
+    from agensgraph_spark.pipeline import similarity as S
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    schema = "vec_id long, embedding array<double>"
+    # ids 1-3 tie; id 4 is unambiguously list 1, so a diagonal tagged
+    # to list 0 would show as a second cluster or a missing neighbour
+    corpus = spark.createDataFrame(
+        [(i, [float(i), float(i)]) for i in (1, 2, 3)] + [(4, [0.0, 1.0])],
+        schema)
+    skew = S.semdedup_skew_stats(corpus, cents=cents).collect()[0]
+    assert (skew["n_clusters"], skew["max_cluster_size"]) == (1, 4)
+    for cap in (None, 2):
+        got = {r["vec_id"]: r["cluster"] for r in S.semantic_dedup(
+            corpus, cents=cents, max_cluster=cap).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1}, (cap, got)
+    km = [(r["list_id"], r["n_assigned"])
+          for r in S.kmeans_update(corpus, cents).collect()]
+    assert km == [(1, 4)]
+    q = spark.createDataFrame([(10, [5.0, 5.0])], schema)
+    books = [[[1.0], [0.0]], [[0.0], [1.0]]]
+    for topk in (S.ivf_cosine_topk(corpus, q, k=10, n_probe=1, cents=cents),
+                 S.ivf_pq_topk(corpus, q, books, k=10, n_probe=1,
+                               cents=cents)):
+        assert sorted(r["neighbor_id"] for r in topk.collect()) == [1, 2, 3, 4]
+    one = q.select(F.col("vec_id"),
+                   F.col("embedding").alias("_v")).coalesce(1)
+    for n_probe in (2, 5):
+        probes = S._centroid_tag_arrow(one, np.asarray(cents), "_v", "_n",
+                                       n_probe, "probe").collect()
+        assert [r["_list"] for r in probes] == [1, 0], n_probe
 
 
 def test_semantic_dedup_cap_bounds_hot_cluster(spark):

@@ -470,13 +470,14 @@ def test_formatting_shims_stay_jvm_side(spark):
 
 
 def test_semantic_dedup_cap_plan_shape(spark):
-    """r14: the capped path runs on the Arrow engine — the plan is a
+    """Both modes tag with the one Arrow tagger. The capped path is a
     straight pipe Scan -> MapInArrow(tag) -> ONE Exchange(cluster) ->
     Sort -> MapInArrow(score): no self-join, no window, no broadcast,
     and per-task memory bounded at max_cluster x dim (the head
-    buffer). The EXACT (max_cluster=None) path keeps the distributed
-    JVM self-join (no Python eval) so an unbounded hot cluster spills
-    across tasks instead of one Python worker."""
+    buffer). The EXACT (max_cluster=None) path scores with the
+    cluster-keyed JVM self-join — no Python stage above that join, no
+    Python eval, no window — so an unbounded hot cluster spills across
+    tasks instead of filling one Python worker."""
     from agensgraph_spark.loader import read_table
     from agensgraph_spark.pipeline import similarity as S
     emb = read_table(spark, SF, "embeddings")
@@ -490,8 +491,22 @@ def test_semantic_dedup_cap_plan_shape(spark):
     def n_ex(p):
         return len(re.findall(r"\bExchange\b", p))
     assert n_ex(capped) == 1, capped
-    # uncapped stays JVM-side: no Python eval, cluster-keyed join
-    assert "MapInArrow" not in uncapped, uncapped
+    # uncapped: the scoring join keys on the cluster tag, and every
+    # ancestor of it (walk up the tree by indentation) is a JVM node
+    lines = uncapped.splitlines()
+    at = next((i for i, ln in enumerate(lines)
+               if "Join" in ln and "cluster#" in ln), None)
+    assert at is not None, uncapped
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+    ancestors, d = [], depth(lines[at])
+    for ln in reversed(lines[:at]):
+        if depth(ln) < d:
+            ancestors.append(ln)
+            d = depth(ln)
+    assert ancestors and not any("MapInArrow" in ln for ln in ancestors), \
+        uncapped
     assert "EvalPython" not in uncapped, uncapped
     assert "row_number" not in uncapped, uncapped
     # the capped output column is present in both shapes

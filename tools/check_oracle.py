@@ -7,16 +7,16 @@ Usage: python tools/check_oracle.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
 from agensgraph_spark import get_spark  # noqa: E402
-
-import os  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -56,6 +56,10 @@ def norm_rows(cols, rows):
 
 def main(names: list[str]) -> int:
     import __spark_entry__ as entry_mod
+    # Spark's Python workers import the package too; without this they
+    # resolve it from their working directory, not from this tree
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
