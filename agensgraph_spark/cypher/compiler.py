@@ -861,7 +861,7 @@ class QueryCompiler(WriteMixin):
         path_eids: list[tuple[str, bool]],
     ) -> str:
         evar = rel.var or self.scope.fresh_anon()
-        escan, _ = self._edge_scan("_e", rel.types, rel.only, rel.direction)
+        escan, ebind = self._edge_scan("_e", rel.types, rel.only, rel.direction)
         escan = self._prop_filter("_e", rel.props, escan)
         edges = escan.select(
             F.col("_e__src").alias("src"),
@@ -869,7 +869,7 @@ class QueryCompiler(WriteMixin):
             F.col("_e__id").alias("eid"),
         )
         seeds = self.df.select(F.col(f"{left_var}__id").alias("seed")).distinct()
-        maxh = rel.maxhops if rel.maxhops is not None else self.engine.vle_max_hops
+        maxh = self._hop_budget(rel, ebind.labels)
         minh = 0 if rel.minhops == 0 else (rel.minhops or 1)
         vle = P.vle_expand(edges, seeds, minh, maxh)
         vle = vle.select(
@@ -908,6 +908,17 @@ class QueryCompiler(WriteMixin):
             self.df = self.df.withColumn(f"{rvar}__id", F.col(f"{evar}__dst")) \
                              .withColumn(f"{rvar}__label", F.lit(None).cast("string"))
         return rvar
+
+    def _hop_budget(self, rel: A.RelPat, labels: list[str]) -> int:
+        """A path pattern's most hops: one for a fixed-length rel, else
+        its upper bound (the engine's VLE cap when open), clamped to the
+        longest path the label graph allows (Graph.path_depth) — no
+        answer changes."""
+        if not rel.varlen:
+            return 1
+        maxh = rel.maxhops if rel.maxhops is not None else self.engine.vle_max_hops
+        depth = self.graph.path_depth(labels, rel.direction)
+        return maxh if depth is None else min(maxh, depth)
 
     def _fold_pathfind(self, pat: A.PathPattern) -> None:
         """shortestpath / allshortestpaths / dijkstra over bound endpoints."""
@@ -961,13 +972,10 @@ class QueryCompiler(WriteMixin):
             # a non-varlen rel in shortestpath is EXACTLY one hop
             # (cypher_shortestpath2.sql "No Labels": only adjacent pairs
             # match), while varlen without bounds defaults to the engine
-            # cap; dijkstra below relaxes unbounded regardless
-            # (nodeDijkstra.c ignores the rel's hop count)
+            # cap; dijkstra below ignores the rel's hop count
+            # (nodeDijkstra.c) and stops only at the label graph's depth
             minh = rel.minhops if rel.varlen and rel.minhops is not None else 1
-            if rel.varlen:
-                maxh = rel.maxhops if rel.maxhops is not None else self.engine.vle_max_hops
-            else:
-                maxh = 1
+            maxh = self._hop_budget(rel, ebind.labels)
             res = P.bfs_shortest(edges, pairs, minh, maxh, all_paths=(pat.kind == "allshortestpaths"))
             props = []
         else:  # dijkstra
@@ -981,11 +989,12 @@ class QueryCompiler(WriteMixin):
             limit = 1
             if pat.limit is not None and isinstance(pat.limit, A.Lit):
                 limit = int(pat.limit.value)
+            depth = self.graph.path_depth(ebind.labels, rel.direction)
             if seeds_df is not None:
                 res = P.dijkstra_paths(edges, None, limit=limit,
-                                       seeds=seeds_df, targets=targets_df)
+                                       seeds=seeds_df, targets=targets_df, _depth=depth)
             else:
-                res = P.dijkstra_paths(edges, pairs, limit=limit)
+                res = P.dijkstra_paths(edges, pairs, limit=limit, _depth=depth)
             props = ["weight"]
             res = res.withColumnRenamed("weight", f"{pvar}__weight")
 
@@ -1431,16 +1440,13 @@ class QueryCompiler(WriteMixin):
             pairs = df.select(F.col(f"{lvar}__id").alias("seed"),
                               F.col(f"{rvar}__id").alias("target")).distinct()
             evar = rel.var or "_e"
-            escan, _ = self._edge_scan(evar, rel.types, rel.only, rel.direction)
+            escan, ebind = self._edge_scan(evar, rel.types, rel.only, rel.direction)
             escan = self._prop_filter(evar, rel.props, escan)
             edges = escan.select(F.col(f"{evar}__src").alias("src"),
                                  F.col(f"{evar}__dst").alias("dst"),
                                  F.col(f"{evar}__id").alias("eid"))
             minh = rel.minhops if rel.varlen and rel.minhops is not None else 1
-            if rel.varlen:
-                maxh = rel.maxhops if rel.maxhops is not None else self.engine.vle_max_hops
-            else:
-                maxh = 1  # non-varlen = exactly one hop
+            maxh = self._hop_budget(rel, ebind.labels)  # non-varlen: exactly one hop
             allp = pat.kind == "allshortestpaths"
             res = P.bfs_shortest(edges, pairs, minh, maxh, all_paths=allp)
             n = next(_SUBQ_IDS)

@@ -17,6 +17,7 @@ pushes filters/pruning into every branch of the union.
 
 from __future__ import annotations
 
+from graphlib import CycleError, TopologicalSorter
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -278,6 +279,46 @@ class Graph:
     def edge_triples(self) -> "list[tuple[str, int, int, int]] | None":
         """Cached triples, or None when collect_edge_stats() has not run."""
         return self._edge_triples
+
+    def path_depth(self, edge_labels: Iterable[str], direction: str) -> int | None:
+        """The most edges any path over ``edge_labels`` can have: the
+        longest chain in the label graph whose arcs are the triples'
+        (start labid, end labid) pairs for those labels. A data path's
+        vertex labels walk that graph, so on an acyclic label graph no
+        path is longer; the path operators clamp their hop budget to it
+        (the reference planner reads the same ag_graphmeta triples,
+        src/include/catalog/ag_graphmeta.h:30).
+
+        ``edge_labels`` are concrete labels, already descendant-expanded
+        as a pattern's edge scan expands them; ``direction`` is the
+        pattern's ("out", "in" or "undir"; "in" reverses every arc,
+        which leaves the longest chain unchanged).
+
+        Returns None, meaning no bound, when there are no triples or
+        none for these labels, when the label graph has a cycle (a
+        self-loop included), or when the pattern is undirected.
+
+        Sound only while the triples are exact: an edge whose labid pair
+        is missing from them could extend a path past the bound. They
+        are exact after collect_edge_stats() and through Cypher writes
+        and DDL (note_rows, move_label); set_label_df drops them."""
+        if direction == "undir" or not self._edge_triples:
+            return None
+        labels = set(edge_labels)
+        preds: dict[int, set[int]] = {}
+        for e, s, t, _ in self._edge_triples:
+            if e in labels:
+                preds.setdefault(t, set()).add(s)
+        if not preds:
+            return None
+        try:
+            order = list(TopologicalSorter(preds).static_order())
+        except CycleError:
+            return None
+        depth: dict[int, int] = {}
+        for v in order:
+            depth[v] = max((depth[u] + 1 for u in preds.get(v, ())), default=0)
+        return max(depth.values())
 
     def edge_stats(self) -> DataFrame:
         """Edge-count statistics per (edge label, start labid, end

@@ -19,6 +19,15 @@ Scale notes:
 - frontiers are pruned per hop (shortest-path keeps only the cheapest
   row per (seed, vertex)), so frontier size is bounded by reachable
   vertices, not path count;
+- searches stop at the label graph's depth: the Cypher compiler clamps
+  every hop budget to ``Graph.path_depth`` — the longest chain of
+  (start label, end label) pairs in the graph's edge triples, when that
+  label graph is acyclic — so a VLE ``*`` or a ``shortestpath *..k``
+  over a two-level hierarchy expands two hops, and ``dijkstra_paths``
+  ends at that round without probing for a drained frontier. The bound
+  is derived from exact statistics, never a user option; without
+  triples, over a cyclic label graph or on undirected patterns the
+  budgets are unchanged;
 - **iteration state is generational**: each round materializes the new
   generation, then retires the superseded one (GraphX-Pregel style).
   A 30-iteration run holds O(1) pinned frames, not O(iterations).
@@ -150,11 +159,6 @@ def vle_expand(
             "vle_expand: max_hops=%d clamped to %d — paths longer than "
             "%d hops are NOT returned", max_hops, hop_cap, hop_cap)
         max_hops = hop_cap
-    small = False
-    pinned = max_hops > 3
-    if pinned:
-        edges, small = _pin_edges(edges)
-
     frontier = seeds.select(
         F.col("seed"),
         F.col("seed").alias("cur"),
@@ -162,6 +166,15 @@ def vle_expand(
         F.array().cast("array<long>").alias("vids"),
         F.lit(0).cast("long").alias("len"),
     )
+    if max_hops < min_hops:
+        # an inverted range (*3..2, or a hop budget clamped below the
+        # minimum) matches no path
+        return frontier.select("seed", F.col("cur").alias("dst"), "eids", "vids", "len").limit(0)
+    small = False
+    pinned = max_hops > 3
+    if pinned:
+        edges, small = _pin_edges(edges)
+
     results = []
     if min_hops == 0:
         results.append(frontier.select("seed", F.col("cur").alias("dst"), "eids", "vids", "len"))
@@ -249,11 +262,11 @@ def bfs_shortest(
     """
     if max_hops is None:
         max_hops = DEFAULT_MAX_HOPS
-    if max_hops <= 3:
+    if max_hops <= 3 or max_hops < min_hops:
         # shallow bounded search: one VLE expansion + a single min-depth
         # selection beats per-hop visited-pruning (whose 2-3 shuffles
         # per hop dominate when the hop budget is this small; path
-        # blowup is bounded by E^3)
+        # blowup is bounded by E^3); an inverted range expands nothing
         return _bfs_shortest_shallow(edges, pairs, min_hops, max_hops, all_paths)
     edges, small = _pin_edges(edges)
     pairs = pairs.select("seed", "target").distinct().cache()
@@ -415,6 +428,8 @@ def dijkstra_paths(
     limit: int = 1,
     seeds: DataFrame | None = None,
     targets: DataFrame | None = None,
+    *,
+    _depth: int | None = None,
 ) -> DataFrame:
     """Cheapest path(s) by edge weight: Bellman-Ford-style iterative
     relaxation until no distance improves (reference: nodeDijkstra.c —
@@ -437,6 +452,13 @@ def dijkstra_paths(
     frame (flat plan, O(1) live state); the early cached generations
     are retired as soon as the first checkpoint truncates the lineage,
     and at exit only the final generation stays pinned.
+
+    ``_depth`` is private to the Cypher compiler: the most edges any
+    path through ``edges`` can have, derived from the graph's edge
+    triples (``Graph.path_depth``), never set by users. When it is at
+    most ``max_iters`` the search ends after that round without the
+    drain probes (isEmpty, frontier anti-join, count): the next
+    frontier is provably empty, so no cap is hit and nothing warns.
     """
     # Edge pinning is deferred until the loop proves it will iterate:
     # for bounded searches that drain in one hop (a common dijkstra
@@ -486,11 +508,14 @@ def dijkstra_paths(
 
     cp_from = 4  # first round that truncates lineage per generation
     early_gens: list[DataFrame] = []  # cache()-era frames to retire
+    # the round after which no path can grow, when the caller proved one
+    last = _depth if _depth is not None and _depth <= max_iters else None
 
-    for k in range(1, max_iters + 1):
+    for k in range(1, (max_iters if last is None else last) + 1):
         # two raw scans (hop 1 + hop 2's drain probe) are cheaper than
-        # an eager materialize+count, so pinning starts at depth 3
-        if k == 3 and not pinned:
+        # an eager materialize+count, so pinning starts at depth 3 —
+        # unless round 3 is the last, which reads the relation once
+        if k == 3 and not pinned and last != 3:
             edges, small = _pin_edges(edges)
             pinned = True
         # whichever side is small drives the join strategy: tiny
@@ -510,7 +535,7 @@ def dijkstra_paths(
                            (F.col("len") + 1).alias("len"),
                            (F.col("weight") + F.col("w")).alias("weight"),
                        )
-        if k < cp_from:
+        if k < cp_from and k != last:
             # cheap early rounds: pin the hop join so isEmpty / rank /
             # count read it once, cache the new generation lazily
             step = step.persist()
@@ -523,6 +548,13 @@ def dijkstra_paths(
         w = Window.partitionBy("seed", "cur").orderBy(F.col("weight").asc(), F.col("len").asc())
         allp = allp.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= limit)
         new_paths = allp.drop("_rn")
+        if k == last:
+            # the proven last round: no frontier to derive. The new
+            # generation stays lazy over a checkpointed one; over
+            # cache()-era generations it is checkpointed, so they can
+            # be retired below
+            paths = _ckpt(new_paths) if early_gens else new_paths
+            break
         # frontier = rows changed this round (still candidates to extend).
         # Anti-join on full path identity (seed, cur, eids) — NOT just
         # (seed, cur): a cheaper path to an already-reached vertex must be
@@ -553,7 +585,7 @@ def dijkstra_paths(
         if fcount == 0:
             break
 
-    if fcount is not None and fcount > 0:
+    if last is None and fcount is not None and fcount > 0:
         log.warning(
             "dijkstra_paths: stopped at max_iters=%d with %d frontier "
             "rows still relaxing — longer cheapest paths may be missing",

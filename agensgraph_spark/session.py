@@ -48,5 +48,13 @@ def get_spark(app_name: str = "agensgraph_spark", shuffle_partitions: int | None
         # accumulate until the volume fills — the ContextCleaner only
         # deletes checkpoint data when this static conf is on
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # PySpark captures the Python call site of every DataFrame call
+        # for error context. Spark documents it as costly: building the
+        # plans of the eight sf0.1 perfbench Cypher reads took 2.5-2.8 s
+        # with it and 1.4-1.5 s without (local[4]; 408-3,121 py4j round
+        # trips per read against 128-821), and the sites it records
+        # point into the compiler, not at the user's query. Errors keep
+        # their message. Static conf, so it must be set at session build.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

@@ -8,6 +8,7 @@ its audit — the workload promises no silent caps."""
 
 import logging
 
+import pytest
 from pyspark.sql import functions as F
 
 from agensgraph_spark.operators import paths as P
@@ -105,6 +106,18 @@ def test_dijkstra_max_iters_warns(spark, caplog):
         out = P.dijkstra_paths(chain_edges(spark, 6), pairs, max_iters=3)
         out.collect()
     assert any("max_iters" in r.getMessage() for r in caplog.records)
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4, 5, 6])
+def test_dijkstra_proven_depth_matches_unbounded(spark, n):
+    """Every last-round shape: lazy over the seed checkpoint (1), over
+    cache()-era generations (2-4), over a checkpointed one (5-6)."""
+    pairs = spark.createDataFrame([(0, n), (1, n)], "seed long, target long")
+    free = sorted(P.dijkstra_paths(chain_edges(spark, n), pairs).collect())
+    before = n_cached(spark)
+    out = P.dijkstra_paths(chain_edges(spark, n), pairs, _depth=n)
+    assert sorted(out.collect()) == free
+    assert n_cached(spark) - before <= 3
 
 
 def _dup_docs(spark):

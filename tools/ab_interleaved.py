@@ -7,7 +7,7 @@ so host-state drift affects both sides equally — the methodology the
 r14 verdict asks for to settle dedup_minhash_lsh (item 3).
 
 Usage:
-    PYTHONPATH=<repo> python tools/ab_interleaved.py <query> [n_invocations]
+    python <repo>/tools/ab_interleaved.py <query> [n_invocations]
 
 Not part of the driver contract — a development tool."""
 
@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from agensgraph_spark import get_spark, workload  # noqa: E402
 
@@ -27,6 +28,10 @@ def main() -> None:
     name = sys.argv[1]
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # Spark's Python workers import the package too; without this they
+    # resolve it from their working directory, not from this tree
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("ab-interleaved")
     spark.sparkContext.setLogLevel("ERROR")
     queries = workload.all_queries()

@@ -21,7 +21,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from agensgraph_spark import get_spark  # noqa: E402
 from agensgraph_spark import workload  # noqa: E402
@@ -39,6 +40,10 @@ def main() -> None:
 
     import bench
     names = args.names or bench.HEADLINE
+    # Spark's Python workers import the package too; without this they
+    # resolve it from their working directory, not from this tree
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("profile-queries")
     spark.sparkContext.setLogLevel("ERROR")
     queries = workload.all_queries()

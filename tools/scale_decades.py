@@ -10,7 +10,7 @@ bench corpus. Each dataset gets one untimed JIT/warm circuit, then a
 warm pass, then the timed pass (min of 2), same methodology as
 bench.py's sf_scale_probe.
 
-Usage: PYTHONPATH=. python tools/scale_decades.py
+Usage: python tools/scale_decades.py [probe ...]
 (sf10 generation ~60M lineitem rows; first run takes a few minutes to
 write ~2 GB of parquet under .scaledata/sf10_true)
 """
@@ -202,6 +202,10 @@ def main() -> None:
             raise SystemExit(f"unknown probe(s): {unknown}; "
                              f"known: {PROBE}")
         probe = sys.argv[1:]
+    # Spark's Python workers import the package too; without this they
+    # resolve it from their working directory, not from this tree
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("scale-decades")
     spark.sparkContext.setLogLevel("ERROR")
     qs = workload.all_queries()
