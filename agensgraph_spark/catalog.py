@@ -208,9 +208,6 @@ class GraphCatalog:
     def elabels(self) -> list[str]:
         return [m.name for m in self.labels.values() if m.kind == "e"]
 
-    def labid_of(self, name: str) -> int:
-        return self.labels[name].labid
-
     # ---- persistence ----
 
     def to_json(self) -> str:

@@ -75,7 +75,9 @@ class EdgeRef:
 
 
 class CypherEngine:
-    """Session-level entry point: ``engine.cypher(text) -> DataFrame``."""
+    """Session-level entry point: ``engine.cypher(text) -> DataFrame``.
+    Hop joins carry no hints: Spark picks broadcast sides from the label
+    scans' size estimates (static plan and AQE)."""
 
     def __init__(
         self,
@@ -83,16 +85,11 @@ class CypherEngine:
         graph: Graph | None = None,
         tables: dict[str, DataFrame] | None = None,
         vle_max_hops: int = P.DEFAULT_MAX_HOPS,
-        broadcast_row_threshold: int = 100_000,
         sequential_merge_rows: int = 0,
     ):
         from agensgraph_spark.cypher.ddl import GraphStore
         self.spark = spark
         self.store = GraphStore()
-        # rows below which a stats-known label scan broadcasts (~10-20 MB
-        # of wide vertex rows — in line with Spark's default
-        # autoBroadcastJoinThreshold)
-        self.broadcast_row_threshold = broadcast_row_threshold
         if graph is not None:
             self.store.graphs[graph.catalog.name] = graph
             self.store.graph_path = graph.catalog.name
@@ -524,23 +521,6 @@ class QueryCompiler(WriteMixin):
                     out.append(d)
         return out
 
-    def _maybe_broadcast(self, scan: DataFrame, labels: list[str], kind: str) -> DataFrame:
-        """Stats-driven join-side choice (reference: ag_graphmeta feeds
-        the planner's costing, ag_graphmeta.h:30). When the graph has
-        collected label stats and the scanned label set is small, hint a
-        broadcast so the dim side of a hop join never shuffles; without
-        stats the choice is left to AQE's runtime estimates."""
-        g = self.graph
-        counts = g.label_counts() if g is not None else None
-        if counts is None:
-            return scan
-        if not labels:
-            labels = g.catalog.vlabels() if kind == "v" else g.catalog.elabels()
-        total = sum(counts.get(l, 0) for l in labels)
-        if total <= self.engine.broadcast_row_threshold:
-            return F.broadcast(scan)
-        return scan
-
     def _labid_set(self, labels: list[str], kind: str, only: bool) -> list[int]:
         cat = self.graph.catalog
         out: list[int] = []
@@ -819,7 +799,6 @@ class QueryCompiler(WriteMixin):
             labids = self._labid_set(lbind.labels, "v", True)
             escan = escan.filter(self._labid_pred(F.col(f"{evar}__src"), labids))
 
-        escan = self._maybe_broadcast(escan, ebind.labels or [], "e")
         self.df = self.df.join(escan, F.col(f"{left_var}__id") == F.col(f"{evar}__src"), "inner")
         self.scope.bind(ebind)
         edge_refs.append(EdgeRef(evar, False))
@@ -838,7 +817,6 @@ class QueryCompiler(WriteMixin):
         if need_vertex:
             rscan, rbind = self._vertex_scan(rvar, right.labels, right.only)
             rscan = self._prop_filter(rvar, right.props, rscan)
-            rscan = self._maybe_broadcast(rscan, rbind.labels or [], "v")
             self.df = self.df.join(rscan, F.col(f"{evar}__dst") == F.col(f"{rvar}__id"), "inner")
             self.scope.bind(rbind)
             return rvar
@@ -898,7 +876,6 @@ class QueryCompiler(WriteMixin):
         if need_vertex:
             rscan, rbind = self._vertex_scan(rvar, right.labels, right.only)
             rscan = self._prop_filter(rvar, right.props, rscan)
-            rscan = self._maybe_broadcast(rscan, rbind.labels or [], "v")
             self.df = self.df.join(rscan, F.col(f"{evar}__dst") == F.col(f"{rvar}__id"), "inner")
             self.scope.bind(rbind)
         else:

@@ -17,6 +17,7 @@ pushes filters/pruning into every branch of the union.
 
 from __future__ import annotations
 
+import threading
 from graphlib import CycleError, TopologicalSorter
 from typing import Iterable
 
@@ -37,6 +38,10 @@ BASE_E_COLS = ["id", "start", "end"]
 # composite-attribute projection, parse_cypher_expr.c:980-995).
 RESERVED_PROPS = ("id", "label", "start", "end")
 
+# held while ANALYZE switches the session's AQE off and back, so two
+# concurrent ANALYZEs cannot restore each other's "off"
+_AQE_SWITCH = threading.Lock()
+
 
 def prop_col_name(p: str) -> str:
     return f"_p_{p}" if p in RESERVED_PROPS else p
@@ -50,11 +55,10 @@ class Graph:
     def __init__(self, catalog: GraphCatalog, frames: dict[str, DataFrame] | None = None):
         self.catalog = catalog
         self.frames: dict[str, DataFrame] = dict(frames or {})
-        # driver-side per-label row counts; populated by collect_stats()
-        self._label_counts: dict[str, int] | None = None
-        # (edge_label, start_labid, end_labid, count) triples —
-        # populated by collect_edge_stats()
-        self._edge_triples: list[tuple[str, int, int, int]] | None = None
+        # the statistics (ag_graphmeta analog): rows per (label, start
+        # labid, end labid); vertex labels key with None endpoints.
+        # None until collect_stats() runs; keys never hold 0
+        self._stats: dict[tuple[str, int | None, int | None], int] | None = None
         # per label: the next free locid (the ag_label_seq analog,
         # graphcmds.c:79-87). A label absent here is seeded by one max
         # scan at its first CREATE, never below its floor: one past the
@@ -73,8 +77,7 @@ class Graph:
         # Cypher writes instead carry them forward (note_rows), as the
         # reference maintains ag_graphmeta from write stats
         # (regather_graphmeta, graphmeta.c)
-        self._label_counts = None
-        self._edge_triples = None
+        self._stats = None
         self._locid_next.pop(label, None)
         self._locid_floor.pop(label, None)
 
@@ -84,10 +87,8 @@ class Graph:
         statement leaves this graph untouched."""
         import copy
         g = Graph(copy.deepcopy(self.catalog), self.frames)
-        if self._label_counts is not None:
-            g._label_counts = dict(self._label_counts)
-        if self._edge_triples is not None:
-            g._edge_triples = list(self._edge_triples)
+        if self._stats is not None:
+            g._stats = dict(self._stats)
         g._locid_next = dict(self._locid_next)
         g._locid_floor = dict(self._locid_floor)
         return g
@@ -99,15 +100,15 @@ class Graph:
         survive a rename, so the edge triples keep their endpoints; a
         dropped vertex label's labid stays in the triples of edges that
         still point at it, as a recompute would count them."""
-        for d in (self.frames, self._label_counts, self._locid_next, self._locid_floor):
-            if d is not None and old in d:
+        for d in (self.frames, self._locid_next, self._locid_floor):
+            if old in d:
                 value = d.pop(old)
                 if new is not None:
                     d[new] = value
-        if self._edge_triples is not None:
-            self._edge_triples = [(new if e == old else e, s, t, c)
-                                  for e, s, t, c in self._edge_triples
-                                  if e != old or new is not None]
+        if self._stats is not None:
+            self._stats = {(new if e == old else e, s, t): c
+                           for (e, s, t), c in self._stats.items()
+                           if e != old or new is not None}
 
     # ---- write-side metadata: statistics and locid marks ----
 
@@ -116,20 +117,22 @@ class Graph:
         """Fold a write's row delta for ``label`` into the statistics:
         ``n`` rows added (negative: removed); for an edge label,
         ``pairs`` splits ``n`` by (start labid, end labid). ``pairs`` of
-        None means the split is unknown, and the edge triples are
-        dropped (the no-statistics state). Triples reaching 0 vanish."""
-        if self._label_counts is not None:
-            self._label_counts[label] = self._label_counts.get(label, 0) + n
-        if self.catalog.labels[label].kind != "e" or self._edge_triples is None:
+        None means the split is unknown, and the whole store is dropped
+        (the no-statistics state). Entries reaching 0 vanish."""
+        if self._stats is None:
             return
-        if pairs is None:
+        if self.catalog.labels[label].kind == "v":
+            deltas = {(label, None, None): n}
+        elif pairs is None:
             if n:
-                self._edge_triples = None
+                self._stats = None
             return
-        acc = {(e, s, t): c for e, s, t, c in self._edge_triples}
-        for (s, t), c in pairs.items():
-            acc[(label, s, t)] = acc.get((label, s, t), 0) + c
-        self._edge_triples = [(e, s, t, c) for (e, s, t), c in acc.items() if c]
+        else:
+            deltas = {(label, s, t): c for (s, t), c in pairs.items()}
+        for key, c in deltas.items():
+            c += self._stats.pop(key, 0)
+            if c:
+                self._stats[key] = c
 
     def next_locid(self, label: str) -> int:
         """The next free locid of ``label``: the carried mark, seeded by
@@ -198,26 +201,7 @@ class Graph:
         labels = [label] if only else self.catalog.descendants(label)
         return self._union(labels)
 
-    def edges_multi(self, labels: list[str]) -> DataFrame:
-        """Union scan for multi-type edge patterns ``[:A|B]`` (reference:
-        genEdgeUnion, src/backend/parser/parse_graph.c:2100)."""
-        expanded: list[str] = []
-        for lbl in labels:
-            for d in self.catalog.descendants(lbl):
-                if d not in expanded:
-                    expanded.append(d)
-        return self._union(expanded)
-
-    # ---- property document view (jsonb parity) ----
-
-    def props_json(self, label: str) -> DataFrame:
-        """Label df with a ``properties`` JSON column reconstructed from
-        the typed columns — the reference's jsonb document shape."""
-        meta = self.catalog.labels[label]
-        df = self.frames[label]
-        present = [p for p in meta.props if p in df.columns]
-        doc = F.to_json(F.struct(*[F.col(p) for p in present])) if present else F.lit("{}")
-        return df.withColumn("properties", doc)
+    # ---- property document views (jsonb parity) ----
 
     def vertex_composites(self) -> DataFrame:
         """(id, label, properties) over every vertex label — the lookup
@@ -245,40 +229,53 @@ class Graph:
     # maintained by regather_graphmeta()/write stats) ----
 
     def collect_stats(self) -> dict[str, int]:
-        """ANALYZE analog: count rows per label once and cache the counts
-        driver-side. The Cypher compiler consults them to pick broadcast
-        sides for hop joins — the same role ag_graphmeta/pg statistics
-        play in the reference's costing (src/include/catalog/
-        ag_graphmeta.h:30; regather_graphmeta(), graphmeta.c). An explicit
-        action, like ANALYZE: at cluster scale this is one metadata-cheap
-        count job per label, run when the graph snapshot changes."""
-        if self._label_counts is None:
-            self._label_counts = {
-                lbl: self.frames[lbl].count() if lbl in self.frames else 0
-                for lbl in self.catalog.labels
-            }
-        return self._label_counts
+        """ANALYZE analog (regather_graphmeta(), graphmeta.c): one
+        aggregate over every label frame, grouped by (label, start
+        labid, end labid), fills the store behind ``label_counts()``,
+        ``edge_triples()`` and ``edge_stats()`` in one Spark job;
+        returns ``label_counts()``. A no-op while the store is filled.
+        AQE is off for this collect, session-wide while it runs: it
+        would launch each shuffle below (a frame's DISTINCT, the
+        group-by) as its own job, and a few dozen result rows leave it
+        nothing to re-plan."""
+        if self._stats is None:
+            rows, got = self._stat_rows(self.catalog.labels), []
+            if rows is not None:
+                conf = rows.sparkSession.conf
+                with _AQE_SWITCH:
+                    aqe = conf.get("spark.sql.adaptive.enabled")
+                    conf.set("spark.sql.adaptive.enabled", "false")
+                    try:
+                        got = rows.groupBy("label", "start_labid", "end_labid").count().collect()
+                    finally:
+                        conf.set("spark.sql.adaptive.enabled", aqe)
+            self._stats = {(r[0], r[1], r[2]): r[3] for r in got}
+        return self.label_counts()
 
     def label_counts(self) -> dict[str, int] | None:
-        """Cached stats, or None when collect_stats() has not run."""
-        return self._label_counts
+        """Rows per catalog label (0 for a label with no frame or no
+        rows), or None when the graph keeps no statistics."""
+        if self._stats is None:
+            return None
+        counts = dict.fromkeys(self.catalog.labels, 0)
+        for (lbl, _, _), c in self._stats.items():
+            counts[lbl] = counts.get(lbl, 0) + c
+        return counts
 
     def collect_edge_stats(self) -> list[tuple[str, int, int, int]]:
-        """Materialize ``edge_stats()`` driver-side — the full
-        ag_graphmeta analog (per-(edge, start-label, end-label) triple
-        cardinalities). One aggregate job, cached; the Cypher compiler
-        consults the triples to pick multi-hop fold order (the
-        reference's costing input, src/include/catalog/
-        ag_graphmeta.h:30)."""
-        if self._edge_triples is None:
-            self._edge_triples = [
-                (r["edge_label"], r["start_labid"], r["end_labid"], r["edgecount"])
-                for r in self._edge_stats_distributed().collect()]
-        return self._edge_triples
+        """The (edge label, start labid, end labid, count) triples,
+        filled by ``collect_stats()`` if the graph keeps no statistics.
+        The Cypher compiler reads them to pick multi-hop fold order and
+        to bound path searches (``path_depth``)."""
+        self.collect_stats()
+        return self.edge_triples()
 
     def edge_triples(self) -> "list[tuple[str, int, int, int]] | None":
-        """Cached triples, or None when collect_edge_stats() has not run."""
-        return self._edge_triples
+        """The statistics' edge triples, or None when the graph keeps
+        no statistics."""
+        if self._stats is None:
+            return None
+        return [(e, s, t, c) for (e, s, t), c in self._stats.items() if s is not None]
 
     def path_depth(self, edge_labels: Iterable[str], direction: str) -> int | None:
         """The most edges any path over ``edge_labels`` can have: the
@@ -300,13 +297,14 @@ class Graph:
 
         Sound only while the triples are exact: an edge whose labid pair
         is missing from them could extend a path past the bound. They
-        are exact after collect_edge_stats() and through Cypher writes
-        and DDL (note_rows, move_label); set_label_df drops them."""
-        if direction == "undir" or not self._edge_triples:
+        are exact after collect_stats() and through Cypher writes and
+        DDL (note_rows, move_label); set_label_df drops them."""
+        triples = self.edge_triples()
+        if direction == "undir" or not triples:
             return None
         labels = set(edge_labels)
         preds: dict[int, set[int]] = {}
-        for e, s, t, _ in self._edge_triples:
+        for e, s, t, _ in triples:
             if e in labels:
                 preds.setdefault(t, set()).add(s)
         if not preds:
@@ -324,56 +322,49 @@ class Graph:
         """Edge-count statistics per (edge label, start labid, end
         labid) — the ag_graphmeta analog. Reads are CATALOG lookups in
         the reference (ag_graphmeta rows maintained from write stats,
-        src/backend/utils/adt/graphmeta.c), not edge rescans — so when
-        the triples have already been gathered (collect_edge_stats(),
-        kept exact through Cypher writes and DDL, invalidated by
-        set_label_df) this serves a driver-local 6-ish-row DataFrame
-        instead of re-scanning every edge frame. Cold path computes
-        distributed."""
-        if self._edge_triples:  # empty [] falls through (VALUES () is invalid)
-            # getActiveSession() is thread-local and returns None off
-            # the driver thread that created the session; prefer the
-            # session of an installed frame, then the active one, and
-            # fall back to the distributed path rather than crash
-            spark = None
-            for frame in self.frames.values():
-                if frame is not None:
-                    spark = frame.sparkSession
-                    break
-            spark = spark or SparkSession.getActiveSession()
-            if spark is None:
-                return self._edge_stats_distributed()
-            # VALUES → LocalRelation: constant-folds driver-side, no
-            # tasks at all (createDataFrame would plan an RDD scan)
-            vals = ", ".join(
-                "('{}', {}, {}, {})".format(str(e).replace("'", "''"),
-                                            int(s), int(t), int(n))
-                for e, s, t, n in self._edge_triples)
-            return spark.sql(
-                "SELECT col1 AS edge_label, CAST(col2 AS LONG) AS start_labid,"
-                " CAST(col3 AS LONG) AS end_labid, CAST(col4 AS LONG) AS"
-                f" edgecount FROM (VALUES {vals})")
-        return self._edge_stats_distributed()
+        src/backend/utils/adt/graphmeta.c), not edge rescans — so with
+        statistics this is a driver-local VALUES frame that runs no
+        job; without, a lazy aggregate over the edge frames."""
+        triples = self.edge_triples()
+        if triples is None:
+            rows = self._stat_rows(self.catalog.elabels())
+            if rows is not None:
+                return (rows.groupBy("label", "start_labid", "end_labid")
+                        .agg(F.count(F.lit(1)).alias("edgecount"))
+                        .withColumnRenamed("label", "edge_label"))
+            triples = []
+        # getActiveSession() is None off the session's driver thread
+        spark = next((f.sparkSession for f in self.frames.values() if f is not None),
+                     None) or SparkSession.getActiveSession()
+        if spark is None:
+            raise ValueError("edge_stats: the graph has no frames and no active session")
+        # VALUES → LocalRelation: constant-folds driver-side, no tasks
+        # at all (createDataFrame would plan an RDD scan). VALUES () is
+        # invalid, so no triples read as one row filtered away.
+        vals = ", ".join(
+            "('{}', {}, {}, {})".format(str(e).replace("'", "''"), int(s), int(t), int(n))
+            for e, s, t, n in triples or [("", 0, 0, 0)])
+        return spark.sql(
+            "SELECT col1 AS edge_label, CAST(col2 AS LONG) AS start_labid,"
+            " CAST(col3 AS LONG) AS end_labid, CAST(col4 AS LONG) AS"
+            f" edgecount FROM (VALUES {vals})" + ("" if triples else " WHERE false"))
 
-    def _edge_stats_distributed(self) -> DataFrame:
-        """The gather job behind ``edge_stats``/``collect_edge_stats``:
-        one aggregate over each edge frame; labels are recovered from
-        the ids' high bits so no vertex join happens."""
+    def _stat_rows(self, labels: Iterable[str]) -> DataFrame | None:
+        """(label, start_labid, end_labid) per row of the labels' frames,
+        labids from the ids' high bits (no vertex join), NULL for vertex
+        labels; None when no label has a frame."""
         from agensgraph_spark.graphid import labid_col
         out = None
-        for lbl in self.catalog.elabels():
-            if lbl not in self.frames and self.frames.get(lbl) is None:
+        for lbl in labels:
+            df = self.frames.get(lbl)
+            if df is None:
                 continue
-            df = self._stamped(lbl).select(
-                F.lit(lbl).alias("edge_label"),
-                labid_col(F.col("start")).alias("start_labid"),
-                labid_col(F.col("end")).alias("end_labid"),
-            )
+            edge = self.catalog.labels[lbl].kind == "e"
+            df = df.select(F.lit(lbl).alias("label"), *[
+                (labid_col(F.col(c)) if edge else F.lit(None)).cast("long").alias(f"{c}_labid")
+                for c in ("start", "end")])
             out = df if out is None else out.unionByName(df)
-        if out is None:
-            raise ValueError("graph has no edge labels")
-        return (out.groupBy("edge_label", "start_labid", "end_labid")
-                .agg(F.count(F.lit(1)).alias("edgecount")))
+        return out
 
     def graphmeta_view(self) -> DataFrame:
         """The reference's ``ag_graphmeta_view`` (graphmeta.sql:16):

@@ -37,11 +37,9 @@ def _engine(spark: SparkSession, sf_dir: str) -> CypherEngine:
     eng = _ENGINES.get(key)
     if eng is None:
         eng = CypherEngine(spark, build_tpch_graph(spark, sf_dir))
-        # ANALYZE once per engine: label row counts feed broadcast-side
-        # planning, edge-triple cardinalities feed multi-hop fold order
-        # (ag_graphmeta's two costing roles)
+        # ANALYZE once per engine, one Spark job: the edge triples
+        # feed multi-hop fold order and bound path searches
         eng.graph.collect_stats()
-        eng.graph.collect_edge_stats()
         _ENGINES[key] = eng
     return eng
 

@@ -85,6 +85,54 @@ HEADLINE = [
 ]
 
 
+# A busy neighbour: runnable tasks outside this bench's own process
+# tree (the bench, its Spark JVM and the JVM's Python workers), sampled
+# before each pass. More than this many in any pass marks the run
+# unusable. Calibrated by one idle run and one run with a planted
+# `python -c 'while 1: pass'` sibling (CHANGES.md has both).
+_OTHER_RUNNABLE_MAX = 0
+
+
+def _other_runnable() -> int | None:
+    """Tasks in state R that belong to processes outside this bench's
+    process tree, read from /proc: the minimum over 5 snapshots 0.2 s
+    apart, so a one-off wakeup does not count but a neighbour spinning
+    through the whole second does. None when /proc cannot be read
+    (non-Linux dev box)."""
+    def stat_fields(path: str) -> list[str]:
+        with open(path) as f:
+            text = f.read()
+        return text[text.rindex(")") + 2:].split()  # skip "pid (comm) "
+
+    counts = []
+    for i in range(5):
+        if i:
+            time.sleep(0.2)
+        try:
+            pids = [int(d) for d in os.listdir("/proc") if d.isdigit()]
+        except OSError:
+            return None
+        parent = {}
+        for pid in pids:
+            try:
+                parent[pid] = int(stat_fields(f"/proc/{pid}/stat")[1])
+            except (OSError, ValueError):
+                pass  # exited between listdir and read
+        mine, kids = set(), {os.getpid()}
+        while kids:
+            mine |= kids
+            kids = {p for p, pp in parent.items() if pp in kids}
+        n = 0
+        for pid in parent.keys() - mine:
+            try:
+                for tid in os.listdir(f"/proc/{pid}/task"):
+                    n += stat_fields(f"/proc/{pid}/task/{tid}/stat")[0] == "R"
+            except (OSError, ValueError):
+                pass
+        counts.append(n)
+    return min(counts)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -143,12 +191,16 @@ def main() -> None:
 
     pass_load: list[float] = [ambient_load1]
     pass_stat: list = [_cpu_stat()]
+    pass_other: list[int] = []
     if pass_load[0] > load_warn_threshold:
         print(f"# WARN: ambient load1={pass_load[0]} before JVM spin-up "
               f"after {waited:.0f}s wait-for-quiet — timings below are "
               "suspect (see README noise methodology); the final JSON "
               "carries load1_warn=true AND usable=false", file=sys.stderr)
     for p in range(n_passes):
+        other = _other_runnable()
+        if other is not None:
+            pass_other.append(other)
         timings: dict[str, float] = {}
         for name in HEADLINE:
             fn = queries[name]
@@ -220,6 +272,8 @@ def main() -> None:
         steal_pcts.append(round((b[1] - a[1]) / (b[0] - a[0]) * 100, 2))
     steal_pct_max = max(steal_pcts) if steal_pcts else None
     print(f"# steal_pct_per_pass: {steal_pcts}", file=sys.stderr)
+    other_runnable_max = max(pass_other) if pass_other else None
+    print(f"# other_runnable_per_pass: {pass_other}", file=sys.stderr)
 
     best = {name: min(ps[name] for ps in passes) for name in HEADLINE}
     med = {name: _median([ps[name] for ps in passes]) for name in HEADLINE}
@@ -357,9 +411,12 @@ def main() -> None:
         # load1, cannot be the bench's own burst — see the mid-run
         # detection comment above): round-over-round comparisons MUST
         # skip this artifact
+        # ... OR another process kept a CPU busy before a pass
         "usable": (pass_load[0] <= load_warn_threshold
                    and (steal_pct_max is None
-                        or steal_pct_max <= steal_warn_threshold)),
+                        or steal_pct_max <= steal_warn_threshold)
+                   and (other_runnable_max is None
+                        or other_runnable_max <= _OTHER_RUNNABLE_MAX)),
         "ambient_load1": pass_load[0],
         # max of the per-pass (post-pass) load1 samples — EVIDENCE, not
         # a gate: includes the bench's own burst (6-9 at 32 cores,
@@ -368,6 +425,9 @@ def main() -> None:
         # max per-pass hypervisor steal share (%, /proc/stat) — the
         # mid-run gate; null when /proc/stat is unavailable
         "steal_pct_max": steal_pct_max,
+        # max per-pass runnable tasks of processes outside the bench's
+        # tree (/proc); null when /proc is unavailable
+        "other_runnable_max": other_runnable_max,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }, separators=(",", ":"))
     # 1800 not 2000: headroom for ~8 more headline rows before anyone

@@ -28,6 +28,7 @@ def _simulated_line(headline: list[str]) -> str:
         "ambient_load1": 99.99,
         "load1_max_pass": 99.99,
         "steal_pct_max": 99.99,
+        "other_runnable_max": 999,
         "sf": 0.1,
     }, separators=(",", ":"))
 

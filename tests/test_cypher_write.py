@@ -345,7 +345,6 @@ def test_detach_delete_one_label_materializes_once(spark):
     eng = CypherEngine(spark, Graph(GraphCatalog("dd1")))
     eng.cypher("UNWIND range(1, 20) AS i CREATE (:a {k: i})-[:r]->(:b {k: i})")
     eng.graph.collect_stats()
-    eng.graph.collect_edge_stats()
     eng.cypher("UNWIND range(1, 5) AS i CREATE (:c {k: i})")
     jobs = _run_in_group(spark, eng, "dd1-detach", "MATCH (v:c) DETACH DELETE v")
     assert len(jobs) <= 6, jobs
@@ -407,7 +406,6 @@ def test_stats_after_writes_match_recompute(spark):
     eng = CypherEngine(spark, Graph(GraphCatalog("sd")))
     eng.cypher("UNWIND range(1, 4) AS i CREATE (:p {k: i})-[:r]->(:q {k: i})")
     eng.graph.collect_stats()
-    eng.graph.collect_edge_stats()
     script = [
         "UNWIND range(5, 7) AS i CREATE (:p {k: i})-[:r]->(:q {k: i})",
         "MATCH (a:p {k: 1}), (b:p {k: 2}) CREATE (a)-[:s]->(b), (b)-[:s]->(:t)",
@@ -425,3 +423,6 @@ def test_stats_after_writes_match_recompute(spark):
         eng.cypher(q)
         _assert_stats_match_recompute(eng.graph)
     assert {lbl for lbl, *_ in eng.graph.edge_triples()} == {"r2"}
+    # a path's edges carry no (start, end) split: the whole store drops
+    eng.cypher("MATCH p = (:p)-[:r2]->(:q2) DELETE p")
+    assert eng.graph.label_counts() is None and eng.graph.edge_triples() is None

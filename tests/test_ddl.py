@@ -472,7 +472,6 @@ def test_drop_and_rename_keep_statistics(spark):
         [(make_graphid(4, n + 1), a[n], b[n]) for n in range(2)],
         "id long, start long, end long"))
     g.collect_stats()
-    g.collect_edge_stats()
     eng = CypherEngine(spark, g)
     eng.cypher("DROP ELABEL q")
     eng.cypher("ALTER ELABEL r RENAME TO r2")

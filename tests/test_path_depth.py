@@ -44,7 +44,6 @@ def stats_engine(spark):
     """A private TPC-H graph with statistics: the tests mutate it."""
     g = build_tpch_graph(spark, SF_DIR)
     g.collect_stats()
-    g.collect_edge_stats()
     return CypherEngine(spark, g)
 
 

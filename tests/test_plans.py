@@ -58,27 +58,6 @@ def test_agg_is_partial_then_final(eng):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_stats_flip_join_to_broadcast(spark):
-    """collect_stats() drives the broadcast side of hop joins
-    (ag_graphmeta-costing analog). With auto-broadcast disabled, only
-    the stats-sourced hint can produce a BroadcastHashJoin — so the
-    same query flips plan shape when stats exist."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        q = ("MATCH (c:customer)-[:in_nation]->(n:nation) "
-             "RETURN c.c_custkey AS k, n.n_name AS nn")
-        cold = CypherEngine(spark, build_tpch_graph(spark, SF))
-        plan_no_stats = physical(cold.cypher(q))
-        warm = CypherEngine(spark, build_tpch_graph(spark, SF))
-        warm.graph.collect_stats()
-        plan_stats = physical(warm.cypher(q))
-        assert "BroadcastHashJoin" not in plan_no_stats
-        assert "BroadcastHashJoin" in plan_stats
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_pathfind_no_endpoint_cartesian(eng):
     """Disconnected pathfind endpoints must not cross-join the two wide
     vertex scans — the path operator runs on id-only pairs and results
@@ -363,7 +342,7 @@ def test_graphmeta_read_is_catalog_lookup(eng):
     old = g.frames[lbl]
     try:
         g.set_label_df(lbl, old.limit(3))
-        assert g._edge_triples is None and g._label_counts is None
+        assert g.edge_triples() is None and g.label_counts() is None
         fresh = {tuple(r) for r in
                  g.edge_stats().filter("edge_label = 'in_region'").collect()}
         assert fresh == {("in_region", 5, 6, 3)}

@@ -33,6 +33,59 @@ def test_edge_stats_graphmeta(spark):
     assert stats[("in_region", 5, 6)] == 25
 
 
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup("stats-probe", "stats-probe")
+    before = set(sc.statusTracker().getJobIdsForGroup("stats-probe"))
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(set(sc.statusTracker().getJobIdsForGroup("stats-probe")) - before)
+
+
+def test_analyze_is_one_job(spark):
+    """ANALYZE fills the label counts and the edge triples in ONE Spark
+    job, both equal to a per-label recompute; a catalog label with no
+    frame and one with an empty frame read 0."""
+    from agensgraph_spark.graphid import labid_col
+    g = build_tpch_graph(spark, "/root/testdata/sf0.001")
+    g.catalog.create_vlabel("no_frame")
+    g.catalog.create_elabel("no_rows")
+    g.set_label_df("no_rows", spark.createDataFrame([], "id long, start long, end long"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    counts, jobs = _jobs(spark, g.collect_stats)
+    assert jobs == 1 and spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert counts == {l: g.frames[l].count() if l in g.frames else 0 for l in g.catalog.labels}
+    assert counts["no_frame"] == counts["no_rows"] == 0 < counts["contains"]
+    want = {(l, *r) for l in g.catalog.elabels() if l in g.frames for r in g.frames[l].groupBy(
+        labid_col(F.col("start")), labid_col(F.col("end"))).count().collect()}
+    assert set(g.edge_triples()) == set(g.collect_edge_stats()) == want
+    assert {tuple(r) for r in g.edge_stats().collect()} == want
+
+
+def test_analyze_without_edge_rows(spark):
+    """A graph with no edge labels, and one whose edge labels hold no
+    rows, analyze to no triples; edge_stats() is then an empty frame
+    with the usual schema that runs no job, as it is before ANALYZE
+    when no edge label has a frame."""
+    usual = build_tpch_graph(spark, "/root/testdata/sf0.001").edge_stats().dtypes
+    vertex_only, no_edge_rows = Graph(GraphCatalog("vo")), Graph(GraphCatalog("ne"))
+    for g in (vertex_only, no_edge_rows):
+        g.catalog.create_vlabel("p")
+        g.set_label_df("p", spark.createDataFrame([(1,), (2,)], "id long"))
+    no_edge_rows.catalog.create_elabel("e_no_frame")
+    no_edge_rows.catalog.create_elabel("e")
+    no_edge_rows.set_label_df("e", spark.createDataFrame([], "id long, start long, end long"))
+    assert _jobs(spark, lambda: vertex_only.edge_stats().collect()) == ([], 0)
+    for g in (vertex_only, no_edge_rows):
+        assert g.collect_edge_stats() == []
+        assert g.label_counts() == dict.fromkeys(g.catalog.labels, 0) | {"p": 2}
+        assert g.edge_stats().dtypes == usual
+        assert _jobs(spark, lambda: g.edge_stats().collect()) == ([], 0)
+
+
 def test_versioned_snapshots_time_travel(spark, tmp_path):
     """Immutable versioned snapshots: the MVCC-visibility batch analog —
     a later write never disturbs an earlier version's readers."""
