@@ -2,12 +2,16 @@
 
 Design for 100 TB:
 - exact dedup is one hash-aggregate (map-side partial combine);
-- MinHash shingle hashes and signatures come from one map-only Arrow
-  kernel per document batch (`_minhash_frame`: each distinct shingle
-  of a batch is hashed once, the signature is built one slot at a time
-  in numpy) after one narrow spread; the LSH banding aggregate is the
-  only shuffle — grouped by (band, band-hash), so candidate generation
-  never goes quadratic;
+- MinHash shingle hashes, signatures and LSH bucket keys come from one
+  map-only Arrow kernel per document batch (`_minhash_frame`: each
+  distinct shingle of a batch is hashed once, the signature is built
+  one slot at a time in numpy) after one narrow spread;
+- LSH pairs come from one shuffle of each document per band, sorted by
+  bucket, and one Arrow scan over the runs of equal bucket keys
+  (`_bucket_pairs`): a pair is formed, owned by the first band whose
+  kept bucket holds it, estimated and verified inside its bucket, so
+  no candidate pair is ever joined, deduplicated or shuffled, and
+  oversized buckets (the skew cap) are dropped before any pairing;
 - SimHash reduces to one explode + one aggregation;
 - pairwise Jaccard verification runs only on LSH candidates (or an
   explicitly bounded id range), never on the full cross product.
@@ -246,13 +250,53 @@ def _shingle_codes(
                np.asarray(offs, dtype=np.int64))
 
 
+def _packed(vals: np.ndarray, offs: np.ndarray):
+    """A binary Arrow array whose row i is ``vals[offs[i]:offs[i+1]]``
+    as little-endian int64 bytes."""
+    import pyarrow as pa
+    return pa.Array.from_buffers(pa.binary(), len(offs) - 1, [
+        None, pa.py_buffer((offs * 8).astype(np.int32)),
+        pa.py_buffer(np.ascontiguousarray(vals, dtype="<i8"))])
+
+
+def _unpacked(col) -> "tuple[np.ndarray, np.ndarray]":
+    """The int64 values and per-row value offsets of a `_packed`
+    column (zero-copy)."""
+    offs = np.frombuffer(col.buffers()[1], dtype=np.int32)[
+        col.offset:col.offset + len(col) + 1]
+    vals = np.frombuffer(col.buffers()[2], dtype=np.uint8)[
+        offs[0]:offs[-1]].view("<i8")
+    return vals, (offs - offs[0]) // 8
+
+
+def _bucket_keys(sig: np.ndarray, bands: int) -> np.ndarray:
+    """(n, bands) LSH bucket keys of (n, num_hashes) signatures: XXH64
+    (seed 42) of each band's slot-slice bytes."""
+    rows = sig.shape[1] // bands
+    return np.stack([
+        _xxh64_rows(np.ascontiguousarray(sig[:, b * rows:(b + 1) * rows])
+                    .view(np.uint8).reshape(len(sig), 8 * rows))
+        for b in range(bands)], axis=1).view(np.int64)
+
+
 def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
                    hash_fn: str, num_hashes: int = 0,
-                   keep_sh: bool = True) -> DataFrame:
+                   keep_sh: bool = True, bands: int = 0) -> DataFrame:
     """The one MinHash kernel: (_id, _sh, _sig) per document from a
     single Arrow pass — ``_sh`` the distinct k-shingle hashes (array of
     longs, first-occurrence order; kept when ``keep_sh``), ``_sig`` the
     ``num_hashes``-slot signature (kept when ``num_hashes`` > 0).
+
+    With ``bands`` (the LSH paths) the frame also holds ``_bk``, the
+    document's ``bands`` bucket keys (`_bucket_keys`), and ``_sh`` and
+    ``_sig`` come `_packed` as binaries: one value per row crosses the
+    band shuffle, the sort and the bucket scan's Arrow transfer as a
+    byte copy, where an array pays per element. Bucket keys never reach
+    the output; only the grouping they induce matters, and the fold is
+    injective modulo negligible collisions, so an external oracle
+    grouping by the RAW slice forms the same buckets (md5-portable
+    parity is unaffected; asserted by the gate oracle and the md5
+    differential).
 
     Shape: one spread repartition on the id (document corpora often
     arrive as few Parquet files; without it a handful of tasks would do
@@ -280,12 +324,21 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
               .repartition(spread, "_id")
               .select("_id", F.lower("_t").alias("_t")))
     longs = T.ArrayType(T.LongType(), containsNull=False)
+    packed = T.BinaryType() if bands else longs
     fields = [T.StructField("_id", base.schema["_id"].dataType)]
     if keep_sh:
-        fields.append(T.StructField("_sh", longs))
+        fields.append(T.StructField("_sh", packed))
     if num_hashes:
-        fields.append(T.StructField("_sig", longs))
+        fields.append(T.StructField("_sig", packed))
+    if bands:
+        fields.append(T.StructField("_bk", longs))
     names = [f.name for f in fields]
+
+    def lists(vals: np.ndarray, offs: np.ndarray):
+        return pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)),
+                                        pa.array(vals))
+
+    column = _packed if bands else lists
     cap = _CHUNK_SHINGLES
 
     def kernel(batches):
@@ -305,17 +358,17 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
                 cols = [ids.slice(lo, n)]
                 lo += n
                 if keep_sh:
-                    cols.append(pa.ListArray.from_arrays(
-                        pa.array(offs.astype(np.int32)), pa.array(h[code])))
+                    cols.append(column(h[code], offs))
                 if num_hashes:
                     sig = np.empty((n, num_hashes), dtype=np.int64)
                     for i, v in enumerate(
                             _minhash_slots(h, hash_fn, num_hashes)):
                         sig[:, i] = np.minimum.reduceat(v[code], offs[:-1])
-                    cols.append(pa.ListArray.from_arrays(
-                        pa.array(np.arange(0, sig.size + 1, num_hashes,
-                                           dtype=np.int32)),
-                        pa.array(sig.ravel())))
+                    cols.append(column(
+                        sig.ravel(), np.arange(0, sig.size + 1, num_hashes)))
+                if bands:
+                    cols.append(lists(_bucket_keys(sig, bands).ravel(),
+                                      np.arange(0, n * bands + 1, bands)))
                 yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return base.mapInArrow(kernel, T.StructType(fields))
@@ -353,137 +406,296 @@ def minhash_lsh_candidates(
     candidate pair. Returns (id_a, id_b, est_jaccard) with
     id_a < id_b, distinct.
 
-    Pairs are generated from grouped band-buckets — collect
-    (id, signature) per (band, hash), emit in-bucket combinations —
-    rather than a self-join. Because the bucket payload carries both
-    signatures, the agreement estimate ``est_jaccard`` (what Spark ML's
-    MinHashLSH thresholds on) is computed INLINE at pair emission: no
-    signature re-join, no broadcast, and the signature pipeline runs
-    exactly once. The only shuffles are the bucket groupBy and the
-    pair-dedup aggregate (narrow (long, long, double) rows).
-    ``max_bucket`` caps degenerate buckets (e.g. an empty-string band)
-    so one hot key cannot go quadratic — the standard LSH skew guard.
-    The cap is announced in the log at build time; ``lsh_skew_stats``
-    (same parameters) counts the buckets it drops.
+    Pairs come from one scan over band buckets (``_bucket_pairs``):
+    each document is shuffled once per band, sorted by bucket key, and
+    one ``mapInArrow`` pass walks the runs of equal keys, so a pair is
+    formed next to both signatures and no pair is ever joined back to
+    them. ``est_jaccard`` is the share of equal signature slots (what
+    Spark ML's MinHashLSH thresholds on). A pair is emitted only by the
+    first band whose kept bucket holds both documents, so no pair
+    dedup shuffle runs either. ``max_bucket`` caps degenerate buckets
+    (e.g. an empty-string band) so one hot key cannot go quadratic —
+    the standard LSH skew guard. The log states how many buckets the
+    cap dropped; ``lsh_skew_stats`` (same parameters) gives their size
+    distribution.
 
     Corpora with large near-duplicate clusters produce O(cluster²)
     candidates; pass ``min_est`` a notch under the final exact
     threshold so exact verification only runs on plausible pairs.
 
     Executes EAGERLY: the candidate set is materialized at call time
-    (localCheckpoint) so the intermediate signature pin can be
-    released instead of leaking for the session. Pass ``min_est``
-    rather than composing a post-hoc filter, and note localCheckpoint
-    storage does not survive executor loss (see README's fault-model
-    note)."""
+    (localCheckpoint) so the signature pin can be released instead of
+    leaking for the session. Pass ``min_est`` rather than composing a
+    post-hoc filter, and note localCheckpoint storage does not survive
+    executor loss (see README's fault-model note)."""
     sig = _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
-                         keep_sh=False)
-    pins: list[DataFrame] = []
-    out = _candidates_from_sigs(sig, num_hashes, bands, min_est,
-                                max_bucket, pins)
-    # the candidate set is bounded (near-dups are rare at corpus
-    # scale): materialize it eagerly so the intermediate signature pin
-    # can be released instead of leaking for the session (paths.py's
-    # pin discipline)
-    out = out.localCheckpoint()
-    for p in pins:
-        p.unpersist(blocking=False)
+                         keep_sh=False, bands=bands).persist()
+    out = _bucket_pairs(sig, "minhash_lsh_candidates", num_hashes, bands,
+                        min_est, max_bucket).localCheckpoint()
+    sig.unpersist(blocking=False)
     return out
 
 
-def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(_id, _band, _bhash) rows of a (_id, _sig) frame: one bucket key
-    per band — the shared banding of ``_candidates_from_sigs`` and
-    ``lsh_skew_stats``.
-
-    Bucket key per band: the concatenated band slice xxhash64-folded
-    to a long — narrow shuffle rows in EVERY mode. Bucket keys never
-    reach the output; only the grouping they induce matters, and the
-    fold is injective modulo negligible collisions, so an external
-    oracle grouping by the RAW slice produces identical buckets →
-    identical member sets → identical pairs (md5-portable parity is
-    unaffected; asserted by the gate oracle and the md5 differential)."""
-    rows_per_band = num_hashes // bands
-
-    def key(b: int) -> str:
-        cat = ", ".join(
-            f"CAST(element_at(_sig, {b * rows_per_band + r + 1}) AS STRING)"
-            for r in range(rows_per_band))
-        return f"xxhash64(concat_ws(',', {cat}))"
-
-    keys = ", ".join(key(b) for b in range(bands))
-    return sig.selectExpr(
-        "_id", f"posexplode(array({keys})) AS (_band, _bhash)")
+def _banded(frame: DataFrame) -> DataFrame:
+    """One row per (document, band) of a kernel frame with ``_bk``: its
+    columns plus ``(_band, _bhash)``, the row's bucket — the shared
+    banding of ``_bucket_pairs`` and ``lsh_skew_stats``."""
+    return frame.selectExpr("*", "posexplode(_bk) AS (_band, _bhash)")
 
 
-def _candidates_from_sigs(
-    sig: DataFrame,
-    num_hashes: int,
-    bands: int,
-    min_est: float,
-    max_bucket: int,
-    pins: "list[DataFrame] | None" = None,
-) -> DataFrame:
-    """Banding + in-bucket pair emission over a (_id, _sig) frame —
-    the shared back half of ``minhash_lsh_candidates`` and
-    ``minhash_neardup_pairs``.
+def _bucket_sizes(banded: DataFrame) -> DataFrame:
+    """(_band, _bhash, _n): the member count of every band bucket."""
+    return banded.groupBy("_band", "_bhash").agg(
+        F.count(F.lit(1)).alias("_n"))
 
-    Buckets carry BARE ids: the band groupBy shuffles (band, bhash, id)
-    rows and collect_list aggregates longs, not 32-slot signature
-    structs — carrying the signatures into the buckets to compute the
-    agreement estimate inline measured ~4x slower at sf0.1 (wide
-    ObjectHashAggregate payload + a per-raw-pair zip_with allocation).
-    The estimate is instead computed once per DISTINCT pair by joining
-    the (tiny, persisted) signature frame back on both ids — est is a
-    pair property, independent of which bucket surfaced the pair, so
-    distinct-then-join equals the inline max(est) dedup exactly."""
-    # (id, num_hashes longs) — bounded at any corpus scale; serves the
-    # banding branch and both est-join probes
-    sig = sig.persist()
-    if pins is not None:
-        pins.append(sig)
-    grouped = (_banded(sig, num_hashes, bands).groupBy("_band", "_bhash")
-               .agg(F.array_sort(F.collect_list("_id")).alias("_ms"))
-               .filter(F.size("_ms") >= 2))
-    # the skew cap is never silent: announce it with its audit path
-    # (free, driver-side) — counting the dropped buckets inside this
-    # job would need a CollectMetrics node, a whole-stage-codegen
-    # barrier on the pair-explosion path, and Spark 4.1 loses its
-    # value when AQE plans 2+ shuffle stages above it
+
+# Pairs per vectorized block of the bucket scan: bounds the signature
+# and bucket-key gathers at a few MB per block however large a run is.
+_PAIR_BLOCK = 1 << 15
+# Bounds of one verify block: shingle-hash probes, and cells of its
+# 0/1 (row x distinct shingle) incidence matrix. A larger block is
+# halved until both hold.
+_VERIFY_PROBES = 1 << 21
+_VERIFY_CELLS = 1 << 24
+# Runs of at least _GRAM_RUN rows whose float32 incidence matrix fits
+# in _GRAM_CELLS cells are verified by BLAS products of it (one row
+# block of the run's Gram matrix per pair block): a bucket of m
+# similar documents costs m² x U flops instead of m²/2 x |doc| probes.
+_GRAM_RUN = 32
+_GRAM_CELLS = 1 << 22
+
+
+def _run_pairs(starts: np.ndarray, lens: np.ndarray
+               ) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Every in-run row pair (i, j), i < j, of the runs ``[s, s + n)``,
+    as (i, j) index arrays in blocks of about ``_PAIR_BLOCK`` pairs.
+    Each row of a run is one unit pairing with the rows after it."""
+    per = lens - 1
+    run = np.repeat(np.arange(len(lens)), per)
+    pos = np.arange(len(run)) - np.repeat(np.cumsum(per) - per, per)
+    unit_row = starts[run] + pos
+    cnt = lens[run] - 1 - pos
+    ends = np.cumsum(cnt)
+    u0 = 0
+    while u0 < len(cnt):
+        base = ends[u0] - cnt[u0]
+        u1 = max(int(np.searchsorted(ends, base + _PAIR_BLOCK, "right")),
+                 u0 + 1)
+        c = cnt[u0:u1]
+        ia = np.repeat(unit_row[u0:u1], c)
+        yield ia, ia + 1 + _ranges(np.zeros(len(c), np.int64), c)
+        u0 = u1
+
+
+def _ranges(lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """The concatenated index ranges ``[lo[i], lo[i] + n[i])``."""
+    return np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
+
+
+def _common_counts(vals: np.ndarray, offs: np.ndarray, ia: np.ndarray,
+                   ib: np.ndarray) -> np.ndarray:
+    """Distinct values common to rows ``ia[p]`` and ``ib[p]`` of the
+    list column (``vals``, ``offs``), per pair — what
+    ``size(array_intersect(a, b))`` counts. The involved rows' values
+    become dense codes and a 0/1 (row x code) incidence matrix; each
+    pair probes row ``ia``'s line of it with row ``ib``'s distinct
+    codes. A block over ``_VERIFY_PROBES`` or ``_VERIFY_CELLS`` is
+    halved."""
+    import pyarrow as pa
+
+    def halves() -> np.ndarray:
+        h = len(ia) // 2
+        return np.concatenate([_common_counts(vals, offs, ia[:h], ib[:h]),
+                               _common_counts(vals, offs, ia[h:], ib[h:])])
+
+    if len(ia) > 1 and (offs[ib + 1] - offs[ib]).sum() > _VERIFY_PROBES:
+        return halves()
+    rows, inv = np.unique(np.concatenate([ia, ib]), return_inverse=True)
+    n = offs[rows + 1] - offs[rows]
+    enc = pa.array(vals[_ranges(offs[rows], n)]).dictionary_encode()
+    if len(ia) > 1 and len(rows) * len(enc.dictionary) > _VERIFY_CELLS:
+        return halves()
+    width = len(enc.dictionary)
+    code = enc.indices.to_numpy()
+    inc = np.zeros(len(rows) * width, dtype=bool)
+    inc[np.repeat(np.arange(len(rows)) * width, n) + code] = True
+    seg = np.concatenate([[0], np.cumsum(n)])
+    if np.count_nonzero(inc) < len(code):
+        # a hash collision repeats a value within a row: probe with
+        # each row's distinct codes instead
+        row, code = inc.reshape(len(rows), width).nonzero()
+        seg = np.searchsorted(row, np.arange(len(rows) + 1))
+    la, lb = inv[:len(ia)], inv[len(ia):]
+    qn = seg[lb + 1] - seg[lb]
+    hit = inc[np.repeat(la * width, qn) + code[_ranges(seg[lb], qn)]]
+    ends = np.cumsum(np.concatenate([[0], hit]))[np.cumsum(qn)]
+    return ends - np.concatenate([[0], ends[:-1]])
+
+
+def _run_incidence(vals: np.ndarray, offs: np.ndarray, lo: int,
+                   hi: int) -> "np.ndarray | None":
+    """The 0/1 float32 (row x distinct value) incidence matrix of rows
+    ``[lo, hi)`` of the list column (``vals``, ``offs``), or None when
+    it would exceed ``_GRAM_CELLS``. Its Gram entries count distinct
+    common values exactly (integers below 2^24)."""
+    import pyarrow as pa
+    enc = pa.array(vals[offs[lo]:offs[hi]]).dictionary_encode()
+    if (hi - lo) * len(enc.dictionary) > _GRAM_CELLS:
+        return None
+    inc = np.zeros((hi - lo, len(enc.dictionary)), dtype=np.float32)
+    inc[np.repeat(np.arange(hi - lo), np.diff(offs[lo:hi + 1])),
+        enc.indices.to_numpy()] = 1
+    return inc
+
+
+def _bucket_pairs(frame: DataFrame, caller: str, num_hashes: int,
+                  bands: int, min_est: float, max_bucket: int,
+                  threshold: "float | None" = None) -> DataFrame:
+    """The LSH back half over a persisted banded kernel frame (_id,
+    _sig, _bk[, _sh]): (id_a, id_b, est_jaccard), or with
+    ``threshold`` (and ``_sh``) the exactly verified (id_a, id_b,
+    jaccard).
+
+    - One narrow aggregate collects the bucket keys over
+      ``max_bucket`` — at most n·bands/``max_bucket`` of them, usually
+      none — and the log states their number.
+    - Every document is shuffled once per band on ``(_band, _bhash)``
+      and sorted by (bucket, id) within partitions.
+    - One ``mapInArrow`` pass walks the runs of equal keys; a run cut
+      by an Arrow batch boundary is carried into the next batch. Rows
+      of oversized buckets are dropped, runs of one row pair nothing.
+    - In-run pairs are vectorized in blocks (``_PAIR_BLOCK``). A pair
+      is kept only in the first band whose kept bucket holds both
+      documents: equal bucket keys in an earlier band, unless that
+      bucket is oversized, mean an earlier run owns it — so there is no
+      global ``distinct``. Then ``est_jaccard`` (equal slots /
+      ``num_hashes``) cuts pairs under ``min_est``.
+    - Verification: distinct common shingle hashes over ``size(sa) +
+      size(sb) - common``, in float64 — the same IEEE value Spark's
+      ``size(array_intersect)`` formula gives. Common counts come from
+      a run's Gram matrix (`_run_incidence`) in runs of ``_GRAM_RUN``
+      rows or more, from incidence probes (`_common_counts`) across
+      the smaller runs."""
+    import pyarrow as pa
+    import pyspark.sql.types as T
+
+    verify = threshold is not None
+    banded = _banded(frame)
+    over: dict[int, list[int]] = {}
+    for r in (_bucket_sizes(banded).filter(F.col("_n") > max_bucket)
+              .select("_band", "_bhash").collect()):
+        over.setdefault(r[0], []).append(r[1])
+    over_keys = {b: np.asarray(h, dtype=np.int64) for b, h in over.items()}
+    # the skew cap is never silent: the count comes from the aggregate
+    # above, the size distribution from the audit it names
     log.info(
-        "minhash_lsh_candidates: skew cap max_bucket=%d active — "
-        "oversized buckets are dropped; run lsh_skew_stats() to count "
-        "them", max_bucket)
-    buckets = grouped.filter(F.size("_ms") <= max_bucket)
-    pair = F.explode(F.flatten(F.transform(
-        F.col("_ms"),
-        lambda x, i: F.transform(
-            F.slice(F.col("_ms"), i + F.lit(2), F.size(F.col("_ms"))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b"))),
-    ))).alias("_p")
-    # Near-exact duplicate clusters collide in EVERY band, producing
-    # ``bands`` identical member-sets whose quadratic pair explosions
-    # the final distinct would then have to dedup. Collapsing to
-    # DISTINCT member-sets first (the arrays are sorted, so equality
-    # is set equality) cuts the explosion by up to the band count on
-    # template-heavy corpora and never changes the distinct pair set.
-    pairs = (buckets.select("_ms").distinct()
-             .select(pair)
-             .select("_p.id_a", "_p.id_b")
-             .distinct())
-    matches = F.aggregate(
-        F.zip_with("_siga", "_sigb", lambda a, b: (a == b).cast("int")),
-        F.lit(0), lambda acc, v: acc + v)
-    out = (pairs
-           .join(sig.select(F.col("_id").alias("id_a"),
-                            F.col("_sig").alias("_siga")), "id_a")
-           .join(sig.select(F.col("_id").alias("id_b"),
-                            F.col("_sig").alias("_sigb")), "id_b")
-           .select("id_a", "id_b",
-                   (matches / F.lit(num_hashes)).alias("est_jaccard")))
-    if min_est > 0:
-        out = out.filter(F.col("est_jaccard") >= min_est)
-    return out
+        "%s: skew cap max_bucket=%d dropped %d oversized bucket(s); "
+        "lsh_skew_stats() gives the bucket-size distribution",
+        caller, max_bucket, sum(len(h) for h in over.values()))
+
+    cols = ["_band", "_bhash", "_id", "_bk", "_sig"] + (
+        ["_sh"] if verify else [])
+    # an explicit partition count: AQE would otherwise coalesce the
+    # wide band rows into fewer scan tasks than there are cores
+    spread = frame.sparkSession.sparkContext.defaultParallelism
+    rows = (banded.select(*cols).repartition(spread, "_band", "_bhash")
+            .sortWithinPartitions("_band", "_bhash", "_id"))
+    id_type = frame.schema["_id"].dataType
+    value = "jaccard" if verify else "est_jaccard"
+    schema = T.StructType([T.StructField("id_a", id_type),
+                           T.StructField("id_b", id_type),
+                           T.StructField(value, T.DoubleType())])
+    earlier = np.arange(bands)
+
+    def kept_mask(bk: np.ndarray) -> "np.ndarray | None":
+        # per row and band: is that band's bucket within the cap?
+        if not over_keys:
+            return None
+        kept = np.ones(bk.shape, dtype=bool)
+        for b, h in over_keys.items():
+            kept[:, b] = ~np.isin(bk[:, b], h)
+        return kept
+
+    def matrix(col, width: int) -> np.ndarray:
+        return col.flatten().to_numpy().reshape(-1, width)
+
+    def emit(b):
+        band = b.column(0).to_numpy()
+        bhash = b.column(1).to_numpy()
+        n = b.num_rows
+        starts = np.flatnonzero(np.concatenate(
+            [[True], (band[1:] != band[:-1]) | (bhash[1:] != bhash[:-1])]))
+        lens = np.diff(np.append(starts, n))
+        multi = lens >= 2
+        if not multi.any():
+            return
+        ids, bk = b.column(2), matrix(b.column(3), bands)
+        sig = _unpacked(b.column(4))[0].reshape(n, num_hashes)
+        kept = kept_mask(bk)
+        starts, lens = starts[multi], lens[multi]
+        big = lens >= (_GRAM_RUN if verify else n + 1)
+        if verify:
+            vals, offs = _unpacked(b.column(5))
+
+        def groups():
+            # the small runs together, then each large run on its own
+            yield starts[~big], lens[~big], None
+            for i in np.flatnonzero(big):
+                yield (starts[i:i + 1], lens[i:i + 1], _run_incidence(
+                    vals, offs, starts[i], starts[i] + lens[i]))
+
+        for st, ln, inc in groups():
+            for ia, ib in _run_pairs(st, ln):
+                dup = (bk[ia] == bk[ib]) & (earlier < band[ia][:, None])
+                if kept is not None:
+                    dup &= kept[ia]
+                own = ~dup.any(axis=1)
+                ia, ib = ia[own], ib[own]
+                est = (sig[ia] == sig[ib]).sum(axis=1) / num_hashes
+                keep = est >= min_est
+                ia, ib, val = ia[keep], ib[keep], est[keep]
+                if verify and len(ia):
+                    if inc is None:
+                        common = _common_counts(vals, offs, ia, ib)
+                    else:
+                        lo, hi = ia[0] - st[0], ia[-1] - st[0] + 1
+                        gram = inc[lo:hi] @ inc[lo:].T
+                        common = gram[ia - st[0] - lo,
+                                      ib - st[0] - lo].astype(np.int64)
+                    val = common / (offs[ia + 1] - offs[ia]
+                                    + offs[ib + 1] - offs[ib] - common)
+                    keep = val >= threshold
+                    ia, ib, val = ia[keep], ib[keep], val[keep]
+                if len(ia):
+                    yield pa.RecordBatch.from_arrays(
+                        [ids.take(pa.array(ia)), ids.take(pa.array(ib)),
+                         pa.array(val)], names=schema.names)
+
+    def scan(batches):
+        tail = None
+        for b in batches:
+            if over_keys and b.num_rows:
+                bk = matrix(b.column(3), bands)
+                own = kept_mask(bk)[np.arange(b.num_rows),
+                                    b.column(0).to_numpy()]
+                b = b.filter(pa.array(own))
+            if tail is not None:
+                b = pa.RecordBatch.from_arrays(
+                    [pa.concat_arrays([tail.column(i), b.column(i)])
+                     for i in range(b.num_columns)], names=b.schema.names)
+            if b.num_rows == 0:
+                continue
+            band = b.column(0).to_numpy()
+            bhash = b.column(1).to_numpy()
+            cut = np.flatnonzero((band[1:] != band[:-1])
+                                 | (bhash[1:] != bhash[:-1]))
+            last = int(cut[-1]) + 1 if len(cut) else 0
+            yield from emit(b.slice(0, last))
+            tail = b.slice(last)
+        if tail is not None:
+            yield from emit(tail)
+
+    return rows.mapInArrow(scan, schema)
 
 
 def minhash_neardup_pairs(
@@ -505,10 +717,14 @@ def minhash_neardup_pairs(
     same parameters (asserted by the pure-Python differential oracle in
     tests/test_differential_dedup.py), restructured for cost:
 
-    - Union cardinality is ``|A|+|B|-|A∩B|`` over the (distinct)
-      shingle-hash arrays — ``array_union`` materializes a
-      corpus-width array per pair just to take its size, roughly
-      doubling verify cost.
+    - Candidates are verified inside their band bucket: the bucket scan
+      of ``minhash_lsh_candidates`` carries each document's shingle
+      hashes next to its signature, so a pair that survives ``min_est``
+      is verified where it is formed — no pair is joined to the
+      shingle arrays and no ``array_intersect`` runs.
+    - ``jaccard`` is distinct common shingle hashes over
+      ``|A|+|B|-|A∩B|``, in float64: the value ``ngram_jaccard_pairs``
+      computes JVM-side, bit for bit.
     - Signatures and shingle hashes come from the same Arrow kernel
       (`_minhash_frame`) the two-stage composition uses, so the
       candidate set and the verified shingle sets are bit-identical
@@ -516,14 +732,12 @@ def minhash_neardup_pairs(
 
     Scale shape: ONE kernel pass over the corpus emits both the
     signatures and the shingle hashes; that frame is persisted
-    (MEMORY_AND_DISK, released at return), the banding reads its
-    signatures and the verify join reads its shingle hashes back — the
-    cost is pinning O(total distinct shingles) longs instead of
-    re-hashing the candidate documents in a second pass. Banding
-    shuffles narrow (band, bhash, id) rows, pair dedup shuffles
-    (long, long) rows, and nothing is unconditionally broadcast — AQE
-    picks broadcast sides from runtime sizes. The ``max_bucket`` cap
-    is announced as in ``minhash_lsh_candidates`` and audited by
+    (MEMORY_AND_DISK, released at return). One narrow aggregate over
+    its bucket keys finds the buckets over ``max_bucket``, then one
+    shuffle carries each document's (id, bucket keys, signature,
+    shingle hashes) once per band to the sorted bucket scan — each
+    pair is formed, owned and verified in one place. The cap is
+    announced as in ``minhash_lsh_candidates`` and audited by
     ``lsh_skew_stats``. A NULL id or text raises ``ValueError``.
 
     Executes EAGERLY (localCheckpoint at return) so every pinned
@@ -531,29 +745,13 @@ def minhash_neardup_pairs(
     ``min_est``/``threshold``, not post-hoc filters."""
     from pyspark.storagelevel import StorageLevel
     base = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    sh = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    pins: list[DataFrame] = [sh]
-    cands = (_candidates_from_sigs(sh.select("_id", "_sig"), num_hashes,
-                                   bands, min_est, max_bucket, pins)
-             .select("id_a", "id_b").persist())
-    pins.append(cands)
-    # the verify joins filter the pinned corpus-wide frame to candidate
-    # ids on their own (a separate semi-join prefilter pass measured
-    # ~0.9s of pure overhead at sf0.1: it rewrites nothing the pair
-    # joins don't already do)
-    j = (cands
-         .join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sa")), "id_a")
-         .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sb")), "id_b"))
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    uni = F.size(F.col("sa")) + F.size(F.col("sb")) - inter
-    out = (j.select("id_a", "id_b", (inter / uni).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
-    # near-dup output is bounded; materialize and release every pin so
+    sh = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes,
+                        bands=bands).persist(StorageLevel.MEMORY_AND_DISK)
+    # near-dup output is bounded; materialize and release the pin so
     # repeated invocations don't accumulate pinned storage
-    out = out.localCheckpoint()
-    for p in pins:
-        p.unpersist(blocking=False)
+    out = _bucket_pairs(sh, "minhash_neardup_pairs", num_hashes, bands,
+                        min_est, max_bucket, threshold).localCheckpoint()
+    sh.unpersist(blocking=False)
     return out
 
 
@@ -641,15 +839,15 @@ def lsh_skew_stats(
 ) -> DataFrame:
     """Deterministic audit for the LSH skew cap: per-band bucket-size
     distribution and how many buckets ``minhash_lsh_candidates`` (same
-    parameters) would drop. One aggregate job over the banding stream —
-    the count behind the cap that ``minhash_lsh_candidates`` and
-    ``minhash_neardup_pairs`` announce in the log; run it before
-    committing to a parameter choice on a new corpus."""
+    parameters) would drop. One aggregate over the same banding and
+    bucket sizes (`_banded`, `_bucket_sizes`) the bucket scan of
+    ``minhash_lsh_candidates`` and ``minhash_neardup_pairs`` counts its
+    dropped buckets from, so ``n_dropped`` is the number their log line
+    states; run it before committing to a parameter choice on a new
+    corpus."""
     sig = _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
-                         keep_sh=False)
-    sizes = (_banded(sig, num_hashes, bands).groupBy("_band", "_bhash")
-             .agg(F.count(F.lit(1)).alias("_n")))
-    return sizes.agg(
+                         keep_sh=False, bands=bands)
+    return _bucket_sizes(_banded(sig)).agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum((F.col("_n") >= 2).cast("long")).alias("n_pairable"),
         F.sum((F.col("_n") > max_bucket).cast("long")).alias("n_dropped"),

@@ -1093,9 +1093,11 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # templated corpora produce enormous est>=0.2 candidate sets, and the
     # exact-shingle verify is the expensive stage — prefilter tightly.
     # The fused pipeline's shingle hashes and signatures come from one
-    # Arrow kernel pass (dedup._minhash_frame; output identical to the
-    # two-stage minhash_lsh_candidates + ngram_jaccard_pairs
-    # composition, asserted in tests/test_differential_dedup.py).
+    # Arrow kernel pass (dedup._minhash_frame), and its candidates are
+    # estimated and verified inside their band buckets by one sorted
+    # Arrow scan (dedup._bucket_pairs) — no pair join; output identical
+    # to the two-stage minhash_lsh_candidates + ngram_jaccard_pairs
+    # composition, asserted in tests/test_differential_dedup.py.
     # hash_fn='md5' (the portable 60-bit md5-prefix hash) so the WHOLE
     # pipeline — shingle hash, affine min-hash, banding, est filter,
     # exact verify — is replayed by the DuckDB oracle below; the xxh64

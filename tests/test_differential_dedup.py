@@ -13,6 +13,7 @@ import random
 import re
 from collections import defaultdict
 
+import numpy as np
 import pytest
 
 from _xxh64 import xxh64_signed, xxh64_slot_signed
@@ -74,7 +75,8 @@ def py_signature(text: str, params, k: int = 5, hash_fn: str = "xxh64"):
 def py_band_hashes(sig, bands: int = 8, hash_fn: str = "xxh64"):
     # xxh64 mode folds the joined band slice to a long; md5-portable
     # mode keys buckets on the RAW joined slice (bucket identity is all
-    # that matters — mirrors dedup._candidates_from_sigs._band_key)
+    # that matters — the engine folds each band's slot bytes instead,
+    # dedup._bucket_keys)
     rows = len(sig) // bands
     fold = xxh64_signed if hash_fn == "xxh64" else (lambda s: s)
     return [fold(",".join(str(sig[b * rows + r]) for r in range(rows)))
@@ -320,6 +322,148 @@ def test_minhash_md5_and_xxh64_verified_pairs_agree(spark):
     only = (set(md5) ^ set(xx))
     assert all((md5 | xx)[p] < 0.9 for p in only), only
     assert len(common) >= 0.9 * len(set(md5) | set(xx))
+
+
+def _lsh_buckets(docs, hash_fn, max_bucket):
+    """The Python mirror's band buckets: the pairs of every dropped
+    (over ``max_bucket``) bucket, and per pair the bands of the kept
+    buckets holding it."""
+    params = mh_params(32)
+    buckets = defaultdict(list)
+    for did, t in docs:
+        sig = py_signature(t, params, hash_fn=hash_fn)
+        for b, bh in enumerate(py_band_hashes(sig, hash_fn=hash_fn)):
+            buckets[(b, bh)].append(did)
+    dropped, kept = [], defaultdict(set)
+    for (b, _), members in buckets.items():
+        ms = sorted(members)
+        pairs = [(x, y) for i, x in enumerate(ms) for y in ms[i + 1:]]
+        if len(ms) > max_bucket:
+            dropped.append((b, pairs))
+        else:
+            for p in pairs:
+                kept[p].add(b)
+    return dropped, kept
+
+
+@pytest.mark.parametrize("hash_fn", HASH_FNS)
+def test_minhash_cap_keeps_pairs_of_later_kept_bands(spark, hash_fn):
+    """Near-duplicate clusters of four under ``max_bucket=2``: some
+    band buckets are dropped. A pair of a dropped bucket that also
+    shares a LATER kept bucket must still come out (it is owned by
+    that later band); a pair that shares only dropped buckets must
+    not. Both entry points equal the Python mirror, with integer ids
+    and with string ids, whose ``id_a < id_b`` is Spark's string
+    order ('d10' < 'd9', and 'é' after every ASCII letter)."""
+    docs = make_corpus(n_base=4, variants=3, seed=1)
+    dropped, kept = _lsh_buckets(docs, hash_fn, max_bucket=2)
+    rescued = {p for b, ps in dropped for p in ps
+               if any(k > b for k in kept.get(p, ()))}
+    lost = {p for _, ps in dropped for p in ps if p not in kept}
+    assert rescued and lost  # the corpus exercises both cases
+    name = {did: f"{'é' if did % 5 == 0 else 'd'}{did}" for did, _ in docs}
+    for ids in ("long", "string"):
+        rows = docs if ids == "long" else [(name[d], t) for d, t in docs]
+        df = spark.createDataFrame(rows, f"doc_id {ids}, text string")
+        cands = D.minhash_lsh_candidates(df, max_bucket=2, hash_fn=hash_fn)
+        got = {(r["id_a"], r["id_b"]): r["est_jaccard"]
+               for r in cands.collect()}
+        exp = py_lsh_candidates(rows, max_bucket=2, hash_fn=hash_fn)
+        assert got == exp
+        assert all(a < b for a, b in got)
+        pairs = D.minhash_neardup_pairs(df, max_bucket=2, threshold=0.0,
+                                        hash_fn=hash_fn)
+        got = {(r["id_a"], r["id_b"]): r["jaccard"]
+               for r in pairs.collect()}
+        assert got == py_exact_jaccard(rows, exp, threshold=0.0,
+                                       hash_fn=hash_fn)
+        if ids == "long":
+            assert rescued <= set(got) and not lost & set(got)
+
+
+@pytest.mark.parametrize("hash_fn", HASH_FNS)
+def test_minhash_bucket_runs_straddle_arrow_batches(spark, hash_fn,
+                                                   monkeypatch):
+    """With Arrow batches of 2 rows, bucket runs are cut by batch
+    boundaries and carried into the next batch: candidates and verified
+    pairs equal the default-batch output, with and without a skew cap
+    that drops buckets. So do tiny pair and verify blocks, and every
+    run verified through its Gram matrix."""
+    df = _docs_df(spark, make_corpus(n_base=6, variants=3))
+
+    def run():
+        return [sorted(map(tuple, f().collect())) for f in (
+            lambda: D.minhash_lsh_candidates(df, max_bucket=3,
+                                             hash_fn=hash_fn),
+            lambda: D.minhash_neardup_pairs(df, min_est=0.3, threshold=0.4,
+                                            hash_fn=hash_fn),
+            lambda: D.minhash_neardup_pairs(df, max_bucket=3,
+                                            hash_fn=hash_fn))]
+
+    want = run()
+    assert all(want)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        assert run() == want
+    finally:
+        spark.conf.set(conf, old)
+    monkeypatch.setattr(D, "_PAIR_BLOCK", 5)
+    monkeypatch.setattr(D, "_VERIFY_PROBES", 300)
+    assert run() == want
+    monkeypatch.setattr(D, "_GRAM_RUN", 2)
+    assert run() == want
+
+
+def test_common_counts_match_set_intersections(monkeypatch):
+    """Both in-bucket verifiers count DISTINCT common values, as
+    ``size(array_intersect)`` does, also when a row repeats a value (a
+    shingle-hash collision): the probe path, halved down to single
+    pairs, and the Gram product of a run's incidence matrix."""
+    rng = np.random.default_rng(5)
+    rows = [rng.integers(0, 40, rng.integers(1, 30)) for _ in range(12)]
+    rows[3] = np.array([7, 7, 7, 9])
+    vals = np.concatenate(rows)
+    offs = np.concatenate([[0], np.cumsum([len(r) for r in rows])])
+    ia, ib = np.triu_indices(len(rows), 1)
+    want = [len(set(rows[a]) & set(rows[b])) for a, b in zip(ia, ib)]
+    assert list(D._common_counts(vals, offs, ia, ib)) == want
+    inc = D._run_incidence(vals, offs, 0, len(rows))
+    assert list((inc @ inc.T)[ia, ib].astype(int)) == want
+    monkeypatch.setattr(D, "_VERIFY_CELLS", 0)
+    assert list(D._common_counts(vals, offs, ia, ib)) == want
+    monkeypatch.setattr(D, "_GRAM_CELLS", 0)
+    assert D._run_incidence(vals, offs, 0, len(rows)) is None
+
+
+def test_minhash_degenerate_inputs(spark):
+    """An empty corpus and a one-document corpus give empty pair frames
+    with the usual columns and types; fuzzy decontamination returns one
+    clean row per train document (none for an empty train set), and a
+    one-document train set against itself is contaminated."""
+    schema = "doc_id long, text string"
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame([(1, "a single short document")], schema)
+    pair_cols = ["id_a bigint", "id_b bigint"]
+    for df in (empty, one):
+        for hf in HASH_FNS:
+            cands = D.minhash_lsh_candidates(df, hash_fn=hf)
+            pairs = D.minhash_neardup_pairs(df, hash_fn=hf)
+            assert [f"{c} {t}" for c, t in cands.dtypes] == \
+                pair_cols + ["est_jaccard double"]
+            assert [f"{c} {t}" for c, t in pairs.dtypes] == \
+                pair_cols + ["jaccard double"]
+            assert cands.collect() == [] and pairs.collect() == []
+    fuzzy_types = [("doc_id", "bigint"), ("max_eval_jaccard", "double"),
+                   ("n_eval_matches", "bigint"), ("contaminated", "boolean")]
+    out = D.fuzzy_decontaminate(empty, empty)
+    assert out.dtypes == fuzzy_types and out.collect() == []
+    out = D.fuzzy_decontaminate(one, empty)
+    assert out.dtypes == fuzzy_types
+    assert [tuple(r) for r in out.collect()] == [(1, None, 0, False)]
+    assert [tuple(r) for r in D.fuzzy_decontaminate(one, one).collect()] \
+        == [(1, 1.0, 1, True)]
 
 
 @pytest.mark.parametrize("hash_fn", HASH_FNS)

@@ -130,11 +130,14 @@ def _dup_docs(spark):
 
 def test_lsh_cap_announced_by_default(spark, caplog):
     """The cap is announced at build time, naming its audit — never
-    silent."""
+    silent — and stating how many buckets it dropped."""
     with caplog.at_level(logging.INFO, logger="agensgraph_spark.pipeline.dedup"):
         D.minhash_lsh_candidates(_dup_docs(spark), max_bucket=2)
     assert any("skew cap" in r.getMessage()
                and "lsh_skew_stats" in r.getMessage()
+               for r in caplog.records)
+    # every band's bucket holds all 4 docs: 8 dropped
+    assert any("dropped 8 oversized" in r.getMessage()
                for r in caplog.records)
 
 

@@ -309,6 +309,38 @@ def test_minhash_signatures_single_exchange_no_python(spark):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_minhash_neardup_pairs_jobs_and_plan(spark, monkeypatch):
+    """The fused near-dup pipeline runs at most 7 Spark jobs (kernel
+    spread, oversized-bucket aggregate, band shuffle, bucket scan), and
+    the plan it materializes verifies pairs inside the bucket scan: no
+    join at all (so none on pair ids) and no ``array_intersect``."""
+    from pyspark.sql import DataFrame
+    from agensgraph_spark.pipeline import dedup as D
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plans = []
+    frame = type(docs)
+    checkpoint = frame.localCheckpoint
+
+    def recording(self, *a, **kw):
+        plans.append(physical(self))
+        return checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash-probe", "minhash-probe")
+    try:
+        out = D.minhash_neardup_pairs(docs, min_est=0.3, threshold=0.4,
+                                      hash_fn="md5")
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("minhash-probe")
+    assert isinstance(out, DataFrame) and out.count() > 0
+    assert 0 < len(jobs) <= 7, jobs
+    assert len(plans) == 1
+    assert "Join" not in plans[0] and "array_intersect" not in plans[0]
+    assert "MapInArrow scan(" in plans[0]
+
+
 def test_connected_components_small_graph_broadcasts(spark):
     """The driver union-find path must join its edge-bounded label map
     to the node universe as a BROADCAST (the universe side can be
