@@ -250,25 +250,6 @@ def _shingle_codes(
                np.asarray(offs, dtype=np.int64))
 
 
-def _packed(vals: np.ndarray, offs: np.ndarray):
-    """A binary Arrow array whose row i is ``vals[offs[i]:offs[i+1]]``
-    as little-endian int64 bytes."""
-    import pyarrow as pa
-    return pa.Array.from_buffers(pa.binary(), len(offs) - 1, [
-        None, pa.py_buffer((offs * 8).astype(np.int32)),
-        pa.py_buffer(np.ascontiguousarray(vals, dtype="<i8"))])
-
-
-def _unpacked(col) -> "tuple[np.ndarray, np.ndarray]":
-    """The int64 values and per-row value offsets of a `_packed`
-    column (zero-copy)."""
-    offs = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-        col.offset:col.offset + len(col) + 1]
-    vals = np.frombuffer(col.buffers()[2], dtype=np.uint8)[
-        offs[0]:offs[-1]].view("<i8")
-    return vals, (offs - offs[0]) // 8
-
-
 def _bucket_keys(sig: np.ndarray, bands: int) -> np.ndarray:
     """(n, bands) LSH bucket keys of (n, num_hashes) signatures: XXH64
     (seed 42) of each band's slot-slice bytes."""
@@ -288,15 +269,12 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
     ``num_hashes``-slot signature (kept when ``num_hashes`` > 0).
 
     With ``bands`` (the LSH paths) the frame also holds ``_bk``, the
-    document's ``bands`` bucket keys (`_bucket_keys`), and ``_sh`` and
-    ``_sig`` come `_packed` as binaries: one value per row crosses the
-    band shuffle, the sort and the bucket scan's Arrow transfer as a
-    byte copy, where an array pays per element. Bucket keys never reach
-    the output; only the grouping they induce matters, and the fold is
-    injective modulo negligible collisions, so an external oracle
-    grouping by the RAW slice forms the same buckets (md5-portable
-    parity is unaffected; asserted by the gate oracle and the md5
-    differential).
+    document's ``bands`` bucket keys (`_bucket_keys`). Bucket keys
+    never reach the output; only the grouping they induce matters, and
+    the fold is injective modulo negligible collisions, so an external
+    oracle grouping by the RAW slice forms the same buckets
+    (md5-portable parity is unaffected; asserted by the gate oracle and
+    the md5 differential).
 
     Shape: one spread repartition on the id (document corpora often
     arrive as few Parquet files; without it a handful of tasks would do
@@ -324,12 +302,11 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
               .repartition(spread, "_id")
               .select("_id", F.lower("_t").alias("_t")))
     longs = T.ArrayType(T.LongType(), containsNull=False)
-    packed = T.BinaryType() if bands else longs
     fields = [T.StructField("_id", base.schema["_id"].dataType)]
     if keep_sh:
-        fields.append(T.StructField("_sh", packed))
+        fields.append(T.StructField("_sh", longs))
     if num_hashes:
-        fields.append(T.StructField("_sig", packed))
+        fields.append(T.StructField("_sig", longs))
     if bands:
         fields.append(T.StructField("_bk", longs))
     names = [f.name for f in fields]
@@ -338,7 +315,6 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
         return pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)),
                                         pa.array(vals))
 
-    column = _packed if bands else lists
     cap = _CHUNK_SHINGLES
 
     def kernel(batches):
@@ -358,13 +334,13 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
                 cols = [ids.slice(lo, n)]
                 lo += n
                 if keep_sh:
-                    cols.append(column(h[code], offs))
+                    cols.append(lists(h[code], offs))
                 if num_hashes:
                     sig = np.empty((n, num_hashes), dtype=np.int64)
                     for i, v in enumerate(
                             _minhash_slots(h, hash_fn, num_hashes)):
                         sig[:, i] = np.minimum.reduceat(v[code], offs[:-1])
-                    cols.append(column(
+                    cols.append(lists(
                         sig.ravel(), np.arange(0, sig.size + 1, num_hashes)))
                 if bands:
                     cols.append(lists(_bucket_keys(sig, bands).ravel(),
@@ -457,12 +433,6 @@ _PAIR_BLOCK = 1 << 15
 # halved until both hold.
 _VERIFY_PROBES = 1 << 21
 _VERIFY_CELLS = 1 << 24
-# Runs of at least _GRAM_RUN rows whose float32 incidence matrix fits
-# in _GRAM_CELLS cells are verified by BLAS products of it (one row
-# block of the run's Gram matrix per pair block): a bucket of m
-# similar documents costs m² x U flops instead of m²/2 x |doc| probes.
-_GRAM_RUN = 32
-_GRAM_CELLS = 1 << 22
 
 
 def _run_pairs(starts: np.ndarray, lens: np.ndarray
@@ -532,22 +502,6 @@ def _common_counts(vals: np.ndarray, offs: np.ndarray, ia: np.ndarray,
     return ends - np.concatenate([[0], ends[:-1]])
 
 
-def _run_incidence(vals: np.ndarray, offs: np.ndarray, lo: int,
-                   hi: int) -> "np.ndarray | None":
-    """The 0/1 float32 (row x distinct value) incidence matrix of rows
-    ``[lo, hi)`` of the list column (``vals``, ``offs``), or None when
-    it would exceed ``_GRAM_CELLS``. Its Gram entries count distinct
-    common values exactly (integers below 2^24)."""
-    import pyarrow as pa
-    enc = pa.array(vals[offs[lo]:offs[hi]]).dictionary_encode()
-    if (hi - lo) * len(enc.dictionary) > _GRAM_CELLS:
-        return None
-    inc = np.zeros((hi - lo, len(enc.dictionary)), dtype=np.float32)
-    inc[np.repeat(np.arange(hi - lo), np.diff(offs[lo:hi + 1])),
-        enc.indices.to_numpy()] = 1
-    return inc
-
-
 def _bucket_pairs(frame: DataFrame, caller: str, num_hashes: int,
                   bands: int, min_est: float, max_bucket: int,
                   threshold: "float | None" = None) -> DataFrame:
@@ -572,10 +526,8 @@ def _bucket_pairs(frame: DataFrame, caller: str, num_hashes: int,
       ``num_hashes``) cuts pairs under ``min_est``.
     - Verification: distinct common shingle hashes over ``size(sa) +
       size(sb) - common``, in float64 — the same IEEE value Spark's
-      ``size(array_intersect)`` formula gives. Common counts come from
-      a run's Gram matrix (`_run_incidence`) in runs of ``_GRAM_RUN``
-      rows or more, from incidence probes (`_common_counts`) across
-      the smaller runs."""
+      ``size(array_intersect)`` formula gives; common counts come from
+      incidence probes (`_common_counts`) per pair block."""
     import pyarrow as pa
     import pyspark.sql.types as T
 
@@ -630,46 +582,31 @@ def _bucket_pairs(frame: DataFrame, caller: str, num_hashes: int,
         if not multi.any():
             return
         ids, bk = b.column(2), matrix(b.column(3), bands)
-        sig = _unpacked(b.column(4))[0].reshape(n, num_hashes)
+        sig = matrix(b.column(4), num_hashes)
         kept = kept_mask(bk)
-        starts, lens = starts[multi], lens[multi]
-        big = lens >= (_GRAM_RUN if verify else n + 1)
         if verify:
-            vals, offs = _unpacked(b.column(5))
-
-        def groups():
-            # the small runs together, then each large run on its own
-            yield starts[~big], lens[~big], None
-            for i in np.flatnonzero(big):
-                yield (starts[i:i + 1], lens[i:i + 1], _run_incidence(
-                    vals, offs, starts[i], starts[i] + lens[i]))
-
-        for st, ln, inc in groups():
-            for ia, ib in _run_pairs(st, ln):
-                dup = (bk[ia] == bk[ib]) & (earlier < band[ia][:, None])
-                if kept is not None:
-                    dup &= kept[ia]
-                own = ~dup.any(axis=1)
-                ia, ib = ia[own], ib[own]
-                est = (sig[ia] == sig[ib]).sum(axis=1) / num_hashes
-                keep = est >= min_est
-                ia, ib, val = ia[keep], ib[keep], est[keep]
-                if verify and len(ia):
-                    if inc is None:
-                        common = _common_counts(vals, offs, ia, ib)
-                    else:
-                        lo, hi = ia[0] - st[0], ia[-1] - st[0] + 1
-                        gram = inc[lo:hi] @ inc[lo:].T
-                        common = gram[ia - st[0] - lo,
-                                      ib - st[0] - lo].astype(np.int64)
-                    val = common / (offs[ia + 1] - offs[ia]
-                                    + offs[ib + 1] - offs[ib] - common)
-                    keep = val >= threshold
-                    ia, ib, val = ia[keep], ib[keep], val[keep]
-                if len(ia):
-                    yield pa.RecordBatch.from_arrays(
-                        [ids.take(pa.array(ia)), ids.take(pa.array(ib)),
-                         pa.array(val)], names=schema.names)
+            # a sliced list column's offsets index its unsliced values
+            sh = b.column(5)
+            vals, offs = sh.values.to_numpy(), sh.offsets.to_numpy()
+        for ia, ib in _run_pairs(starts[multi], lens[multi]):
+            dup = (bk[ia] == bk[ib]) & (earlier < band[ia][:, None])
+            if kept is not None:
+                dup &= kept[ia]
+            own = ~dup.any(axis=1)
+            ia, ib = ia[own], ib[own]
+            est = (sig[ia] == sig[ib]).sum(axis=1) / num_hashes
+            keep = est >= min_est
+            ia, ib, val = ia[keep], ib[keep], est[keep]
+            if verify and len(ia):
+                common = _common_counts(vals, offs, ia, ib)
+                val = common / (offs[ia + 1] - offs[ia]
+                                + offs[ib + 1] - offs[ib] - common)
+                keep = val >= threshold
+                ia, ib, val = ia[keep], ib[keep], val[keep]
+            if len(ia):
+                yield pa.RecordBatch.from_arrays(
+                    [ids.take(pa.array(ia)), ids.take(pa.array(ib)),
+                     pa.array(val)], names=schema.names)
 
     def scan(batches):
         tail = None

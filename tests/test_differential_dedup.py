@@ -387,8 +387,9 @@ def test_minhash_bucket_runs_straddle_arrow_batches(spark, hash_fn,
     """With Arrow batches of 2 rows, bucket runs are cut by batch
     boundaries and carried into the next batch: candidates and verified
     pairs equal the default-batch output, with and without a skew cap
-    that drops buckets. So do tiny pair and verify blocks, and every
-    run verified through its Gram matrix."""
+    that drops buckets — also when Spark hands Python large (64-bit
+    offset) string and binary types. So do tiny pair and verify
+    blocks."""
     df = _docs_df(spark, make_corpus(n_base=6, variants=3))
 
     def run():
@@ -402,39 +403,38 @@ def test_minhash_bucket_runs_straddle_arrow_batches(spark, hash_fn,
 
     want = run()
     assert all(want)
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "2")
+    confs = ("spark.sql.execution.arrow.maxRecordsPerBatch",
+             "spark.sql.execution.arrow.useLargeVarTypes")
+    old = [spark.conf.get(c) for c in confs]
     try:
+        spark.conf.set(confs[0], "2")
+        assert run() == want
+        spark.conf.set(confs[1], "true")
         assert run() == want
     finally:
-        spark.conf.set(conf, old)
+        for c, v in zip(confs, old):
+            spark.conf.set(c, v)
     monkeypatch.setattr(D, "_PAIR_BLOCK", 5)
     monkeypatch.setattr(D, "_VERIFY_PROBES", 300)
-    assert run() == want
-    monkeypatch.setattr(D, "_GRAM_RUN", 2)
     assert run() == want
 
 
 def test_common_counts_match_set_intersections(monkeypatch):
-    """Both in-bucket verifiers count DISTINCT common values, as
+    """The in-bucket verifier counts DISTINCT common values, as
     ``size(array_intersect)`` does, also when a row repeats a value (a
-    shingle-hash collision): the probe path, halved down to single
-    pairs, and the Gram product of a run's incidence matrix."""
+    shingle-hash collision), and reads rows through absolute offsets
+    (an Arrow list slice's view of its values): whole, and halved down
+    to single pairs."""
     rng = np.random.default_rng(5)
     rows = [rng.integers(0, 40, rng.integers(1, 30)) for _ in range(12)]
     rows[3] = np.array([7, 7, 7, 9])
-    vals = np.concatenate(rows)
-    offs = np.concatenate([[0], np.cumsum([len(r) for r in rows])])
+    vals = np.concatenate([[-1, -2, -3]] + rows)
+    offs = 3 + np.concatenate([[0], np.cumsum([len(r) for r in rows])])
     ia, ib = np.triu_indices(len(rows), 1)
     want = [len(set(rows[a]) & set(rows[b])) for a, b in zip(ia, ib)]
     assert list(D._common_counts(vals, offs, ia, ib)) == want
-    inc = D._run_incidence(vals, offs, 0, len(rows))
-    assert list((inc @ inc.T)[ia, ib].astype(int)) == want
     monkeypatch.setattr(D, "_VERIFY_CELLS", 0)
     assert list(D._common_counts(vals, offs, ia, ib)) == want
-    monkeypatch.setattr(D, "_GRAM_CELLS", 0)
-    assert D._run_incidence(vals, offs, 0, len(rows)) is None
 
 
 def test_minhash_degenerate_inputs(spark):
