@@ -5,17 +5,47 @@ GDS-style library; these are extensions, like streaming).
 Operators take a plain (src, dst) edge DataFrame — the compiler's edge
 scans, a label snapshot, or any relational projection — so they compose
 with both the Cypher layer and raw tables. All of them are expressed as
-joins + aggregates (Catalyst-optimizable, AQE-broadcastable); pagerank
-truncates its lineage every 6 rounds so user-supplied iteration counts
-stay bounded.
+joins + aggregates (Catalyst-optimizable, AQE-broadcastable). Every
+iterative operator runs its rounds through `_superstep.supersteps`,
+which owns when and how lineage is truncated and what a spent round
+budget does, so user-supplied iteration counts keep the plan bounded.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators import _superstep as S
 from agensgraph_spark.pipeline.dedup import _driver_edges, _driver_label_frame
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The symmetrized, self-loop-free, distinct (src, dst) edge frame,
+    lazily truncated: its callers join it once per round, and
+    un-truncated each reference re-inlines the union+distinct tree."""
+    return S.truncate(
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst")))
+        .filter(F.col("src") != F.col("dst")).distinct(), eager=False)
+
+
+def _canonical(edges: DataFrame) -> DataFrame:
+    """The undirected edge set as distinct (a, b) pairs with a < b, no
+    self-loops, lazily truncated: its callers read it several times."""
+    return S.truncate(edges.select(F.least("src", "dst").alias("a"),
+                                   F.greatest("src", "dst").alias("b"))
+                      .filter(F.col("a") != F.col("b")).distinct(),
+                      eager=False)
+
+
+def _vertex_ids(vertices: DataFrame) -> DataFrame:
+    """The distinct ``id`` universe, lazily truncated: its callers read
+    it more than once (every round, or the universe and |V|)."""
+    return S.truncate(vertices.select("id").distinct(), eager=False)
 
 
 def degree_stats(
@@ -56,36 +86,39 @@ def pagerank(
     Returns (id, pr double).
 
     Lineage guard: the plan doubles per iteration (pr feeds both the
-    contribution join and the rank update), so every 6th round the rank
-    frame is localCheckpoint-truncated — the same generational
-    discipline as the path operators (operators/paths.py) and
-    connected_components. Short runs (iters <= 6, including the
-    oracle-replayed default of 3) never checkpoint, keeping their plan
-    a pure closed-form join chain."""
-    # r14: verts and the degree-annotated edge relation are shared by
-    # every iteration (and verts additionally by each rank update) —
-    # lazy localCheckpoint rewrites each to ONE LogicalRDD computed at
-    # the first action instead of re-inlining the scan+join subtree
-    # once per reference (same truncation as harmonic_sampled; no
-    # extra job, values unchanged)
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("_deg"))
-    # (src, dst, src out-degree): static across iterations
-    ed = (edges.join(deg.withColumnRenamed("id", "src"), "src")
-          .localCheckpoint(eager=False))
-    pr = verts.select("id", F.lit(1.0).alias("pr"))
-    for i in range(iters):
-        contrib = (ed.join(pr.withColumnRenamed("id", "src"), "src")
-                   .groupBy(F.col("dst").alias("id"))
-                   .agg(F.sum(F.col("pr") / F.col("_deg")).alias("_c")))
-        pr = (verts.join(contrib, "id", "left")
-              .select("id",
-                      (F.lit(1.0 - damping)
-                       + F.lit(damping) * F.coalesce("_c", F.lit(0.0))).alias("pr")))
-        if (i + 1) % 6 == 0 and (i + 1) < iters:
-            pr = pr.localCheckpoint()
-    return pr
+    contribution join and the rank update), so the rank frame is a
+    sparse superstep: runs of up to ``_superstep._CHECKPOINT_EVERY``
+    rounds (the oracle-replayed default of 3 among them) keep their
+    plan a pure closed-form join chain, longer ones are truncated
+    every that many rounds."""
+    verts = _vertex_ids(vertices)
+    ed = _degree_edges(edges)
+
+    def step(pr, i, cut):
+        return cut(verts.join(_contributions(ed, pr, "pr"), "id", "left")
+                   .select("id",
+                           (F.lit(1.0 - damping)
+                            + F.lit(damping) * F.coalesce("_c", F.lit(0.0))
+                            ).alias("pr")))
+
+    return S.supersteps("pagerank", "iters", iters,
+                        verts.select("id", F.lit(1.0).alias("pr")), step,
+                        sparse=True)
+
+
+def _degree_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst, _deg): each edge with its source's out-degree, static
+    across rank rounds and lazily truncated (every round joins it)."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
+    return S.truncate(edges.join(deg, "src"), eager=False)
+
+
+def _contributions(ed: DataFrame, rank: DataFrame, col: str) -> DataFrame:
+    """(id, _c): the rank each vertex receives, the sum over its
+    in-edges of the source's ``col`` over its out-degree."""
+    return (ed.join(rank.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col(col) / F.col("_deg")).alias("_c")))
 
 
 def label_propagation(
@@ -99,33 +132,33 @@ def label_propagation(
     deterministic, so a fixed ``iters`` is replayable as chained SQL
     CTEs, like pagerank); isolated vertices keep their own label.
     Per round one (neighbor, label) equi-join + a grouped count + a
-    per-vertex top-1 window — all narrow rows; lineage truncated every
-    6 rounds like the sibling iterative operators. The symmetrized
-    edge relation is referenced EVERY round, so it is lazily
-    localCheckpoint-truncated once (one LogicalRDD, computed at first
-    action) instead of re-inlining its union+distinct subtree per
-    round (the r14 shared-subtree discipline from pagerank/harmonic).
-    Returns (id, community)."""
+    per-vertex top-1 window — all narrow rows; a sparse superstep like
+    pagerank. The symmetrized edge relation (self-loops kept) is
+    referenced EVERY round, so it is lazily truncated once (one
+    LogicalRDD, computed at first action) instead of re-inlining its
+    union+distinct subtree per round. Returns (id, community)."""
     from pyspark.sql import Window
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .distinct().localCheckpoint(eager=False))
+    sym = S.truncate(edges.select("src", "dst")
+                     .unionByName(edges.select(F.col("dst").alias("src"),
+                                               F.col("src").alias("dst")))
+                     .distinct(), eager=False)
     verts = vertices.select("id").distinct()
-    lab = verts.select("id", F.col("id").alias("label"))
-    for i in range(iters):
+    w = Window.partitionBy("id").orderBy(F.col("n").desc(),
+                                         F.col("label").asc())
+
+    def step(lab, i, cut):
         freq = (sym.join(lab.select(F.col("id").alias("src"), "label"), "src")
                 .groupBy(F.col("dst").alias("id"), "label")
                 .agg(F.count(F.lit(1)).alias("n")))
-        w = Window.partitionBy("id").orderBy(F.col("n").desc(),
-                                             F.col("label").asc())
         modal = (freq.withColumn("_rn", F.row_number().over(w))
                  .filter(F.col("_rn") == 1)
                  .select("id", F.col("label").alias("_m")))
-        lab = (lab.join(modal, "id", "left")
-               .select("id", F.coalesce("_m", "label").alias("label")))
-        if (i + 1) % 6 == 0 and (i + 1) < iters:
-            lab = lab.localCheckpoint()
+        return cut(lab.join(modal, "id", "left")
+                   .select("id", F.coalesce("_m", "label").alias("label")))
+
+    lab = S.supersteps("label_propagation", "iters", iters,
+                       verts.select("id", F.col("id").alias("label")), step,
+                       sparse=True)
     return lab.select("id", F.col("label").alias("community"))
 
 
@@ -164,15 +197,9 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     (``src``/``dst``, duplicates/self-loops tolerated); see
     `_oriented_triangles` for the degree-oriented enumeration bound.
     Returns (id, n_triangles), zero rows omitted."""
-    # und feeds the degree aggregate (both sides), the rank join and
-    # the wedge-closure join — 4 references; lazy localCheckpoint
-    # truncates it to ONE LogicalRDD computed at first action (k_truss
-    # already checkpoints its per-round edge set for the same reason)
-    und = (edges.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .filter(F.col("a") != F.col("b")).distinct()
-           .localCheckpoint(eager=False))
-    tri = _oriented_triangles(und)
+    # the canonical edges feed the degree aggregate (both sides), the
+    # rank join and the wedge-closure join — 4 references
+    tri = _oriented_triangles(_canonical(edges))
     corners = F.explode(F.array("p", "q1", "q2")).alias("id")
     return tri.select(corners).groupBy("id").agg(
         F.count(F.lit(1)).alias("n_triangles"))
@@ -198,7 +225,7 @@ def k_truss(
     surviving edge's triangles, drop edges below support k-2, repeat
     until the edge set stops changing. Converges in at most |E|
     rounds, in practice a handful; the surviving edge/support frames
-    are localCheckpoint-truncated per generation and every shuffle
+    are truncated per generation and every shuffle
     carries narrow (id, id) or (edge, count) rows. Aggregation inside
     the loop puts this outside recursive-CTE SQL, but a FIXED round
     count replays it (idempotent at the fixpoint) — same oracle
@@ -222,52 +249,34 @@ def k_truss(
     the full enumeration. Same values either way — the fixpoint and
     the final supports are properties of the graph, pinned by the
     incremental-vs-full differential test."""
-    import logging
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    und = (edges.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .filter(F.col("a") != F.col("b")).distinct()
-           .localCheckpoint())
-    n_before = und.count()
+    und = _canonical(edges)
 
     def full_support(cur: DataFrame) -> DataFrame:
-        tri = _oriented_triangles(cur)
-        tri_edges = tri.select(
-            F.explode(F.array(
-                F.struct(F.least("p", "q1").alias("a"),
-                         F.greatest("p", "q1").alias("b")),
-                F.struct(F.least("p", "q2").alias("a"),
-                         F.greatest("p", "q2").alias("b")),
-                F.struct(F.least("q1", "q2").alias("a"),
-                         F.greatest("q1", "q2").alias("b")))).alias("e")) \
-            .select("e.a", "e.b")
+        tri_edges = _oriented_triangles(cur).select(F.explode(F.array(*[
+            F.struct(F.least(x, y).alias("a"), F.greatest(x, y).alias("b"))
+            for x, y in (("p", "q1"), ("p", "q2"), ("q1", "q2"))])).alias("e")
+        ).select("e.a", "e.b")
         agg = tri_edges.groupBy("a", "b").agg(
             F.count(F.lit(1)).alias("support"))
         return (cur.join(agg, ["a", "b"], "left")
                 .select("a", "b",
                         F.coalesce("support", F.lit(0)).alias("support")))
 
-    def _adj(cur: DataFrame) -> DataFrame:
-        return (cur.select(F.col("a").alias("v"), F.col("b").alias("w"))
-                .unionByName(cur.select(F.col("b").alias("v"),
-                                        F.col("a").alias("w"))))
-
-    def _common_neighbor_support(cand: DataFrame, cand_hinted: DataFrame,
-                                 cur: DataFrame) -> DataFrame:
-        """Exact support of each ``cand`` edge (a, b) in the graph
-        ``cur``: count of c adjacent to both endpoints. Work is
-        bounded by sum of deg(a) over candidates — the candidate set
-        is peel-sized, never corpus-sized (the caller broadcast-hints
-        it when its exact count is driver-known small; checkpointed
-        inputs otherwise carry no size estimate and the planner falls
-        back to shuffling the full edge set on every round). The hinted
-        copy drives the fan join only: on the preserved side of the
-        final left join Spark would drop the hint with a warning."""
-        fan = cand_hinted.join(_adj(cur).withColumnRenamed("v", "a"), "a") \
-                  .select("a", "b", F.col("w").alias("c")) \
-                  .filter(F.col("c") != F.col("b")) \
-                  .localCheckpoint(eager=False)
+    def closed_wedges(cand: DataFrame, g: DataFrame, cut) -> DataFrame:
+        """(a, b, c) for each ``cand`` edge (a, b) and each c adjacent
+        to a with (b, c) an edge of ``g``: the triangles of ``g``
+        through the candidates. Work is bounded by sum of deg(a) over
+        candidates — the candidate set is peel-sized, never
+        corpus-sized (the caller broadcast-hints it when its exact
+        count is driver-known small; checkpointed inputs otherwise
+        carry no size estimate and the planner falls back to shuffling
+        the full edge set on every round)."""
+        adj = (g.select(F.col("a"), F.col("b").alias("c"))
+               .unionByName(g.select(F.col("b").alias("a"),
+                                     F.col("a").alias("c"))))
+        fan = cut(cand.join(adj, "a").filter(F.col("c") != F.col("b")))
         # the wedge fan (|cand| x deg) drives the closure join: its
         # exact count is one cheap map-only job, and a driver-known
         # small fan broadcast turns the closure from a full-edge-set
@@ -275,15 +284,9 @@ def k_truss(
         # 10-edge candidate set — checkpointed inputs carry no size
         # estimate) into a map-only hash probe of the edge frame
         fan = _maybe_bcast(fan, fan.count())
-        closed = fan.join(
-            cur.select(F.col("a").alias("x"), F.col("b").alias("y")),
-            (F.least("b", "c") == F.col("x"))
-            & (F.greatest("b", "c") == F.col("y")))
-        counted = closed.groupBy("a", "b").agg(
-            F.count(F.lit(1)).alias("support"))
-        return (cand.join(counted, ["a", "b"], "left")
-                .select("a", "b",
-                        F.coalesce("support", F.lit(0)).alias("support")))
+        return fan.join(g.select(F.col("a").alias("x"), F.col("b").alias("y")),
+                        (F.least("b", "c") == F.col("x"))
+                        & (F.greatest("b", "c") == F.col("y")))
 
     # broadcast the peel-sized frames only when their EXACT row count
     # is driver-known under this bound (~32 MB of long pairs) — a
@@ -294,57 +297,52 @@ def k_truss(
     def _maybe_bcast(df: DataFrame, n: int) -> DataFrame:
         return F.broadcast(df) if n <= bcast_bound else df
 
-    supp = full_support(und).localCheckpoint(eager=False)
-    for _ in range(max_iters):
-        # keep is a plain filter over the supp checkpoint — giving it
-        # its own checkpoint would pay one extra stage materialization
-        # per round (an AQE plan's RDD construction executes its
-        # non-result stages eagerly)
+    def peel(st, i, cut):
+        # st: (support frame of the surviving edges, their count, those
+        # edges). keep is a plain filter over the supp checkpoint —
+        # giving it its own checkpoint would pay one extra stage
+        # materialization per round (an AQE plan's RDD construction
+        # executes its non-result stages eagerly)
+        supp, n_before, und = st
         keep = supp.filter(F.col("support") >= k - 2)
         n_after = keep.count()
-        if n_after == n_before or n_after == 0:
-            return keep.select(F.col("a").alias("src"),
-                               F.col("b").alias("dst"), "support")
+        if n_after in (n_before, 0):
+            return keep, n_after, und  # the fixpoint: nothing to rebuild
         n_removed = n_before - n_after
         removed = _maybe_bcast(
             supp.filter(F.col("support") < k - 2).select("a", "b"),
             n_removed)
         cur = keep.select("a", "b")
         if n_removed > _INCREMENTAL_PEEL * n_before:
-            supp = full_support(cur).localCheckpoint(eager=False)
-        else:
-            # triangles of the PRE-peel graph that contain a removed
-            # edge mark every edge whose support can have changed
-            fan_r = removed.join(_adj(und).withColumnRenamed("v", "a"),
-                                 "a") \
-                .select("a", "b", F.col("w").alias("c")) \
-                .filter(F.col("c") != F.col("b")) \
-                .localCheckpoint(eager=False)
-            # same driver-known-size broadcast as the support fan
-            fan_r = _maybe_bcast(fan_r, fan_r.count())
-            tri_r = fan_r.join(und.select(F.col("a").alias("x"),
-                                          F.col("b").alias("y")),
-                               (F.least("b", "c") == F.col("x"))
-                               & (F.greatest("b", "c") == F.col("y")))
-            affected = (tri_r.select(F.least("a", "c").alias("a"),
-                                     F.greatest("a", "c").alias("b"))
-                        .unionByName(
-                            tri_r.select(F.least("b", "c").alias("a"),
-                                         F.greatest("b", "c").alias("b")))
-                        .distinct()
-                        # survivors only: removed edges need no support
-                        .join(cur, ["a", "b"], "left_semi")
-                        .localCheckpoint(eager=False))
-            aff_hinted = _maybe_bcast(affected, affected.count())
-            supp_aff = _common_neighbor_support(affected, aff_hinted, cur)
-            supp = (keep.join(aff_hinted, ["a", "b"], "left_anti")
-                    .unionByName(supp_aff)
-                    .localCheckpoint(eager=False))
-        und = cur
-        n_before = n_after
-    logging.getLogger(__name__).warning(
-        "k_truss: max_iters=%d reached before fixpoint — the result is "
-        "a superset of the true %d-truss", max_iters, k)
+            return cut(full_support(cur)), n_after, cur
+        # triangles of the PRE-peel graph that contain a removed
+        # edge mark every edge whose support can have changed
+        tri_r = closed_wedges(removed, und, cut)
+        affected = cut(tri_r.select(F.least("a", "c").alias("a"),
+                                    F.greatest("a", "c").alias("b"))
+                       .unionByName(
+                           tri_r.select(F.least("b", "c").alias("a"),
+                                        F.greatest("b", "c").alias("b")))
+                       .distinct()
+                       # survivors only: removed edges need no support
+                       .join(cur, ["a", "b"], "left_semi"))
+        # exact support of each affected edge in cur: its count of
+        # common neighbors. The hinted copy drives the fan join only:
+        # on the preserved side of the left join below Spark would drop
+        # the hint with a warning
+        aff_hinted = _maybe_bcast(affected, affected.count())
+        counted = (closed_wedges(aff_hinted, cur, cut).groupBy("a", "b")
+                   .agg(F.count(F.lit(1)).alias("support")))
+        supp_aff = (affected.join(counted, ["a", "b"], "left")
+                    .select("a", "b",
+                            F.coalesce("support", F.lit(0)).alias("support")))
+        return (cut(keep.join(aff_hinted, ["a", "b"], "left_anti")
+                    .unionByName(supp_aff)), n_after, cur)
+
+    supp = S.supersteps(
+        "k_truss", "max_iters", max_iters,
+        (S.truncate(full_support(und), eager=False), und.count(), und),
+        peel, lambda old, new: new[1] in (old[1], 0))[0]
     return supp.select(F.col("a").alias("src"), F.col("b").alias("dst"),
                        "support")
 
@@ -360,36 +358,27 @@ def k_core(
     each peel removes the entire sub-threshold frontier at once).
     Input edges are undirected (src/dst, self-loops ignored). Per
     round one degree aggregate + two semi-joins over narrow (long,
-    long) rows; the surviving edge set is localCheckpoint-truncated
-    per generation like the other iterative operators. Aggregation
+    long) rows; the surviving edge set is truncated per generation
+    like the other iterative operators. Aggregation
     inside recursion puts this outside recursive-CTE SQL — verified by
     a pure-Python peel replay (tests/test_pipeline_scale.py).
     Returns (id, degree) of the k-core members."""
-    import logging
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct()
-           .localCheckpoint())
-    # one count job per round: the previous round's n_after IS this
-    # round's n_before — the initial count is the only extra job
-    n_before = sym.count()
-    for i in range(max_iters):
-        deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-        keep = deg.filter(F.col("_d") >= k).select("src")
-        nxt = (sym.join(keep, "src", "left_semi")
-               .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-               .select("src", "dst")
-               .localCheckpoint(eager=False))
-        n_after = nxt.count()
-        sym = nxt
-        if n_after == n_before or n_after == 0:
-            break
-        n_before = n_after
-    else:
-        logging.getLogger(__name__).warning(
-            "k_core: max_iters=%d reached before fixpoint", max_iters)
+    sym = _undirected(edges)
+
+    def peel(st, i, cut):
+        # one count job per round: the previous round's count is this
+        # round's baseline — the initial count is the only extra job
+        sym, _ = st
+        keep = (sym.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
+                .filter(F.col("_d") >= k).select("src"))
+        nxt = cut(sym.join(keep, "src", "left_semi")
+                  .join(keep.withColumnRenamed("src", "dst"), "dst",
+                        "left_semi")
+                  .select("src", "dst"))
+        return nxt, nxt.count()
+
+    sym = S.supersteps("k_core", "max_iters", max_iters, (sym, sym.count()),
+                       peel, lambda old, new: new[1] in (old[1], 0))[0]
     return (sym.groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("degree")))
 
@@ -431,52 +420,41 @@ def hits(
     two single-row aggregates for the norms (Catalyst broadcasts the
     scalar back — no data-sized shuffle). The edge relation is never
     re-shuffled; AQE broadcasts the narrow score frame. Lineage is
-    truncated with a lazy localCheckpoint EVERY round — each round's
-    frame feeds four consumers, so the sibling operators' every-6
-    cadence would let the plan grow ~5.5x per round (see the loop
-    comment). Returns (id, authority double, hub double).
+    truncated lazily EVERY round: each round's frame feeds four
+    consumers (two neighborhood sums + two scalar norms), so
+    un-truncated the plan grows ~5.5x per round (measured: 10 KB ->
+    14 MB from iters=1 to 5) and the sparse cadence of pagerank would
+    come far too late. Returns (id, authority double, hub double).
     """
-    if iters < 1:
-        raise ValueError(f"hits needs at least 1 iteration, got {iters}")
-    # verts and the edge relation are each referenced TWICE per round
-    # (auth sum + hub sum / their left joins): lazy localCheckpoint
-    # rewrites both to ONE LogicalRDD computed at first action instead
-    # of 2*iters re-inlined scan subtrees (r14 shared-subtree
-    # discipline, same as pagerank/harmonic)
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    hub = verts.select("id", F.lit(1.0).alias("hub"))
-    auth = None
-    for i in range(iters):
+    # verts and the edge relation are each read twice per round
+    verts = _vertex_ids(vertices)
+    e = S.truncate(edges.select("src", "dst"), eager=False)
+
+    def normalized(scores: DataFrame, col: str) -> DataFrame:
+        m = scores.agg(F.max(col).alias("_m"))
+        return (scores.crossJoin(F.broadcast(m))
+                .select("id", F.when(F.col("_m") > 0, F.col(col) / F.col("_m"))
+                        .otherwise(F.lit(0.0)).alias(col)))
+
+    def step(st, i, cut):
+        hub = st[1]
         a_sum = (e.join(hub.withColumnRenamed("id", "src"), "src")
                  .groupBy(F.col("dst").alias("id"))
                  .agg(F.sum("hub").alias("_a")))
-        auth = (verts.join(a_sum, "id", "left")
-                .select("id", F.coalesce("_a", F.lit(0.0)).alias("auth")))
-        a_max = auth.agg(F.max("auth").alias("_m"))
-        auth = (auth.crossJoin(F.broadcast(a_max))
-                .select("id", F.when(F.col("_m") > 0,
-                                     F.col("auth") / F.col("_m"))
-                        .otherwise(F.lit(0.0)).alias("auth")))
+        auth = normalized(
+            verts.join(a_sum, "id", "left")
+            .select("id", F.coalesce("_a", F.lit(0.0)).alias("auth")), "auth")
         h_sum = (e.join(auth.withColumnRenamed("id", "dst"), "dst")
                  .groupBy(F.col("src").alias("id"))
                  .agg(F.sum("auth").alias("_h")))
-        hub = (verts.join(h_sum, "id", "left")
-               .select("id", F.coalesce("_h", F.lit(0.0)).alias("hub")))
-        h_max = hub.agg(F.max("hub").alias("_m"))
-        hub = (hub.crossJoin(F.broadcast(h_max))
-               .select("id", F.when(F.col("_m") > 0,
-                                    F.col("hub") / F.col("_m"))
-                       .otherwise(F.lit(0.0)).alias("hub")))
-        if (i + 1) < iters:
-            # each round's frame feeds FOUR consumers (two neighborhood
-            # sums + two scalar norms), so the un-truncated plan grows
-            # ~5.5x PER ROUND (measured: 10 KB -> 14 MB from iters=1 to
-            # 5) — the sibling operators' every-6-rounds cadence is far
-            # too late here. A lazy localCheckpoint truncates the plan
-            # immediately without scheduling an extra job.
-            hub = hub.localCheckpoint(eager=False)
-            auth = auth.localCheckpoint(eager=False)
+        hub = normalized(
+            verts.join(h_sum, "id", "left")
+            .select("id", F.coalesce("_h", F.lit(0.0)).alias("hub")), "hub")
+        return cut(auth), cut(hub)
+
+    auth, hub = S.supersteps("hits", "iters", iters,
+                             (None, verts.select("id", F.lit(1.0).alias("hub"))),
+                             step)
     return (auth.withColumnRenamed("auth", "authority")
             .join(hub, "id"))
 
@@ -486,16 +464,15 @@ def _seed_set(sources: DataFrame, verts: DataFrame,
     """(srcs, ns) for a seeded operator: ``srcs`` is the distinct
     ``sources`` ids present in ``verts`` (an out-of-graph seed can
     never be reached, so counting it would skew |S|), lazily
-    localCheckpointed — every caller reads it twice (its seed rows
+    truncated — every caller reads it twice (its seed rows
     and |S|); ``ns`` is a one-row ``_ns`` frame holding |S| as a
     double. An empty seed set refuses IN the plan (raise_error on the
     |S| aggregate, naming ``op``) rather than through a plan-time count
     job, which re-ran the distinct+semi-join subplan on every call —
     ~0.4 s of pure overhead — while the in-plan raise still fails the
     run loudly at first action."""
-    srcs = (sources.select("id").distinct()
-            .join(verts, "id", "left_semi")
-            .localCheckpoint(eager=False))
+    srcs = S.truncate(sources.select("id").distinct()
+                      .join(verts, "id", "left_semi"), eager=False)
     ns = srcs.agg(F.count(F.lit(1)).cast("double").alias("_ns0")) \
         .select(F.when(
             F.col("_ns0") == 0,
@@ -523,8 +500,8 @@ def personalized_pagerank(
     join chain an external SQL oracle replays exactly.
 
     Per iteration one (id, contribution) shuffle + one join; the
-    restart frame is narrow and broadcast. Lineage truncated every 6
-    rounds. Returns (id, ppr double).
+    restart frame is narrow and broadcast. A sparse superstep like
+    pagerank. Returns (id, ppr double).
 
     ``sources`` ids absent from ``vertices`` are dropped BEFORE |S| is
     counted: an out-of-graph seed can never receive restart mass, so
@@ -533,37 +510,25 @@ def personalized_pagerank(
     vertex set. All-out-of-graph (or empty) sources refuse loudly."""
     verts = vertices.select("id").distinct()
     srcs, ns = _seed_set(sources, verts, "personalized_pagerank")
-    # restart (with its |S| raise-guard subplan) and the
-    # degree-annotated edge relation are referenced every iteration:
-    # lazy localCheckpoint truncates each to ONE LogicalRDD computed
-    # at first action instead of re-inlining the distinct+semi-join+
-    # guard and scan+degree-join subtrees per round (the r14
-    # shared-subtree discipline pagerank already applies)
-    restart = (verts
-               .join(srcs.withColumn("_is_src", F.lit(1)), "id", "left")
-               .crossJoin(F.broadcast(ns))
-               .select("id", F.when(F.col("_is_src").isNotNull(),
-                                    F.lit(1.0) / F.col("_ns"))
-                       .otherwise(F.lit(0.0)).alias("restart"))
-               .localCheckpoint(eager=False))
-    deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("_deg"))
-    ed = edges.join(deg.withColumnRenamed("id", "src"), "src") \
-        .localCheckpoint(eager=False)
-    pr = restart.select("id", F.col("restart").alias("ppr"))
-    for i in range(iters):
-        contrib = (ed.join(pr.withColumnRenamed("id", "src")
-                           .withColumnRenamed("ppr", "_p"), "src")
-                   .groupBy(F.col("dst").alias("id"))
-                   .agg(F.sum(F.col("_p") / F.col("_deg")).alias("_c")))
-        pr = (restart.join(contrib, "id", "left")
-              .select("id",
-                      (F.lit(1.0 - damping) * F.col("restart")
-                       + F.lit(damping) * F.coalesce("_c", F.lit(0.0))
-                       ).alias("ppr")))
-        if (i + 1) % 6 == 0 and (i + 1) < iters:
-            pr = pr.localCheckpoint()
-    return pr
+    # restart (with its |S| raise-guard subplan) is read every round
+    restart = S.truncate(
+        verts.join(srcs.withColumn("_is_src", F.lit(1)), "id", "left")
+        .crossJoin(F.broadcast(ns))
+        .select("id", F.when(F.col("_is_src").isNotNull(),
+                             F.lit(1.0) / F.col("_ns"))
+                .otherwise(F.lit(0.0)).alias("restart")), eager=False)
+    ed = _degree_edges(edges)
+
+    def step(pr, i, cut):
+        return cut(restart.join(_contributions(ed, pr, "ppr"), "id", "left")
+                   .select("id",
+                           (F.lit(1.0 - damping) * F.col("restart")
+                            + F.lit(damping) * F.coalesce("_c", F.lit(0.0))
+                            ).alias("ppr")))
+
+    return S.supersteps("personalized_pagerank", "iters", iters,
+                        restart.select("id", F.col("restart").alias("ppr")),
+                        step, sparse=True)
 
 
 def random_walks(
@@ -591,35 +556,35 @@ def random_walks(
     raw vertex ids so downstream corpus generation (node2vec-style
     sequence emission) never re-parses ids from text."""
     from pyspark.sql import Window
-    # the edge relation is re-joined every step: lazy localCheckpoint
-    # truncates it to ONE LogicalRDD computed at first action instead
-    # of `steps` re-inlined scans (r14 shared-subtree discipline)
-    hop = edges.select(F.col("src").alias("cur"), "dst") \
-        .localCheckpoint(eager=False)
-    w = starts.select(F.col("id").alias("walk_id"),
-                      F.col("id").alias("cur"),
-                      F.col("id").cast("string").alias("path"),
-                      F.array(F.col("id")).alias("path_ids"))
-    for s in range(steps):
+    # the edge relation is re-joined every step
+    hop = S.truncate(edges.select(F.col("src").alias("cur"), "dst"),
+                     eager=False)
+    moved = F.col("dst").isNotNull()
+
+    def step(w, s, cut):
         cand = (w.join(hop, "cur", "left")
                 .withColumn("_h", F.md5(F.concat_ws(
                     ":", F.lit(salt), F.col("walk_id"),
                     F.lit(str(s)), F.col("dst")))))
         win = Window.partitionBy("walk_id").orderBy(
             F.col("_h").asc(), F.col("dst").asc())
-        moved = F.col("dst").isNotNull()
-        w = (cand.withColumn("_rn", F.row_number().over(win))
-             .filter(F.col("_rn") == 1)
-             .select("walk_id",
-                     F.coalesce("dst", "cur").alias("cur"),
-                     F.when(moved,
-                            F.concat(F.col("path"), F.lit("->"), F.col("dst")))
-                     .otherwise(F.col("path")).alias("path"),
-                     F.when(moved,
-                            F.concat(F.col("path_ids"), F.array(F.col("dst"))))
-                     .otherwise(F.col("path_ids")).alias("path_ids")))
-        if (s + 1) % 6 == 0 and (s + 1) < steps:
-            w = w.localCheckpoint()
+        return cut(cand.withColumn("_rn", F.row_number().over(win))
+                   .filter(F.col("_rn") == 1)
+                   .select("walk_id",
+                           F.coalesce("dst", "cur").alias("cur"),
+                           F.when(moved, F.concat(F.col("path"), F.lit("->"),
+                                                  F.col("dst")))
+                           .otherwise(F.col("path")).alias("path"),
+                           F.when(moved, F.concat(F.col("path_ids"),
+                                                  F.array(F.col("dst"))))
+                           .otherwise(F.col("path_ids")).alias("path_ids")))
+
+    w = S.supersteps(
+        "random_walks", "steps", steps,
+        starts.select(F.col("id").alias("walk_id"), F.col("id").alias("cur"),
+                      F.col("id").cast("string").alias("path"),
+                      F.array(F.col("id")).alias("path_ids")),
+        step, sparse=True)
     return w.select("walk_id", F.col("cur").alias("final"), "path",
                     "path_ids")
 
@@ -642,40 +607,13 @@ def harmonic_centrality(
     the run replayable as chained SQL CTEs.
 
     Per hop: one frontier-edge join + one anti-join against the seen
-    set + a distinct — all on narrow id-pair rows, the same
-    generational discipline as the VLE/BFS operators. The symmetrized
-    edge relation and vertex universe are referenced every hop /
-    twice, so both are lazily localCheckpoint-truncated once (ONE
-    LogicalRDD each, computed at first action — the r14
-    shared-subtree discipline harmonic_centrality_sampled measured at
-    68-scans-to-0). Returns
+    set + a distinct — all on narrow id-pair rows (`_reach`). Returns
     (id, n_reached long, harmonic double) for every vertex (zeros for
     isolated ones)."""
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct().localCheckpoint(eager=False))
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    dist = verts.select(F.col("id").alias("u"), F.col("id").alias("v"),
-                        F.lit(0).alias("d"))
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        nxt = (frontier
-               .join(sym.withColumnRenamed("src", "v"), "v")
-               .select("u", F.col("dst").alias("v"), F.lit(h).alias("d"))
-               .distinct()
-               .join(dist, ["u", "v"], "left_anti"))
-        if h < max_hops:
-            # each frontier feeds the union AND the next expansion AND
-            # the next anti-join: un-truncated, the plan grows ~3x per
-            # hop (measured 2.4 KB -> 74 KB from hop 1 to 4). Lazy
-            # localCheckpoint keeps it linear with no extra job.
-            nxt = nxt.localCheckpoint(eager=False)
-        dist = dist.unionByName(nxt)
-        frontier = nxt
+    verts = _vertex_ids(vertices)
+    dist = _reach("harmonic_centrality", verts, _undirected(edges), max_hops)
     reached = (dist.filter(F.col("d") > 0)
-               .groupBy(F.col("u").alias("id"))
+               .groupBy(F.col("s").alias("id"))
                .agg(F.count(F.lit(1)).alias("n_reached"),
                     F.sum(F.lit(1.0) / F.col("d")).alias("harmonic")))
     return (verts.join(reached, "id", "left")
@@ -683,6 +621,29 @@ def harmonic_centrality(
                     F.coalesce("n_reached", F.lit(0)).cast("long")
                     .alias("n_reached"),
                     F.coalesce("harmonic", F.lit(0.0)).alias("harmonic")))
+
+
+def _reach(op: str, seeds: DataFrame, sym: DataFrame,
+           max_hops: int) -> DataFrame:
+    """(s, v, d): every vertex v within ``max_hops`` of a ``seeds`` id
+    s over the undirected ``sym``, at its hop distance d (d=0 for s
+    itself) — the BFS both harmonic operators share. Each frontier
+    feeds the union, the next expansion AND the next anti-join, so
+    un-truncated the plan grows ~3x per hop (measured 2.4 KB -> 74 KB
+    from hop 1 to 4): every hop but the last is cut."""
+    def hop(st, i, cut):
+        dist, frontier = st
+        nxt = cut(frontier
+                  .join(sym.withColumnRenamed("src", "v"), "v")
+                  .select("s", F.col("dst").alias("v"),
+                          F.lit(i + 1).alias("d"))
+                  .distinct()
+                  .join(dist, ["s", "v"], "left_anti"))
+        return dist.unionByName(nxt), nxt
+
+    dist = seeds.select(F.col("id").alias("s"), F.col("id").alias("v"),
+                        F.lit(0).alias("d"))
+    return S.supersteps(op, "max_hops", max_hops, (dist, dist), hop)[0]
 
 
 def harmonic_centrality_sampled(
@@ -713,36 +674,12 @@ def harmonic_centrality_sampled(
     of seeds that reached the vertex (the estimator's support, useful
     for confidence filtering), harmonic_est the scaled estimate."""
     # r14: the shared subtrees (symmetrized edges, vertex universe,
-    # seed semi-join) are lazily truncated too — each is referenced by
-    # every hop (sym) or by two consumers (verts: universe + |V|;
-    # srcs: level 0 + |S|), and un-truncated they re-inline their
-    # union/distinct trees per reference (the harmonic plan carried 68
-    # parquet scans; driver-side analysis alone cost ~1.1s per build).
-    # Lazy localCheckpoint rewrites each to ONE LogicalRDD computed
-    # once at the first action — no extra job, same values.
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct()
-           .localCheckpoint(eager=False))
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
+    # seed semi-join) are lazily truncated: un-truncated, the plan
+    # carried 68 parquet scans and its analysis alone cost ~1.1s
+    verts = _vertex_ids(vertices)
     srcs, ns = _seed_set(sources, verts, "harmonic_centrality_sampled")
-    dist = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
-                       F.lit(0).alias("d"))
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        nxt = (frontier
-               .join(sym.withColumnRenamed("src", "v"), "v")
-               .select("s", F.col("dst").alias("v"), F.lit(h).alias("d"))
-               .distinct()
-               .join(dist, ["s", "v"], "left_anti"))
-        if h < max_hops:
-            # same per-hop lazy truncation as the exhaustive form: the
-            # frontier feeds union + expansion + anti-join every hop
-            nxt = nxt.localCheckpoint(eager=False)
-        dist = dist.unionByName(nxt)
-        frontier = nxt
+    dist = _reach("harmonic_centrality_sampled", srcs, _undirected(edges),
+                  max_hops)
     # |V| and |S| folded declaratively (two single-row aggregates,
     # broadcast back) so the whole run replays as chained SQL CTEs
     stats = (verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
@@ -778,8 +715,8 @@ def _min_reach_labels_fb(
     round/job count halves the phase (r14 opt session 2: graph_scc
     31.9s -> see OPTIMIZATION_r14.md).
 
-    Each round lazily localCheckpoints so the convergence count
-    materializes the generation in one job and the plan stays
+    A count-stopped superstep: each round's lazy cut is materialized
+    by its convergence count in one job and the plan stays
     constant-size.
 
     Deliberately NO pointer-jump doubling (unlike
@@ -799,9 +736,8 @@ def _min_reach_labels_fb(
     join-agg branches, not a deeper chain.)
 
     Returns (id, f, b)."""
-    lab = vertices.select("id", F.col("id").alias("f"),
-                          F.col("id").alias("b")).localCheckpoint()
-    for _ in range(max_iters):
+    def step(lab, i, cut):
+        lab = lab.select("id", "f", "b")
         nf = (edges
               .join(lab.select(F.col("id").alias("src"),
                                F.col("f").alias("_lf")), "src")
@@ -812,21 +748,21 @@ def _min_reach_labels_fb(
                                F.col("b").alias("_lb")), "dst")
               .groupBy(F.col("src").alias("id"))
               .agg(F.min("_lb").alias("_mb")))
-        new = (lab.join(nf, "id", "left").join(nb, "id", "left")
-               .select("id",
-                       F.col("f").alias("_of"), F.col("b").alias("_ob"),
-                       F.least("f", "_mf").alias("f"),
-                       F.least("b", "_mb").alias("b"))
-               .localCheckpoint(eager=False))
-        changed = new.filter((F.col("f") != F.col("_of"))
-                             | (F.col("b") != F.col("_ob"))).count()
-        lab = new.select("id", "f", "b")
-        if changed == 0:
-            return lab
-    raise RuntimeError(
-        "strongly_connected_components: min-label propagation did not "
-        f"converge within max_iters={max_iters} rounds — the graph's "
-        "diameter exceeds the budget; raise max_iters")
+        return cut(lab.join(nf, "id", "left").join(nb, "id", "left")
+                   .select("id",
+                           F.col("f").alias("_of"), F.col("b").alias("_ob"),
+                           F.least("f", "_mf").alias("f"),
+                           F.least("b", "_mb").alias("b")))
+
+    lab = S.supersteps(
+        "strongly_connected_components", "max_iters", max_iters,
+        S.truncate(vertices.select("id", F.col("id").alias("f"),
+                                   F.col("id").alias("b"))),
+        step,
+        lambda _, new: new.filter((F.col("f") != F.col("_of"))
+                                  | (F.col("b") != F.col("_ob"))).count() == 0,
+        strict=True)
+    return lab.select("id", "f", "b")
 
 
 def _tarjan_scc(edge_rows) -> dict:
@@ -929,7 +865,7 @@ def strongly_connected_components(
 
     Scale shape: every step is a narrow (id, id) equi-join or
     aggregate; the active vertex/edge frames shrink monotonically and
-    are localCheckpoint-truncated per round, so the plan never grows.
+    are truncated per round, so the plan never grows.
     Worst case is a condensation chain ordered adversarially against
     the ids (one SCC settles per round, like every min-pivot FW-BW
     variant); hitting ``max_rounds`` raises loudly — a partial SCC
@@ -967,65 +903,60 @@ def strongly_connected_components(
              .unionByName(e.select(F.col("dst").alias("id"))))
     if vertices is not None:
         verts = verts.unionByName(vertices.select("id"))
-    act_v = verts.distinct().localCheckpoint()
-    act_e = e.localCheckpoint()
+    op = "strongly_connected_components"
     parts: list[DataFrame] = []
-    n_act = act_v.count()
-    for _ in range(max_rounds):
+
+    def restrict(act_e: DataFrame, act_v: DataFrame) -> DataFrame:
+        return (act_e
+                .join(act_v.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(act_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                .select("src", "dst"))
+
+    def trim(st, i, cut):
+        # peel vertices that lack an in- or out-edge in the ACTIVE
+        # subgraph (cannot be on a cycle -> singleton SCCs). Lazy
+        # generations: the next peel's count (or the settle phase's
+        # first job) materializes act_v and act_e in one job
+        act_v, act_e, n_act = st
+        srcs = act_e.select(F.col("src").alias("id")).distinct()
+        dsts = act_e.select(F.col("dst").alias("id")).distinct()
+        triv = cut(act_v.join(srcs, "id", "left_anti")
+                   .unionByName(act_v.join(dsts, "id", "left_anti"))
+                   .distinct())
+        n_triv = triv.count()
+        if n_triv == 0:
+            return st
+        parts.append(triv.select("id", F.col("id").alias("component")))
+        act_v = cut(act_v.join(triv, "id", "left_anti"))
+        return act_v, cut(restrict(act_e, act_v)), n_act - n_triv
+
+    def settle(st, i, cut):
+        # each peel removes a vertex, so n_act + 1 rounds reach the
+        # trim fixpoint (a round that peels nothing)
+        act_v, act_e, n_act = S.supersteps(
+            op, "trim rounds", st[2] + 1, st, trim,
+            lambda old, new: new[2] == old[2])
         if n_act == 0:
-            break
-        # trim loop: peel vertices that lack an in- or out-edge in the
-        # ACTIVE subgraph (cannot be on a cycle -> singleton SCCs)
-        while True:
-            srcs = act_e.select(F.col("src").alias("id")).distinct()
-            dsts = act_e.select(F.col("dst").alias("id")).distinct()
-            triv = (act_v.join(srcs, "id", "left_anti")
-                    .unionByName(act_v.join(dsts, "id", "left_anti"))
-                    .distinct()
-                    .localCheckpoint(eager=False))
-            n_triv = triv.count()
-            if n_triv == 0:
-                break
-            parts.append(triv.select("id", F.col("id").alias("component")))
-            # lazy generations: the NEXT iteration's triv count (or the
-            # settle phase's first job) materializes both in one job —
-            # eager checkpoints here cost two extra jobs per peel
-            act_v = (act_v.join(triv, "id", "left_anti")
-                     .localCheckpoint(eager=False))
-            act_e = (act_e
-                     .join(act_v.withColumnRenamed("id", "src"),
-                           "src", "left_semi")
-                     .join(act_v.withColumnRenamed("id", "dst"),
-                           "dst", "left_semi")
-                     .select("src", "dst").localCheckpoint(eager=False))
-            n_act -= n_triv
-        if n_act == 0:
-            break
+            return act_v, act_e, 0
         # lockstep fixpoint: (id, f, b) in one loop — the convergence
         # counts AND the old per-round f⋈b join collapse into it
         fb = (_min_reach_labels_fb(act_e, act_v, max_iters)
               .select("id", F.col("f").alias("_f"), F.col("b").alias("_b")))
         settled = fb.filter(F.col("_f") == F.col("_b"))
-        parts.append(settled.select("id", F.col("_f").alias("component"))
-                     .localCheckpoint(eager=False))
-        act_v = (fb.filter(F.col("_f") != F.col("_b"))
-                 .select("id").localCheckpoint(eager=False))
+        parts.append(cut(settled.select("id", F.col("_f").alias("component"))))
+        act_v = cut(fb.filter(F.col("_f") != F.col("_b")).select("id"))
         n_act = act_v.count()   # materializes fb + act_v in one job
-        act_e = (act_e
-                 .join(act_v.withColumnRenamed("id", "src"), "src", "left_semi")
-                 .join(act_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                 .select("src", "dst").localCheckpoint(eager=False))
-    if n_act != 0:
-        raise RuntimeError(
-            "strongly_connected_components: active vertices remain after "
-            f"max_rounds={max_rounds} settle rounds — the condensation's "
-            "min-ordering depth exceeds the budget; raise max_rounds")
+        return act_v, cut(restrict(act_e, act_v)), n_act
+
+    act_v = S.truncate(verts.distinct())
+    n_act = act_v.count()
+    if n_act:
+        S.supersteps(op, "max_rounds", max_rounds,
+                     (act_v, S.truncate(e), n_act), settle,
+                     lambda _, new: new[2] == 0, strict=True)
     if not parts:  # empty graph: no edges and no (or empty) vertices
         return verts.select("id", F.col("id").alias("component"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def betweenness_centrality_sampled(
@@ -1064,43 +995,33 @@ def betweenness_centrality_sampled(
     an empty intersection raises in-plan at first action (raise_error
     riding the |S| aggregate, like personalized_pagerank). Returns
     (id, bc_est double) for every vertex."""
-    if max_hops < 1:
-        raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    # sym is joined once per forward hop AND once per backward level,
-    # verts/srcs feed the seed levels and the |V|/|S| scale factors:
-    # lazy localCheckpoint truncates each shared subtree to ONE
-    # LogicalRDD computed at first action (the r14 shared-subtree
-    # discipline measured on harmonic_centrality_sampled)
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct().localCheckpoint(eager=False))
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    srcs, ns = _seed_set(sources, verts, "betweenness_centrality_sampled")
-    levels = [srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
-                          F.lit(1.0).alias("sigma"))]
-    seen = levels[0].select("s", "v")
-    for h in range(1, max_hops + 1):
+    # sym is joined once per forward hop AND once per backward level
+    op = "betweenness_centrality_sampled"
+    sym = _undirected(edges)
+    verts = _vertex_ids(vertices)
+    srcs, ns = _seed_set(sources, verts, op)
+
+    def forward(st, i, cut):
+        levels, seen = st
         cand = (levels[-1]
                 .join(sym.withColumnRenamed("src", "v"), "v")
                 .groupBy("s", F.col("dst").alias("v"))
                 .agg(F.sum("sigma").alias("sigma")))
-        nxt = cand.join(seen, ["s", "v"], "left_anti")
-        if h < max_hops:
-            nxt = nxt.localCheckpoint(eager=False)
-        levels.append(nxt)
-        seen = seen.unionByName(nxt.select("s", "v"))
-    # backward dependency accumulation, rim inward; delta at the rim
-    # level is 0 by definition (no deeper shortest paths through it)
-    deltas = [None] * (max_hops + 1)
-    deltas[max_hops] = levels[max_hops].select(
-        "s", "v", "sigma", F.lit(0.0).alias("delta"))
-    for h in range(max_hops - 1, -1, -1):
-        succ = deltas[h + 1].select(F.col("s").alias("_ws"),
-                                    F.col("v").alias("_wv"),
-                                    F.col("sigma").alias("_wsig"),
-                                    F.col("delta").alias("_wdel"))
+        nxt = cut(cand.join(seen, ["s", "v"], "left_anti"))
+        return levels + [nxt], seen.unionByName(nxt.select("s", "v"))
+
+    lvl0 = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
+                       F.lit(1.0).alias("sigma"))
+    levels = S.supersteps(op, "max_hops", max_hops,
+                          ([lvl0], lvl0.select("s", "v")), forward)[0]
+
+    def backward(deltas, i, cut):
+        # deltas holds levels max_hops .. h+1, rim first
+        h = max_hops - 1 - i
+        succ = deltas[-1].select(F.col("s").alias("_ws"),
+                                 F.col("v").alias("_wv"),
+                                 F.col("sigma").alias("_wsig"),
+                                 F.col("delta").alias("_wdel"))
         contrib = (levels[h]
                    .join(sym.withColumnRenamed("src", "v"), "v")
                    .join(succ, (F.col("s") == F.col("_ws"))
@@ -1108,14 +1029,19 @@ def betweenness_centrality_sampled(
                    .groupBy("s", "v")
                    .agg(F.sum(F.col("sigma") / F.col("_wsig")
                               * (F.lit(1.0) + F.col("_wdel"))).alias("_d")))
-        deltas[h] = (levels[h].join(contrib, ["s", "v"], "left")
-                     .select("s", "v", "sigma",
-                             F.coalesce("_d", F.lit(0.0)).alias("delta")))
-        if h > 0:
-            deltas[h] = deltas[h].localCheckpoint(eager=False)
-    acc = deltas[1]
-    for h in range(2, max_hops + 1):
-        acc = acc.unionByName(deltas[h])
+        return deltas + [cut(
+            levels[h].join(contrib, ["s", "v"], "left")
+            .select("s", "v", "sigma",
+                    F.coalesce("_d", F.lit(0.0)).alias("delta")))]
+
+    # backward dependency accumulation, rim inward; delta at the rim
+    # level is 0 by definition (no deeper shortest paths through it)
+    deltas = S.supersteps(
+        op, "max_hops", max_hops,
+        [levels[max_hops].select("s", "v", "sigma",
+                                 F.lit(0.0).alias("delta"))], backward)
+    # levels 1 .. max_hops (the seed level's delta counts nothing)
+    acc = reduce(DataFrame.unionByName, deltas[-2::-1])
     stats = (verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
              .crossJoin(ns))
     summed = (acc.filter(F.col("s") != F.col("v"))

@@ -14,8 +14,8 @@ DataFrame analog of the reference's per-path visited set.
 Scale notes:
 - the edge relation is pinned for the duration of the loop and
   released on exit;
-- path-array columns grow O(depth); lineage is cut with
-  ``localCheckpoint`` every ``_CHECKPOINT_EVERY`` hops;
+- path-array columns grow O(depth); the VLE frontier's lineage is cut
+  every ``_superstep._CHECKPOINT_EVERY`` hops;
 - frontiers are pruned per hop (shortest-path keeps only the cheapest
   row per (seed, vertex)), so frontier size is bounded by reachable
   vertices, not path count;
@@ -37,8 +37,9 @@ Scale notes:
   ``localCheckpoint`` lineage (its documented tradeoff). Production
   deployments that must survive executor loss set the engine conf
   ``spark.agensgraph.checkpointDir`` to a reliable (HDFS/object-store)
-  path: every iterative operator then truncates lineage with reliable
-  ``DataFrame.checkpoint`` instead (see ``_ckpt``).
+  path: every iterative operator, these and those of analytics.py and
+  the pipelines alike, then truncates lineage with reliable
+  ``DataFrame.checkpoint`` instead (see ``_superstep.truncate``).
 
 Edge input convention: a DataFrame with columns
 ``src, dst, eid`` (+ ``w`` for Dijkstra) — already direction-normalized
@@ -53,38 +54,11 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators import _superstep as S
+
 log = logging.getLogger(__name__)
 
 DEFAULT_MAX_HOPS = 12
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Generation materialization with lineage truncation. Default:
-    ``localCheckpoint`` — fastest, but blocks live on executors and do
-    NOT survive executor loss (module docstring tradeoff). Production
-    opt-in: set the engine conf ``spark.agensgraph.checkpointDir`` to
-    a reliable (HDFS / object-store) path and EVERY iterative path
-    operator switches to reliable ``DataFrame.checkpoint`` — state
-    survives executor loss at the cost of one write+read per
-    generation. The SparkContext checkpoint dir is adopted from the
-    conf lazily; an explicitly pre-set ``setCheckpointDir`` is
-    respected."""
-    spark = df.sparkSession
-    try:
-        d = spark.conf.get("spark.agensgraph.checkpointDir", "")
-    except Exception:  # pragma: no cover - conf service unavailable
-        d = ""
-    if d:
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(d)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-# vle_expand truncates the frontier's lineage (and learns its size)
-# every this many hops; read at call time so tests can flip it.
-_CHECKPOINT_EVERY = 6
 
 
 BROADCAST_EDGE_LIMIT = 200_000
@@ -207,8 +181,8 @@ def vle_expand(
             F.lit(k).cast("long").alias("len"),
         )
         fcount = None
-        if k % _CHECKPOINT_EVERY == 0:
-            frontier = _ckpt(frontier)
+        if k % S._CHECKPOINT_EVERY == 0:
+            frontier = S.truncate(frontier)
             # the frame is materialized — the count reads stored blocks
             fcount = frontier.count()
         if k >= min_hops:
@@ -232,7 +206,7 @@ def vle_expand(
         out = out.coalesce(2 * spread)
         # materialize the expansion once, then release the edge pin:
         # the checkpointed result no longer references the relation
-        out = _ckpt(out)
+        out = S.truncate(out)
         _unpersist(edges)
     return out
 
@@ -300,7 +274,7 @@ def bfs_shortest(
         F.array().cast("array<long>").alias("vids"),
         F.lit(0).cast("long").alias("len"),
     )
-    frontier = _ckpt(frontier)
+    frontier = S.truncate(frontier)
     # every generation is eagerly checkpointed, so the per-round count
     # reads materialized blocks (~ms) — it powers BOTH the drain probe
     # (replacing isEmpty) and the broadcast hint that keeps the pinned
@@ -331,11 +305,11 @@ def bfs_shortest(
             # one representative path per (seed, vertex)
             w = Window.partitionBy("seed", "cur").orderBy(F.col("eids").getItem(0))
             nxt = nxt.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        frontier = _ckpt(nxt)
+        frontier = S.truncate(nxt)
         # visited checkpoints per round: a lazy union would re-run every
         # prior generation's distinct in each round's anti-join (O(k²)
         # shuffles); the narrow (seed, cur) checkpoint is one small job
-        visited = _ckpt(
+        visited = S.truncate(
             visited.unionByName(frontier.select("seed", "cur").distinct()))
 
         # this round's hits join the full (cached, small) pair set: BFS
@@ -375,7 +349,7 @@ def bfs_shortest(
         # re-derive pairs' distinct from raw lineage on every final
         # evaluation (and diverge if the caller's frame is
         # non-deterministic)
-        found = _ckpt(found)
+        found = S.truncate(found)
     _unpersist(pairs_pin, edges)
     if found is None or not found.take(1):
         return pairs.limit(0).select(
@@ -494,7 +468,7 @@ def dijkstra_paths(
         F.lit(0).cast("long").alias("len"),
         F.lit(0.0).alias("weight"),
     )
-    paths = _ckpt(paths)
+    paths = S.truncate(paths)
     frontier = paths
     # seed count: paths is ALREADY eagerly checkpointed, so this count
     # reads materialized blocks (~ms) — and knowing it up front lets
@@ -553,7 +527,7 @@ def dijkstra_paths(
             # generation stays lazy over a checkpointed one; over
             # cache()-era generations it is checkpointed, so they can
             # be retired below
-            paths = _ckpt(new_paths) if early_gens else new_paths
+            paths = S.truncate(new_paths) if early_gens else new_paths
             break
         # frontier = rows changed this round (still candidates to extend).
         # Anti-join on full path identity (seed, cur, eids) — NOT just
@@ -569,12 +543,12 @@ def dijkstra_paths(
         else:
             # one checkpoint job materializes the whole round (hop join
             # + rank); the anti-join then reads stored blocks only
-            new_paths = _ckpt(new_paths)
+            new_paths = S.truncate(new_paths)
             new_frontier = new_paths.join(
                 paths.select("seed", "cur", "eids"),
                 ["seed", "cur", "eids"], "left_anti",
             )
-            new_frontier = _ckpt(new_frontier)
+            new_frontier = S.truncate(new_frontier)
         fcount = new_frontier.count()
         paths, frontier = new_paths, new_frontier
         if k >= cp_from and early_gens:

@@ -32,6 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators import _superstep as S
+
 log = logging.getLogger(__name__)
 
 
@@ -1064,15 +1066,14 @@ def connected_components(
     O(component diameter) rounds — near-dup clusters are dense and
     shallow, so a handful of rounds closes them. Per round: one
     edge-to-label equi-join + min aggregate (both shuffles on narrow
-    (long, long) rows) and a driver-side convergence count, the same
-    iterate-persist-unpersist generational pattern as the path
-    operators (operators/paths.py): the previous generation is
-    unpersisted as soon as the next materializes, so at most two label
-    frames are ever pinned. On the distributed path the symmetric edge
-    list is persisted for the loop and released before returning, and
-    the returned frame is localCheckpoint-materialized so it holds no
-    reference to the pins; the driver fast path returns a lazy frame
-    built purely from the driver-side label map.
+    (long, long) rows) and a driver-side convergence count — a
+    count-stopped superstep (operators/_superstep.py): each round's
+    generation is truncated and the count materializes it. On the
+    distributed path the symmetric edge list is persisted for the loop
+    and released before returning, and the returned frame is
+    materialized so it holds no reference to the pins; the driver fast
+    path returns a lazy frame built purely from the driver-side label
+    map.
 
     ``nodes`` (optional, single id column) widens the universe:
     unpaired ids come back as singleton components of themselves.
@@ -1147,16 +1148,15 @@ def connected_components(
     base = edges.select(F.col("src").alias("id")).distinct()
     if nodes is not None:
         base = base.unionByName(nodes.toDF("id")).distinct()
-    # localCheckpoint (eager), not persist: the label frame feeds the
+    # an eager truncation, not persist: the label frame feeds the
     # next generation TWICE (propagation join + label update), so an
     # un-truncated lineage doubles every round and the analyzer blows
-    # up long before the executors do — checkpointing pins a
-    # generation-sized RDD and keeps the plan constant-size (same
-    # pattern as operators/paths.py)
-    lab = (base.repartition(width, "id")
-           .select("id", F.col("id").alias("component")).localCheckpoint())
-    converged = False
-    for _ in range(max_iters):
+    # up long before the executors do — truncation pins a
+    # generation-sized RDD and keeps the plan constant-size
+    lab = S.truncate(base.repartition(width, "id")
+                     .select("id", F.col("id").alias("component")))
+
+    def step(lab, i, cut):
         # one min-label step + one pointer jump per materialized round
         # (wider rounds measured slower at sf0.1 — the bigger per-job
         # DAG outweighs the saved rounds)
@@ -1177,25 +1177,17 @@ def connected_components(
         # full round per link.
         jump = stepped.select(F.col("id").alias("_jid"),
                               F.col("component").alias("_jc"))
-        # LAZY localCheckpoint: the convergence count below is the
-        # round's first action, so it materializes the checkpoint AND
-        # counts in ONE job — an eager checkpoint would pay a separate
-        # job per round just to follow it with the count
-        new = (stepped.join(jump, stepped.component == jump._jid, "left")
-               .select("id", "_old",
-                       F.least("component", "_jc").alias("component"))
-               .localCheckpoint(eager=False))
-        changed = new.filter(F.col("component") != F.col("_old")).count()
-        lab = new  # superseded checkpoint storage is freed on GC
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        log.warning(
-            "connected_components: max_iters=%d reached before "
-            "convergence — labels of very long chains may not be fully "
-            "propagated", max_iters)
-    out = lab.select("id", "component").localCheckpoint()
+        return cut(stepped.join(jump, stepped.component == jump._jid, "left")
+                   .select("id", "_old",
+                           F.least("component", "_jc").alias("component")))
+
+    # the convergence count is the round's first action, so it
+    # materializes the round's lazy cut AND counts in ONE job
+    lab = S.supersteps(
+        "connected_components", "max_iters", max_iters, lab, step,
+        lambda _, new: new.filter(
+            F.col("component") != F.col("_old")).count() == 0)
+    out = S.truncate(lab.select("id", "component"))
     edges.unpersist(blocking=False)
     return out
 

@@ -20,6 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators._superstep import supersteps, truncate
 from agensgraph_spark.pipeline.util import maybe_broadcast
 
 log = logging.getLogger(__name__)
@@ -568,6 +569,10 @@ def semantic_dedup(
             F.coalesce(F.col("_mlc") < tau, F.lit(True)).alias("keep"),
             (F.col("_rnb") > max_cluster + 1).alias("capped"))
 
+    # the exact scorer reads the tags three times (both sides of the
+    # cluster self-join and the output side): truncated, the corpus is
+    # scanned and tagged once
+    tagged = truncate(tagged, eager=False)
     a = tagged.select(F.col("_id").alias("vec_id"), F.col("_v").alias("va"),
                       F.col("_n").alias("na"), F.col("_list").alias("cluster"))
     b = tagged.select(F.col("_id").alias("_ib"), F.col("_v").alias("vb"),
@@ -716,22 +721,20 @@ def neighbor_mean_embeddings(
     if include_self:
         ids = emb.select(F.col(id_col).alias("s"))
         sym = sym.unionByName(ids.select("s", F.col("s").alias("d")))
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    cur = emb.select(F.col(id_col).alias("d"),
-                     F.col(vec_col).cast("array<double>").alias("_v"))
-    for i in range(rounds):
+
+    def step(cur, i, cut):
         flat = (sym.join(cur, "d")
                 .select("s", F.posexplode("_v").alias("pos", "val")))
         agg = flat.groupBy("s", "pos").agg(F.avg("val").alias("m"))
-        cur = (agg.groupBy("s")
-               .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm"))
-               .select(F.col("s").alias("d"), F.col("_pm.m").alias("_v")))
-        if i + 1 < rounds:
-            # truncate lineage between rounds (same rationale as the
-            # other iterative operators; a couple of rounds is typical,
-            # so eager checkpoints stay cheap)
-            cur = cur.localCheckpoint()
+        return cut(agg.groupBy("s")
+                   .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
+                        .alias("_pm"))
+                   .select(F.col("s").alias("d"), F.col("_pm.m").alias("_v")))
+
+    cur = supersteps("neighbor_mean_embeddings", "rounds", rounds,
+                     emb.select(F.col(id_col).alias("d"),
+                                F.col(vec_col).cast("array<double>")
+                                .alias("_v")), step)
     return cur.select(F.col("d").alias(id_col), F.col("_v").alias("embedding"))
 
 

@@ -42,7 +42,7 @@ def get_spark(app_name: str = "agensgraph_spark", shuffle_partitions: int | None
         # 29-query bench, interleaved runs re-paid compilation every
         # pass. Static conf, so it must be set at session build.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # reliable-checkpoint mode (paths._ckpt with
+        # reliable-checkpoint mode (_superstep.truncate with
         # spark.agensgraph.checkpointDir) writes one checkpoint per
         # generation; without this the retired generations' files
         # accumulate until the volume fills — the ContextCleaner only

@@ -1,3 +1,4 @@
+import itertools
 import os
 
 import pytest
@@ -190,6 +191,24 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if _is_slow(item):
             item.add_marker(skip)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def jobs_in(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs, counted through a job
+    group of its own. The group name comes from a counter: ``id(fn)``
+    would collide when CPython reuses a freed lambda's address and
+    silently add earlier jobs to the count."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

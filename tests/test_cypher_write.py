@@ -3,6 +3,7 @@ cypher_dml.sql CREATE/DELETE (:545-800), SET/REMOVE/+= (:803-947),
 MERGE (:968-1117); cypher_eager.sql read-after-write semantics."""
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 from agensgraph_spark.catalog import GraphCatalog
@@ -276,24 +277,16 @@ def test_delete_stat_jobs_one_per_victim_kind(spark, monkeypatch):
     come from ONE labid-groupBy job per victim frame (fast path) — not
     two frame counts per touched label — and the repeated-delete exact
     path costs at most two. Stats stay exact either way."""
-    import itertools
     from agensgraph_spark.cypher import writes as W
 
-    sc = spark.sparkContext
-    seq = itertools.count()
     jobs_per_call: list[int] = []
     orig = W.WriteMixin._victim_groups
 
     def counting(self, victims, kind):
-        group = f"statprobe-{next(seq)}"
-        sc.setJobGroup(group, "stat probe")
-        try:
-            out = orig(self, victims, kind)
-        finally:
-            sc.setJobGroup(None, None)
-        jobs_per_call.append(
-            len(sc.statusTracker().getJobIdsForGroup(group)))
-        return out
+        out = []
+        jobs_per_call.append(jobs_in(
+            spark, lambda: out.append(orig(self, victims, kind))))
+        return out[0]
 
     monkeypatch.setattr(W.WriteMixin, "_victim_groups", counting)
     eng = CypherEngine(spark, Graph(GraphCatalog("jd")))

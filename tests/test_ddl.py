@@ -3,6 +3,7 @@ labels, inheritance, property indexes, constraints; cypher_func.sql —
 labels() over inheritance DAGs)."""
 
 import pytest
+from conftest import jobs_in
 
 from agensgraph_spark.cypher.compiler import CypherEngine
 from agensgraph_spark.cypher.ddl import validate_constraints
@@ -258,26 +259,6 @@ def test_constraint_scope_untouched_label_never_rolls_back(eng, spark):
     assert len(viol) == 1 and "lb" in viol[0]
 
 
-import itertools as _it
-
-_PROBE_SEQ = _it.count()
-
-
-def _jobs_for(spark, fn) -> int:
-    """Spark jobs launched while fn() runs (job-group scoped; the
-    group name comes from a counter — id(fn) would collide when
-    CPython reuses a freed lambda's address and silently accumulate
-    earlier measurements)."""
-    sc = spark.sparkContext
-    group = f"probe-{next(_PROBE_SEQ)}"
-    sc.setJobGroup(group, "job probe")
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_constraint_jobs_scale_with_touched_labels_only(eng, spark):
     """Perf contract: a write's constraint-validation job count follows
     the TOUCHED labels' constraints, not the graph's total constraint
@@ -303,7 +284,7 @@ def test_constraint_jobs_scale_with_touched_labels_only(eng, spark):
     def measure(gname, k0):
         eng.cypher(f"SET graph_path = {gname}")
         return min(
-            _jobs_for(spark, lambda: eng.cypher("CREATE (:jt {k: %d})" % k))
+            jobs_in(spark, lambda: eng.cypher("CREATE (:jt {k: %d})" % k))
             for k in (k0, k0 + 1))
 
     baseline = measure("ga", 10)

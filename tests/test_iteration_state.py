@@ -4,13 +4,17 @@ The loops in operators/paths.py are generational: each round retires
 the superseded cached generation (GraphX-Pregel style), so a deep
 search pins O(1) frames, not O(iterations). The caps (VLE hop clamp,
 Dijkstra max_iters) must WARN and the LSH bucket cap is announced with
-its audit — the workload promises no silent caps."""
+its audit — the workload promises no silent caps. The superstep
+operators' Spark job counts are pinned, and every one of them refuses
+a round budget below 1 the same way."""
 
 import logging
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators import _superstep as S
 from agensgraph_spark.operators import paths as P
 from agensgraph_spark.pipeline import dedup as D
 
@@ -86,8 +90,8 @@ def test_vle_checkpoint_cadence_matches_python(spark, monkeypatch):
                 walk(d, eids + [e], vids + [d])
 
     walk(0, [], [])
-    for every in (P._CHECKPOINT_EVERY, 2):
-        monkeypatch.setattr(P, "_CHECKPOINT_EVERY", every)
+    for every in (S._CHECKPOINT_EVERY, 2):
+        monkeypatch.setattr(S, "_CHECKPOINT_EVERY", every)
         got = {(r.seed, r.dst, tuple(r.eids), tuple(r.vids), r.len)
                for r in P.vle_expand(edges, seeds, 1, 7).collect()}
         assert got == want, every
@@ -158,38 +162,165 @@ def test_lsh_default_cap_keeps_buckets(spark):
 
 def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
                                                 monkeypatch):
-    """With spark.agensgraph.checkpointDir set, the iterative path
-    operators truncate lineage via reliable DataFrame.checkpoint —
-    results identical to the default localCheckpoint mode, and the
-    checkpoint files actually land in the configured directory (the
-    executor-loss survival story depends on them existing)."""
+    """With spark.agensgraph.checkpointDir set, every iterative operator
+    truncates lineage via reliable DataFrame.checkpoint — the path
+    operators, pagerank past its cadence, k_core and the distributed
+    SCC and connected_components loops: results identical to the
+    default localCheckpoint mode, and each run writes checkpoint files
+    under the configured directory (the executor-loss survival story
+    depends on them existing)."""
     import os
     edges = chain_edges(spark, 8)
     seeds = spark.createDataFrame([(0,)], "seed long")
     pairs = spark.createDataFrame([(0, 6)], "seed long, target long")
     # a 7-hop expansion then checkpoints three times, not once
-    monkeypatch.setattr(P, "_CHECKPOINT_EVERY", 2)
-
-    def run_all():
-        vle = sorted(tuple(r) for r in P.vle_expand(
-            edges, seeds, 1, 7).select(
-                "seed", "dst", "len").collect())
-        bfs = sorted(tuple(r) for r in P.bfs_shortest(
-            edges, pairs, 1, 7).select("seed", "target", "len").collect())
-        dij = sorted(tuple(r) for r in P.dijkstra_paths(
+    monkeypatch.setattr(S, "_CHECKPOINT_EVERY", 2)
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
+    frames = _graph_frames(spark)
+    ops = _iterative_ops()
+    runs = {
+        "vle_expand": lambda: P.vle_expand(edges, seeds, 1, 7).select(
+            "seed", "dst", "len"),
+        "bfs_shortest": lambda: P.bfs_shortest(edges, pairs, 1, 7).select(
+            "seed", "target", "len"),
+        "dijkstra_paths": lambda: P.dijkstra_paths(
             edges, pairs, max_iters=10).select(
-                "seed", "target", "len", "weight").collect())
-        return vle, bfs, dij
+                "seed", "target", "len", "weight"),
+        **{name: (lambda op=ops[name]: op(*frames))
+           for name in ("pagerank", "k_core", "connected_components",
+                        "strongly_connected_components")},
+    }
 
-    base = run_all()
+    def rows(df):
+        return sorted(tuple(round(x, 9) if isinstance(x, float) else x
+                            for x in r) for r in df.collect())
+
+    def files():
+        return {os.path.join(dp, f)
+                for dp, _, fs in os.walk(ckdir) for f in fs}
+
+    base = {name: rows(run()) for name, run in runs.items()}
+    assert base["bfs_shortest"] == [(0, 6, 6)]
     ckdir = str(tmp_path / "reliable_ck")
     spark.conf.set("spark.agensgraph.checkpointDir", ckdir)
     try:
-        reliable = run_all()
+        for name, run in runs.items():
+            before = files()
+            # hold the frame while listing: the ContextCleaner deletes
+            # the checkpoint files of unreferenced frames
+            df = run()
+            assert rows(df) == base[name], name
+            assert files() - before, f"{name}: no checkpoint under {ckdir}"
     finally:
         spark.conf.unset("spark.agensgraph.checkpointDir")
-    assert reliable == base
-    assert base[1] == [(0, 6, 6)]
-    # reliable checkpoint files were written under the configured dir
-    files = [os.path.join(dp, f) for dp, _, fs in os.walk(ckdir) for f in fs]
-    assert files, f"no checkpoint files under {ckdir}"
+
+
+def _graph_frames(spark):
+    """A K5 sharing vertices with a K4 through bridge edges, a pendant
+    vertex 20 and an isolated 21. The back edges 4->0, 13->10 and
+    20->0 close two directed cycles, so SCC runs its settle rounds;
+    k_truss at k=4 peels twice in its incremental regime."""
+    k5 = [(i, j) for i in range(5) for j in range(i + 1, 5)]
+    k4 = [(a + 10, b + 10) for a, b in
+          [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]]
+    rows = k5 + k4 + [(4, 10), (3, 11), (4, 11), (0, 20), (1, 20),
+                      (4, 0), (13, 10), (20, 0)]
+    e = spark.createDataFrame(rows, "src long, dst long")
+    v = spark.createDataFrame([(i,) for i in range(22)], "id long")
+    src = spark.createDataFrame([(0,), (10,)], "id long")
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, float(i % 3), 2.0]) for i in range(22)],
+        "vec_id long, embedding array<double>")
+    return e, v, src, e.toDF("id_a", "id_b"), emb
+
+
+def _iterative_ops():
+    from agensgraph_spark.operators import analytics as AN
+    from agensgraph_spark.pipeline import similarity as SIM
+    return {
+        # 7 rounds: the sparse operators cut their lineage at round 6
+        "pagerank": lambda e, v, s, p, m: AN.pagerank(e, v, iters=7),
+        "label_propagation":
+            lambda e, v, s, p, m: AN.label_propagation(e, v, iters=7),
+        "personalized_pagerank":
+            lambda e, v, s, p, m: AN.personalized_pagerank(e, v, s, iters=7),
+        "random_walks": lambda e, v, s, p, m: AN.random_walks(e, s, steps=7),
+        "hits": lambda e, v, s, p, m: AN.hits(e, v),
+        "k_core": lambda e, v, s, p, m: AN.k_core(e, k=3),
+        "k_truss": lambda e, v, s, p, m: AN.k_truss(e, k=4),
+        "harmonic_centrality":
+            lambda e, v, s, p, m: AN.harmonic_centrality(e, v, max_hops=3),
+        "harmonic_centrality_sampled":
+            lambda e, v, s, p, m: AN.harmonic_centrality_sampled(
+                e, v, s, max_hops=3),
+        "betweenness_centrality_sampled":
+            lambda e, v, s, p, m: AN.betweenness_centrality_sampled(
+                e, v, s, max_hops=3),
+        "strongly_connected_components":
+            lambda e, v, s, p, m: AN.strongly_connected_components(e, v),
+        "connected_components":
+            lambda e, v, s, p, m: D.connected_components(p),
+        "neighbor_mean_embeddings":
+            lambda e, v, s, p, m: SIM.neighbor_mean_embeddings(
+                p, m, rounds=2),
+    }
+
+
+# Spark jobs per call (construction plus one collect) on _graph_frames:
+# the most seen in 10-40 runs of each before the loops shared one
+# superstep helper (local[4], AQE on). Identical runs differ by up to
+# two jobs (k_truss 39-42, betweenness 46-49), so these are upper
+# bounds: a loop that gains a count, a probe or an eager checkpoint per
+# round shows here.
+_JOBS_AT_MOST = {
+    "pagerank": 30, "label_propagation": 31, "personalized_pagerank": 37,
+    "random_walks": 10, "hits": 63, "k_core": 18, "k_truss": 42,
+    "harmonic_centrality": 24, "harmonic_centrality_sampled": 31,
+    "betweenness_centrality_sampled": 49,
+    "strongly_connected_components": 138, "connected_components": 44,
+    "neighbor_mean_embeddings": 12,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_JOBS_AT_MOST))
+def test_iterative_op_job_counts(spark, monkeypatch, name):
+    """Job counts of every superstep operator stay at or under their
+    pins. SCC and connected_components run their distributed loops
+    (no driver-local regime)."""
+    monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
+    frames = _graph_frames(spark)
+    op = _iterative_ops()[name]
+    assert jobs_in(spark, lambda: op(*frames).collect()) <= \
+        _JOBS_AT_MOST[name]
+
+
+@pytest.mark.parametrize("name,budget", [
+    ("pagerank", "iters"), ("label_propagation", "iters"),
+    ("personalized_pagerank", "iters"), ("random_walks", "steps"),
+    ("hits", "iters"), ("k_core", "max_iters"),
+    ("harmonic_centrality", "max_hops"),
+    ("neighbor_mean_embeddings", "rounds")])
+def test_round_budget_below_one_refused(spark, name, budget):
+    """Every superstep operator refuses a round budget below 1 with the
+    same ValueError naming the operator and its budget argument (a
+    negative budget used to return the initial state of some and raise
+    in others)."""
+    from agensgraph_spark.operators import analytics as AN
+    from agensgraph_spark.pipeline import similarity as SIM
+    e, v, s, p, m = _graph_frames(spark)
+    call = {
+        "pagerank": lambda: AN.pagerank(e, v, iters=-1),
+        "label_propagation": lambda: AN.label_propagation(e, v, iters=-1),
+        "personalized_pagerank":
+            lambda: AN.personalized_pagerank(e, v, s, iters=-1),
+        "random_walks": lambda: AN.random_walks(e, s, steps=-1),
+        "hits": lambda: AN.hits(e, v, iters=-1),
+        "k_core": lambda: AN.k_core(e, max_iters=-1),
+        "harmonic_centrality":
+            lambda: AN.harmonic_centrality(e, v, max_hops=-1),
+        "neighbor_mean_embeddings":
+            lambda: SIM.neighbor_mean_embeddings(p, m, rounds=-1),
+    }[name]
+    with pytest.raises(ValueError,
+                       match=f"^{name}: {budget}=-1 must be at least 1$"):
+        call()

@@ -1041,14 +1041,28 @@ def test_label_propagation_hand_computed(spark):
     assert got == {1: 2, 2: 1, 3: 2, 4: 4}
 
 
-def test_pagerank_deep_iters_bounded_plan(spark):
+def test_pagerank_deep_iters_bounded_plan(spark, monkeypatch):
     """User-supplied iteration counts must not grow the plan without
-    bound: the every-6-rounds localCheckpoint keeps the logical plan of
+    bound: the every-6-rounds truncation keeps the logical plan of
     iters=20 no deeper than a few un-truncated rounds' worth, and the
-    values still converge to the 2-cycle fixed point pr=1.0."""
+    values still converge to the 2-cycle fixed point pr=1.0. The
+    oracle-replayed iters=3 truncates only its two shared subtrees
+    (vertex universe, degree-annotated edges), never the rank frame."""
+    from pyspark.sql import DataFrame
     from agensgraph_spark.operators.analytics import pagerank
     e = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
     v = spark.createDataFrame([("a",), ("b",)], ["id"])
+    cuts = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, eager=True):
+        cuts.append(eager)
+        return checkpoint(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    pagerank(e, v, iters=3)
+    assert cuts == [False, False]
+    monkeypatch.undo()
     deep = pagerank(e, v, iters=20)
     # lineage truncated at rounds 6/12/18 → the final plan holds at most
     # 2 un-truncated rounds; an un-truncated 5-round plan is larger

@@ -5,6 +5,7 @@ broadcast of bounded sides, no cartesian products on the hot paths."""
 import re
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 from agensgraph_spark.cypher.compiler import CypherEngine
@@ -326,16 +327,11 @@ def test_minhash_neardup_pairs_jobs_and_plan(spark, monkeypatch):
         return checkpoint(self, *a, **kw)
 
     monkeypatch.setattr(frame, "localCheckpoint", recording)
-    sc = spark.sparkContext
-    sc.setJobGroup("minhash-probe", "minhash-probe")
-    try:
-        out = D.minhash_neardup_pairs(docs, min_est=0.3, threshold=0.4,
-                                      hash_fn="md5")
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("minhash-probe")
-    assert isinstance(out, DataFrame) and out.count() > 0
-    assert 0 < len(jobs) <= 7, jobs
+    out = []
+    jobs = jobs_in(spark, lambda: out.append(D.minhash_neardup_pairs(
+        docs, min_est=0.3, threshold=0.4, hash_fn="md5")))
+    assert isinstance(out[0], DataFrame) and out[0].count() > 0
+    assert 0 < jobs <= 7, jobs
     assert len(plans) == 1
     assert "Join" not in plans[0] and "array_intersect" not in plans[0]
     assert "MapInArrow scan(" in plans[0]
@@ -412,18 +408,31 @@ def test_lm_perplexity_plan_shape(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_semantic_dedup_plan_shape(spark):
+def test_semantic_dedup_plan_shape(spark, monkeypatch):
     """SemDeDup's pair join is confined WITHIN centroid clusters: no
     Python eval, no cartesian product, and the self-join keys on the
-    cluster tag (corpus never crosses clusters wholesale)."""
+    cluster tag (corpus never crosses clusters wholesale). The exact
+    path tags the corpus once: one MapInArrow node across the result
+    plan and the plan it truncates, where the three tag consumers used
+    to plan three."""
     from agensgraph_spark.loader import read_table
     from agensgraph_spark.pipeline import similarity as S
     emb = read_table(spark, SF, "embeddings")
+    frame = type(emb)
+    checkpoint = frame.localCheckpoint
+    truncated = []
+
+    def recording(self, *a, **kw):
+        truncated.append(physical(self))
+        return checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
     plan = physical(S.semantic_dedup(emb, dim=64))
     assert "EvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     join_lines = [ln for ln in plan.splitlines() if "Join" in ln]
     assert join_lines and any("cluster#" in ln for ln in join_lines), join_lines
+    assert sum(p.count("MapInArrow") for p in truncated + [plan]) == 1
 
 
 def test_frame_sample_plan_is_metadata_only(spark):
