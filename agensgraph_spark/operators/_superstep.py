@@ -1,9 +1,10 @@
 """One superstep loop for the iterative graph operators (Pregelix's
 uniform superstep dataflow, VLDB 2014, as a driver loop). It owns the
 policies they share: how lineage is truncated (`truncate`), in which
-rounds (`supersteps`), and what a round budget below 1 or a spent one
-does. A step ``step(state, i, cut)`` builds round ``i``'s state and
-passes each frame that needs truncating through ``cut``.
+rounds (`supersteps`), and what a round budget below 1
+(`check_budget`) or a spent one does. A step ``step(state, i, cut)``
+builds round ``i``'s state and passes each frame that needs
+truncating through ``cut``.
 
 Loops that keep their own driver code:
 
@@ -13,6 +14,12 @@ Loops that keep their own driver code:
   hot path; they take only `truncate` and ``_CHECKPOINT_EVERY``.
 - `similarity.train_ivf_centroids`: a driver-side collect loop over a
   NumPy matrix, with no lineage to truncate.
+- `strongly_connected_components`' trim: an unbounded peel-to-fixpoint
+  inside each settle round, which a round budget would only restate;
+  it truncates through the settle round's ``cut``.
+
+Each operator refuses a round budget below 1 with `check_budget`
+before it does any work, so `supersteps` assumes ``rounds >= 1``.
 """
 
 from __future__ import annotations
@@ -31,28 +38,32 @@ _CHECKPOINT_EVERY = 6
 
 
 def truncate(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df`` with its lineage cut. Default: ``localCheckpoint`` —
-    fastest, but blocks live on executors and do NOT survive executor
-    loss. Production opt-in: set the engine conf
-    ``spark.agensgraph.checkpointDir`` to a reliable (HDFS /
-    object-store) path and every iterative operator switches to
-    reliable ``DataFrame.checkpoint`` — state survives executor loss at
-    the cost of one write+read per generation. The SparkContext
-    checkpoint dir is adopted from the conf lazily; an explicitly
-    pre-set ``setCheckpointDir`` is respected. ``eager=False`` stores
-    the frame at the first action that reads it (under AQE, building it
-    still runs its shuffle-map stages)."""
+    """``df`` with its lineage cut: ``localCheckpoint`` by default —
+    fastest, but its blocks do NOT survive executor loss. With the
+    engine conf ``spark.agensgraph.checkpointDir`` set to a reliable
+    (HDFS / object-store) path, reliable ``DataFrame.checkpoint`` into
+    it (an explicitly pre-set ``setCheckpointDir`` is respected).
+    ``eager=False`` stores a local checkpoint at the first action that
+    reads it (under AQE, building it still runs its shuffle-map
+    stages). Reliable cuts are always eager, one write per generation:
+    a lazy one is not persisted, and Spark writes only the nearest
+    marked ancestor of a job, so earlier generations would go
+    unwritten."""
     spark = df.sparkSession
-    try:
-        d = spark.conf.get("spark.agensgraph.checkpointDir", "")
-    except Exception:  # pragma: no cover - conf service unavailable
-        d = ""
+    d = spark.conf.get("spark.agensgraph.checkpointDir", "")
     if d:
         sc = spark.sparkContext
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(d)
-        return df.checkpoint(eager=eager)
+        return df.checkpoint()
     return df.localCheckpoint(eager=eager)
+
+
+def check_budget(op: str, budget: str, rounds: int) -> None:
+    """Refuse a round budget below 1; ``op`` and ``budget`` (the name
+    of the round-count argument) label the message."""
+    if rounds < 1:
+        raise ValueError(f"{op}: {budget}={rounds} must be at least 1")
 
 
 def supersteps(
@@ -79,8 +90,6 @@ def supersteps(
     the same job) and the loop ends once the rule holds; a spent budget
     warns that the result is partial, or raises ``RuntimeError`` when
     ``strict`` (a partial result that would be silently wrong)."""
-    if rounds < 1:
-        raise ValueError(f"{op}: {budget}={rounds} must be at least 1")
     for i in range(rounds):
         if ((until is None and i + 1 == rounds)
                 or (sparse and (i + 1) % _CHECKPOINT_EVERY)):

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from agensgraph_spark.operators import _superstep as S
@@ -85,12 +85,10 @@ def pagerank(
     is never re-shuffled when AQE broadcasts the (narrow) rank frame.
     Returns (id, pr double).
 
-    Lineage guard: the plan doubles per iteration (pr feeds both the
-    contribution join and the rank update), so the rank frame is a
-    sparse superstep: runs of up to ``_superstep._CHECKPOINT_EVERY``
-    rounds (the oracle-replayed default of 3 among them) keep their
-    plan a pure closed-form join chain, longer ones are truncated
-    every that many rounds."""
+    The plan doubles per round (pr feeds both the contribution join
+    and the rank update); as a sparse superstep the oracle-replayed
+    default of 3 rounds keeps one closed-form join chain."""
+    S.check_budget("pagerank", "iters", iters)
     verts = _vertex_ids(vertices)
     ed = _degree_edges(edges)
 
@@ -137,7 +135,7 @@ def label_propagation(
     referenced EVERY round, so it is lazily truncated once (one
     LogicalRDD, computed at first action) instead of re-inlining its
     union+distinct subtree per round. Returns (id, community)."""
-    from pyspark.sql import Window
+    S.check_budget("label_propagation", "iters", iters)
     sym = S.truncate(edges.select("src", "dst")
                      .unionByName(edges.select(F.col("dst").alias("src"),
                                                F.col("src").alias("dst")))
@@ -251,6 +249,7 @@ def k_truss(
     incremental-vs-full differential test."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
+    S.check_budget("k_truss", "max_iters", max_iters)
     und = _canonical(edges)
 
     def full_support(cur: DataFrame) -> DataFrame:
@@ -358,11 +357,11 @@ def k_core(
     each peel removes the entire sub-threshold frontier at once).
     Input edges are undirected (src/dst, self-loops ignored). Per
     round one degree aggregate + two semi-joins over narrow (long,
-    long) rows; the surviving edge set is truncated per generation
-    like the other iterative operators. Aggregation
-    inside recursion puts this outside recursive-CTE SQL — verified by
-    a pure-Python peel replay (tests/test_pipeline_scale.py).
+    long) rows. Aggregation inside recursion puts this outside
+    recursive-CTE SQL — verified by a pure-Python peel replay
+    (tests/test_pipeline_scale.py).
     Returns (id, degree) of the k-core members."""
+    S.check_budget("k_core", "max_iters", max_iters)
     sym = _undirected(edges)
 
     def peel(st, i, cut):
@@ -426,6 +425,7 @@ def hits(
     14 MB from iters=1 to 5) and the sparse cadence of pagerank would
     come far too late. Returns (id, authority double, hub double).
     """
+    S.check_budget("hits", "iters", iters)
     # verts and the edge relation are each read twice per round
     verts = _vertex_ids(vertices)
     e = S.truncate(edges.select("src", "dst"), eager=False)
@@ -508,6 +508,7 @@ def personalized_pagerank(
     counting it would silently shrink the total restart mass to
     |S∩V|/|S| and diverge from any oracle that derives seeds from the
     vertex set. All-out-of-graph (or empty) sources refuse loudly."""
+    S.check_budget("personalized_pagerank", "iters", iters)
     verts = vertices.select("id").distinct()
     srcs, ns = _seed_set(sources, verts, "personalized_pagerank")
     # restart (with its |S| raise-guard subplan) is read every round
@@ -555,7 +556,7 @@ def random_walks(
     human/SQL-oracle consumption, ``path_ids`` a typed array of the
     raw vertex ids so downstream corpus generation (node2vec-style
     sequence emission) never re-parses ids from text."""
-    from pyspark.sql import Window
+    S.check_budget("random_walks", "steps", steps)
     # the edge relation is re-joined every step
     hop = S.truncate(edges.select(F.col("src").alias("cur"), "dst"),
                      eager=False)
@@ -610,27 +611,24 @@ def harmonic_centrality(
     set + a distinct — all on narrow id-pair rows (`_reach`). Returns
     (id, n_reached long, harmonic double) for every vertex (zeros for
     isolated ones)."""
+    S.check_budget("harmonic_centrality", "max_hops", max_hops)
     verts = _vertex_ids(vertices)
-    dist = _reach("harmonic_centrality", verts, _undirected(edges), max_hops)
-    reached = (dist.filter(F.col("d") > 0)
-               .groupBy(F.col("s").alias("id"))
-               .agg(F.count(F.lit(1)).alias("n_reached"),
-                    F.sum(F.lit(1.0) / F.col("d")).alias("harmonic")))
-    return (verts.join(reached, "id", "left")
-            .select("id",
-                    F.coalesce("n_reached", F.lit(0)).cast("long")
-                    .alias("n_reached"),
-                    F.coalesce("harmonic", F.lit(0.0)).alias("harmonic")))
+    return (_reach("harmonic_centrality", verts, verts, edges, max_hops, "s")
+            .select("id", F.col("_r").alias("n_reached"),
+                    F.col("_h").alias("harmonic")))
 
 
-def _reach(op: str, seeds: DataFrame, sym: DataFrame,
-           max_hops: int) -> DataFrame:
-    """(s, v, d): every vertex v within ``max_hops`` of a ``seeds`` id
-    s over the undirected ``sym``, at its hop distance d (d=0 for s
-    itself) — the BFS both harmonic operators share. Each frontier
-    feeds the union, the next expansion AND the next anti-join, so
-    un-truncated the plan grows ~3x per hop (measured 2.4 KB -> 74 KB
-    from hop 1 to 4): every hop but the last is cut."""
+def _reach(op: str, verts: DataFrame, seeds: DataFrame, edges: DataFrame,
+           max_hops: int, by: str) -> DataFrame:
+    """(id, _r, _h) for every ``verts`` id: the count of pairs (s, v)
+    with s a ``seeds`` id and v within ``max_hops`` hops of s over the
+    undirected ``edges``, and the sum of their 1/d, keyed by ``by``
+    (``"s"`` or ``"v"``) — the BFS both harmonic operators share. Each
+    frontier feeds the union, the next expansion AND the next
+    anti-join, so un-truncated the plan grows ~3x per hop (measured
+    2.4 KB -> 74 KB from hop 1 to 4): every hop but the last is cut."""
+    sym = _undirected(edges)
+
     def hop(st, i, cut):
         dist, frontier = st
         nxt = cut(frontier
@@ -643,7 +641,13 @@ def _reach(op: str, seeds: DataFrame, sym: DataFrame,
 
     dist = seeds.select(F.col("id").alias("s"), F.col("id").alias("v"),
                         F.lit(0).alias("d"))
-    return S.supersteps(op, "max_hops", max_hops, (dist, dist), hop)[0]
+    dist = S.supersteps(op, "max_hops", max_hops, (dist, dist), hop)[0]
+    reached = (dist.filter(F.col("d") > 0).groupBy(F.col(by).alias("id"))
+               .agg(F.count(F.lit(1)).alias("_r"),
+                    F.sum(F.lit(1.0) / F.col("d")).alias("_h")))
+    return verts.join(reached, "id", "left").select(
+        "id", F.coalesce("_r", F.lit(0)).cast("long").alias("_r"),
+        F.coalesce("_h", F.lit(0.0)).alias("_h"))
 
 
 def harmonic_centrality_sampled(
@@ -673,28 +677,21 @@ def harmonic_centrality_sampled(
     harmonic_est double) for every vertex — n_sampled is the RAW count
     of seeds that reached the vertex (the estimator's support, useful
     for confidence filtering), harmonic_est the scaled estimate."""
-    # r14: the shared subtrees (symmetrized edges, vertex universe,
-    # seed semi-join) are lazily truncated: un-truncated, the plan
-    # carried 68 parquet scans and its analysis alone cost ~1.1s
+    op = "harmonic_centrality_sampled"
+    S.check_budget(op, "max_hops", max_hops)
+    # the shared subtrees are truncated: un-truncated, the plan carried
+    # 68 parquet scans and its analysis alone cost ~1.1s (r14)
     verts = _vertex_ids(vertices)
-    srcs, ns = _seed_set(sources, verts, "harmonic_centrality_sampled")
-    dist = _reach("harmonic_centrality_sampled", srcs, _undirected(edges),
-                  max_hops)
+    srcs, ns = _seed_set(sources, verts, op)
     # |V| and |S| folded declaratively (two single-row aggregates,
     # broadcast back) so the whole run replays as chained SQL CTEs
     stats = (verts.agg(F.count(F.lit(1)).cast("double").alias("_n"))
              .crossJoin(ns))
-    reached = (dist.filter(F.col("d") > 0)
-               .groupBy(F.col("v").alias("id"))
-               .agg(F.count(F.lit(1)).alias("n_sampled"),
-                    F.sum(F.lit(1.0) / F.col("d")).alias("_h")))
-    return (verts.join(reached, "id", "left")
+    return (_reach(op, verts, srcs, edges, max_hops, "v")
             .crossJoin(F.broadcast(stats))
-            .select("id",
-                    F.coalesce("n_sampled", F.lit(0)).cast("long")
-                    .alias("n_sampled"),
-                    (F.coalesce("_h", F.lit(0.0)) * F.col("_n")
-                     / F.col("_ns")).alias("harmonic_est")))
+            .select("id", F.col("_r").alias("n_sampled"),
+                    (F.col("_h") * F.col("_n") / F.col("_ns"))
+                    .alias("harmonic_est")))
 
 
 def _min_reach_labels_fb(
@@ -714,10 +711,6 @@ def _min_reach_labels_fb(
     the cost is round-count x scheduler overhead, so halving the
     round/job count halves the phase (r14 opt session 2: graph_scc
     31.9s -> see OPTIMIZATION_r14.md).
-
-    A count-stopped superstep: each round's lazy cut is materialized
-    by its convergence count in one job and the plan stays
-    constant-size.
 
     Deliberately NO pointer-jump doubling (unlike
     pipeline/dedup.connected_components): jumping here means
@@ -890,6 +883,9 @@ def strongly_connected_components(
     below takes over (the differential test pins both regimes against
     each other). The gate is `dedup._driver_edges`, the bounded
     probe+fetch `connected_components` uses too."""
+    op = "strongly_connected_components"
+    S.check_budget(op, "max_rounds", max_rounds)
+    S.check_budget(op, "max_iters", max_iters)
     raw = edges.select("src", "dst")
     local = _driver_edges(raw)
     if local is not None:
@@ -903,7 +899,6 @@ def strongly_connected_components(
              .unionByName(e.select(F.col("dst").alias("id"))))
     if vertices is not None:
         verts = verts.unionByName(vertices.select("id"))
-    op = "strongly_connected_components"
     parts: list[DataFrame] = []
 
     def restrict(act_e: DataFrame, act_v: DataFrame) -> DataFrame:
@@ -912,30 +907,25 @@ def strongly_connected_components(
                 .join(act_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
                 .select("src", "dst"))
 
-    def trim(st, i, cut):
-        # peel vertices that lack an in- or out-edge in the ACTIVE
-        # subgraph (cannot be on a cycle -> singleton SCCs). Lazy
-        # generations: the next peel's count (or the settle phase's
-        # first job) materializes act_v and act_e in one job
-        act_v, act_e, n_act = st
-        srcs = act_e.select(F.col("src").alias("id")).distinct()
-        dsts = act_e.select(F.col("dst").alias("id")).distinct()
-        triv = cut(act_v.join(srcs, "id", "left_anti")
-                   .unionByName(act_v.join(dsts, "id", "left_anti"))
-                   .distinct())
-        n_triv = triv.count()
-        if n_triv == 0:
-            return st
-        parts.append(triv.select("id", F.col("id").alias("component")))
-        act_v = cut(act_v.join(triv, "id", "left_anti"))
-        return act_v, cut(restrict(act_e, act_v)), n_act - n_triv
-
     def settle(st, i, cut):
-        # each peel removes a vertex, so n_act + 1 rounds reach the
-        # trim fixpoint (a round that peels nothing)
-        act_v, act_e, n_act = S.supersteps(
-            op, "trim rounds", st[2] + 1, st, trim,
-            lambda old, new: new[2] == old[2])
+        act_v, act_e, n_act = st
+        # trim to fixpoint: peel vertices that lack an in- or out-edge
+        # in the ACTIVE subgraph (cannot be on a cycle -> singleton
+        # SCCs). Lazy generations: the next peel's count (or the settle
+        # phase's first job) materializes act_v and act_e in one job
+        while True:
+            srcs = act_e.select(F.col("src").alias("id")).distinct()
+            dsts = act_e.select(F.col("dst").alias("id")).distinct()
+            triv = cut(act_v.join(srcs, "id", "left_anti")
+                       .unionByName(act_v.join(dsts, "id", "left_anti"))
+                       .distinct())
+            n_triv = triv.count()
+            if n_triv == 0:
+                break
+            parts.append(triv.select("id", F.col("id").alias("component")))
+            act_v = cut(act_v.join(triv, "id", "left_anti"))
+            act_e = cut(restrict(act_e, act_v))
+            n_act -= n_triv
         if n_act == 0:
             return act_v, act_e, 0
         # lockstep fixpoint: (id, f, b) in one loop — the convergence
@@ -995,8 +985,9 @@ def betweenness_centrality_sampled(
     an empty intersection raises in-plan at first action (raise_error
     riding the |S| aggregate, like personalized_pagerank). Returns
     (id, bc_est double) for every vertex."""
-    # sym is joined once per forward hop AND once per backward level
     op = "betweenness_centrality_sampled"
+    S.check_budget(op, "max_hops", max_hops)
+    # sym is joined once per forward hop AND once per backward level
     sym = _undirected(edges)
     verts = _vertex_ids(vertices)
     srcs, ns = _seed_set(sources, verts, op)

@@ -1066,9 +1066,7 @@ def connected_components(
     O(component diameter) rounds — near-dup clusters are dense and
     shallow, so a handful of rounds closes them. Per round: one
     edge-to-label equi-join + min aggregate (both shuffles on narrow
-    (long, long) rows) and a driver-side convergence count — a
-    count-stopped superstep (operators/_superstep.py): each round's
-    generation is truncated and the count materializes it. On the
+    (long, long) rows) and a driver-side convergence count. On the
     distributed path the symmetric edge list is persisted for the loop
     and released before returning, and the returned frame is
     materialized so it holds no reference to the pins; the driver fast
@@ -1099,6 +1097,7 @@ def connected_components(
     """
     from pyspark.storagelevel import StorageLevel
 
+    S.check_budget("connected_components", "max_iters", max_iters)
     # the RAW pair list gates the regime — not the symmetrized-
     # distinct edge set. The driver fast path needs neither symmetry
     # nor dedup (union-find is idempotent over duplicate and reversed
@@ -1181,8 +1180,6 @@ def connected_components(
                    .select("id", "_old",
                            F.least("component", "_jc").alias("component")))
 
-    # the convergence count is the round's first action, so it
-    # materializes the round's lazy cut AND counts in ONE job
     lab = S.supersteps(
         "connected_components", "max_iters", max_iters, lab, step,
         lambda _, new: new.filter(

@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from agensgraph_spark.operators._superstep import supersteps, truncate
+from agensgraph_spark.operators._superstep import check_budget, supersteps
 from agensgraph_spark.pipeline.util import maybe_broadcast
 
 log = logging.getLogger(__name__)
@@ -569,24 +569,24 @@ def semantic_dedup(
             F.coalesce(F.col("_mlc") < tau, F.lit(True)).alias("keep"),
             (F.col("_rnb") > max_cluster + 1).alias("capped"))
 
-    # the exact scorer reads the tags three times (both sides of the
-    # cluster self-join and the output side): truncated, the corpus is
-    # scanned and tagged once
-    tagged = truncate(tagged, eager=False)
+    # exact: a cluster-keyed self-join that pairs each row with itself
+    # too, so every row survives it; both sides read one (reused)
+    # cluster exchange, so the corpus is scanned and tagged once
+    tagged = tagged.repartition("_list")
     a = tagged.select(F.col("_id").alias("vec_id"), F.col("_v").alias("va"),
                       F.col("_n").alias("na"), F.col("_list").alias("cluster"))
     b = tagged.select(F.col("_id").alias("_ib"), F.col("_v").alias("vb"),
                       F.col("_n").alias("nb"), F.col("_list").alias("cluster"))
-    out = a.select("vec_id", "cluster", F.lit(False).alias("_capped"))
     cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    lower = (a.join(b, "cluster").filter(F.col("_ib") < F.col("vec_id"))
-              .groupBy("vec_id").agg(F.max(cos).alias("max_lower_cos")))
-    return (out.join(lower, "vec_id", "left")
-               .select("vec_id", F.col("cluster").cast("long").alias("cluster"),
-                       F.round("max_lower_cos", 6).alias("max_lower_cos"),
-                       (F.coalesce(F.col("max_lower_cos") < tau, F.lit(True)))
-                       .alias("keep"),
-                       F.col("_capped").alias("capped")))
+    lower = (a.join(b, "cluster").filter(F.col("_ib") <= F.col("vec_id"))
+              .groupBy("vec_id", "cluster")
+              .agg(F.max(F.when(F.col("_ib") < F.col("vec_id"), cos))
+                   .alias("max_lower_cos")))
+    return lower.select(
+        "vec_id", F.col("cluster").cast("long").alias("cluster"),
+        F.round("max_lower_cos", 6).alias("max_lower_cos"),
+        F.coalesce(F.col("max_lower_cos") < tau, F.lit(True)).alias("keep"),
+        F.lit(False).alias("capped"))
 
 
 def semdedup_skew_stats(
@@ -715,6 +715,7 @@ def neighbor_mean_embeddings(
     adjacency is cached dense). Unpaired vertices keep their own
     embedding when ``include_self``, else drop out. Returns
     (id, embedding array<double>)."""
+    check_budget("neighbor_mean_embeddings", "rounds", rounds)
     sym = pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d")) \
                .unionByName(pairs.select(F.col("id_b").alias("s"),
                                          F.col("id_a").alias("d")))

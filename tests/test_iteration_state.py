@@ -177,7 +177,6 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
     monkeypatch.setattr(S, "_CHECKPOINT_EVERY", 2)
     monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     frames = _graph_frames(spark)
-    ops = _iterative_ops()
     runs = {
         "vle_expand": lambda: P.vle_expand(edges, seeds, 1, 7).select(
             "seed", "dst", "len"),
@@ -186,7 +185,7 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
         "dijkstra_paths": lambda: P.dijkstra_paths(
             edges, pairs, max_iters=10).select(
                 "seed", "target", "len", "weight"),
-        **{name: (lambda op=ops[name]: op(*frames))
+        **{name: (lambda name=name: _run(name, frames))
            for name in ("pagerank", "k_core", "connected_components",
                         "strongly_connected_components")},
     }
@@ -215,6 +214,47 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
         spark.conf.unset("spark.agensgraph.checkpointDir")
 
 
+def test_reliable_mode_writes_every_cut(spark, tmp_path, monkeypatch):
+    """In reliable-checkpoint mode each cut is written when it is made.
+    hits at iters=3 cuts six frames: the vertex universe and the edge
+    relation once, then the authority and hub frames of rounds 1 and 2.
+    A lazy reliable checkpoint neither persists its frame nor is
+    written unless it is the nearest marked ancestor of a job's RDD, so
+    generations read only through a later cut would go unwritten."""
+    import os
+    frames = _graph_frames(spark)
+    frame = type(frames[0])
+
+    def rows(df):
+        return sorted((r["id"], round(r["authority"], 9), round(r["hub"], 9))
+                      for r in df.collect())
+
+    base = rows(_run("hits", frames, iters=3))
+    checkpoint = frame.checkpoint
+    new_dirs = []
+
+    def rdd_dirs():
+        root = (spark.sparkContext.getCheckpointDir() or "").removeprefix(
+            "file:")
+        return {dp for dp, _, _ in os.walk(root)
+                if os.path.basename(dp).startswith("rdd-")} if root else set()
+
+    def recording(self, *a, **kw):
+        before = rdd_dirs()
+        out = checkpoint(self, *a, **kw)
+        new_dirs.append(len(rdd_dirs() - before))
+        return out
+
+    monkeypatch.setattr(frame, "checkpoint", recording)
+    spark.conf.set("spark.agensgraph.checkpointDir", str(tmp_path / "ck"))
+    try:
+        df = _run("hits", frames, iters=3)
+        assert new_dirs == [1] * 6
+        assert rows(df) == base
+    finally:
+        spark.conf.unset("spark.agensgraph.checkpointDir")
+
+
 def _graph_frames(spark):
     """A K5 sharing vertices with a K4 through bridge edges, a pendant
     vertex 20 and an isolated 21. The back edges 4->0, 13->10 and
@@ -235,49 +275,71 @@ def _graph_frames(spark):
 
 
 def _iterative_ops():
+    """name -> (operator, its frames from _graph_frames, keywords)."""
     from agensgraph_spark.operators import analytics as AN
     from agensgraph_spark.pipeline import similarity as SIM
+    ev = lambda e, v, s, p, m: (e, v)  # noqa: E731
+    evs = lambda e, v, s, p, m: (e, v, s)  # noqa: E731
     return {
         # 7 rounds: the sparse operators cut their lineage at round 6
-        "pagerank": lambda e, v, s, p, m: AN.pagerank(e, v, iters=7),
-        "label_propagation":
-            lambda e, v, s, p, m: AN.label_propagation(e, v, iters=7),
+        "pagerank": (AN.pagerank, ev, {"iters": 7}),
+        "label_propagation": (AN.label_propagation, ev, {"iters": 7}),
         "personalized_pagerank":
-            lambda e, v, s, p, m: AN.personalized_pagerank(e, v, s, iters=7),
-        "random_walks": lambda e, v, s, p, m: AN.random_walks(e, s, steps=7),
-        "hits": lambda e, v, s, p, m: AN.hits(e, v),
-        "k_core": lambda e, v, s, p, m: AN.k_core(e, k=3),
-        "k_truss": lambda e, v, s, p, m: AN.k_truss(e, k=4),
+            (AN.personalized_pagerank, evs, {"iters": 7}),
+        "random_walks":
+            (AN.random_walks, lambda e, v, s, p, m: (e, s), {"steps": 7}),
+        "hits": (AN.hits, ev, {}),
+        "k_core": (AN.k_core, lambda e, v, s, p, m: (e,), {"k": 3}),
+        "k_truss": (AN.k_truss, lambda e, v, s, p, m: (e,), {"k": 4}),
         "harmonic_centrality":
-            lambda e, v, s, p, m: AN.harmonic_centrality(e, v, max_hops=3),
+            (AN.harmonic_centrality, ev, {"max_hops": 3}),
         "harmonic_centrality_sampled":
-            lambda e, v, s, p, m: AN.harmonic_centrality_sampled(
-                e, v, s, max_hops=3),
+            (AN.harmonic_centrality_sampled, evs, {"max_hops": 3}),
         "betweenness_centrality_sampled":
-            lambda e, v, s, p, m: AN.betweenness_centrality_sampled(
-                e, v, s, max_hops=3),
+            (AN.betweenness_centrality_sampled, evs, {"max_hops": 3}),
         "strongly_connected_components":
-            lambda e, v, s, p, m: AN.strongly_connected_components(e, v),
+            (AN.strongly_connected_components, ev, {}),
         "connected_components":
-            lambda e, v, s, p, m: D.connected_components(p),
+            (D.connected_components, lambda e, v, s, p, m: (p,), {}),
         "neighbor_mean_embeddings":
-            lambda e, v, s, p, m: SIM.neighbor_mean_embeddings(
-                p, m, rounds=2),
+            (SIM.neighbor_mean_embeddings, lambda e, v, s, p, m: (p, m),
+             {"rounds": 2}),
     }
 
 
-# Spark jobs per call (construction plus one collect) on _graph_frames:
-# the most seen in 10-40 runs of each before the loops shared one
-# superstep helper (local[4], AQE on). Identical runs differ by up to
-# two jobs (k_truss 39-42, betweenness 46-49), so these are upper
-# bounds: a loop that gains a count, a probe or an eager checkpoint per
-# round shows here.
+def _run(name, frames, **kw):
+    """Operator ``name`` on ``frames``, its keywords overridden by
+    ``kw``."""
+    op, args, kw0 = _iterative_ops()[name]
+    return op(*args(*frames), **{**kw0, **kw})
+
+
+# Spark jobs per call (construction plus one collect) on _graph_frames,
+# local[4], AQE on: the range seen in 30 runs of each before the loops
+# shared one superstep helper (60 for k_truss and betweenness), and in
+# 30 after. Identical calls differ by up to three jobs, so each pin is the
+# earlier maximum plus its spread: a loop that gains a count, a probe
+# or an eager checkpoint per round still shows here.
+#   operator                        before   after
+#   pagerank                        29-30    29-30
+#   label_propagation               31       31
+#   personalized_pagerank           36-37    36-37
+#   random_walks                    10       10
+#   hits                            63       63
+#   k_core                          18       17
+#   k_truss                         39-42    39-42
+#   harmonic_centrality             24       24
+#   harmonic_centrality_sampled     31       31
+#   betweenness_centrality_sampled  46-49    46-47
+#   strongly_connected_components   138      138
+#   connected_components            42-44    42-44
+#   neighbor_mean_embeddings        12       11
 _JOBS_AT_MOST = {
-    "pagerank": 30, "label_propagation": 31, "personalized_pagerank": 37,
-    "random_walks": 10, "hits": 63, "k_core": 18, "k_truss": 42,
+    "pagerank": 31, "label_propagation": 31, "personalized_pagerank": 38,
+    "random_walks": 10, "hits": 63, "k_core": 18, "k_truss": 45,
     "harmonic_centrality": 24, "harmonic_centrality_sampled": 31,
-    "betweenness_centrality_sampled": 49,
-    "strongly_connected_components": 138, "connected_components": 44,
+    "betweenness_centrality_sampled": 52,
+    "strongly_connected_components": 138, "connected_components": 46,
     "neighbor_mean_embeddings": 12,
 }
 
@@ -289,38 +351,47 @@ def test_iterative_op_job_counts(spark, monkeypatch, name):
     (no driver-local regime)."""
     monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     frames = _graph_frames(spark)
-    op = _iterative_ops()[name]
-    assert jobs_in(spark, lambda: op(*frames).collect()) <= \
+    assert jobs_in(spark, lambda: _run(name, frames).collect()) <= \
         _JOBS_AT_MOST[name]
 
 
-@pytest.mark.parametrize("name,budget", [
-    ("pagerank", "iters"), ("label_propagation", "iters"),
-    ("personalized_pagerank", "iters"), ("random_walks", "steps"),
-    ("hits", "iters"), ("k_core", "max_iters"),
-    ("harmonic_centrality", "max_hops"),
-    ("neighbor_mean_embeddings", "rounds")])
-def test_round_budget_below_one_refused(spark, name, budget):
+# the round-budget arguments of each superstep operator
+_BUDGETS = {
+    "pagerank": ("iters",), "label_propagation": ("iters",),
+    "personalized_pagerank": ("iters",), "random_walks": ("steps",),
+    "hits": ("iters",), "k_core": ("max_iters",), "k_truss": ("max_iters",),
+    "harmonic_centrality": ("max_hops",),
+    "harmonic_centrality_sampled": ("max_hops",),
+    "betweenness_centrality_sampled": ("max_hops",),
+    "strongly_connected_components": ("max_rounds", "max_iters"),
+    "connected_components": ("max_iters",),
+    "neighbor_mean_embeddings": ("rounds",),
+}
+
+
+@pytest.mark.parametrize("name,budget,regime", [
+    (name, budget, regime) for name, budgets in sorted(_BUDGETS.items())
+    for budget in budgets
+    for regime in (("driver", "distributed")
+                   if name in ("strongly_connected_components",
+                               "connected_components") else ("default",))])
+@pytest.mark.parametrize("rounds", [0, -1])
+def test_round_budget_below_one_refused(spark, monkeypatch, name, budget,
+                                        regime, rounds):
     """Every superstep operator refuses a round budget below 1 with the
-    same ValueError naming the operator and its budget argument (a
-    negative budget used to return the initial state of some and raise
-    in others)."""
-    from agensgraph_spark.operators import analytics as AN
-    from agensgraph_spark.pipeline import similarity as SIM
-    e, v, s, p, m = _graph_frames(spark)
-    call = {
-        "pagerank": lambda: AN.pagerank(e, v, iters=-1),
-        "label_propagation": lambda: AN.label_propagation(e, v, iters=-1),
-        "personalized_pagerank":
-            lambda: AN.personalized_pagerank(e, v, s, iters=-1),
-        "random_walks": lambda: AN.random_walks(e, s, steps=-1),
-        "hits": lambda: AN.hits(e, v, iters=-1),
-        "k_core": lambda: AN.k_core(e, max_iters=-1),
-        "harmonic_centrality":
-            lambda: AN.harmonic_centrality(e, v, max_hops=-1),
-        "neighbor_mean_embeddings":
-            lambda: SIM.neighbor_mean_embeddings(p, m, rounds=-1),
-    }[name]
-    with pytest.raises(ValueError,
-                       match=f"^{name}: {budget}=-1 must be at least 1$"):
-        call()
+    same ValueError naming the operator and its budget argument, before
+    it runs a Spark job: SCC and connected_components in both regimes
+    (a negative budget used to return the initial state of some and
+    raise in others; a zero budget returned labels from the driver
+    regime and raised only from the distributed one)."""
+    if regime == "distributed":
+        monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
+    frames = _graph_frames(spark)
+
+    def refused():
+        with pytest.raises(
+                ValueError,
+                match=f"^{name}: {budget}={rounds} must be at least 1$"):
+            _run(name, frames, **{budget: rounds})
+
+    assert jobs_in(spark, refused) == 0

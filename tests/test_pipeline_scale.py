@@ -1048,18 +1048,18 @@ def test_pagerank_deep_iters_bounded_plan(spark, monkeypatch):
     values still converge to the 2-cycle fixed point pr=1.0. The
     oracle-replayed iters=3 truncates only its two shared subtrees
     (vertex universe, degree-annotated edges), never the rank frame."""
-    from pyspark.sql import DataFrame
     from agensgraph_spark.operators.analytics import pagerank
     e = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
     v = spark.createDataFrame([("a",), ("b",)], ["id"])
     cuts = []
-    checkpoint = DataFrame.localCheckpoint
+    frame = type(e)
+    checkpoint = frame.localCheckpoint
 
     def recording(self, eager=True):
         cuts.append(eager)
         return checkpoint(self, eager)
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
     pagerank(e, v, iters=3)
     assert cuts == [False, False]
     monkeypatch.undo()

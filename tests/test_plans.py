@@ -408,31 +408,26 @@ def test_lm_perplexity_plan_shape(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_semantic_dedup_plan_shape(spark, monkeypatch):
+def test_semantic_dedup_plan_shape(spark):
     """SemDeDup's pair join is confined WITHIN centroid clusters: no
     Python eval, no cartesian product, and the self-join keys on the
     cluster tag (corpus never crosses clusters wholesale). The exact
-    path tags the corpus once: one MapInArrow node across the result
-    plan and the plan it truncates, where the three tag consumers used
-    to plan three."""
+    path tags the corpus once: both sides of the self-join read one
+    cluster exchange, so the executed plan holds one MapInArrow node
+    and reuses its exchange."""
     from agensgraph_spark.loader import read_table
     from agensgraph_spark.pipeline import similarity as S
     emb = read_table(spark, SF, "embeddings")
-    frame = type(emb)
-    checkpoint = frame.localCheckpoint
-    truncated = []
-
-    def recording(self, *a, **kw):
-        truncated.append(physical(self))
-        return checkpoint(self, *a, **kw)
-
-    monkeypatch.setattr(frame, "localCheckpoint", recording)
-    plan = physical(S.semantic_dedup(emb, dim=64))
+    out = S.semantic_dedup(emb, dim=64)
+    plan = physical(out)
     assert "EvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     join_lines = [ln for ln in plan.splitlines() if "Join" in ln]
     assert join_lines and any("cluster#" in ln for ln in join_lines), join_lines
-    assert sum(p.count("MapInArrow") for p in truncated + [plan]) == 1
+    out.collect()
+    final = physical(out).split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, final
+    assert "ReusedExchange" in final, final
 
 
 def test_frame_sample_plan_is_metadata_only(spark):
