@@ -43,6 +43,7 @@ from agensgraph_spark.cypher.scope import Binding, Scope
 from agensgraph_spark.cypher.writes import WriteContext, WriteMixin
 from agensgraph_spark.graph import Graph, prop_col_name
 from agensgraph_spark.graphid import LOCID_BITS
+from agensgraph_spark.operators import _superstep as S
 from agensgraph_spark.operators import paths as P
 
 WRITE_CLAUSES = (A.Create, A.Merge, A.SetClause, A.RemoveClause, A.Delete)
@@ -185,8 +186,8 @@ class CypherEngine:
             # already at or below the target.
             spread = self.spark.sparkContext.defaultParallelism
             for lbl in qc.wctx.touched:
-                qc.wctx.graph.frames[lbl] = qc.wctx.graph.frames[lbl] \
-                    .coalesce(spread).localCheckpoint(eager=True)
+                qc.wctx.graph.frames[lbl] = S.truncate(
+                    qc.wctx.graph.frames[lbl].coalesce(spread))
             # constraints gate the COMMIT (reference: unique index /
             # check constraint errors abort the inserting statement,
             # cypher_dml.sql:1036-1040): the working graph is simply

@@ -53,6 +53,7 @@ from agensgraph_spark.cypher import ast as A
 from agensgraph_spark.cypher.scope import Binding
 from agensgraph_spark.graph import Graph, prop_col_name, prop_display_name
 from agensgraph_spark.graphid import LOCID_MASK, graphid_col, labid_col, locid_col
+from agensgraph_spark.operators import _superstep as S
 
 DEFAULT_VLABEL = "ag_vertex"
 
@@ -202,7 +203,7 @@ class WriteMixin:
         # (rows per partition, never the rows themselves) turns it
         # into a dense 0..n-1 uid — no global window, no RDD pass.
         df = df.withColumn("__mid", F.monotonically_increasing_id())
-        df = df.localCheckpoint(eager=True)  # pin ids against recompute
+        df = S.truncate(df)  # pin ids against recompute
         part = F.shiftrightunsigned(F.col("__mid"), 33)
         counts = sorted(
             df.groupBy(part.alias("__p")).count().collect(),
@@ -321,7 +322,7 @@ class WriteMixin:
                          .withColumn(f"{var}__label", F.lit(label))
         for k, col in prop_cols:
             self.df = self.df.withColumn(f"{var}__{k}", col)
-        self.df = self.df.localCheckpoint(eager=True)
+        self.df = S.truncate(self.df)
 
         new_rows = self.df.select(
             F.col(f"{var}__id").alias("id"),
@@ -367,7 +368,7 @@ class WriteMixin:
                          .withColumn(f"{var}__label", F.lit(label))
         for k, col in prop_cols:
             self.df = self.df.withColumn(f"{var}__{k}", col)
-        self.df = self.df.localCheckpoint(eager=True)
+        self.df = S.truncate(self.df)
 
         new_rows = self.df.select(
             F.col(f"{var}__id").alias("id"),
@@ -456,7 +457,7 @@ class WriteMixin:
         # counts per label). The rewritten frames stay lazy: the commit
         # materializes each touched label once.
         if edf is not None:
-            edf = edf.localCheckpoint(eager=True)
+            edf = S.truncate(edf)
             per = self.wctx.retire(self._victim_groups(edf, "e"), "e")
             eids = edf.select(F.col("id").alias("__eid"))
             for lbl in per:
@@ -464,7 +465,7 @@ class WriteMixin:
                 self.wctx.replace(lbl, f.join(eids, f["id"] == F.col("__eid"), "left_anti"))
             self.wctx.note_gone("e", edf.select("id"))
         if vdf is not None:
-            vdf = vdf.localCheckpoint(eager=True)
+            vdf = S.truncate(vdf)
             vgroups = self._victim_groups(vdf, "v")
             labids = {g.catalog.labels[lbl].labid for lbl, *_ in vgroups}
             vids = vdf.select(F.col("id").alias("__vid"))
@@ -664,7 +665,7 @@ class WriteMixin:
             names.append(k)
             upd_cols.append((col if col is not None else F.lit(None)).alias(nm))
         updates = self.df.select(*upd_cols).dropDuplicates(["__uid_key"])
-        updates = updates.localCheckpoint(eager=True)
+        updates = S.truncate(updates)
         n_upd = updates.count()
 
         cat = self.wctx.graph.catalog
@@ -976,7 +977,7 @@ class WriteMixin:
         joined = self.df.join(right, cond if cond is not None else F.lit(True), "left")
         joined = joined.drop(*[c for tmp in renames.values()
                                for c in right.columns if c.startswith(f"{tmp}__")])
-        joined = joined.localCheckpoint(eager=True)
+        joined = S.truncate(joined)
         matched = joined.filter(F.col(probe_col).isNotNull())
         missing = joined.filter(F.col(probe_col).isNull()) \
                         .drop(*[c for c in right.columns if c in joined.columns])

@@ -1,17 +1,18 @@
 """One superstep loop for the iterative graph operators (Pregelix's
 uniform superstep dataflow, VLDB 2014, as a driver loop). It owns the
-policies they share: how lineage is truncated (`truncate`), in which
-rounds (`supersteps`), and what a round budget below 1
-(`check_budget`) or a spent one does. A step ``step(state, i, cut)``
-builds round ``i``'s state and passes each frame that needs
-truncating through ``cut``.
+policies they share: how iteration state is pinned (`pin`), how
+lineage is truncated (`truncate`), in which rounds (`supersteps`), and
+what a round budget below 1 (`check_budget`) or a spent one does. No
+other module of the package persists, unpersists or checkpoints a
+frame itself. A step ``step(state, i, cut)`` builds round ``i``'s
+state and passes each frame that needs truncating through ``cut``.
 
 Loops that keep their own driver code:
 
-- `paths.vle_expand`, `bfs_shortest`, `dijkstra_paths`: they pin and
-  retire generations, reuse frontier counts as broadcast hints and
-  drain probes, and Dijkstra exits at a proven depth — `graph_cypher`'s
-  hot path; they take only `truncate` and ``_CHECKPOINT_EVERY``.
+- `paths.vle_expand`, `bfs_shortest`, `dijkstra_paths`: they reuse
+  frontier counts as broadcast hints and drain probes, and Dijkstra
+  exits at a proven depth — `graph_cypher`'s hot path; they take
+  `pin`, `truncate`, `check_budget` and ``_CHECKPOINT_EVERY``.
 - `similarity.train_ivf_centroids`: a driver-side collect loop over a
   NumPy matrix, with no lineage to truncate.
 - `strongly_connected_components`' trim: an unbounded peel-to-fixpoint
@@ -25,9 +26,11 @@ before it does any work, so `supersteps` assumes ``rounds >= 1``.
 from __future__ import annotations
 
 import logging
+from contextlib import contextmanager
 from functools import partial
-from typing import Any, Callable
+from typing import Any, Callable, Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 log = logging.getLogger(__name__)
@@ -57,6 +60,20 @@ def truncate(df: DataFrame, eager: bool = True) -> DataFrame:
             sc.setCheckpointDir(d)
         return df.checkpoint()
     return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def pin(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted for the ``with`` block (MEMORY_AND_DISK, so
+    oversized state spills instead of failing) and released
+    (non-blocking) when the block exits, also when it raises. A frame
+    the block returns must not read the pin lazily: cut it
+    (`truncate`) inside the block."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=False)
 
 
 def check_budget(op: str, budget: str, rounds: int) -> None:

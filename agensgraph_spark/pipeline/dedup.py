@@ -291,9 +291,12 @@ def _minhash_frame(df: DataFrame, text_col: str, id_col: str, k: int,
     ``np.minimum.reduceat`` over the per-document runs, so no
     shingles x num_hashes matrix is ever formed.
 
-    Degenerate input refuses loudly: a NULL id or NULL text raises
-    ``ValueError`` (it would otherwise pair NULL-text documents as exact
-    duplicates, or drop a NULL-id document from every pair)."""
+    Degenerate input refuses loudly: a NULL id or NULL text fails the
+    Spark task that reads it, and the action raises the task's
+    ``PythonException`` carrying ``minhash: NULL doc id`` or
+    ``minhash: NULL text`` (it would otherwise pair NULL-text documents
+    as exact duplicates, or drop a NULL-id document from every
+    pair)."""
     import pyarrow as pa
     import pyspark.sql.types as T
 
@@ -402,16 +405,17 @@ def minhash_lsh_candidates(
     threshold so exact verification only runs on plausible pairs.
 
     Executes EAGERLY: the candidate set is materialized at call time
-    (localCheckpoint) so the signature pin can be released instead of
-    leaking for the session. Pass ``min_est`` rather than composing a
+    (`_superstep.truncate`) so the signature pin can be released
+    instead of leaking for the session — also when a NULL id or text
+    fails the call (the Spark task's ``PythonException`` carrying
+    ``minhash: NULL …``). Pass ``min_est`` rather than composing a
     post-hoc filter, and note localCheckpoint storage does not survive
     executor loss (see README's fault-model note)."""
-    sig = _minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
-                         keep_sh=False, bands=bands).persist()
-    out = _bucket_pairs(sig, "minhash_lsh_candidates", num_hashes, bands,
-                        min_est, max_bucket).localCheckpoint()
-    sig.unpersist(blocking=False)
-    return out
+    with S.pin(_minhash_frame(df, text_col, id_col, k, hash_fn, num_hashes,
+                              keep_sh=False, bands=bands)) as sig:
+        return S.truncate(_bucket_pairs(sig, "minhash_lsh_candidates",
+                                        num_hashes, bands, min_est,
+                                        max_bucket))
 
 
 def _banded(frame: DataFrame) -> DataFrame:
@@ -677,21 +681,21 @@ def minhash_neardup_pairs(
     shingle hashes) once per band to the sorted bucket scan — each
     pair is formed, owned and verified in one place. The cap is
     announced as in ``minhash_lsh_candidates`` and audited by
-    ``lsh_skew_stats``. A NULL id or text raises ``ValueError``.
+    ``lsh_skew_stats``. A NULL id or text fails the call with the Spark
+    task's ``PythonException`` carrying ``minhash: NULL …``; the pin
+    is released all the same.
 
-    Executes EAGERLY (localCheckpoint at return) so every pinned
-    intermediate is released at call time — narrow the output with
+    Executes EAGERLY (cut at return, `_superstep.truncate`) so every
+    pinned intermediate is released at call time — narrow the output with
     ``min_est``/``threshold``, not post-hoc filters."""
-    from pyspark.storagelevel import StorageLevel
     base = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    sh = _minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes,
-                        bands=bands).persist(StorageLevel.MEMORY_AND_DISK)
-    # near-dup output is bounded; materialize and release the pin so
+    # near-dup output is bounded; materialize it and release the pin so
     # repeated invocations don't accumulate pinned storage
-    out = _bucket_pairs(sh, "minhash_neardup_pairs", num_hashes, bands,
-                        min_est, max_bucket, threshold).localCheckpoint()
-    sh.unpersist(blocking=False)
-    return out
+    with S.pin(_minhash_frame(base, "_t", "_id", k, hash_fn, num_hashes,
+                              bands=bands)) as sh:
+        return S.truncate(_bucket_pairs(sh, "minhash_neardup_pairs",
+                                        num_hashes, bands, min_est,
+                                        max_bucket, threshold))
 
 
 def fuzzy_decontaminate(
@@ -892,28 +896,26 @@ def simhash_neardup_pairs(
     Banding (pigeonhole: two hashes within k bits agree exactly on at
     least one of k+1 bands) turns the quadratic scan into a bucket
     join; the hamming check is one JVM-side bit_count(xor).
-    Executes EAGERLY (localCheckpoint at return) so the signature pin
-    is released at call time — narrow via ``max_hamming``, not
+    Executes EAGERLY (cut at return, `_superstep.truncate`) so the
+    signature pin is released at call time — narrow via ``max_hamming``, not
     post-hoc filters."""
-    sig = simhash(df, text_col, id_col, bits, hash_fn).persist()
     width = bits // bands
-    banded = sig.select(
-        F.col(id_col).alias("_id"), F.col("simhash").alias("_h"),
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(F.lit((1 << width) - 1))
-            for b in range(bands)
-        ])).alias("_band", "_bkey"),
-    )
-    left = banded.select("_band", "_bkey", F.col("_id").alias("id_a"), F.col("_h").alias("ha"))
-    right = banded.select("_band", "_bkey", F.col("_id").alias("id_b"), F.col("_h").alias("hb"))
-    pairs = (left.join(right, ["_band", "_bkey"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b",
-                     F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"))
-             .distinct())
-    out = pairs.filter(F.col("hamming") <= max_hamming).localCheckpoint()
-    sig.unpersist(blocking=False)
-    return out
+    with S.pin(simhash(df, text_col, id_col, bits, hash_fn)) as sig:
+        banded = sig.select(
+            F.col(id_col).alias("_id"), F.col("simhash").alias("_h"),
+            F.posexplode(F.array(*[
+                F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(F.lit((1 << width) - 1))
+                for b in range(bands)
+            ])).alias("_band", "_bkey"),
+        )
+        left = banded.select("_band", "_bkey", F.col("_id").alias("id_a"), F.col("_h").alias("ha"))
+        right = banded.select("_band", "_bkey", F.col("_id").alias("id_b"), F.col("_h").alias("hb"))
+        pairs = (left.join(right, ["_band", "_bkey"])
+                 .filter(F.col("id_a") < F.col("id_b"))
+                 .select("id_a", "id_b",
+                         F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"))
+                 .distinct())
+        return S.truncate(pairs.filter(F.col("hamming") <= max_hamming))
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -1095,8 +1097,6 @@ def connected_components(
     below takes over (the differential tests pin both paths against
     each other).
     """
-    from pyspark.storagelevel import StorageLevel
-
     S.check_budget("connected_components", "max_iters", max_iters)
     # the RAW pair list gates the regime — not the symmetrized-
     # distinct edge set. The driver fast path needs neither symmetry
@@ -1132,61 +1132,58 @@ def connected_components(
             raw.schema["src"].dataType,
             None if nodes is None else nodes.toDF("id"))
     sym = raw.select("src", "dst")
-    edges = (sym.unionByName(
-                sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-             .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    # size the loop's parallelism to the graph: the iteration cost on
-    # small pair graphs is pure task-scheduling overhead, so a modest
-    # graph must not run 32-task rounds; big graphs keep full width.
-    # The count also materializes the edge pin for the loop.
-    n_edges = edges.count()
-    spread = pairs.sparkSession.sparkContext.defaultParallelism
-    width = max(1, min(spread, n_edges // 50_000))
-    edges = edges.repartition(width, "src")
-    base = edges.select(F.col("src").alias("id")).distinct()
-    if nodes is not None:
-        base = base.unionByName(nodes.toDF("id")).distinct()
-    # an eager truncation, not persist: the label frame feeds the
-    # next generation TWICE (propagation join + label update), so an
-    # un-truncated lineage doubles every round and the analyzer blows
-    # up long before the executors do — truncation pins a
-    # generation-sized RDD and keeps the plan constant-size
-    lab = S.truncate(base.repartition(width, "id")
-                     .select("id", F.col("id").alias("component")))
+    with S.pin(sym.unionByName(
+            sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .distinct()) as edges:
+        # size the loop's parallelism to the graph: the iteration cost on
+        # small pair graphs is pure task-scheduling overhead, so a modest
+        # graph must not run 32-task rounds; big graphs keep full width.
+        # The count also materializes the edge pin for the loop.
+        n_edges = edges.count()
+        spread = pairs.sparkSession.sparkContext.defaultParallelism
+        width = max(1, min(spread, n_edges // 50_000))
+        edges = edges.repartition(width, "src")
+        base = edges.select(F.col("src").alias("id")).distinct()
+        if nodes is not None:
+            base = base.unionByName(nodes.toDF("id")).distinct()
+        # an eager truncation, not persist: the label frame feeds the
+        # next generation TWICE (propagation join + label update), so an
+        # un-truncated lineage doubles every round and the analyzer blows
+        # up long before the executors do — truncation pins a
+        # generation-sized RDD and keeps the plan constant-size
+        lab = S.truncate(base.repartition(width, "id")
+                         .select("id", F.col("id").alias("component")))
 
-    def step(lab, i, cut):
-        # one min-label step + one pointer jump per materialized round
-        # (wider rounds measured slower at sf0.1 — the bigger per-job
-        # DAG outweighs the saved rounds)
-        nbr = (edges
-               .join(lab.select(F.col("id").alias("src"),
-                                F.col("component").alias("_nc")), "src")
-               .groupBy(F.col("dst").alias("id"))
-               .agg(F.min("_nc").alias("_m")))
-        # least() ignores NULLs, so unpaired nodes keep their label
-        stepped = (lab.join(nbr, "id", "left")
-                   .select("id", F.col("component").alias("_old"),
-                           F.least("component", "_m").alias("component")))
-        # pointer jump: component := label[component]. Labels are
-        # always node ids of the same component and only ever
-        # decrease, so shortcutting through the label table is safe
-        # and turns O(diameter) convergence into O(log diameter) —
-        # near-dup chains (doc A ~ B ~ C ~ ...) otherwise cost one
-        # full round per link.
-        jump = stepped.select(F.col("id").alias("_jid"),
-                              F.col("component").alias("_jc"))
-        return cut(stepped.join(jump, stepped.component == jump._jid, "left")
-                   .select("id", "_old",
-                           F.least("component", "_jc").alias("component")))
+        def step(lab, i, cut):
+            # one min-label step + one pointer jump per materialized round
+            # (wider rounds measured slower at sf0.1 — the bigger per-job
+            # DAG outweighs the saved rounds)
+            nbr = (edges
+                   .join(lab.select(F.col("id").alias("src"),
+                                    F.col("component").alias("_nc")), "src")
+                   .groupBy(F.col("dst").alias("id"))
+                   .agg(F.min("_nc").alias("_m")))
+            # least() ignores NULLs, so unpaired nodes keep their label
+            stepped = (lab.join(nbr, "id", "left")
+                       .select("id", F.col("component").alias("_old"),
+                               F.least("component", "_m").alias("component")))
+            # pointer jump: component := label[component]. Labels are
+            # always node ids of the same component and only ever
+            # decrease, so shortcutting through the label table is safe
+            # and turns O(diameter) convergence into O(log diameter) —
+            # near-dup chains (doc A ~ B ~ C ~ ...) otherwise cost one
+            # full round per link.
+            jump = stepped.select(F.col("id").alias("_jid"),
+                                  F.col("component").alias("_jc"))
+            return cut(stepped.join(jump, stepped.component == jump._jid, "left")
+                       .select("id", "_old",
+                               F.least("component", "_jc").alias("component")))
 
-    lab = S.supersteps(
-        "connected_components", "max_iters", max_iters, lab, step,
-        lambda _, new: new.filter(
-            F.col("component") != F.col("_old")).count() == 0)
-    out = S.truncate(lab.select("id", "component"))
-    edges.unpersist(blocking=False)
-    return out
+        lab = S.supersteps(
+            "connected_components", "max_iters", max_iters, lab, step,
+            lambda _, new: new.filter(
+                F.col("component") != F.col("_old")).count() == 0)
+        return S.truncate(lab.select("id", "component"))
 
 
 def ngram_overlap(

@@ -3,7 +3,7 @@ cypher_dml.sql CREATE/DELETE (:545-800), SET/REMOVE/+= (:803-947),
 MERGE (:968-1117); cypher_eager.sql read-after-write semantics."""
 
 import pytest
-from conftest import jobs_in
+from conftest import checkpoint_dirs, jobs_in
 from pyspark.sql import functions as F
 
 from agensgraph_spark.catalog import GraphCatalog
@@ -419,3 +419,21 @@ def test_stats_after_writes_match_recompute(spark):
     # a path's edges carry no (start, end) split: the whole store drops
     eng.cypher("MATCH p = (:p)-[:r2]->(:q2) DELETE p")
     assert eng.graph.label_counts() is None and eng.graph.edge_triples() is None
+
+
+def test_reliable_mode_checkpoints_commit(spark, tmp_path):
+    """With spark.agensgraph.checkpointDir set, the write path cuts
+    through the same truncation as the iterative operators: a CREATE
+    statement writes reliable checkpoint files (rdd-*) and its commit
+    reads back from them."""
+    e = CypherEngine(spark, Graph(GraphCatalog("ck")))
+    spark.conf.set("spark.agensgraph.checkpointDir", str(tmp_path / "ck"))
+    try:
+        before = checkpoint_dirs(spark)
+        e.cypher("CREATE (:person {name: 'ana'})-[:knows]->(:person {name: 'bob'})")
+        assert checkpoint_dirs(spark) - before
+    finally:
+        spark.conf.unset("spark.agensgraph.checkpointDir")
+    got = rows(e.cypher("MATCH (a:person)-[:knows]->(b:person) "
+                        "RETURN a.name AS a, b.name AS b"), "a", "b")
+    assert got == [("ana", "bob")]

@@ -2,6 +2,7 @@
 oracle on seeded random graphs (the engine's analog of the reference's
 pg_regress variety — but randomized, which the reference lacks)."""
 
+import heapq
 import random
 from collections import defaultdict
 
@@ -11,6 +12,7 @@ from agensgraph_spark.catalog import GraphCatalog
 from agensgraph_spark.cypher.compiler import CypherEngine
 from agensgraph_spark.graph import Graph
 from agensgraph_spark.graphid import make_graphid
+from agensgraph_spark.operators import paths as P
 
 
 def random_graph(seed: int, n: int = 10, m: int = 20):
@@ -94,3 +96,45 @@ def test_shortestpath_matches_python_oracle(spark, seed):
     exp = {v: py_shortest(edges, 0, v) for v in range(1, 10)}
     exp = {v: d for v, d in exp.items() if d is not None and d <= 6}
     assert got == exp
+
+
+def py_dijkstra(wedges, src):
+    """Cheapest path weight from src to every vertex it reaches."""
+    adj = defaultdict(list)
+    for a, b, w in wedges:
+        adj[a].append((b, w))
+    dist, todo = {src: 0.0}, [(0.0, src)]
+    while todo:
+        d, v = heapq.heappop(todo)
+        if d > dist[v]:
+            continue
+        for u, w in adj[v]:
+            if d + w < dist.get(u, float("inf")):
+                dist[u] = d + w
+                heapq.heappush(todo, (d + w, u))
+    return dist
+
+
+@pytest.mark.parametrize("seed", [5, 6])
+def test_dijkstra_matches_python_oracle(spark, seed):
+    """dijkstra_paths without a proven depth (_depth=None) against a
+    Python Dijkstra on a random weighted digraph with cycles. A cheap
+    ring 0 -> 1 -> ... -> 7 -> 0 under dearer random chords makes the
+    cheapest paths up to seven edges long, so the search runs the
+    rounds before the edge pin, the round that pins it and the later
+    ones, until the frontier drains. Both call forms: bound pairs, and
+    independent seeds + targets."""
+    rng = random.Random(seed)
+    n = 8
+    wedges = [(v, (v + 1) % n, 1.0) for v in range(n)]
+    wedges += [(a, b, float(rng.randint(2, 9))) for a, b in random_graph(seed, n, 12)]
+    edges = spark.createDataFrame(
+        [(a, b, 100 + i, w) for i, (a, b, w) in enumerate(wedges)],
+        "src long, dst long, eid long, w double")
+    srcs = [0, 3]
+    exp = {(s, t): d for s in srcs for t, d in py_dijkstra(wedges, s).items() if t != s}
+    seeds = spark.createDataFrame([(s,) for s in srcs], "seed long")
+    targets = spark.createDataFrame([(t,) for t in range(n)], "target long")
+    for out in (P.dijkstra_paths(edges, seeds.crossJoin(targets)),
+                P.dijkstra_paths(edges, None, seeds=seeds, targets=targets)):
+        assert {(r["seed"], r["target"]): r["weight"] for r in out.collect()} == exp

@@ -17,6 +17,7 @@ import numpy as np
 import pytest
 
 from _xxh64 import xxh64_signed, xxh64_slot_signed
+from test_iteration_state import n_cached
 from agensgraph_spark.pipeline import dedup as D
 
 _P = (1 << 31) - 1
@@ -244,12 +245,15 @@ def test_minhash_refuses_null_text_and_id(spark):
     NULL-text documents as exact duplicates or silently dropping a
     NULL-id document from every pair — in the signature builder, the
     fused near-dup pipeline (both hash modes) and the exact verify. An
-    unknown hash_fn still raises on the driver at call time."""
+    unknown hash_fn still raises on the driver at call time. The eager
+    calls release the frame they pin when they fail: the CacheManager
+    holds no more entries after the refusals than before."""
     schema = "doc_id long, text string"
     null_text = spark.createDataFrame(
         [(1, None), (2, None), (3, "some ordinary text")], schema)
     null_id = spark.createDataFrame(
         [(1, "some ordinary text"), (None, "some ordinary text")], schema)
+    cached = n_cached(spark)
     with pytest.raises(Exception, match="minhash: NULL text"):
         D.minhash_signatures(null_text).collect()
     with pytest.raises(Exception, match="minhash: NULL doc id"):
@@ -257,8 +261,13 @@ def test_minhash_refuses_null_text_and_id(spark):
     for hf in HASH_FNS:
         with pytest.raises(Exception, match="minhash: NULL text"):
             D.minhash_neardup_pairs(null_text, hash_fn=hf)
+        with pytest.raises(Exception, match="minhash: NULL text"):
+            D.minhash_lsh_candidates(null_text, hash_fn=hf)
     with pytest.raises(Exception, match="minhash: NULL doc id"):
         D.minhash_neardup_pairs(null_id)
+    with pytest.raises(Exception, match="minhash: NULL doc id"):
+        D.minhash_lsh_candidates(null_id)
+    assert n_cached(spark) == cached
     cands = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
     with pytest.raises(Exception, match="minhash: NULL text"):
         D.ngram_jaccard_pairs(cands, null_text).collect()

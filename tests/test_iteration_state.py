@@ -1,17 +1,17 @@
 """Iteration-state hygiene for the path operators and cap visibility.
 
-The loops in operators/paths.py are generational: each round retires
-the superseded cached generation (GraphX-Pregel style), so a deep
-search pins O(1) frames, not O(iterations). The caps (VLE hop clamp,
+The loops in operators/paths.py are generational: each round cuts
+its generation, and only the loop's pins (released on exit) enter the
+CacheManager, so a deep search holds O(1) frames, not O(iterations). The caps (VLE hop clamp,
 Dijkstra max_iters) must WARN and the LSH bucket cap is announced with
 its audit — the workload promises no silent caps. The superstep
-operators' Spark job counts are pinned, and every one of them refuses
-a round budget below 1 the same way."""
+operators' Spark job counts are pinned, and every iterative operator
+refuses a round budget below 1 the same way."""
 
 import logging
 
 import pytest
-from conftest import jobs_in
+from conftest import checkpoint_dirs, jobs_in
 from pyspark.sql import functions as F
 
 from agensgraph_spark.operators import _superstep as S
@@ -114,8 +114,9 @@ def test_dijkstra_max_iters_warns(spark, caplog):
 
 @pytest.mark.parametrize("n", [1, 2, 3, 4, 5, 6])
 def test_dijkstra_proven_depth_matches_unbounded(spark, n):
-    """Every last-round shape: lazy over the seed checkpoint (1), over
-    cache()-era generations (2-4), over a checkpointed one (5-6)."""
+    """Every last-round shape: lazy over the seed checkpoint (1) or
+    over a checkpointed generation (2-6), with the edge relation read
+    raw (1-3) or through its pin (4-6)."""
     pairs = spark.createDataFrame([(0, n), (1, n)], "seed long, target long")
     free = sorted(P.dijkstra_paths(chain_edges(spark, n), pairs).collect())
     before = n_cached(spark)
@@ -195,8 +196,11 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
                             for x in r) for r in df.collect())
 
     def files():
+        # an earlier test may have set the session's directory already
+        root = (spark.sparkContext.getCheckpointDir() or ckdir).removeprefix(
+            "file:")
         return {os.path.join(dp, f)
-                for dp, _, fs in os.walk(ckdir) for f in fs}
+                for dp, _, fs in os.walk(root) for f in fs}
 
     base = {name: rows(run()) for name, run in runs.items()}
     assert base["bfs_shortest"] == [(0, 6, 6)]
@@ -221,7 +225,6 @@ def test_reliable_mode_writes_every_cut(spark, tmp_path, monkeypatch):
     A lazy reliable checkpoint neither persists its frame nor is
     written unless it is the nearest marked ancestor of a job's RDD, so
     generations read only through a later cut would go unwritten."""
-    import os
     frames = _graph_frames(spark)
     frame = type(frames[0])
 
@@ -233,16 +236,10 @@ def test_reliable_mode_writes_every_cut(spark, tmp_path, monkeypatch):
     checkpoint = frame.checkpoint
     new_dirs = []
 
-    def rdd_dirs():
-        root = (spark.sparkContext.getCheckpointDir() or "").removeprefix(
-            "file:")
-        return {dp for dp, _, _ in os.walk(root)
-                if os.path.basename(dp).startswith("rdd-")} if root else set()
-
     def recording(self, *a, **kw):
-        before = rdd_dirs()
+        before = checkpoint_dirs(spark)
         out = checkpoint(self, *a, **kw)
-        new_dirs.append(len(rdd_dirs() - before))
+        new_dirs.append(len(checkpoint_dirs(spark) - before))
         return out
 
     monkeypatch.setattr(frame, "checkpoint", recording)
@@ -304,6 +301,12 @@ def _iterative_ops():
         "neighbor_mean_embeddings":
             (SIM.neighbor_mean_embeddings, lambda e, v, s, p, m: (p, m),
              {"rounds": 2}),
+        "dijkstra_paths":
+            (P.dijkstra_paths,
+             lambda e, v, s, p, m: (
+                 e.select("src", "dst", F.xxhash64("src", "dst").alias("eid"),
+                          F.lit(1.0).alias("w")),
+                 p.toDF("seed", "target")), {}),
     }
 
 
@@ -355,7 +358,7 @@ def test_iterative_op_job_counts(spark, monkeypatch, name):
         _JOBS_AT_MOST[name]
 
 
-# the round-budget arguments of each superstep operator
+# the round-budget arguments of each iterative operator
 _BUDGETS = {
     "pagerank": ("iters",), "label_propagation": ("iters",),
     "personalized_pagerank": ("iters",), "random_walks": ("steps",),
@@ -366,6 +369,7 @@ _BUDGETS = {
     "strongly_connected_components": ("max_rounds", "max_iters"),
     "connected_components": ("max_iters",),
     "neighbor_mean_embeddings": ("rounds",),
+    "dijkstra_paths": ("max_iters",),
 }
 
 
@@ -378,9 +382,9 @@ _BUDGETS = {
 @pytest.mark.parametrize("rounds", [0, -1])
 def test_round_budget_below_one_refused(spark, monkeypatch, name, budget,
                                         regime, rounds):
-    """Every superstep operator refuses a round budget below 1 with the
+    """Every iterative operator refuses a round budget below 1 with the
     same ValueError naming the operator and its budget argument, before
-    it runs a Spark job: SCC and connected_components in both regimes
+    it runs a Spark job — dijkstra_paths too, which keeps its own loop: SCC and connected_components in both regimes
     (a negative budget used to return the initial state of some and
     raise in others; a zero budget returned labels from the driver
     regime and raised only from the distributed one)."""

@@ -146,6 +146,17 @@ def test_vle_expand_inverted_range(spark):
     assert out.collect() == []
 
 
+def test_vle_expand_drains_before_min_hops(spark):
+    """A frontier that drains before min_hops (no label-graph bound
+    clamps the range here) matches nothing."""
+    edges = spark.createDataFrame([(0, 1, 10), (1, 2, 11)],
+                                  "src long, dst long, eid long")
+    seeds = spark.createDataFrame([(0,)], "seed long")
+    out = P.vle_expand(edges, seeds, 5, 12)
+    assert out.columns == ["seed", "dst", "eids", "vids", "len"]
+    assert out.collect() == []
+
+
 def test_session_skips_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
