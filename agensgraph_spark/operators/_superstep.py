@@ -39,25 +39,34 @@ log = logging.getLogger(__name__)
 # checkpoints. Read at call time so tests can flip it.
 _CHECKPOINT_EVERY = 6
 
+# (conf value, resulting SparkContext directory) of the reliable
+# checkpoint directory `truncate` set last
+_dir_set: tuple[str, str] | None = None
+
 
 def truncate(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df`` with its lineage cut: ``localCheckpoint`` by default —
     fastest, but its blocks do NOT survive executor loss. With the
     engine conf ``spark.agensgraph.checkpointDir`` set to a reliable
     (HDFS / object-store) path, reliable ``DataFrame.checkpoint`` into
-    it (an explicitly pre-set ``setCheckpointDir`` is respected).
+    it, re-applied whenever the conf names another directory (one
+    pre-set with ``setCheckpointDir`` outside `truncate` is respected).
     ``eager=False`` stores a local checkpoint at the first action that
     reads it (under AQE, building it still runs its shuffle-map
     stages). Reliable cuts are always eager, one write per generation:
     a lazy one is not persisted, and Spark writes only the nearest
     marked ancestor of a job, so earlier generations would go
     unwritten."""
+    global _dir_set
     spark = df.sparkSession
     d = spark.conf.get("spark.agensgraph.checkpointDir", "")
     if d:
         sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
+        cur = sc.getCheckpointDir()
+        if cur is None or (_dir_set is not None and cur == _dir_set[1]
+                           and d != _dir_set[0]):
             sc.setCheckpointDir(d)
+            _dir_set = (d, sc.getCheckpointDir())
         return df.checkpoint()
     return df.localCheckpoint(eager=eager)
 

@@ -37,7 +37,9 @@ Scale notes:
   loops cut every generation eagerly through `_superstep.truncate`
   (one write + read per generation), so each round's plan references
   only stored blocks and a 30-iteration run holds O(1) live state,
-  not O(iterations). Superseded generations hold no CacheManager
+  not O(iterations). Only Dijkstra's proven last round stays lazy,
+  and only when it read the raw edges (rounds 1-3): no returned frame
+  reads a released pin. Superseded generations hold no CacheManager
   entries; the ContextCleaner reclaims their blocks.
   ``localCheckpoint`` blocks do not survive executor loss (its
   documented tradeoff). Production deployments that must survive
@@ -390,7 +392,7 @@ def dijkstra_paths(
     most ``max_iters`` the search ends after that round without the
     drain probes (frontier anti-join, count): the next frontier is
     provably empty, so no cap is hit and nothing warns; that last
-    generation stays lazy.
+    generation stays lazy unless it read the edge pin (round 4 on).
     """
     # Callers with INDEPENDENT endpoint sets (MATCH (a), (b) — two
     # disconnected components) pass seeds+targets instead of pairs:
@@ -431,7 +433,9 @@ def dijkstra_paths(
                 .withColumn("_rn", F.row_number().over(best)) \
                 .filter(F.col("_rn") <= limit).drop("_rn")
             if k == last:
-                paths = new_paths
+                # a generation that read the edge pin (rounds >= 4)
+                # is cut before the pin is released
+                paths = S.truncate(new_paths) if k > 3 else new_paths
                 break
             # one cut materializes the whole round (hop join + rank);
             # the frontier = rows changed this round (still candidates

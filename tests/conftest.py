@@ -211,14 +211,11 @@ def jobs_in(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def checkpoint_dirs(spark) -> set[str]:
-    """The ``rdd-*`` directories under the session's reliable checkpoint
-    directory. It is set once per SparkContext — by the first cut made
-    with ``spark.agensgraph.checkpointDir`` — so later tests find their
-    files there, not under the directory their own conf names."""
-    root = (spark.sparkContext.getCheckpointDir() or "").removeprefix("file:")
+def checkpoint_dirs(root) -> set[str]:
+    """The ``rdd-*`` directories (one per reliable checkpoint) under
+    ``root``, the directory ``spark.agensgraph.checkpointDir`` names."""
     return {dp for dp, _, _ in os.walk(root)
-            if os.path.basename(dp).startswith("rdd-")} if root else set()
+            if os.path.basename(dp).startswith("rdd-")}
 
 
 @pytest.fixture(scope="session")

@@ -2,11 +2,12 @@
 
 The loops in operators/paths.py are generational: each round cuts
 its generation, and only the loop's pins (released on exit) enter the
-CacheManager, so a deep search holds O(1) frames, not O(iterations). The caps (VLE hop clamp,
-Dijkstra max_iters) must WARN and the LSH bucket cap is announced with
-its audit — the workload promises no silent caps. The superstep
-operators' Spark job counts are pinned, and every iterative operator
-refuses a round budget below 1 the same way."""
+CacheManager, so a deep search holds O(1) frames, not O(iterations).
+The caps (VLE hop clamp, Dijkstra max_iters) must WARN and the LSH
+bucket cap is announced with its audit — the workload promises no
+silent caps. The superstep operators' Spark job counts are pinned,
+and every iterative operator refuses a round budget below 1 the same
+way."""
 
 import logging
 
@@ -115,12 +116,15 @@ def test_dijkstra_max_iters_warns(spark, caplog):
 @pytest.mark.parametrize("n", [1, 2, 3, 4, 5, 6])
 def test_dijkstra_proven_depth_matches_unbounded(spark, n):
     """Every last-round shape: lazy over the seed checkpoint (1) or
-    over a checkpointed generation (2-6), with the edge relation read
-    raw (1-3) or through its pin (4-6)."""
+    over a checkpointed generation (2-3) with the edge relation read
+    raw, or cut inside the edge pin (4-6), so the returned frame never
+    reads the released pin (no edge column in its plan)."""
     pairs = spark.createDataFrame([(0, n), (1, n)], "seed long, target long")
     free = sorted(P.dijkstra_paths(chain_edges(spark, n), pairs).collect())
     before = n_cached(spark)
     out = P.dijkstra_paths(chain_edges(spark, n), pairs, _depth=n)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert ("src#" in plan) == (n <= 3), plan
     assert sorted(out.collect()) == free
     assert n_cached(spark) - before <= 3
 
@@ -196,11 +200,8 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path,
                             for x in r) for r in df.collect())
 
     def files():
-        # an earlier test may have set the session's directory already
-        root = (spark.sparkContext.getCheckpointDir() or ckdir).removeprefix(
-            "file:")
         return {os.path.join(dp, f)
-                for dp, _, fs in os.walk(root) for f in fs}
+                for dp, _, fs in os.walk(ckdir) for f in fs}
 
     base = {name: rows(run()) for name, run in runs.items()}
     assert base["bfs_shortest"] == [(0, 6, 6)]
@@ -237,9 +238,9 @@ def test_reliable_mode_writes_every_cut(spark, tmp_path, monkeypatch):
     new_dirs = []
 
     def recording(self, *a, **kw):
-        before = checkpoint_dirs(spark)
+        before = checkpoint_dirs(tmp_path / "ck")
         out = checkpoint(self, *a, **kw)
-        new_dirs.append(len(checkpoint_dirs(spark) - before))
+        new_dirs.append(len(checkpoint_dirs(tmp_path / "ck") - before))
         return out
 
     monkeypatch.setattr(frame, "checkpoint", recording)
@@ -250,6 +251,21 @@ def test_reliable_mode_writes_every_cut(spark, tmp_path, monkeypatch):
         assert rows(df) == base
     finally:
         spark.conf.unset("spark.agensgraph.checkpointDir")
+
+
+def test_reliable_mode_follows_conf_changes(spark, tmp_path):
+    """A session that points spark.agensgraph.checkpointDir elsewhere
+    writes its later reliable checkpoints under the new directory, not
+    under the first one the conf named."""
+    for d in ("a", "b"):
+        spark.conf.set("spark.agensgraph.checkpointDir", str(tmp_path / d))
+        try:
+            # hold the frame: the ContextCleaner deletes the files of
+            # unreferenced frames
+            df = S.truncate(spark.range(3))
+            assert checkpoint_dirs(tmp_path / d) and df.count() == 3, d
+        finally:
+            spark.conf.unset("spark.agensgraph.checkpointDir")
 
 
 def _graph_frames(spark):
@@ -384,10 +400,11 @@ def test_round_budget_below_one_refused(spark, monkeypatch, name, budget,
                                         regime, rounds):
     """Every iterative operator refuses a round budget below 1 with the
     same ValueError naming the operator and its budget argument, before
-    it runs a Spark job — dijkstra_paths too, which keeps its own loop: SCC and connected_components in both regimes
-    (a negative budget used to return the initial state of some and
-    raise in others; a zero budget returned labels from the driver
-    regime and raised only from the distributed one)."""
+    it runs a Spark job. That includes dijkstra_paths, which keeps its
+    own loop, and SCC and connected_components in both regimes (a
+    negative budget used to return the initial state of some and raise
+    in others; a zero budget returned labels from the driver regime and
+    raised only from the distributed one)."""
     if regime == "distributed":
         monkeypatch.setattr(D, "_DRIVER_MAX_EDGES", 0)
     frames = _graph_frames(spark)
