@@ -45,6 +45,7 @@ from agensgraph_spark.graph import Graph, prop_col_name
 from agensgraph_spark.graphid import LOCID_BITS
 from agensgraph_spark.operators import _superstep as S
 from agensgraph_spark.operators import paths as P
+from agensgraph_spark.session import local_frame
 
 WRITE_CLAUSES = (A.Create, A.Merge, A.SetClause, A.RemoveClause, A.Delete)
 
@@ -130,7 +131,7 @@ class CypherEngine:
     def cypher(self, text: str, params: dict | None = None) -> DataFrame:
         from agensgraph_spark.cypher.ddl import execute_ddl
         if execute_ddl(self.store, text):
-            return self.spark.createDataFrame([("ok",)], "status string")
+            return local_frame(self.spark, [("ok",)], "status string")
         uq = parse_cypher(text)
         leaves = uq.leaves if isinstance(uq, A.SetOp) else [uq]
         has_write = any(isinstance(c, WRITE_CLAUSES)
@@ -200,9 +201,8 @@ class CypherEngine:
         if returns_rows:
             return df
         stats = self.last_write_stats
-        return self.spark.createDataFrame(
-            [tuple(stats.values())],
-            schema=", ".join(f"{k} long" for k in stats))
+        return local_frame(self.spark, [tuple(stats.values())],
+                           ", ".join(f"{k} long" for k in stats))
 
     def _enforce_constraints(self, wctx) -> None:
         """Raise on unique/check violations over the TOUCHED labels of

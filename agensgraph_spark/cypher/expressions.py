@@ -137,8 +137,7 @@ class ExprCompiler:
         if hoisted is not None:
             return TC(F.col(hoisted))
         from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        rows = spark.sql(e.sql).limit(2).collect()
+        rows = SparkSession.active().sql(e.sql).limit(2).collect()
         if len(rows) > 1:
             raise ValueError("scalar subquery returned more than one row")
         val = rows[0][0] if rows else None

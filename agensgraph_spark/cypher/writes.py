@@ -726,50 +726,27 @@ class WriteMixin:
             self._materialize_path_composites(
                 self._pattern_prop_exprs([m.pattern]))
             lim = getattr(self.engine, "sequential_merge_rows", 0) or 0
-            if lim > 0:
-                # fold order contract: rows fold in collect() order —
-                # partition-major, positions preserved within each
-                # partition. When the pipeline established an order
-                # (ORDER BY in a preceding WITH), Spark's range-
-                # partitioned sort makes that the GLOBAL order, so the
-                # fold is order-faithful exactly when the query defined
-                # one; otherwise row order is implementation-defined,
-                # matching the reference (PG heap order without ORDER
-                # BY is likewise arbitrary). A monotonically_increasing
-                # _id sort would be a no-op here — it encodes the same
-                # (partition, position) order collect() already returns
-                # — so no index column is carried.
-                rows = [tuple(r) for r in self.df.limit(lim + 1).collect()]
-                if 1 < len(rows) <= lim:
-                    return self._compile_merge_sequential(m, rows)
-                acc = self._merge_accumulating_vars(m)
-                if (len(rows) > lim and acc
+            acc = self._merge_accumulating_vars(m)
+            if lim > 0 or acc:
+                # one bounded probe: ships at most cap + 1 rows
+                cap = max(lim, 1)
+                n = len(self.df.limit(cap + 1).collect())
+                if 1 < n <= lim:
+                    return self._compile_merge_sequential(m)
+                if (n > cap and acc
                         and self._merge_rows_can_collide(m, acc)):
                     raise NotImplementedError(
                         "MERGE ... ON MATCH/ON CREATE SET reads the merge "
                         "variable's own properties/entity (per-input-row "
                         "accumulation, e.g. SET a.cnt = a.cnt + 1) over "
-                        "input rows that can probe the SAME entity, and the "
-                        f"input exceeds sequential_merge_rows={lim}: batch "
+                        "input rows that can probe the SAME entity, more "
+                        f"of them than sequential_merge_rows={lim}: batch "
                         "execution applies SET once per statement and would "
                         "silently diverge from the reference's row-at-a-time "
-                        "semantics (execCypherMerge.c:35). Raise "
-                        "sequential_merge_rows or restructure the query.")
-            else:
-                acc = self._merge_accumulating_vars(m)
-                if (acc and len(self.df.limit(2).collect()) > 1
-                        and self._merge_rows_can_collide(m, acc)):
-                    raise NotImplementedError(
-                        "MERGE ... ON MATCH/ON CREATE SET reads the merge "
-                        "variable's own properties/entity (per-input-row "
-                        "accumulation, e.g. SET a.cnt = a.cnt + 1) over "
-                        "input rows that can probe the SAME entity: batch "
-                        "execution applies SET once per statement and "
-                        "would silently diverge from the reference's "
-                        "row-at-a-time semantics (execCypherMerge.c:35; "
-                        "cypher_eager.sql:112-156). Opt in to the bounded "
-                        "per-row fold with "
-                        "CypherEngine(sequential_merge_rows=N).")
+                        "semantics (execCypherMerge.c:35; "
+                        "cypher_eager.sql:112-156). Raise "
+                        "CypherEngine(sequential_merge_rows=N) to fold the "
+                        "rows one at a time, or restructure the query.")
         self._compile_merge_batch(m, first)
 
     def _merge_accumulating_vars(self, m: A.Merge) -> set:
@@ -855,7 +832,7 @@ class WriteMixin:
                 return True
         return False
 
-    def _compile_merge_sequential(self, m: A.Merge, rows: list) -> None:
+    def _compile_merge_sequential(self, m: A.Merge) -> None:
         """Opt-in OLTP-fidelity MERGE (engine.sequential_merge_rows):
         fold the clause's input rows one at a time on the driver so
         each row's match phase observes earlier rows' creations AND
@@ -864,22 +841,35 @@ class WriteMixin:
         cypher_eager.sql:112-156, e.g. ON MATCH SET cnt = cnt + 1
         counting earlier input rows of the SAME statement).
 
-        Driver-side by construction: only taken when the input frame
-        is at most ``sequential_merge_rows`` rows. Batch mode (the
-        default) stays the scale path; this exists to reproduce
-        row-at-a-time transactional semantics where fidelity matters
-        more than throughput."""
-        spark = self.df.sparkSession
-        schema = self.df.schema
+        Only taken when the input frame is at most
+        ``sequential_merge_rows`` rows. Batch mode (the default) stays
+        the scale path; this exists to reproduce row-at-a-time
+        transactional semantics where fidelity matters more than
+        throughput.
+
+        Rows fold in collect() order: partition-major, positions kept
+        within each partition. When the pipeline established an order
+        (ORDER BY in a preceding WITH), Spark's range-partitioned sort
+        makes that the GLOBAL order, so the fold is order-faithful
+        exactly when the query defined one; otherwise row order is
+        implementation-defined, as PG heap order is without ORDER BY.
+        The input is cut with a monotonic row number, which encodes that
+        same (partition, position) order, and each row's frame is a
+        filter of the cut on its number. No collected value goes back
+        into Spark, so every type arrives as the pipeline produced it
+        (a collected timestamp rebuilt into a frame could shift by the
+        process and session time zones)."""
+        seq = "__merge_seq"
+        pinned = S.truncate(self.df.withColumn(seq, F.monotonically_increasing_id()))
         base_scope = self.scope
         outs: list[DataFrame] = []
         final_scope = None
-        for r in rows:
+        for i in sorted(r[0] for r in pinned.select(seq).collect()):
             # each row compiles against the PRE-merge scope (the merge
             # vars must not look outer-bound on later rows) but the
             # CURRENT working graph, which earlier rows just mutated
             self.scope = base_scope.copy()
-            self.df = spark.createDataFrame([r], schema)
+            self.df = pinned.filter(F.col(seq) == i).drop(seq)
             self._compile_merge_batch(m, first=False)
             outs.append(self.df)
             final_scope = self.scope

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from agensgraph_spark.catalog import GraphCatalog
+from agensgraph_spark.session import local_frame
 
 BASE_V_COLS = ["id"]
 BASE_E_COLS = ["id", "start", "end"]
@@ -169,11 +170,10 @@ class Graph:
         base = BASE_V_COLS if meta.kind == "v" else BASE_E_COLS
         if df is None:
             # label created by DDL but never written: empty scan
-            spark = SparkSession.getActiveSession()
             ddl = ", ".join(f"{c} long" for c in base)
             for p, t in meta.props.items():
                 ddl += f", {p} {t}"
-            df = spark.createDataFrame([], schema=ddl)
+            df = local_frame(SparkSession.active(), [], ddl)
         cols = [F.col(c) for c in base] + [F.lit(label).alias("label")]
         cols += [F.col(prop_col_name(p)) for p in meta.props if prop_col_name(p) in df.columns]
         return df.select(*cols)
@@ -323,8 +323,9 @@ class Graph:
         labid) — the ag_graphmeta analog. Reads are CATALOG lookups in
         the reference (ag_graphmeta rows maintained from write stats,
         src/backend/utils/adt/graphmeta.c), not edge rescans — so with
-        statistics this is a driver-local VALUES frame that runs no
-        job; without, a lazy aggregate over the edge frames."""
+        statistics this is a `local_frame` of the triples that runs no
+        job; without, a lazy aggregate over the edge frames (empty, and
+        still jobless, when no edge label has a frame)."""
         triples = self.edge_triples()
         if triples is None:
             rows = self._stat_rows(self.catalog.elabels())
@@ -333,21 +334,8 @@ class Graph:
                         .agg(F.count(F.lit(1)).alias("edgecount"))
                         .withColumnRenamed("label", "edge_label"))
             triples = []
-        # getActiveSession() is None off the session's driver thread
-        spark = next((f.sparkSession for f in self.frames.values() if f is not None),
-                     None) or SparkSession.getActiveSession()
-        if spark is None:
-            raise ValueError("edge_stats: the graph has no frames and no active session")
-        # VALUES → LocalRelation: constant-folds driver-side, no tasks
-        # at all (createDataFrame would plan an RDD scan). VALUES () is
-        # invalid, so no triples read as one row filtered away.
-        vals = ", ".join(
-            "('{}', {}, {}, {})".format(str(e).replace("'", "''"), int(s), int(t), int(n))
-            for e, s, t, n in triples or [("", 0, 0, 0)])
-        return spark.sql(
-            "SELECT col1 AS edge_label, CAST(col2 AS LONG) AS start_labid,"
-            " CAST(col3 AS LONG) AS end_labid, CAST(col4 AS LONG) AS"
-            f" edgecount FROM (VALUES {vals})" + ("" if triples else " WHERE false"))
+        return local_frame(SparkSession.active(), triples,
+                           "edge_label string, start_labid long, end_labid long, edgecount long")
 
     def _stat_rows(self, labels: Iterable[str]) -> DataFrame | None:
         """(label, start_labid, end_labid) per row of the labels' frames,
@@ -383,13 +371,6 @@ class Graph:
                 .withColumn("end", F.element_at(name_of, F.col("end_labid").cast("int")))
                 .filter(F.col("start").isNotNull() & F.col("end").isNotNull())
                 .select("start", F.col("edge_label").alias("edge"), "end", "edgecount"))
-
-    # ---- SQL interop (reference: Cypher results usable as SQL relations) ----
-
-    def register_views(self, prefix: str | None = None) -> None:
-        pre = f"{prefix}_" if prefix else f"{self.catalog.name}_"
-        for lbl in self.catalog.labels:
-            self._stamped(lbl).createOrReplaceTempView(f"{pre}{lbl}")
 
     # ---- persistence: immutable snapshot model ----
 

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from agensgraph_spark.operators import _superstep as S
+from agensgraph_spark.session import local_frame
 
 log = logging.getLogger(__name__)
 
@@ -1036,12 +1037,13 @@ def _driver_label_frame(spark, labels, id_dt,
     """(id, component) frame from a driver-computed ``labels`` list —
     the shared tail of the driver regimes of `connected_components`
     and `strongly_connected_components`. The label map inherits the
-    edge id type ``id_dt``. ``universe`` (one ``id`` column) widens
+    edge id type ``id_dt`` and is a `local_frame`: a local scan that
+    runs no job of its own. ``universe`` (one ``id`` column) widens
     the output; its unlabeled ids label themselves. The endpoint
     universe is already on the driver, so the plan never references
     the edge frame and needs no checkpoint to outlive its pin."""
     import pyspark.sql.types as T
-    comp = spark.createDataFrame(labels, T.StructType([
+    comp = local_frame(spark, labels, T.StructType([
         T.StructField("id", id_dt), T.StructField("component", id_dt)]))
     base = comp.select("id")
     if universe is not None:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from agensgraph_spark.operators._superstep import check_budget, supersteps
 from agensgraph_spark.pipeline.util import maybe_broadcast
+from agensgraph_spark.session import local_frame
 
 log = logging.getLogger(__name__)
 
@@ -93,8 +94,7 @@ def brute_cosine_topk(
     ])
     qrows = qsel.collect()
     if not qrows:
-        return _rank_topk(
-            corpus.sparkSession.createDataFrame([], out_schema), k)
+        return _rank_topk(local_frame(corpus.sparkSession, [], out_schema), k)
     q_ids = [r[0] for r in qrows]
     if any(i is None for i in q_ids):
         raise ValueError("brute_cosine_topk: NULL query id")
@@ -789,12 +789,8 @@ def train_ivf_centroids(
     it is the point: it becomes a broadcast literal); each round is one
     distributed kmeans_update pass. Empty clusters keep their previous
     centroid, so the list count is stable round to round."""
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    rng = np.random.default_rng(seed)
-    cents = rng.standard_normal((n_lists, dim))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    cents = [[float(x) for x in c] for c in cents]
+    cents = [[float(x) for x in c]
+             for c in _resolve_cents(emb, vec_col, n_lists, seed, dim, None)]
     for _ in range(rounds):
         got = {r["list_id"]: list(r["centroid"])
                for r in kmeans_update(emb, cents, vec_col).collect()}

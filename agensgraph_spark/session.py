@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "agensgraph_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -58,3 +59,23 @@ def get_spark(app_name: str = "agensgraph_spark", shuffle_partitions: int | None
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A frame of ``rows`` (tuples the driver holds, in ``schema``'s
+    column order; ``schema`` may be a DDL string) built from an Arrow
+    table. It plans as a ``LocalTableScan``, so building and reading it
+    runs no Spark job and no Python worker, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says; a Python list
+    would plan an RDD scan that runs one of each. A naive timestamp
+    reads as UTC, not as the process-local time ``collect()`` returns,
+    so collected rows must not come back through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                                 schema=arrow)
+    return spark.createDataFrame(table, schema)

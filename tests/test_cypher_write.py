@@ -436,3 +436,46 @@ def test_reliable_mode_checkpoints_commit(spark, tmp_path):
     got = rows(e.cypher("MATCH (a:person)-[:knows]->(b:person) "
                         "RETURN a.name AS a, b.name AS b"), "a", "b")
     assert got == [("ana", "bob")]
+
+
+@pytest.fixture
+def shifted_zones(spark, monkeypatch):
+    """A session time zone and a process time zone that are neither
+    UTC nor each other, restored afterwards."""
+    import time
+    old = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_sequential_merge_keeps_value_types(spark, shifted_zones):
+    """The sequential MERGE fold carries each input row's values into
+    the merged entity unchanged: a timestamp, a date, a decimal and an
+    array read back equal to the parameters they came from, in the
+    stored graph and in the statement's RETURN."""
+    import datetime as dt
+    from decimal import Decimal
+    params = {"ts": dt.datetime(2024, 1, 15, 12, 34, 56, 123456),
+              "d": dt.date(2024, 2, 29), "dec": Decimal("12345.67"),
+              "arr": [1.5, -2.25]}
+    want = tuple(params.values())
+    e = CypherEngine(spark, Graph(GraphCatalog("seqtypes")),
+                     sequential_merge_rows=8)
+    ret = e.cypher(
+        "WITH $ts AS ts, $d AS d, $dec AS dec, $arr AS arr "
+        "UNWIND [1, 2, 3] AS i MERGE (n:v {no: i % 2}) "
+        "ON CREATE SET n.ts = ts, n.d = d, n.dec = dec, n.arr = arr "
+        "RETURN n.no AS no, n.ts AS ts, n.d AS d, n.dec AS dec, n.arr AS arr",
+        params)
+    assert rows(ret, "no", "ts", "d", "dec", "arr") == \
+        [(0, *want), (1, *want), (1, *want)]
+    stored = e.cypher("MATCH (n:v) RETURN n.no AS no, n.ts AS ts, n.d AS d, "
+                      "n.dec AS dec, n.arr AS arr")
+    assert rows(stored, "no", "ts", "d", "dec", "arr") == [(0, *want), (1, *want)]

@@ -734,3 +734,31 @@ def test_spread_scan_conditional(spark):
     # merely equivalent: no exchange node is added)
     wide = spark.range(0, 1000)  # plans defaultParallelism partitions
     assert spread_scan(wide, "id") is wide
+
+
+def test_driver_rows_frames_plan_local_scans(spark, eng):
+    """Frames built from rows the driver already holds plan as a
+    LocalTableScan, never an ``ExistingRDD`` scan (which runs a job
+    through Python workers): a write statement's stats row, a DDL
+    status row, ``edge_stats()`` with statistics, and the driver
+    regimes of connected_components / strongly_connected_components."""
+    from agensgraph_spark.catalog import GraphCatalog
+    from agensgraph_spark.graph import Graph
+    from agensgraph_spark.operators.analytics import strongly_connected_components
+    from agensgraph_spark.pipeline.dedup import connected_components
+    w = CypherEngine(spark, Graph(GraphCatalog("localrows")))
+    eng.graph.collect_edge_stats()
+    ids = spark.range(4)
+    frames = {
+        "write stats": w.cypher("CREATE (:p {k: 1})-[:e]->(:p {k: 2})"),
+        "ddl": w.cypher("CREATE VLABEL q"),
+        "edge_stats": eng.graph.edge_stats(),
+        "cc": connected_components(ids.select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))),
+        "scc": strongly_connected_components(ids.select(
+            F.col("id").alias("src"), ((F.col("id") + 1) % 4).alias("dst"))),
+    }
+    for name, df in frames.items():
+        plan = physical(df)
+        assert "ExistingRDD" not in plan, (name, plan)
+        assert df.count() > 0, name

@@ -136,3 +136,27 @@ def test_label_frames_round_trip_orc_and_json(spark, tmp_path):
         df.write.format(fmt).save(path)
         back = spark.read.format(fmt).schema(df.schema).load(path)
         assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_unwritten_label_scans_off_session_thread(spark):
+    """A label declared but never written scans as an empty frame from
+    any thread, not only the one that holds the active session; so
+    does ``edge_stats()`` of a graph with no frames."""
+    import threading
+    g = Graph(GraphCatalog("threads"))
+    g.catalog.create_vlabel("p")
+    g.catalog.create_elabel("e")
+    out: dict = {}
+
+    def scan():
+        try:
+            out["rows"] = (g.vertices("p").collect(), g.edges("e").collect(),
+                           g.edge_stats().collect())
+        except Exception as exc:  # surfaced by the assert below
+            out["error"] = exc
+
+    t = threading.Thread(target=scan)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert out == {"rows": ([], [], [])}
